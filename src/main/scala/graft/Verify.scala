@@ -47,7 +47,7 @@ object Verify {
     // single-task scans + scheduler gaps). 4 jobs in flight back-fill the
     // tails and cut the wall roughly in half, attacking the verify-stage
     // timeout directly. SPARK_GRAFT_VERIFY_PAR=1 restores sequential.
-    val par = math.max(1, sys.env.getOrElse("SPARK_GRAFT_VERIFY_PAR", "4").toInt)
+    val par = parallelism(sys.env.get("SPARK_GRAFT_VERIFY_PAR"))
     val pool = java.util.concurrent.Executors.newFixedThreadPool(par)
     try {
       import scala.concurrent.{Await, ExecutionContext, Future}
@@ -73,4 +73,9 @@ object Verify {
     } finally pool.shutdown()
     spark.stop()
   }
+
+  /** Query pool size from `SPARK_GRAFT_VERIFY_PAR`: 4 when unset or not an
+    * integer (a typo must not kill the whole verify run), at least 1. */
+  private[graft] def parallelism(raw: Option[String]): Int =
+    math.max(1, raw.flatMap(v => scala.util.Try(v.trim.toInt).toOption).getOrElse(4))
 }

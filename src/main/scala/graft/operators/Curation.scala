@@ -1291,7 +1291,7 @@ object Curation {
       // checkpoints explicitly: minHashLsh's shingle/signature blocks are
       // reachable only through the PRE-checkpoint pair plan, and the pair
       // checkpoint itself is truncated out of the stage output by the
-      // components label table — the stage-end sweep of the OUTPUT plan
+      // components labels — the stage-end sweep of the OUTPUT plan
       // sees neither, so without this they leaked two RDD blocks per
       // pipeline invocation (caught by the 1000-batch soak's horizon
       // equality check, which runs the batch pipeline in a measured JVM)
@@ -1299,7 +1299,11 @@ object Curation {
         d, threshold = nearDupThreshold, idCol = idCol, textCol = textCol)
       val pairs = pairs0.localCheckpoint()
       graft.core.Blocks.free(pairs0)
-      val out = Dedup.collapseDuplicates(d, pairs, idCol) // labels materialize here
+      // the components labels are computed here, before the pair
+      // checkpoint is freed: a small pair graph in driver memory (labels
+      // come back as a local relation), a large one in the distributed
+      // loop (labels are a checkpoint the stage-end sweep frees)
+      val out = Dedup.collapseDuplicates(d, pairs, idCol)
       graft.core.Blocks.free(pairs)
       out
     }

@@ -1,8 +1,9 @@
 package graft.operators
 
 import graft.functions.TextOps
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Deduplication operators for large-scale document corpora.
   *
@@ -2705,10 +2706,18 @@ object Dedup {
     * `maxIter` breach throws rather than returning unconverged labels.
     *
     * Scale design: the input is the PAIR list (|pairs| ≪ corpus — the
-    * near-dup graph, not the corpus), every round is two equi-joins plus
-    * one min-aggregation on (long, long) rows, and `localCheckpoint`
-    * truncates the growing lineage each round. The driver loop holds only
-    * per-round label sums, never data. */
+    * near-dup graph, not the corpus), materialized once with its row
+    * count observed in that same job. A graph of at most 2^20 directed
+    * edges (`DriverEdgeBound`: 2^19 pairs, 8 MB of primitive longs) with
+    * non-null `long` ids is collected and the SAME synchronous rounds run
+    * in driver memory: identical labels, round count, `maxIter` behaviour
+    * and output schema, returned as a local relation. That is 2 Spark
+    * jobs instead of ~2 per round, whose fixed cost dominated small pair
+    * graphs. Larger graphs run the distributed loop over the symmetric
+    * edge list built from that materialized pair list: every round is two
+    * equi-joins plus one min-aggregation on (long, long) rows, and
+    * `localCheckpoint` truncates the growing lineage each round; that
+    * driver loop holds only per-round label sums, never data. */
   def connectedComponents(
       pairs: DataFrame,
       aCol: String = "doc_a",
@@ -2724,9 +2733,120 @@ object Dedup {
       aCol: String = "doc_a",
       bCol: String = "doc_b",
       maxIter: Int = 20): (DataFrame, Int) = {
+    // the pair list is materialized once, with its row count and its count
+    // of rows holding a null id observed in that same job. It is the pair
+    // list, not the symmetric edge list: the distinct that builds the
+    // latter costs a shuffle, which the driver path does not need.
+    // Choosing a path never changes the result, so the accumulator-backed
+    // counts are safe under task retries: an inflated count only sends a
+    // small graph down the distributed path, and so do pruned metrics (a
+    // provably-empty input). Null ids also go there: the loop gives a null
+    // node labels (it collects its neighbours' minimum) without ever
+    // joining on it, a semantics the driver path does not copy.
+    val obs = org.apache.spark.sql.Observation(s"cc_edges_${java.util.UUID.randomUUID()}")
+    val edges = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
+      .observe(obs, count(lit(1)).as("n"),
+        count(when(col("src").isNull || col("dst").isNull, 1)).as("n_null"))
+      .localCheckpoint()
+    val m = org.apache.spark.sql.GraftObservationAccess.getOrEmpty(obs)
+    val onDriver = edges.schema.forall(_.dataType == LongType) &&
+      m.get("n").exists(n => 2 * n.asInstanceOf[Long] <= DriverEdgeBound && m("n_null") == 0L)
+    if (onDriver) try componentsOnDriver(edges, maxIter) finally graft.core.Blocks.free(edges)
+    else {
+      val sym = symmetricEdges(edges, "src", "dst").localCheckpoint()
+      graft.core.Blocks.free(edges)
+      componentsLoop(sym, maxIter)
+    }
+  }
+
+  /** Directed-edge bound of the driver path of [[connectedComponents]]:
+    * 2^19 pairs, collected as 8 MB of primitive longs on the driver. */
+  private val DriverEdgeBound = 1L << 20
+
+  /** The distributed loop whatever the graph size — the reference the
+    * driver path is tested against. */
+  private[graft] def connectedComponentsDistributed(
+      pairs: DataFrame,
+      aCol: String = "doc_a",
+      bCol: String = "doc_b",
+      maxIter: Int = 20): (DataFrame, Int) =
+    componentsLoop(symmetricEdges(pairs, aCol, bCol).localCheckpoint(), maxIter)
+
+  private def symmetricEdges(pairs: DataFrame, aCol: String, bCol: String): DataFrame = {
     val e = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
-    val sym = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().localCheckpoint()
+    e.union(e.select(col("dst").as("src"), col("src").as("dst"))).distinct()
+  }
+
+  private def requireConverged(converged: Boolean, maxIter: Int): Unit =
+    require(converged,
+      s"connectedComponents did not converge in $maxIter rounds — " +
+        "the pair graph has a longer chain than near-dup clusters produce; raise maxIter")
+
+  /** The rounds of [[componentsLoop]] in driver memory over the collected
+    * pair list `edges` (`src`, `dst`: non-null `long` ids): same labels,
+    * same round count, same `maxIter` breach, same output schema. */
+  private def componentsOnDriver(edges: DataFrame, maxIter: Int): (DataFrame, Int) = {
+    // one job: each partition packs its pairs as (src, dst) longs
+    val packed = edges.queryExecution.toRdd.mapPartitions { rows =>
+      val b = Array.newBuilder[Long]
+      rows.foreach { r => b += r.getLong(0); b += r.getLong(1) }
+      Iterator.single(b.result())
+    }.collect().flatten
+    // dense node indices in id order: the minimum index is the minimum id
+    val sorted = packed.clone()
+    java.util.Arrays.sort(sorted)
+    var n = 0
+    for (k <- sorted.indices if n == 0 || sorted(k) != sorted(n - 1)) {
+      sorted(n) = sorted(k)
+      n += 1
+    }
+    val ids = java.util.Arrays.copyOf(sorted, n)
+    val node = packed.map(java.util.Arrays.binarySearch(ids, _)) // a0, b0, a1, b1, ...
+    var label = Array.range(0, n)
+    val merged = new Array[Int](n)
+    var iter = 0
+    var converged = n == 0
+    while (!converged && iter < maxIter) {
+      // own label and the neighbours' labels (each pair is an edge both
+      // ways), then one pointer jump through the PREVIOUS round's table —
+      // the loop's synchronous round
+      System.arraycopy(label, 0, merged, 0, n)
+      var k = 0
+      while (k < node.length) {
+        val a = node(k)
+        val b = node(k + 1)
+        if (label(a) < merged(b)) merged(b) = label(a)
+        if (label(b) < merged(a)) merged(a) = label(b)
+        k += 2
+      }
+      val next = new Array[Int](n)
+      var changed = false
+      var i = 0
+      while (i < n) {
+        next(i) = math.min(merged(i), label(merged(i)))
+        changed ||= next(i) != label(i)
+        i += 1
+      }
+      // labels never increase, so the loop's "exact label sum repeats"
+      // is "a round after the first changed no label"
+      converged = iter > 0 && !changed
+      label = next
+      iter += 1
+    }
+    requireConverged(converged, maxIter)
+    // the loop's ids come from a union of both columns
+    val idNullable = edges.schema.exists(_.nullable)
+    val schema = StructType(Seq(
+      StructField("doc_id", LongType, idNullable),
+      // the loop's min() aggregate makes the label nullable from round one
+      StructField("component", LongType, idNullable || iter > 0)))
+    val rows = Array.tabulate(n)(i => Row(ids(i), ids(label(i))))
+    (edges.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), schema), iter)
+  }
+
+  /** The distributed min-label propagation over the materialized symmetric
+    * edge list `sym` (freed on return). */
+  private def componentsLoop(sym: DataFrame, maxIter: Int): (DataFrame, Int) = {
     // resetInheritedStats on every loop checkpoint: localCheckpoint copies
     // the truncated plan's SIZE ESTIMATE into the new leaf, and this loop
     // joins the previous round's table against itself-derived frames — the
@@ -2799,9 +2919,7 @@ object Dedup {
       iter += 1
     }
     graft.core.Blocks.free(sym)
-    require(converged,
-      s"connectedComponents did not converge in $maxIter rounds — " +
-        "the pair graph has a longer chain than near-dup clusters produce; raise maxIter")
+    requireConverged(converged, maxIter)
     (labels.select(col("id").as("doc_id"), col("label").as("component")), iter)
   }
 

@@ -52,6 +52,82 @@ class DedupAndSimilaritySpec extends AnyFunSuite {
     }
   }
 
+  /** Runs both components paths on `pairs`: (default, distributed
+    * reference), each as (rows, schema, rounds, ran on the driver). */
+  private def componentsBothWays(pairs: org.apache.spark.sql.DataFrame) = {
+    def run(r: (org.apache.spark.sql.DataFrame, Int)) = {
+      val (df, rounds) = r
+      val onDriver = df.queryExecution.analyzed.collectFirst {
+        case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => ()
+      }.isDefined
+      (df.collect().map(row => (row.get(0), row.get(1))).toSet, df.schema, rounds, onDriver)
+    }
+    (run(Dedup.connectedComponentsWithRounds(pairs)),
+      run(Dedup.connectedComponentsDistributed(pairs)))
+  }
+
+  test("connectedComponents: the driver path matches the distributed loop's labels, schema and rounds") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(20261017L)
+    val chainIds = rnd.shuffle((1000L to 1015L).toList) // diameter 15, ids out of order
+    val chain = chainIds.zip(chainIds.tail)
+    val star = (51L to 70L).map(50L -> _) ++ (80L to 98L).map(_ -> 99L)
+    val clique = for (a <- 200L to 209L; b <- 200L to 209L if a < b) yield (a, b)
+    val several = Seq((1L, 2L), (3L, 3L), (5L, 4L), (4L, 6L), (-7L, 8L))
+    // ~300 nodes, full long range, self-loops and repeated edges possible
+    val nodes = Seq.fill(300)(rnd.nextLong())
+    val random = Seq.fill(250)((nodes(rnd.nextInt(300)), nodes(rnd.nextInt(300))))
+    val graphs = Seq("chain" -> chain, "star" -> star, "clique" -> clique,
+      "several" -> several, "random" -> random,
+      "union" -> (chain ++ star ++ clique ++ several ++ random))
+      .map { case (name, edges) => name -> edges.toDF("doc_a", "doc_b") } ++ Seq(
+        // nullable id columns without nulls still take the driver path
+        "nullable" -> chain.map { case (a, b) => (Option(a), Option(b)) }.toDF("doc_a", "doc_b"),
+        "half nullable" -> chain.map { case (a, b) => (a, Option(b)) }.toDF("doc_a", "doc_b"))
+    for ((name, pairs) <- graphs) {
+      val ((out, schema, rounds, onDriver), (ref, refSchema, refRounds, _)) =
+        componentsBothWays(pairs)
+      assert(onDriver, s"$name: a small graph takes the driver path")
+      assert(out == ref, s"$name: labels")
+      assert(schema == refSchema, s"$name: schema")
+      assert(rounds == refRounds, s"$name: rounds")
+    }
+    // the random graph's labels are its components' minimum ids
+    val parent = scala.collection.mutable.Map[Long, Long]()
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    random.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) { parent(math.max(ra, rb)) = math.min(ra, rb) }
+    }
+    val truth = parent.keys.toSeq.map(x => (x: Any, find(x): Any)).toSet
+    assert(componentsBothWays(random.toDF("doc_a", "doc_b"))._1._1 == truth)
+    // no pairs: no labels and no rounds on either path
+    val ((eOut, eSchema, eRounds, _), (eRef, eRefSchema, eRefRounds, _)) =
+      componentsBothWays(Seq.empty[(Long, Long)].toDF("doc_a", "doc_b"))
+    assert(eOut.isEmpty && eOut == eRef && eSchema == eRefSchema && eRounds == 0 && eRefRounds == 0)
+    // a maxIter breach throws on both paths
+    val chainDf = chain.toDF("doc_a", "doc_b")
+    intercept[IllegalArgumentException](Dedup.connectedComponentsWithRounds(chainDf, maxIter = 2))
+    intercept[IllegalArgumentException](Dedup.connectedComponentsDistributed(chainDf, maxIter = 2))
+  }
+
+  test("connectedComponents: null ids and non-long ids take the distributed loop") {
+    import spark.implicits._
+    val withNulls = Seq[(Option[Long], Option[Long])](
+      (Some(1L), Some(2L)), (Some(2L), None), (None, Some(3L)), (Some(4L), Some(5L)))
+      .toDF("doc_a", "doc_b")
+    val ints = Seq((3, 1), (1, 2), (7, 8)).toDF("doc_a", "doc_b")
+    for ((name, pairs) <- Seq("nulls" -> withNulls, "ints" -> ints)) {
+      val ((out, schema, rounds, onDriver), (ref, refSchema, refRounds, _)) =
+        componentsBothWays(pairs)
+      assert(!onDriver, s"$name: distributed path")
+      assert(out == ref && schema == refSchema && rounds == refRounds, s"$name: same result")
+    }
+  }
+
   test("collapseDuplicates keeps one representative per cluster plus all unpaired docs") {
     import spark.implicits._
     val docs = (1L to 10L).map(i => (i, s"doc $i", "en")).toDF("doc_id", "text", "lang")
