@@ -11,7 +11,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val cpus = Verify.cpus(sys.env.get("SPARK_GRAFT_CPUS"))
+    val id = runId(cpus, java.time.Instant.now(), ProcessHandle.current().pid())
     val spark: SparkSession = GraftSession.configure(
       SparkSession.builder().master(s"local[$cpus]").appName("graft-bench"),
       shufflePartitions = math.max(cpus, 4)
@@ -101,17 +102,24 @@ object Bench {
     val totalSpread = results.filter(_._2 >= 0).map(_._3).sum
     val metric = if (full) "full_total" else "headline_total"
     val json = s"""{"metric":"$metric","value":$total,"unit":"sec","reps":$reps,""" +
+      s""""cpus":$cpus,"run_id":"$id",""" +
       s""""total_spread":$totalSpread,"load_avg_start":$loadStart,"load_avg_end":$loadAvg,""" +
       s""""calib_read_mb_per_s":$calib,"queries":$qs,"spread":$spreads,"sf":"$sfDir"}"""
     println(json)
     // The stdout line has never survived the sbt "[info] " prefix into the
     // driver's parser (PERF `parsed: null` since r10) — ALSO write the
     // identical JSON to a bare file beside the repo root so the comparison
-    // machinery has a machine-readable artifact. Additive only: same
-    // queries, same values, stdout line unchanged.
+    // machinery has a machine-readable artifact. The default name carries
+    // the run id, so an 8-core and a 32-core run cannot overwrite each other.
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_JSON", "bench_last.json")), json + "\n")
+      sys.env.getOrElse("SPARK_GRAFT_BENCH_JSON", s"bench_last_$id.json")), json + "\n")
     catch { case e: Throwable => System.err.println(s"[bench] json file write failed: ${e.getMessage}") }
     spark.stop()
   }
+
+  /** Run id: UTC start second, local cores and process id, e.g.
+    * `20261017T160405Z-c8-p4242`. */
+  private[graft] def runId(cpus: Int, start: java.time.Instant, pid: Long): String =
+    java.time.format.DateTimeFormatter.ofPattern("yyyyMMdd'T'HHmmss'Z'")
+      .withZone(java.time.ZoneOffset.UTC).format(start) + s"-c$cpus-p$pid"
 }

@@ -9,7 +9,7 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     // optional extra args: run only these queries (dev iteration)
     val only: Set[String] = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val cpus = Verify.cpus(sys.env.get("SPARK_GRAFT_CPUS"))
     // GraftSession.configure: nanosAsLong (events TIMESTAMP(NANOS) parquet),
     // UTC, ANSI off, AQE — without it 7 of 9 events queries fail at scan.
     val spark: SparkSession = GraftSession.configure(
@@ -78,4 +78,8 @@ object Verify {
     * integer (a typo must not kill the whole verify run), at least 1. */
   private[graft] def parallelism(raw: Option[String]): Int =
     math.max(1, raw.flatMap(v => scala.util.Try(v.trim.toInt).toOption).getOrElse(4))
+
+  /** Local cores from `SPARK_GRAFT_CPUS` for the Verify and Bench sessions,
+    * parsed the same way: 4 when unset or malformed, at least 1. */
+  private[graft] def cpus(raw: Option[String]): Int = parallelism(raw)
 }

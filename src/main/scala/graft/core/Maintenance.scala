@@ -95,7 +95,7 @@ object Maintenance {
     require(new org.apache.hadoop.fs.Path(inDir).toUri.normalize !=
       new org.apache.hadoop.fs.Path(outDir).toUri.normalize,
       s"compactTable: outDir must differ from inDir ($inDir)")
-    compactFrameMetrics(spark, spark.read.parquet(inDir), outDir, spec, retention,
+    compactFrameMetrics(spark, Parquet.read(spark, inDir), outDir, spec, retention,
       maxRecordsPerFile, force)
   }
 
@@ -122,7 +122,7 @@ object Maintenance {
       .options(bloomOptions(spec.keyCols))
       .mode("overwrite")
       .parquet(outDir)
-    val rows = spark.read.parquet(outDir).count()
+    val rows = Parquet.read(spark, outDir).count()
     val (nFiles, nBytes) = outputFootprint(spark, outDir)
     Some(CompactionMetrics(rows, nFiles, filesCopied = 0L, nBytes))
   }
@@ -190,7 +190,7 @@ object Maintenance {
     val conf = spark.sparkContext.hadoopConfiguration
     val root = new Path(inDir)
     val fs = root.getFileSystem(conf)
-    // every non-hidden data file, matching what spark.read.parquet(inDir)
+    // every non-hidden data file, matching what Parquet.read(spark, inDir)
     // scans (suffix-filtering would silently DROP rows of oddly-named files
     // from the output: scanned into stats but neither rewritten nor copied)
     val dataFiles = fs.listStatus(root).toSeq
@@ -205,7 +205,7 @@ object Maintenance {
     // the manifest's per-SSTable [smallest, largest] analogue. Matched by
     // file NAME (unique part-<uuid> names) to dodge URI-normalization
     // differences between _metadata.file_path and FileSystem listings.
-    val fileStats = spark.read.parquet(inDir)
+    val fileStats = Parquet.read(spark, inDir)
       .select(col(rc).as("k"), col("_metadata.file_name").as("f"))
       .groupBy("f")
       .agg(min(col("k")).as("klo"), max(col("k")).as("khi"))
@@ -218,7 +218,7 @@ object Maintenance {
     val rewritten: Long =
       if (touched.isEmpty) -1L
       else {
-        val touchedDf = spark.read.parquet(touched.map(_.toString): _*)
+        val touchedDf = Parquet.read(spark, touched.map(_.toString): _*)
         val inside = touchedDf.filter(col(rc).between(lit(lo), lit(hi)))
         if (!force && !needsCompaction(inside, spec, retention)) -1L
         else {
@@ -233,7 +233,7 @@ object Maintenance {
             .options(bloomOptions(spec.keyCols))
             .mode("overwrite")
             .parquet(outDir)
-          spark.read.parquet(outDir).count()
+          Parquet.read(spark, outDir).count()
         }
       }
     if (rewritten < 0) return None

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Parquet
 import graft.functions.TextOps
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -254,12 +255,12 @@ object Dedup {
       spark: SparkSession, s: IndexSnapshot,
       restrictTo: Option[DataFrame] = None): DataFrame = {
     require(s.keySegs.nonEmpty, "no committed index key segments")
-    val adds0 = spark.read.parquet(s.keySegs.map(_._1): _*)
+    val adds0 = Parquet.read(spark, s.keySegs.map(_._1): _*)
     val adds = restrictTo.fold(adds0)(restrictKeys(adds0, _))
     val alive =
       if (s.tombSegs.isEmpty) adds
       else {
-        val del = spark.read.parquet(s.tombSegs.map(_._1): _*)
+        val del = Parquet.read(spark, s.tombSegs.map(_._1): _*)
           .groupBy("_k").agg(max("_seq").as("_del_seq"))
         adds.join(broadcast(del), Seq("_k"), "left")
           .filter(col("_del_seq").isNull || col("_seq") > col("_del_seq"))
@@ -324,7 +325,7 @@ object Dedup {
 
   private def snapshotIsWide(spark: SparkSession, path: String, s: IndexSnapshot): Boolean = {
     require(s.keySegs.nonEmpty, s"no committed index key segments under $path")
-    spark.read.parquet(s.keySegs.head._1)
+    Parquet.read(spark, s.keySegs.head._1)
       .schema("_k").dataType == org.apache.spark.sql.types.BinaryType
   }
 
@@ -617,7 +618,7 @@ object Dedup {
     val cached = spanNCache.get(path)
     if (cached != null && cached._1 == stamp) cached._2
     else {
-      val n = spark.read.parquet(s"$path/meta").head().getInt(0)
+      val n = Parquet.read(spark, s"$path/meta").head().getInt(0)
       spanNCache.put(path, (stamp, n))
       n
     }
@@ -627,7 +628,7 @@ object Dedup {
       spark: SparkSession, s: IndexSnapshot,
       restrictTo: Option[DataFrame] = None): DataFrame = {
     require(s.keySegs.nonEmpty, "no committed span-catalog segments")
-    val adds0 = spark.read.parquet(s.keySegs.map(_._1): _*)
+    val adds0 = Parquet.read(spark, s.keySegs.map(_._1): _*)
     val adds = restrictTo.fold(adds0)(restrictKeys(adds0, _))
     // gram tombstones apply newest-wins exactly as the exact index's key
     // tombstones: an addition survives iff no tombstone of its gram has
@@ -635,7 +636,7 @@ object Dedup {
     val alive =
       if (s.tombSegs.isEmpty) adds
       else {
-        val del = spark.read.parquet(s.tombSegs.map(_._1): _*)
+        val del = Parquet.read(spark, s.tombSegs.map(_._1): _*)
           .groupBy("_k").agg(max("_seq").as("_del_seq"))
         adds.join(broadcast(del), Seq("_k"), "left")
           .filter(col("_del_seq").isNull || col("_seq") > col("_del_seq"))
@@ -998,7 +999,7 @@ object Dedup {
   /** The `band_buckets` of an index's meta (0 for flat / pre-bucketing
     * indexes, whose meta lacks the column). */
   private def metaBandBuckets(spark: SparkSession, indexPath: String): Int = {
-    val metaDf = spark.read.parquet(s"$indexPath/meta")
+    val metaDf = Parquet.read(spark, s"$indexPath/meta")
     if (metaDf.columns.contains("band_buckets"))
       metaDf.head().getAs[Int]("band_buckets")
     else 0
@@ -1188,7 +1189,7 @@ object Dedup {
       indexPath: String,
       idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
-    val meta = newDocs.sparkSession.read.parquet(s"$indexPath/meta").head()
+    val meta = Parquet.read(newDocs.sparkSession, s"$indexPath/meta").head()
     signatureRows(newDocs, meta.getInt(0), meta.getInt(1), idCol, textCol)
   }
 
@@ -1200,7 +1201,7 @@ object Dedup {
       indexPath: String,
       threshold: Double): DataFrame = {
     val spark = batchSigs.sparkSession
-    val meta = spark.read.parquet(s"$indexPath/meta").head()
+    val meta = Parquet.read(spark, s"$indexPath/meta").head()
     val (numHashes, bands) = (meta.getInt(1), meta.getInt(2))
     val r = numHashes / bands
     val batch = batchSigs
@@ -1266,7 +1267,7 @@ object Dedup {
       batchSigs: DataFrame,
       indexPath: String): DataFrame = {
     val spark = batchSigs.sparkSession
-    val meta = spark.read.parquet(s"$indexPath/meta").head()
+    val meta = Parquet.read(spark, s"$indexPath/meta").head()
     val (numHashes, bands) = (meta.getInt(1), meta.getInt(2))
     val r = numHashes / bands
     def banded(sigs: DataFrame) = sigs
@@ -1396,7 +1397,7 @@ object Dedup {
     // a banded compact twin.
     val flatViews =
       if (twinless.isEmpty) Nil
-      else Seq(bandTwinless(spark.read.parquet(twinless.map(_.toString): _*))
+      else Seq(bandTwinless(Parquet.read(spark, twinless.map(_.toString): _*))
         .select(cols.map(col): _*))
     val all = views ++ flatViews
     if (all.isEmpty)
@@ -1421,15 +1422,15 @@ object Dedup {
         val present = parts.map(_.stripPrefix("bucket=").toInt).toSet
         val dirs = bs.filter(present).map(b => s"$root/bucket=$b")
         if (dirs.isEmpty) None
-        else Some(spark.read.parquet(dirs: _*).select(proj: _*))
+        else Some(Parquet.read(spark, dirs: _*).select(proj: _*))
       case None =>
-        Some(spark.read.parquet(root).select(proj: _*))
+        Some(Parquet.read(spark, root).select(proj: _*))
     } else {
       val hasData = Seg.listFiles(fs, new org.apache.hadoop.fs.Path(root))
         .exists(_.getName.endsWith(".parquet"))
       if (!hasData) None
       else {
-        val df = spark.read.parquet(root)
+        val df = Parquet.read(spark, root)
         Some(buckets.fold(df)(bs => df.filter(col("bucket").isin(bs: _*)))
           .select(proj: _*))
       }
@@ -1450,7 +1451,7 @@ object Dedup {
       indexPath: String,
       threshold: Double): DataFrame = {
     val spark = batchSigs.sparkSession
-    val numHashes = spark.read.parquet(s"$indexPath/meta").head().getInt(1)
+    val numHashes = Parquet.read(spark, s"$indexPath/meta").head().getInt(1)
     val candIds = candidates
       .select(explode(array(col("doc_a"), col("doc_b"))).as("doc")).distinct()
     // candidate ids are micro-batch-bounded (the existing broadcast
@@ -1483,7 +1484,7 @@ object Dedup {
       spark: SparkSession, indexPath: String, idCol: String,
       restrictTo: Option[Seq[Long]] = None): DataFrame = {
     val paths = s"$indexPath/docs" +: liveDocSegs(spark, indexPath)._2.map(_.toString)
-    val docs0 = spark.read.parquet(paths: _*)
+    val docs0 = Parquet.read(spark, paths: _*)
     // `restrictTo` (<= MaxInProbe candidate ids — the micro-verify shape)
     // becomes a LITERAL IN pushed to parquet, evaluated against each row
     // group's min/max stats AND the id bloom filter the doc-row writers
@@ -1505,7 +1506,7 @@ object Dedup {
   /** The stored id column of a doc-row index (`doc` for MinHash, `doc_id`
     * for the SimHash store). */
   private def storedIdCol(spark: SparkSession, indexPath: String): String =
-    if (spark.read.parquet(s"$indexPath/docs").columns.contains("doc")) "doc" else "doc_id"
+    if (Parquet.read(spark, s"$indexPath/docs").columns.contains("doc")) "doc" else "doc_id"
 
   /** Retract documents from a persisted MinHash or SimHash index by id —
     * the takedown path for the near-dup indexes (which, unlike the exact
@@ -1558,7 +1559,7 @@ object Dedup {
     val hasMeta = fs.exists(new org.apache.hadoop.fs.Path(s"$indexPath/meta"))
     val bb = if (hasMeta) effectiveBandBuckets(spark, indexPath) else 0
     if (bb > 0) {
-      val m = spark.read.parquet(s"$indexPath/meta").head()
+      val m = Parquet.read(spark, s"$indexPath/meta").head()
       val bands = m.getInt(2); val rpb = m.getInt(1) / bands
       Some((bands.toLong, bb, (kept, p) => bandRows(kept, bands, rpb, p)))
     } else effectiveSigBuckets(spark, indexPath).map { case (mh, cs, sb) =>
@@ -1579,7 +1580,7 @@ object Dedup {
     val it = fs.listFiles(dir, true)
     while (!hasData && it.hasNext)
       hasData = it.next().getPath.getName.endsWith(".parquet")
-    if (!hasData) 0L else spark.read.parquet(dir.toString).count()
+    if (!hasData) 0L else Parquet.read(spark, dir.toString).count()
   }
 
   /** Every live segment's band twin carries its own `_BUCKETS` marker —
@@ -1618,7 +1619,7 @@ object Dedup {
       targetP: Option[Int] = None): Unit =
     bandLayout(spark, indexPath).foreach { case (perDoc, effP, mkRows) =>
       val fs = Seg.fs(spark, indexPath)
-      val kept = spark.read.parquet(s"$indexPath/docs")
+      val kept = Parquet.read(spark, s"$indexPath/docs")
       // `targetP` sizes growth off the TOTAL live store (docs/ + live
       // segments — [[reconcileBandOrphans]] computes it): a pure-streaming
       // deployment's rows accumulate in SEGMENTS while docs/ stays frozen,
@@ -1726,12 +1727,12 @@ object Dedup {
     val fs = Seg.fs(spark, indexPath)
     val metaPath = new org.apache.hadoop.fs.Path(s"$indexPath/meta")
     if (!fs.exists(metaPath)) return
-    val metaDf = spark.read.parquet(metaPath.toString)
+    val metaDf = Parquet.read(spark, metaPath.toString)
     import spark.implicits._
 
     // footer-count rows living in segments (0 after a stop-the-world fold)
     def liveSegRows: Long = liveDocSegs(spark, indexPath)._2
-      .map(d => spark.read.parquet(d.toString).count()).sum
+      .map(d => Parquet.read(spark, d.toString).count()).sum
 
     def promote(
         perDoc: Long, crossover: Long,
@@ -1743,7 +1744,7 @@ object Dedup {
         if (!online) writeMeta(existing.get)
         return
       }
-      val kept = spark.read.parquet(s"$indexPath/docs")
+      val kept = Parquet.read(spark, s"$indexPath/docs")
       val docRows = kept.count() * perDoc
       val p = autoLayoutBuckets(docRows + liveSegRows * perDoc, crossover)
       if (p <= 0) return
@@ -1791,7 +1792,7 @@ object Dedup {
       case None => 0L
       case Some((perDoc, effP, _)) =>
         val fs = Seg.fs(spark, indexPath)
-        val docsCount = spark.read.parquet(s"$indexPath/docs").count()
+        val docsCount = Parquet.read(spark, s"$indexPath/docs").count()
         val bandsCount = bandTreeCount(spark, fs, baseBandRoot(fs, indexPath))
         val missing = docsCount * perDoc - bandsCount
         val orphans = if (missing > 0) (missing + perDoc - 1) / perDoc else 0L
@@ -1810,7 +1811,7 @@ object Dedup {
         // own marker); until then old segments prune exactly at their
         // recorded P. Safe beside live segments by the same markers.
         val liveDocs = liveDocSegs(spark, indexPath)._2
-          .map(d => spark.read.parquet(d.toString).count()).sum
+          .map(d => Parquet.read(spark, d.toString).count()).sum
         val autoP = autoBucketCount((docsCount + liveDocs) * perDoc)
         val growDue = heal && autoP >= 2 * effP &&
           liveBandsegsMarked(spark, fs, indexPath)
@@ -1830,7 +1831,7 @@ object Dedup {
     * counts are parquet footer metadata — no data pages. */
   def docIndexStats(spark: SparkSession, indexPath: String): Map[String, String] = {
     val fs = Seg.fs(spark, indexPath)
-    val docsCount = spark.read.parquet(s"$indexPath/docs").count()
+    val docsCount = Parquet.read(spark, s"$indexPath/docs").count()
     val (_, live) = liveDocSegs(spark, indexPath)
     val tombsPath = new org.apache.hadoop.fs.Path(s"$indexPath/tombs")
     val tombCount =
@@ -1888,7 +1889,7 @@ object Dedup {
       if (fs.exists(markers)) fs.delete(markers, true)
       val (perDoc, effP, _) = layout.get
       val bandsDir = baseBandRoot(fs, indexPath)
-      val docsCount = spark.read.parquet(docsDir.toString).count()
+      val docsCount = Parquet.read(spark, docsDir.toString).count()
       val bandsCount =
         if (fs.exists(bandsDir)) bandTreeCount(spark, fs, bandsDir) else -1L
       if (bandsCount == docsCount * perDoc
@@ -1973,8 +1974,8 @@ object Dedup {
       // per-segment twins ride out with their doc segments at GC.
       bandLayout(spark, indexPath).foreach { case (perDoc, foldP, mkRows) =>
         // parquet-footer doc counts (no data pages) feed the flat floor
-        val foldRows = live.map(d => spark.read.parquet(d.toString).count()).sum * perDoc
-        val folded = mkRows(spark.read.parquet(live.map(_.toString): _*), foldP)
+        val foldRows = live.map(d => Parquet.read(spark, d.toString).count()).sum * perDoc
+        val folded = mkRows(Parquet.read(spark, live.map(_.toString): _*), foldP)
         // per-root flat floor, same rule as publishBandTree: a small fold
         // partitioned across a grown P would be all tiny files
         if (foldRows / math.max(1, foldP) < MinBucketFileRows)
@@ -1994,7 +1995,7 @@ object Dedup {
       // pushed-In candidate filter skip its row groups — without it every
       // trigger's verify re-scans the whole folded corpus
       val idc = storedIdCol(spark, indexPath)
-      spark.read.parquet(live.map(_.toString): _*)
+      Parquet.read(spark, live.map(_.toString): _*)
         .repartitionByRange(
           math.max(1, spark.sparkContext.defaultParallelism / 2), col(idc))
         .sortWithinPartitions(idc)
@@ -2094,7 +2095,7 @@ object Dedup {
       // replay overwrites. Batch-bounded => one file. The marker lands
       // after the parquet overwrite (which wipes the dir) and before the
       // doc segment commits — a committed segment always carries its P.
-      val meta = spark.read.parquet(s"$indexPath/meta").head()
+      val meta = Parquet.read(spark, s"$indexPath/meta").head()
       bandRows(batch, meta.getInt(2), meta.getInt(1) / meta.getInt(2), bb)
         .coalesce(1)
         .write.mode("overwrite").parquet(s"$indexPath/bandsegs/$segName")
@@ -2118,7 +2119,7 @@ object Dedup {
       idCol: String = "doc_id",
       textCol: String = "text"): Long = {
     val spark = newDocs.sparkSession
-    val meta = spark.read.parquet(s"$indexPath/meta").head()
+    val meta = Parquet.read(spark, s"$indexPath/meta").head()
     val batch = signatureRows(newDocs, meta.getInt(0), meta.getInt(1), idCol, textCol)
       .localCheckpoint()
     // Heal a crashed compaction swap BEFORE touching bands/ — appending
@@ -2472,7 +2473,7 @@ object Dedup {
     val meta = new org.apache.hadoop.fs.Path(s"$indexPath/meta")
     if (!Seg.fs(spark, indexPath).exists(meta)) None
     else {
-      val df = spark.read.parquet(meta.toString)
+      val df = Parquet.read(spark, meta.toString)
       if (!df.columns.contains("sig_buckets")) None
       else {
         val r = df.head()

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Parquet
 import graft.functions.VectorOps
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -456,7 +457,7 @@ object Ivf {
     import spark.implicits._
     // training-time corpus size: the baseline `needsRebuild` measures
     // growth against (footer-metadata count, no data read)
-    Seq(Tuple1(spark.read.parquet(s"$path/lists").count()))
+    Seq(Tuple1(Parquet.read(spark, s"$path/lists").count()))
       .toDF("trained_rows")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
     // a from-scratch build over an existing GENERATIONAL store retracts
@@ -606,7 +607,7 @@ object Ivf {
       fs: org.apache.hadoop.fs.FileSystem, path: String): Option[DataFrame] = {
     val dir = new org.apache.hadoop.fs.Path(s"$path/tombs")
     if (!hasDataFiles(fs, dir)) None
-    else Some(spark.read.parquet(dir.toString).select("n_id"))
+    else Some(Parquet.read(spark, dir.toString).select("n_id"))
   }
 
   /** The index's LIVE rows grouped by ASSIGNING GENERATION:
@@ -633,7 +634,7 @@ object Ivf {
       if (withData.isEmpty) None
       else {
         val m = readModelAt(spark, genDirOf(path, g))
-        val raw = withData.map(spark.read.parquet(_)).reduce(_ unionByName _)
+        val raw = withData.map(Parquet.read(spark, _)).reduce(_ unionByName _)
         val rows = tombs.fold(raw)(t =>
           raw.join(broadcast(t), Seq("n_id"), "left_anti"))
         Some((g, m, rows))
@@ -690,7 +691,7 @@ object Ivf {
       +: liveListSegs(spark, path)._2.map(_.toString))
       .filter(r => hasDataFiles(fs, new org.apache.hadoop.fs.Path(r)))
     require(roots.nonEmpty, s"no vector data under $path")
-    val raw = roots.map(spark.read.parquet(_)).reduce(_ unionByName _)
+    val raw = roots.map(Parquet.read(spark, _)).reduce(_ unionByName _)
     tombsRows(spark, fs, path).fold(raw)(t =>
       raw.join(broadcast(t), Seq("n_id"), "left_anti"))
   }
@@ -731,7 +732,7 @@ object Ivf {
         // SAME O(batches) tiny files it exists to consolidate
         val withData = segs.filter(d => hasDataFiles(fs, d))
         if (withData.nonEmpty)
-          withData.map(d => spark.read.parquet(d.toString)).reduce(_ unionByName _)
+          withData.map(d => Parquet.read(spark, d.toString)).reduce(_ unionByName _)
             .repartition(col("bucket"))
             .write.partitionBy("bucket").mode("overwrite").parquet(s"$path/segs/$name")
         else // all-empty group: an empty (but committed) compact segment
@@ -1019,7 +1020,7 @@ object Ivf {
     val total = sizes.sum
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val trained = spark.read.parquet(s"${genRoot(fs, path)}/meta").head().getLong(0)
+    val trained = Parquet.read(spark, s"${genRoot(fs, path)}/meta").head().getLong(0)
     val avg = if (sizes.nonEmpty) total.toDouble / sizes.length else 0.0
     val tombs = tombsRows(spark, fs, path)
       .fold(0L)(_.distinct().count())
@@ -1101,12 +1102,12 @@ object Ivf {
     require(srcRoots.nonEmpty, s"rebuildIndex: no vectors under $path")
     // dropDuplicates(vec_id): after a crash-rerun of a fold/compaction a
     // row can appear in both the base lists and a still-live segment
-    val raw = srcRoots.map(spark.read.parquet(_)).reduce(_ unionByName _)
+    val raw = srcRoots.map(Parquet.read(spark, _)).reduce(_ unionByName _)
       .select(col("n_id").as("vec_id"), col("n_vec").as("embedding"))
     val corpus = (
       if (tombFiles0.isEmpty) raw
       else raw.join(
-        broadcast(spark.read.parquet(tombFiles0.map(_.toString): _*)
+        broadcast(Parquet.read(spark, tombFiles0.map(_.toString): _*)
           .select(col("n_id").as("vec_id")).distinct()),
         Seq("vec_id"), "left_anti"))
       .dropDuplicates("vec_id")
@@ -1154,7 +1155,7 @@ object Ivf {
     * assigning quantizer by its own generation dir. */
   private def readModelAt(
       spark: org.apache.spark.sql.SparkSession, genDir: String): Model = {
-    val df = spark.read.parquet(s"$genDir/centroids")
+    val df = Parquet.read(spark, s"$genDir/centroids")
     if (!df.columns.contains("level")) {
       val rows = df.orderBy("bucket").collect()
       Model(rows.map(_.getAs[scala.collection.Seq[Float]]("centroid").toArray))

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Parquet
 import graft.functions.VectorOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -262,7 +263,7 @@ object Pq {
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(new org.apache.hadoop.fs.Path(s"$path/pq_stats"))) return false
-    val rows = spark.read.parquet(s"$path/pq_stats").collect()
+    val rows = Parquet.read(spark, s"$path/pq_stats").collect()
     val build = rows.filter(_.getAs[String]("kind") == "build")
     // empty-batch appends carry n = 0 and a null mse — exclude them up
     // front rather than relying on null unboxing to 0.0 in the weighted sum
@@ -345,7 +346,7 @@ object Pq {
 
   /** Load the PQ codebooks of a persisted IVF-PQ index. */
   def readModel(spark: org.apache.spark.sql.SparkSession, path: String): Model = {
-    val rows = spark.read.parquet(s"$path/pq").collect()
+    val rows = Parquet.read(spark, s"$path/pq").collect()
     val books = rows.groupBy(_.getAs[Int]("sub")).toSeq.sortBy(_._1).map(_._2
       .sortBy(_.getAs[Int]("code"))
       .map(_.getAs[scala.collection.Seq[Float]]("centroid").toArray))
@@ -379,7 +380,7 @@ object Pq {
     // (the bm25Indexed leak shape). Query-batch-sized; the collect below
     // recomputes the LUT/probe projection instead.
     val probed = q.select("bucket").distinct().collect().map(_.getInt(0)).toSeq
-    val lists = spark.read.parquet(s"$path/lists")
+    val lists = Parquet.read(spark, s"$path/lists")
       .filter(col("bucket").isin(probed: _*))
     val scored = lists
       .join(broadcast(q), Seq("bucket"))

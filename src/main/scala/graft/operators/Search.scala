@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Parquet
 import graft.functions.TextOps
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -353,7 +354,7 @@ object Search {
       spark: org.apache.spark.sql.SparkSession, path: String): Int = {
     val fs = graft.core.Segments.fs(spark, path)
     readRootBuckets(fs, basePostingsRoot(fs, path))
-      .getOrElse(spark.read.parquet(s"$path/meta").head().getInt(2))
+      .getOrElse(Parquet.read(spark, s"$path/meta").head().getInt(2))
   }
 
   /** Per-bucket postings target (the probe's read-amplification unit —
@@ -418,7 +419,7 @@ object Search {
       idCol: String = "doc_id",
       textCol: String = "text"): Long = {
     val spark = newDocs.sparkSession
-    val meta = spark.read.parquet(s"$path/meta").head()
+    val meta = Parquet.read(spark, s"$path/meta").head()
     val (n0, sd0) = (meta.getLong(0), meta.getLong(1))
     // the CURRENT base root at ITS operative P (a re-bucket may have moved
     // it past the build-time meta value). Direct appends share the
@@ -468,7 +469,7 @@ object Search {
       .filter(r => hasDataFiles(fs, new org.apache.hadoop.fs.Path(r)))
     if (roots.isEmpty) return 0L
     val batch = roots
-      .map(spark.read.parquet(_)).reduce(_ unionByName _)
+      .map(Parquet.read(spark, _)).reduce(_ unionByName _)
       .join(broadcast(ids), Seq("doc_id"), "left_semi")
       .groupBy("doc_id").agg(max("dl").as("dl"))
       .localCheckpoint()
@@ -600,7 +601,7 @@ object Search {
         // operative P still grows, so this fold's compact segment (and
         // every segment after it) lands at the new P.
         val baseRows =
-          if (hasDataFiles(fs, base)) Some(spark.read.parquet(base.toString))
+          if (hasDataFiles(fs, base)) Some(Parquet.read(spark, base.toString))
           else None
         publishPostingsGen(spark, fs, path, baseRows, auto)
       }
@@ -612,7 +613,7 @@ object Search {
       val foldRows = segs.map(s => postingsCount(spark, fs, s + "/postings")).sum
       // recompute pb at the CURRENT operative P: folded segments may have
       // been written at different P's, and pb is a pure function of tok
-      val folded = segs.map(s => spark.read.parquet(s + "/postings"))
+      val folded = segs.map(s => Parquet.read(spark, s + "/postings"))
         .reduce(_ unionByName _)
         .withColumn("pb", pmod(xxhash64(col("tok")), lit(p.toLong)).cast("int"))
       val segRoot = s"$path/segs/$name/postings"
@@ -625,7 +626,7 @@ object Search {
       writeRootBuckets(fs, new org.apache.hadoop.fs.Path(segRoot), p)
       // compact segmeta = the exact sum of the folded stats rows
       val (n, sd) = segs.foldLeft((0L, 0L)) { case ((a, d), s) =>
-        val r = spark.read.parquet(s"$s/segmeta").head()
+        val r = Parquet.read(spark, s"$s/segmeta").head()
         (a + r.getLong(0), d + r.getLong(1))
       }
       import spark.implicits._
@@ -656,13 +657,13 @@ object Search {
       val present = parts.map(_.stripPrefix("pb=").toInt).toSet
       val dirs = hit.filter(present).map(b => s"$root/pb=$b")
       if (dirs.isEmpty) None
-      else Some(spark.read.parquet(dirs: _*).filter(tokIn).select(proj: _*))
+      else Some(Parquet.read(spark, dirs: _*).filter(tokIn).select(proj: _*))
     } else {
       val hasData = graft.core.Segments
         .listFiles(fs, new org.apache.hadoop.fs.Path(root))
         .exists(_.getName.endsWith(".parquet"))
       if (!hasData) None
-      else Some(spark.read.parquet(root)
+      else Some(Parquet.read(spark, root)
         .filter(col("pb").isin(hit: _*) && tokIn).select(proj: _*))
     }
   }
@@ -671,7 +672,7 @@ object Search {
     * built (or a generation published) over zero rows writes only
     * `_SUCCESS` — `partitionBy` of an empty frame emits no part files —
     * and schema inference over such a root THROWS, so every raw
-    * `spark.read.parquet` of a postings root gates on this (the
+    * parquet read of a postings root gates on this (the
     * `bandTreeCount` no-data-files guard, [[graft.operators.Dedup]]). */
   private def hasDataFiles(
       fs: org.apache.hadoop.fs.FileSystem,
@@ -690,7 +691,7 @@ object Search {
       spark: org.apache.spark.sql.SparkSession,
       fs: org.apache.hadoop.fs.FileSystem, root: String): Long = {
     if (!hasDataFiles(fs, new org.apache.hadoop.fs.Path(root))) 0L
-    else spark.read.parquet(root).count()
+    else Parquet.read(spark, root).count()
   }
 
   /** Publish a COMPLETE base postings tree as a new generation behind the
@@ -787,7 +788,7 @@ object Search {
     // the folded tree lands at the new auto P; stop-the-world, so no
     // marker gate is needed — every root is retired here
     val eff = readRootBuckets(fs, base)
-      .getOrElse(spark.read.parquet(s"$path/meta").head().getInt(2))
+      .getOrElse(Parquet.read(spark, s"$path/meta").head().getInt(2))
     val liveRows = (base.toString +: segs.map(_ + "/postings"))
       .map(r => postingsCount(spark, fs, r)).sum
     val auto = autoPostingsBuckets(liveRows)
@@ -799,14 +800,14 @@ object Search {
       .filter(r => hasDataFiles(fs, new org.apache.hadoop.fs.Path(r)))
     val live = if (dataRoots.isEmpty) None else {
       val raw = dataRoots
-        .map(spark.read.parquet(_)).reduce(_ unionByName _)
+        .map(Parquet.read(spark, _)).reduce(_ unionByName _)
         // (doc, tok) dedupe makes the fold IDEMPOTENT: a crash after the
         // base publish but before the segment delete leaves segment rows in
         // both trees, and the rerun must not double them
         .dropDuplicates("doc_id", "tok")
       Some(if (!fs.exists(tombsDir)) raw
       else raw.join(
-        broadcast(spark.read.parquet(tombsDir.toString).select("doc_id").distinct()),
+        broadcast(Parquet.read(spark, tombsDir.toString).select("doc_id").distinct()),
         Seq("doc_id"), "left_anti"))
     }
     // generation publish (marker first, pointer flip as the commit
@@ -828,7 +829,7 @@ object Search {
     val (nDocs, sumDl) =
       if (!hasDataFiles(fs, newRoot)) (0L, 0L)
       else {
-        val m = spark.read.parquet(newRoot.toString)
+        val m = Parquet.read(spark, newRoot.toString)
           .select("doc_id", "dl").groupBy("doc_id").agg(max("dl").as("dl"))
           .agg(count(lit(1)), coalesce(sum("dl"), lit(0L))).head()
         (m.getLong(0), m.getLong(1))
@@ -859,12 +860,12 @@ object Search {
     * scan the slim postings trees only — never document text. */
   def textIndexStats(
       spark: org.apache.spark.sql.SparkSession, path: String): Map[String, String] = {
-    val meta = spark.read.parquet(s"$path/meta").head()
+    val meta = Parquet.read(spark, s"$path/meta").head()
     val (n0, sd0) = (meta.getLong(0), meta.getLong(1))
     val buckets = effectiveBuckets(spark, path)
     val segs = liveSegments(spark, path)
     val (nS, sdS) = segs.foldLeft((n0, sd0)) { case ((a, d), seg) =>
-      val r = spark.read.parquet(s"$seg/segmeta").head()
+      val r = Parquet.read(spark, s"$seg/segmeta").head()
       (a + r.getLong(0), d + r.getLong(1))
     }
     val fs = new org.apache.hadoop.fs.Path(path)
@@ -873,7 +874,7 @@ object Search {
     val (tombN, tombDl) =
       if (!fs.exists(tombsDir)) (0L, 0L)
       else {
-        val g = spark.read.parquet(tombsDir.toString)
+        val g = Parquet.read(spark, tombsDir.toString)
           .groupBy("doc_id").agg(max("dl").as("dl"))
           .agg(count(lit(1)), coalesce(sum("dl"), lit(0L))).head()
         (g.getLong(0), g.getLong(1))
@@ -887,7 +888,7 @@ object Search {
     val (nPostings, nTerms) =
       if (dataRoots.isEmpty) (0L, 0L)
       else {
-        val p = dataRoots.map(spark.read.parquet(_)).reduce(_ unionByName _)
+        val p = dataRoots.map(Parquet.read(spark, _)).reduce(_ unionByName _)
           .agg(count(lit(1)), approx_count_distinct(col("tok"))).head()
         (p.getLong(0), p.getLong(1))
       }
@@ -929,14 +930,14 @@ object Search {
       queryIdCol: String = "query_id",
       queryTextCol: String = "query_text"): DataFrame = {
     require(topK > 0, "topK must be positive")
-    val meta = spark.read.parquet(s"$path/meta").head()
+    val meta = Parquet.read(spark, s"$path/meta").head()
     val (n0, sd0, metaBuckets) = (meta.getLong(0), meta.getLong(1), meta.getInt(2))
     // live streamed segments contribute their own stats rows — the base
     // meta never mutates on the streaming path, so a replayed batch
     // cannot double-count
     val segs = liveSegments(spark, path)
     val (nS, sdS) = segs.foldLeft((n0, sd0)) { case ((a, d), seg) =>
-      val r = spark.read.parquet(s"$seg/segmeta").head()
+      val r = Parquet.read(spark, s"$seg/segmeta").head()
       (a + r.getLong(0), d + r.getLong(1))
     }
     // tombstoned docs leave N/avgdl exactly as a rebuild-without-them
@@ -948,7 +949,7 @@ object Search {
       // not checkpointed: the returned plan anti-joins this frame, so a
       // checkpoint block here would outlive the call (the r14 text-soak
       // leak). Takedown-sized; the stats agg below re-reads the parquet.
-      Some(spark.read.parquet(tombsDir.toString)
+      Some(Parquet.read(spark, tombsDir.toString)
         .groupBy("doc_id").agg(max("dl").as("dl")))
     else None
     val (n, sumDl) = tombs.fold((nS, sdS)) { t =>
@@ -990,7 +991,7 @@ object Search {
       // rows (all-empty texts) falls back to an explicitly-typed frame —
       // it is empty, so the long id type is moot.
       else roots.find(r => hasDataFiles(fs, new org.apache.hadoop.fs.Path(r))) match {
-        case Some(r) => spark.read.parquet(r)
+        case Some(r) => Parquet.read(spark, r)
           .filter(lit(false)).select("doc_id", "tok", "tf", "dl")
         case None =>
           import spark.implicits._

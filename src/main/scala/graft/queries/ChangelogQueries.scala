@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.core.{Changelog, ChangelogSpec, Tables}
+import graft.core.{Changelog, ChangelogSpec, Parquet, Tables}
 import graft.streaming.Ingest
 import org.apache.spark.sql.functions._
 
@@ -43,7 +43,7 @@ object ChangelogQueries {
         // (single file or directory of parts) through symlinks
         val srcDir = java.nio.file.Paths.get(tmp, "src")
         QueryDef.linkParquetInputs(java.nio.file.Paths.get(dir, "events.parquet"), srcDir)
-        val schema = s.read.parquet(s"$dir/events.parquet").schema
+        val schema = Parquet.read(s, s"$dir/events.parquet").schema
         val q = Ingest.startChangelogIngest(
           s,
           sourceDir = srcDir.toString,
@@ -52,7 +52,7 @@ object ChangelogQueries {
           checkpointDir = s"$tmp/ckpt",
           orderCols = Seq("event_id"))
         q.awaitTermination()
-        s.read.parquet(s"$tmp/sink")
+        Parquet.read(s, s"$tmp/sink")
           .select("event_id", "user_id", "event_type", "value")
           .orderBy("event_id")
       },

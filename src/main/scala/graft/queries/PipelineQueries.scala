@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.functions.{Aggregators, TextOps}
 import graft.operators.{Dedup, Multimodal, Similarity}
-import graft.core.Tables
+import graft.core.{Parquet, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -111,7 +111,7 @@ object PipelineQueries {
         build.write.mode("overwrite").parquet(p)
         p
       })
-    s.read.parquet(path)
+    Parquet.read(s, path)
   }
 
   /** The BM25 oracle's CTE chain (query terms -> per-(query, doc) rounded
@@ -1280,11 +1280,11 @@ object PipelineQueries {
         val srcDir = s"$tmp/src"
         emb.filter(col("vec_id") > cut).select("vec_id", "embedding")
           .coalesce(1).write.parquet(srcDir)
-        val schema = s.read.parquet(srcDir).schema
+        val schema = Parquet.read(s, srcDir).schema
         graft.streaming.Ingest.startSemanticIngest(
           s, srcDir, schema, s"$tmp/sink", s"$tmp/ckpt", s"$tmp/idx",
           threshold = 0.99).awaitTermination()
-        s.read.parquet(s"$tmp/sink").select("vec_id").orderBy("vec_id")
+        Parquet.read(s, s"$tmp/sink").select("vec_id").orderBy("vec_id")
       },
       None),
 

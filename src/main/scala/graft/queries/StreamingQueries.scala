@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.core.Tables
+import graft.core.{Parquet, Tables}
 import graft.streaming.Ingest
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -53,7 +53,7 @@ object StreamingQueries {
     QueryDef.linkParquetInputs(Paths.get(dir, "events.parquet"), srcDir)
     if (flushSentinel) {
       val stage = tmp.resolve("stage_flush")
-      val raw = s.read.parquet(s"$dir/events.parquet")
+      val raw = Parquet.read(s, s"$dir/events.parquet")
       // the flush row must carry ts in the SAME physical type the driver
       // wrote, or the staged file's schema diverges from the stream schema
       val flushTs = {
@@ -87,7 +87,7 @@ object StreamingQueries {
         } finally listing.close()
       require(moved, s"no parquet part written under $stage")
     }
-    val schema = s.read.parquet(s"$dir/events.parquet").schema
+    val schema = Parquet.read(s, s"$dir/events.parquet").schema
     val src = s.readStream.schema(schema)
       .parquet(srcDir.toString)
       .withColumn("ts_us", graft.core.Tables.tsMicros(schema("ts").dataType))

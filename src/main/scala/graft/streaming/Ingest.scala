@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.core.Parquet
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
@@ -978,9 +979,8 @@ object Ingest {
     val committed = Marks.read(
       s"$checkpointDir/graft-marks", spark.sparkContext.hadoopConfiguration).keys.toSeq.sorted
     require(committed.nonEmpty, s"no committed batches under $checkpointDir")
-    spark.read
-      .option("basePath", s"$sinkDir/_funnel")
-      .parquet(committed.map(b => s"$sinkDir/_funnel/batch_id=$b"): _*)
+    Parquet.read(spark, Map("basePath" -> s"$sinkDir/_funnel"),
+        committed.map(b => s"$sinkDir/_funnel/batch_id=$b"): _*)
       .groupBy("ord", "stage")
       .agg(sum("docs_in").as("docs_in"), sum("docs_out").as("docs_out"))
       .orderBy("ord")
@@ -994,9 +994,8 @@ object Ingest {
     val committed = Marks.read(
       s"$checkpointDir/graft-marks", spark.sparkContext.hadoopConfiguration).keys.toSeq.sorted
     require(committed.nonEmpty, s"no committed batches under $checkpointDir")
-    spark.read
-      .option("basePath", s"$sinkDir/_funnel")
-      .parquet(committed.map(b => s"$sinkDir/_funnel/batch_id=$b"): _*)
+    Parquet.read(spark, Map("basePath" -> s"$sinkDir/_funnel"),
+        committed.map(b => s"$sinkDir/_funnel/batch_id=$b"): _*)
       .groupBy("fail_rule").agg(sum("n_docs").as("n_docs"))
       .orderBy("fail_rule")
   }
@@ -1005,15 +1004,16 @@ object Ingest {
     * manifest-visibility rule (files not recorded in the manifest do not
     * exist, kv/db/version_set.cpp:920-1018). A concurrent writer's
     * half-written `batch_id` directory is invisible until its mark file is
-    * committed. Costs one tiny mark-dir listing; the per-batch paths keep
-    * partition pruning on `batch_id`. */
+    * committed. Building the reader runs no Spark job: it opens every
+    * mark file (one per committed batch) and lists the batch directories,
+    * and [[graft.core.Parquet.read]] reads one footer on the driver for the
+    * schema. The per-batch paths keep partition pruning on `batch_id`. */
   def readCommitted(spark: SparkSession, sinkDir: String, checkpointDir: String): DataFrame = {
     val committed = Marks.read(
       s"$checkpointDir/graft-marks", spark.sparkContext.hadoopConfiguration).keys.toSeq.sorted
     require(committed.nonEmpty, s"no committed batches under $checkpointDir")
-    spark.read
-      .option("basePath", sinkDir)
-      .parquet(committed.map(b => s"$sinkDir/batch_id=$b"): _*)
+    Parquet.read(spark, Map("basePath" -> sinkDir),
+        committed.map(b => s"$sinkDir/batch_id=$b"): _*)
   }
 
   /** Compact an ingest sink's COMMITTED view into `outDir` — background
@@ -1085,7 +1085,7 @@ object Ingest {
       // absent means the batch write never finished; do not promote it
       val committed = fs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS"))
       if (committed) {
-        val range = spark.read.parquet(p.toString)
+        val range = Parquet.read(spark, p.toString)
           .agg(org.apache.spark.sql.functions.min("seq"), org.apache.spark.sql.functions.max("seq"))
           .head()
         if (!range.isNullAt(0)) {

@@ -20,7 +20,11 @@ import org.apache.spark.sql.execution.LogicalRDD
   * releases the right blocks, and partitioning/ordering are preserved)
   * without `originStats`, falling back to the session default size — the
   * estimate a fresh scan of unknown data gets, and the only value that
-  * cannot compound.
+  * cannot compound. The truncated plan's constraints (its inferred
+  * predicates, e.g. `isnotnull` on the loop keys; `originConstraints` is
+  * not readable, `constraints` is the same set minus subquery predicates)
+  * do not compound and are kept, so constraint-derived filters still apply
+  * to the loop variable.
   */
 object GraftCheckpointStats {
   def resetInheritedStats(df: DataFrame): DataFrame =
@@ -30,7 +34,8 @@ object GraftCheckpointStats {
           df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
           LogicalRDD(lr.output, lr.rdd, lr.outputPartitioning, lr.outputOrdering,
             lr.isStreaming, lr.stream)(
-            df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]))
+            df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+            originStats = None, originConstraints = Some(lr.constraints)))
       case _ => df
     }
 }

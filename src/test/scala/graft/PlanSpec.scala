@@ -16,6 +16,19 @@ class PlanSpec extends AnyFunSuite {
   private def plan(name: String): String =
     Registry.byName(name).fn(spark, dir).queryExecution.executedPlan.toString
 
+  test("checkpoint stats reset drops the size estimate and keeps the constraints") {
+    import org.apache.spark.sql.functions.col
+    val df = spark.range(1000).toDF().filter(col("id") > 5).localCheckpoint()
+    try {
+      val before = df.queryExecution.analyzed
+      val after = org.apache.spark.sql.GraftCheckpointStats.resetInheritedStats(df).queryExecution.analyzed
+      val default = org.apache.spark.sql.internal.SQLConf.get.defaultSizeInBytes
+      assert(before.constraints.nonEmpty && after.constraints == before.constraints)
+      assert(before.stats.sizeInBytes < default)
+      assert(after.stats.sizeInBytes == default && after.stats.rowCount.isEmpty)
+    } finally graft.core.Blocks.free(df)
+  }
+
   test("q01: column pruning reaches the scan (ReadSchema excludes unused columns)") {
     val p = plan("q01_scan_project")
     assert(p.contains("l_orderkey"), p.take(500))
