@@ -774,7 +774,9 @@ final class Graft(val spark: SparkSession, val dir: String) {
     * quality filter → PII redact → exact dedup → near-dup collapse →
     * optional decontamination → optional token budget, optionally
     * materialized as training shards. Returns (curated corpus, per-stage
-    * funnel); free the corpus with `graft.core.Blocks.free` when done. */
+    * funnel). The corpus is a checkpoint: inside a `graft.core.Stage.scope`
+    * it is freed when the scope ends unless the scope returns it; outside
+    * one, free it with `graft.core.Stage.free` when done. */
   def curatePipeline(
       rules: Seq[(String, org.apache.spark.sql.Column)] =
         operators.Curation.defaultQualityRules(),

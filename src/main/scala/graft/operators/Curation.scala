@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Stage
 import graft.functions.{TextOps, Tokenizer}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -57,12 +58,11 @@ object Curation {
     // NULL text coalesces to "" like every sibling operator: size(null)
     // would be -1 with ANSI off, and a -1 in the running window sum lets
     // cum_tokens dip back under budget and re-admit rows past the boundary
-    val base = documents
+    val base = Stage.scope(_(documents
       .select(
         col(idCol), col(strataCol),
         tokenizer.count(coalesce(col(textCol), lit(""))).as("n_tokens"),
-        score.as("_score"))
-      .localCheckpoint()
+        score.as("_score"))))
     val survivors =
       if (!prefilter) base
       else {
@@ -247,7 +247,7 @@ object Curation {
       numHashes: Int = 64,
       bands: Int = 16,
       idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame = {
+      textCol: String = "text"): DataFrame = Stage.scope { s =>
     require(numHashes % bands == 0, "bands must divide numHashes")
     require(threshold > 0.0 && threshold <= 1.0, "threshold must be in (0, 1]")
     val r = numHashes / bands
@@ -258,10 +258,9 @@ object Curation {
           .as("sh"))
       .withColumn("sig", TextOps.minHashFromHashes(col("sh"), numHashes))
     // corpus: tokenize + sign ONCE (the minHashLsh discipline); bench: tiny
-    val c = prep(corpus).localCheckpoint()
-    val b = prep(benchmark).select(
-      col("doc").as("bench_doc"), col("sh").as("bench_sh"), col("sig").as("bench_sig"))
-      .localCheckpoint()
+    val c = s(prep(corpus))
+    val b = s(prep(benchmark).select(
+      col("doc").as("bench_doc"), col("sh").as("bench_sh"), col("sig").as("bench_sig")))
     val bBands = b.select(
       col("bench_doc"), col("bench_sh"), col("bench_sig"),
       explode(TextOps.lshBands(col("bench_sig"), bands, r)).as("band"))
@@ -664,17 +663,16 @@ object Curation {
     val tok = tokenPrevRows(ref, textCol, Seq.empty, tokenizer)
     // distinct-token counts are vocabulary-sized: checkpoint once so the
     // total and the top-K don't each re-scan the corpus
-    val uniAll = tok.groupBy("token")
-      .agg(count(lit(1)).cast("double").as("c1")).localCheckpoint()
-    val n = uniAll.agg(coalesce(sum("c1"), lit(0.0))).head().getDouble(0).toLong
-    val uni = uniAll.orderBy(col("c1").desc, col("token")).limit(maxVocab).localCheckpoint()
-    graft.core.Blocks.free(uniAll)
-    val big = tok.filter(col("prev").isNotNull)
+    val (n, uni) = Stage.scope { s =>
+      val uniAll = s(tok.groupBy("token").agg(count(lit(1)).cast("double").as("c1")))
+      (uniAll.agg(coalesce(sum("c1"), lit(0.0))).head().getDouble(0).toLong,
+        s(uniAll.orderBy(col("c1").desc, col("token")).limit(maxVocab)))
+    }
+    val big = Stage.scope(_(tok.filter(col("prev").isNotNull)
       .join(broadcast(uni.select("token")), Seq("token"), "left_semi")
       .join(broadcast(uni.select(col("token").as("prev"))), Seq("prev"), "left_semi")
       .groupBy("prev", "token").agg(count(lit(1)).cast("double").as("c2"))
-      .orderBy(col("c2").desc, col("prev"), col("token")).limit(maxBigrams)
-      .localCheckpoint()
+      .orderBy(col("c2").desc, col("prev"), col("token")).limit(maxBigrams)))
     NgramLm(uni, big, n, tokenizer)
   }
 
@@ -758,30 +756,30 @@ object Curation {
     def toks(df: DataFrame, isPos: Boolean): DataFrame = df.select(
       lit(isPos).as("_isPos"),
       explode(tokenizer.tokens(coalesce(col(textCol), lit("")))).as("token"))
-    val counts = toks(positive, isPos = true).unionByName(toks(negative, isPos = false))
-      .groupBy("token")
-      .agg(
-        sum(when(col("_isPos"), 1L).otherwise(0L)).cast("double").as("cpos"),
-        sum(when(col("_isPos"), 0L).otherwise(1L)).cast("double").as("cneg"))
-      .localCheckpoint() // vocabulary-sized; totals + prune must not re-scan
-    val tot = counts.agg(
-      coalesce(sum("cpos"), lit(0.0)), coalesce(sum("cneg"), lit(0.0)),
-      count(lit(1)).cast("double")).head()
-    val (nPos, nNeg, v) = (tot.getDouble(0), tot.getDouble(1), tot.getDouble(2))
-    require(v > 0.0, "trainQualityClassifier: empty training corpus")
-    // denominators as driver doubles: integer-valued well below 2^53, so
-    // the sums and products are exact and the oracle's SQL derivation of
-    // the same quantities lands on the identical double
-    val dPos = nPos + alpha * v
-    val dNeg = nNeg + alpha * v
-    val llr = counts
-      .orderBy((col("cpos") + col("cneg")).desc, col("token"))
-      .limit(maxVocab)
-      .select(col("token"),
-        (log((col("cpos") + lit(alpha)) / lit(dPos)) -
-          log((col("cneg") + lit(alpha)) / lit(dNeg))).as("llr"))
-      .localCheckpoint()
-    graft.core.Blocks.free(counts)
+    val (llr, dPos, dNeg) = Stage.scope { s =>
+      // vocabulary-sized; totals + prune must not re-scan
+      val counts = s(toks(positive, isPos = true).unionByName(toks(negative, isPos = false))
+        .groupBy("token")
+        .agg(
+          sum(when(col("_isPos"), 1L).otherwise(0L)).cast("double").as("cpos"),
+          sum(when(col("_isPos"), 0L).otherwise(1L)).cast("double").as("cneg")))
+      val tot = counts.agg(
+        coalesce(sum("cpos"), lit(0.0)), coalesce(sum("cneg"), lit(0.0)),
+        count(lit(1)).cast("double")).head()
+      val (nPos, nNeg, v) = (tot.getDouble(0), tot.getDouble(1), tot.getDouble(2))
+      require(v > 0.0, "trainQualityClassifier: empty training corpus")
+      // denominators as driver doubles: integer-valued well below 2^53, so
+      // the sums and products are exact and the oracle's SQL derivation of
+      // the same quantities lands on the identical double
+      val dPos = nPos + alpha * v
+      val dNeg = nNeg + alpha * v
+      (s(counts
+        .orderBy((col("cpos") + col("cneg")).desc, col("token"))
+        .limit(maxVocab)
+        .select(col("token"),
+          (log((col("cpos") + lit(alpha)) / lit(dPos)) -
+            log((col("cneg") + lit(alpha)) / lit(dNeg))).as("llr"))), dPos, dNeg)
+    }
     val oov = math.log(alpha / dPos) - math.log(alpha / dNeg)
     val (nPosDocs, nNegDocs) = (positive.count(), negative.count())
     require(nPosDocs > 0 && nNegDocs > 0,
@@ -902,22 +900,22 @@ object Curation {
     def counts(df: DataFrame): DataFrame =
       dsirRows(df, Seq.empty, n, buckets, textCol, tokenizer, outer = false)
         .groupBy("_b").agg(count(lit(1)).cast("double").as("c"))
-    val joined = counts(target).select(col("_b"), col("c").as("ct"))
-      .join(counts(raw).select(col("_b"), col("c").as("cr")), Seq("_b"), "full_outer")
-      .localCheckpoint() // at most `buckets` rows; totals + lr reuse it
-    val tot = joined.agg(
-      coalesce(sum("ct"), lit(0.0)), coalesce(sum("cr"), lit(0.0))).head()
-    val (nt, nr) = (tot.getDouble(0), tot.getDouble(1))
-    require(nt > 0.0 && nr > 0.0,
-      s"trainDsir: both sides need n-gram mass (target=$nt, raw=$nr)")
-    val dT = nt + alpha * buckets
-    val dR = nr + alpha * buckets
-    val lr = joined.select(col("_b").as("bucket"),
-      (log((coalesce(col("ct"), lit(0.0)) + lit(alpha)) / lit(dT)) -
-        log((coalesce(col("cr"), lit(0.0)) + lit(alpha)) / lit(dR))).as("lr"))
-      .localCheckpoint()
-    graft.core.Blocks.free(joined)
-    DsirModel(lr, buckets, n, math.log(alpha / dT) - math.log(alpha / dR), tokenizer)
+    Stage.scope { s =>
+      // at most `buckets` rows; totals + lr reuse it
+      val joined = s(counts(target).select(col("_b"), col("c").as("ct"))
+        .join(counts(raw).select(col("_b"), col("c").as("cr")), Seq("_b"), "full_outer"))
+      val tot = joined.agg(
+        coalesce(sum("ct"), lit(0.0)), coalesce(sum("cr"), lit(0.0))).head()
+      val (nt, nr) = (tot.getDouble(0), tot.getDouble(1))
+      require(nt > 0.0 && nr > 0.0,
+        s"trainDsir: both sides need n-gram mass (target=$nt, raw=$nr)")
+      val dT = nt + alpha * buckets
+      val dR = nr + alpha * buckets
+      val lr = s(joined.select(col("_b").as("bucket"),
+        (log((coalesce(col("ct"), lit(0.0)) + lit(alpha)) / lit(dT)) -
+          log((coalesce(col("cr"), lit(0.0)) + lit(alpha)) / lit(dR))).as("lr")))
+      DsirModel(lr, buckets, n, math.log(alpha / dT) - math.log(alpha / dR), tokenizer)
+    }
   }
 
   /** Per-document importance weights under a trained [[DsirModel]]:
@@ -1209,7 +1207,8 @@ object Curation {
     * materializes, and every stage runs the exact plan its standalone
     * operator produces (CurationSpec pins funnel equality against the
     * manually-chained operators). The returned corpus is the final
-    * checkpoint; free it with `graft.core.Blocks.free` when done. */
+    * checkpoint; it passes to the enclosing [[graft.core.Stage]] scope, or
+    * outside one is freed with `graft.core.Stage.free` when done. */
   def curationPipeline(
       documents: DataFrame,
       rules: Seq[(String, Column)],
@@ -1226,7 +1225,7 @@ object Curation {
       idCol: String = "doc_id",
       textCol: String = "text",
       strataCol: String = "lang",
-      tokenizer: Tokenizer = Tokenizer.Whitespace): (DataFrame, DataFrame) = {
+      tokenizer: Tokenizer = Tokenizer.Whitespace): (DataFrame, DataFrame) = Stage.scope { s =>
     val spark = documents.sparkSession
     val funnel = Seq.newBuilder[(String, Long, Long)]
     // input count observed inside the input checkpoint — same one-pass
@@ -1235,11 +1234,17 @@ object Curation {
     // fallback count.
     val obs0 = org.apache.spark.sql.Observation(
       s"funnel_in_${java.util.UUID.randomUUID()}")
-    var cur = documents.observe(obs0, count(lit(1)).as("n")).localCheckpoint()
+    var cur = s(documents.observe(obs0, count(lit(1)).as("n")))
     val m0 = org.apache.spark.sql.GraftObservationAccess.getOrEmpty(obs0)
     var nCur = if (m0.contains("n")) m0("n").asInstanceOf[Long] else cur.count()
 
-    def stage(name: String)(f: DataFrame => DataFrame): Unit = {
+    def stage(name: String)(f: DataFrame => DataFrame): Unit = cur = Stage.scope { t =>
+      // the stage's scope frees the superseded stage and every operator-
+      // internal checkpoint of `f` (the components label table under
+      // neardup, minHashLsh's shingle/signature blocks, decontaminateFuzzy's
+      // side checkpoints, tokenBudget's base) once `next` has materialized,
+      // whether or not the output's plan still reaches them
+      t.adopt(cur)
       val raw = f(cur)
       // the funnel count is OBSERVED inside the stage's checkpoint
       // materialization (the connectedComponents discipline): the former
@@ -1249,7 +1254,7 @@ object Curation {
       // past (guide §1.2 step 1 / §2.4: remove passes). Values identical.
       val obs = org.apache.spark.sql.Observation(
         s"funnel_${name}_${java.util.UUID.randomUUID()}")
-      val next = raw.observe(obs, count(lit(1)).as("n")).localCheckpoint()
+      val next = t(raw.observe(obs, count(lit(1)).as("n")))
       // stage inputs are LogicalRDD checkpoints (never a provably-empty
       // LocalRelation), so the CollectMetrics node survives optimization —
       // but keep the direct count as a fallback: if the metrics are ever
@@ -1262,16 +1267,8 @@ object Curation {
       val nNext =
         if (metrics.contains("n")) metrics("n").asInstanceOf[Long] else next.count()
       funnel += ((name, nCur, nNext))
-      // free the superseded stage AND the pre-checkpoint plan: the raw
-      // frame's sweep releases operator-INTERNAL checkpoints (the
-      // components label table under neardup, decontaminateFuzzy's
-      // side checkpoints, tokenBudget's base) that would otherwise
-      // survive until GC — the exact residue the pipeline ingest's
-      // toFree list was added for (measured in the uptime soak)
-      graft.core.Blocks.free(raw)
-      graft.core.Blocks.free(cur)
-      cur = next
       nCur = nNext
+      next
     }
 
     stage("filter")(d =>
@@ -1287,25 +1284,16 @@ object Curation {
       d.join(keep, Seq(idCol), "left_semi")
     }
     stage("neardup") { d =>
-      // materialize the pair list, then free BOTH layers of internal
-      // checkpoints explicitly: minHashLsh's shingle/signature blocks are
-      // reachable only through the PRE-checkpoint pair plan, and the pair
-      // checkpoint itself is truncated out of the stage output by the
-      // components labels — the stage-end sweep of the OUTPUT plan
-      // sees neither, so without this they leaked two RDD blocks per
-      // pipeline invocation (caught by the 1000-batch soak's horizon
-      // equality check, which runs the batch pipeline in a measured JVM)
-      val pairs0 = Dedup.minHashLsh(
-        d, threshold = nearDupThreshold, idCol = idCol, textCol = textCol)
-      val pairs = pairs0.localCheckpoint()
-      graft.core.Blocks.free(pairs0)
-      // the components labels are computed here, before the pair
-      // checkpoint is freed: a small pair graph in driver memory (labels
-      // come back as a local relation), a large one in the distributed
-      // loop (labels are a checkpoint the stage-end sweep frees)
-      val out = Dedup.collapseDuplicates(d, pairs, idCol)
-      graft.core.Blocks.free(pairs)
-      out
+      // two nested scopes free the internal checkpoints as early as they
+      // can go: minHashLsh's shingle/signature blocks once the pair list
+      // has materialized, the pair list once the components labels have
+      // (a small pair graph's labels come back as a local relation, a
+      // large one's as a checkpoint the stage's scope frees)
+      Stage.scope { _ =>
+        val pairs = Stage.scope(_(Dedup.minHashLsh(
+          d, threshold = nearDupThreshold, idCol = idCol, textCol = textCol)))
+        Dedup.collapseDuplicates(d, pairs, idCol)
+      }
     }
     benchmark.foreach { bm =>
       stage("decontaminate") { d =>

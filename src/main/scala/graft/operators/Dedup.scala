@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.core.Parquet
+import graft.core.{Parquet, Stage}
 import graft.functions.TextOps
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -51,11 +51,10 @@ object Dedup {
       documents: DataFrame,
       idCol: String = "doc_id",
       textCol: String = "text",
-      wideKey: Boolean = false): DataFrame = {
-    val norm = documents
+      wideKey: Boolean = false): DataFrame = Stage.scope { s =>
+    val norm = s(documents
       .withColumn("_k", groupKey(textCol, wideKey))
-      .select(col(idCol), col("_k"))
-      .localCheckpoint()
+      .select(col(idCol), col("_k")))
     val groups = norm
       .groupBy(col("_k"))
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("group_size"))
@@ -341,26 +340,11 @@ object Dedup {
       newDocs: DataFrame,
       indexPath: String,
       idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame = {
-    val batch = keyedBatch(newDocs, indexPath, idCol, textCol).localCheckpoint()
-    exactIncrementalKeyed(batch, indexPath, idCol)
-  }
-
-  /** The batch's slim (id, _k) projection, keyed to match `indexPath`'s key
-    * width — NOT materialized. A looping caller (the dedup-ingest
-    * foreachBatch) checkpoints this itself and unpersists it once the
-    * micro-batch lands, so no storage outlives the batch; the one-shot
-    * [[exactIncremental]] wrapper checkpoints it for the result's lifetime. */
-  private[graft] def keyedBatch(
-      newDocs: DataFrame, indexPath: String, idCol: String, textCol: String): DataFrame =
-    newDocs
+      textCol: String = "text"): DataFrame = Stage.scope { s =>
+    // the slim (id, _k) projection, keyed to match the index's key width
+    val batch = s(newDocs
       .withColumn("_k", groupKey(textCol, indexIsWide(newDocs.sparkSession, indexPath)))
-      .select(col(idCol), col("_k"))
-
-  /** Classification plan over an already-keyed (id, _k) batch — fully lazy:
-    * adds no caching of its own, so the caller controls block lifetime. */
-  private[graft] def exactIncrementalKeyed(
-      batch: DataFrame, indexPath: String, idCol: String): DataFrame = {
+      .select(col(idCol), col("_k")))
     val batchGroups = batch
       .groupBy(col("_k"))
       .agg(min(col(idCol)).as("b_keep"), count(lit(1)).as("b_n"))
@@ -395,13 +379,13 @@ object Dedup {
       textCol: String = "text"): Long = {
     val spark = newDocs.sparkSession
     val seq = nextSeq(spark, indexPath)
-    val seg = segmentGroups(newDocs, idCol, textCol, indexIsWide(spark, indexPath))
-      .localCheckpoint() // count + write from one materialization
-    writeSegment(seg,
-      f"$indexPath/keys/seg_$seq%06d_${java.util.UUID.randomUUID().toString.take(8)}", seq)
-    val n = seg.count()
-    graft.core.Blocks.free(seg) // free the blocks: append loops call this per batch
-    n
+    Stage.scope { s =>
+      // count + write from one materialization
+      val seg = s(segmentGroups(newDocs, idCol, textCol, indexIsWide(spark, indexPath)))
+      writeSegment(seg,
+        f"$indexPath/keys/seg_$seq%06d_${java.util.UUID.randomUUID().toString.take(8)}", seq)
+      seg.count()
+    }
   }
 
   /** Retract CONTENT from a persisted exact-dedup index — the takedown /
@@ -425,15 +409,14 @@ object Dedup {
       textCol: String = "text"): Long = {
     val spark = removedDocs.sparkSession
     val seq = nextSeq(spark, indexPath)
-    val keys = removedDocs
-      .select(groupKey(textCol, indexIsWide(spark, indexPath)).as("_k"))
-      .distinct()
-      .sortWithinPartitions("_k")
-      .localCheckpoint()
-    writeSegment(keys, f"$indexPath/tombs/del_$seq%06d", seq)
-    val n = keys.count()
-    graft.core.Blocks.free(keys)
-    n
+    Stage.scope { s =>
+      val keys = s(removedDocs
+        .select(groupKey(textCol, indexIsWide(spark, indexPath)).as("_k"))
+        .distinct()
+        .sortWithinPartitions("_k"))
+      writeSegment(keys, f"$indexPath/tombs/del_$seq%06d", seq)
+      keys.count()
+    }
   }
 
   /** Fold all live segments (and tombstones) into one — the index's
@@ -664,14 +647,12 @@ object Dedup {
       idCol: String = "doc_id"): Long = {
     val spark = newDocs.sparkSession
     val seq = nextSeq(spark, catalogPath)
-    val seg = spanCatalogRows(
-        newDocs, spanCatalogN(spark, catalogPath), textCol, idCol)
-      .localCheckpoint()
-    writeSegment(seg,
-      f"$catalogPath/keys/seg_$seq%06d_${java.util.UUID.randomUUID().toString.take(8)}", seq)
-    val n = seg.count()
-    graft.core.Blocks.free(seg)
-    n
+    Stage.scope { s =>
+      val seg = s(spanCatalogRows(newDocs, spanCatalogN(spark, catalogPath), textCol, idCol))
+      writeSegment(seg,
+        f"$catalogPath/keys/seg_$seq%06d_${java.util.UUID.randomUUID().toString.take(8)}", seq)
+      seg.count()
+    }
   }
 
   /** Append a batch's per-gram firsts as a NAMED segment with overwrite
@@ -710,16 +691,15 @@ object Dedup {
       idCol: String = "doc_id"): Long = {
     val spark = removedDocs.sparkSession
     val seq = nextSeq(spark, catalogPath)
-    val keys = Curation
-      .spanOccurrences(removedDocs, spanCatalogN(spark, catalogPath), textCol, idCol)
-      .select(col("gram").as("_k"))
-      .distinct()
-      .sortWithinPartitions("_k")
-      .localCheckpoint()
-    writeSegment(keys, f"$catalogPath/tombs/del_$seq%06d", seq)
-    val n = keys.count()
-    graft.core.Blocks.free(keys)
-    n
+    Stage.scope { s =>
+      val keys = s(Curation
+        .spanOccurrences(removedDocs, spanCatalogN(spark, catalogPath), textCol, idCol)
+        .select(col("gram").as("_k"))
+        .distinct()
+        .sortWithinPartitions("_k"))
+      writeSegment(keys, f"$catalogPath/tombs/del_$seq%06d", seq)
+      keys.count()
+    }
   }
 
   /** Fold all live catalog segments (and gram tombstones) into one; merge
@@ -797,7 +777,7 @@ object Dedup {
       bands: Int = 16,
       threshold: Double = 0.7,
       idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame = {
+      textCol: String = "text"): DataFrame = Stage.scope { s =>
     require(numHashes % bands == 0, "bands must divide numHashes")
     val r = numHashes / bands
     // Tokenize/shingle/hash ONCE: the self-join + estimate + verify joins
@@ -805,16 +785,14 @@ object Dedup {
     // Shingles are carried as their xxhash64 values (array<long>): Jaccard
     // over hashed shingles equals string Jaccard w.h.p. (64-bit collisions),
     // long-array intersection is far cheaper than string sets, and the
-    // minhash signature derives from the same array. localCheckpoint
+    // minhash signature derives from the same array. The checkpoint
     // materializes the one pass (memory/disk blocks) and truncates lineage.
-    val shingled = documents
+    val shingled = s(documents
       .select(
         col(idCol).as("doc"),
-        TextOps.ngramHashes(TextOps.tokenHashes(col(textCol)), shingleN).as("sh"))
-      .localCheckpoint()
-    val sigs = shingled
-      .select(col("doc"), TextOps.minHashFromHashes(col("sh"), numHashes).as("sig"))
-      .localCheckpoint()
+        TextOps.ngramHashes(TextOps.tokenHashes(col(textCol)), shingleN).as("sh")))
+    val sigs = s(shingled
+      .select(col("doc"), TextOps.minHashFromHashes(col("sh"), numHashes).as("sig")))
     // The band self-join shuffles ONLY (doc, band) — neither signatures nor
     // shingle arrays ride the candidate-pair shuffle. At 100 TB this is the
     // difference between shuffling ids and shuffling the corpus.
@@ -952,29 +930,30 @@ object Dedup {
         .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
     } else {
       // the signing pass feeds BOTH stores — checkpoint so the corpus is
-      // tokenized exactly once
-      val rows = signatureRows(documents, shingleN, numHashes, idCol, textCol)
-        .localCheckpoint()
-      rows.sortWithinPartitions("doc")
-        .write.mode("overwrite").options(docRowOptions("doc"))
-        .parquet(s"$path/docs")
-      // AutoBuckets: the LAYOUT decision rides the just-signed corpus size
-      // (the checkpoint makes the count free of recompute) — flat below
-      // the measured crossover where per-bucket listings cost more than
-      // the whole scan, bucketed at the constant-per-bucket auto P above
-      // it. An explicit positive count is honored verbatim (probe
-      // studies, spec fixtures).
-      val p = if (bandBuckets < 0)
-                autoLayoutBuckets(rows.count() * bands, FlatCrossoverRowsMinHash)
-              else bandBuckets
-      if (p > 0) {
-        bandRows(rows, bands, numHashes / bands, p)
-          .repartition(col("bucket"))
-          .write.mode("overwrite").partitionBy("bucket").parquet(s"$path/bands")
-        writeBandTreeBuckets(Seg.fs(spark, path),
-          new org.apache.hadoop.fs.Path(s"$path/bands"), p)
+      // tokenized exactly once; freed before meta lands
+      val p = Stage.scope { s =>
+        val rows = s(signatureRows(documents, shingleN, numHashes, idCol, textCol))
+        rows.sortWithinPartitions("doc")
+          .write.mode("overwrite").options(docRowOptions("doc"))
+          .parquet(s"$path/docs")
+        // AutoBuckets: the LAYOUT decision rides the just-signed corpus size
+        // (the checkpoint makes the count free of recompute) — flat below
+        // the measured crossover where per-bucket listings cost more than
+        // the whole scan, bucketed at the constant-per-bucket auto P above
+        // it. An explicit positive count is honored verbatim (probe
+        // studies, spec fixtures).
+        val p = if (bandBuckets < 0)
+                  autoLayoutBuckets(rows.count() * bands, FlatCrossoverRowsMinHash)
+                else bandBuckets
+        if (p > 0) {
+          bandRows(rows, bands, numHashes / bands, p)
+            .repartition(col("bucket"))
+            .write.mode("overwrite").partitionBy("bucket").parquet(s"$path/bands")
+          writeBandTreeBuckets(Seg.fs(spark, path),
+            new org.apache.hadoop.fs.Path(s"$path/bands"), p)
+        }
+        p
       }
-      graft.core.Blocks.free(rows)
       // meta LAST (the commit point). AUTO-FLAT stores (auto requested,
       // corpus below the crossover) record band_buckets = AutoBuckets
       // (-1): probes treat any non-positive value as flat, and the marker
@@ -1170,15 +1149,11 @@ object Dedup {
       threshold: Double = 0.7,
       idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
-    // One-shot wrapper: the signed batch is checkpointed HERE and stays
-    // pinned until GC (the caller can't reach it to Blocks.free it) — fine
-    // for a one-off probe, but per-batch LOOPS must use the split form
-    // (minHashBatchSigs + minHashIncrementalSigned) and free the sig frame
-    // themselves, exactly like keyedBatch/exactIncrementalKeyed on the
-    // exact index.
-    val batch = minHashBatchSigs(newDocs, indexPath, idCol, textCol)
-      .localCheckpoint()
-    minHashIncrementalSigned(batch, indexPath, threshold)
+    // the signed batch lives with the returned plan; the near-dup ingest
+    // signs with minHashBatchSigs itself, because its sig frame also
+    // feeds the kept segment write
+    Stage.scope(s => minHashIncrementalSigned(
+      s(minHashBatchSigs(newDocs, indexPath, idCol, textCol)), indexPath, threshold))
   }
 
   /** Sign a batch with the index's OWN LSH parameters (meta file), without
@@ -1531,12 +1506,11 @@ object Dedup {
       removedIds: DataFrame,
       indexPath: String,
       idCol: String = "doc_id"): Long = {
-    val batch = removedIds.select(col(idCol).cast("long").as("doc_id"))
-      .distinct().localCheckpoint()
-    batch.write.mode("append").parquet(s"$indexPath/tombs")
-    val n = batch.count()
-    graft.core.Blocks.free(batch)
-    n
+    Stage.scope { s =>
+      val batch = s(removedIds.select(col(idCol).cast("long").as("doc_id")).distinct())
+      batch.write.mode("append").parquet(s"$indexPath/tombs")
+      batch.count()
+    }
   }
 
   /** Fold a MinHash/SimHash index's tombstones AND named streaming
@@ -2079,9 +2053,9 @@ object Dedup {
   def writeMinHashSegment(
       sigs: DataFrame,
       indexPath: String,
-      segName: String): Long = {
+      segName: String): Long = Stage.scope { s =>
     val spark = sigs.sparkSession
-    val batch = sigs.select("doc", "sh", "sig").localCheckpoint()
+    val batch = s(sigs.select("doc", "sh", "sig"))
     // heal-then-read: `bucket` rides as a data column, computed at the
     // CURRENT operative P and recorded in the segment's own `_BUCKETS`
     // marker — probes prune this root at the marker P, so the segment
@@ -2105,9 +2079,7 @@ object Dedup {
     batch.sortWithinPartitions("doc")
       .write.mode("overwrite").options(docRowOptions("doc"))
       .parquet(s"$indexPath/segs/$segName")
-    val n = batch.count()
-    graft.core.Blocks.free(batch)
-    n
+    batch.count()
   }
 
   /** Sign a batch and append its rows to the index (no retrain, no
@@ -2117,11 +2089,10 @@ object Dedup {
       newDocs: DataFrame,
       indexPath: String,
       idCol: String = "doc_id",
-      textCol: String = "text"): Long = {
+      textCol: String = "text"): Long = Stage.scope { s =>
     val spark = newDocs.sparkSession
     val meta = Parquet.read(spark, s"$indexPath/meta").head()
-    val batch = signatureRows(newDocs, meta.getInt(0), meta.getInt(1), idCol, textCol)
-      .localCheckpoint()
+    val batch = s(signatureRows(newDocs, meta.getInt(0), meta.getInt(1), idCol, textCol))
     // Heal a crashed compaction swap BEFORE touching bands/ — appending
     // with bands/ missing would re-create the tree holding only this
     // batch, turning [[bandTreeUsable]]'s exists-check permanently green
@@ -2143,9 +2114,7 @@ object Dedup {
     batch.sortWithinPartitions("doc")
       .write.mode("append").options(docRowOptions("doc"))
       .parquet(s"$indexPath/docs")
-    val n = batch.count()
-    graft.core.Blocks.free(batch) // free the blocks: append loops call this per batch
-    n
+    batch.count()
   }
 
   /** Exact pairwise shingle-Jaccard near-dup within blocking keys — the
@@ -2181,13 +2150,12 @@ object Dedup {
     // Catalyst under-estimates it (see the band joins above) and would
     // broadcast a corpus of shingle arrays; sort-merge on the block key
     // spills gracefully at any corpus size.
-    val d = documents
+    val d = Stage.scope(_(documents
       .select(col("doc_id"), col("lang"), TextOps.tokenHashes(col("text")).as("th"))
       .select(
         col("doc_id"), col("lang"), size(col("th")).as("nt"),
         TextOps.ngramHashes(col("th"), shingleN).as("sh"))
-      .withColumn("nt_block", floor(col("nt") / (tokenSlack * 2)))
-      .localCheckpoint()
+      .withColumn("nt_block", floor(col("nt") / (tokenSlack * 2)))))
       .hint("merge")
     // Orient each pair by (nt, doc_id) instead of doc_id alone: the lower
     // side then only ever probes UP, so {block, block+1} covers every
@@ -2219,10 +2187,10 @@ object Dedup {
     * verify by Hamming distance <= maxHamming. Token hashes are materialized
     * once per document so the 64 bit-folds share them. */
   def simHashPairs(documents: DataFrame, maxHamming: Int = 6): DataFrame = {
-    val d = documents
+    // signature computed once, not per self-join side
+    val d = Stage.scope(_(documents
       .select(col("doc_id"),
-        TextOps.simHashFromHashes(TextOps.tokenHashes(col("text"))).as("sh"))
-      .localCheckpoint() // signature computed once, not per self-join side
+        TextOps.simHashFromHashes(TextOps.tokenHashes(col("text"))).as("sh"))))
     simHashPairsFromSignatures(d, maxHamming)
   }
 
@@ -2418,24 +2386,27 @@ object Dedup {
         .write.mode("overwrite").parquet(s"$path/docs")
     } else {
       // the signing pass upstream already ran; this is an 8-byte/row frame,
-      // checkpoint so docs/ and bands/ don't recompute the source twice
-      val rows = signatures.select(col("doc_id"), col("sh")).localCheckpoint()
-      rows.write.mode("overwrite").parquet(s"$path/docs")
-      // AutoBuckets (the default): the LAYOUT decision — flat below the
-      // family's measured crossover (where the flat scan wins), else
-      // auto-sized P; explicit positive counts honored verbatim
-      val combos = (0 until maxHamming + comboSize).combinations(comboSize).size
-      val p = if (sigBuckets < 0)
-                autoLayoutBuckets(rows.count() * combos, FlatCrossoverRowsSig)
-              else sigBuckets
-      if (p > 0) {
-        signatureBandRows(rows, maxHamming, comboSize, p)
-          .repartition(col("bucket"))
-          .write.mode("overwrite").partitionBy("bucket").parquet(s"$path/bands")
-        writeBandTreeBuckets(Seg.fs(spark, path),
-          new org.apache.hadoop.fs.Path(s"$path/bands"), p)
+      // checkpoint so docs/ and bands/ don't recompute the source twice;
+      // freed before meta lands
+      val p = Stage.scope { s =>
+        val rows = s(signatures.select(col("doc_id"), col("sh")))
+        rows.write.mode("overwrite").parquet(s"$path/docs")
+        // AutoBuckets (the default): the LAYOUT decision — flat below the
+        // family's measured crossover (where the flat scan wins), else
+        // auto-sized P; explicit positive counts honored verbatim
+        val combos = (0 until maxHamming + comboSize).combinations(comboSize).size
+        val p = if (sigBuckets < 0)
+                  autoLayoutBuckets(rows.count() * combos, FlatCrossoverRowsSig)
+                else sigBuckets
+        if (p > 0) {
+          signatureBandRows(rows, maxHamming, comboSize, p)
+            .repartition(col("bucket"))
+            .write.mode("overwrite").partitionBy("bucket").parquet(s"$path/bands")
+          writeBandTreeBuckets(Seg.fs(spark, path),
+            new org.apache.hadoop.fs.Path(s"$path/bands"), p)
+        }
+        p
       }
-      graft.core.Blocks.free(rows)
       // AUTO-FLAT stores record sig_buckets = AutoBuckets (-1): treated as
       // flat by every probe ([[effectiveSigBuckets]] filters non-positive),
       // promoted to bucketed by [[compactDocIndex]] once past the
@@ -2501,9 +2472,9 @@ object Dedup {
       batchSigs: DataFrame,
       indexPath: String,
       maxHamming: Int = 6,
-      comboSize: Int = 2): DataFrame = {
+      comboSize: Int = 2): DataFrame = Stage.scope { s =>
     val spark = batchSigs.sparkSession
-    val batch = batchSigs.select(col("doc_id"), col("sh")).localCheckpoint()
+    val batch = s(batchSigs.select(col("doc_id"), col("sh")))
     val all = storedDocs(spark, indexPath, "doc_id").unionByName(batch)
     simHashBanded(batch, maxHamming, comboSize).as("a")
       .join(simHashBanded(all, maxHamming, comboSize).as("b"),
@@ -2617,9 +2588,9 @@ object Dedup {
 
   /** Append precomputed `(doc_id, sh)` rows to a signature store (plus
     * their band rows on a bucketed store). Returns rows appended. */
-  def appendToSignatureIndex(batchSigs: DataFrame, indexPath: String): Long = {
+  def appendToSignatureIndex(batchSigs: DataFrame, indexPath: String): Long = Stage.scope { s =>
     val spark = batchSigs.sparkSession
-    val batch = batchSigs.select(col("doc_id"), col("sh")).localCheckpoint()
+    val batch = s(batchSigs.select(col("doc_id"), col("sh")))
     // docs FIRST, band rows second — the opposite of the segment path
     // (where the doc segment's _SUCCESS gates the band segment's
     // visibility). A direct append into the live bands/ tree has no such
@@ -2647,9 +2618,7 @@ object Dedup {
           .write.mode("append").partitionBy("bucket")
           .parquet(baseBandRoot(Seg.fs(spark, indexPath), indexPath).toString)
       }
-    val n = batch.count()
-    graft.core.Blocks.free(batch) // free the blocks: append loops call this per batch
-    n
+    batch.count()
   }
 
   /** Write `(doc_id, sh)` rows as a NAMED overwrite segment under
@@ -2663,9 +2632,10 @@ object Dedup {
     * its band rows; an orphaned band segment pairs only into candidates
     * the verify stage drops, and the replay overwrites it). Returns rows
     * written. */
-  def writeSignatureSegment(batchSigs: DataFrame, indexPath: String, segName: String): Long = {
+  def writeSignatureSegment(batchSigs: DataFrame, indexPath: String, segName: String): Long =
+      Stage.scope { s =>
     val spark = batchSigs.sparkSession
-    val batch = batchSigs.select(col("doc_id"), col("sh")).localCheckpoint()
+    val batch = s(batchSigs.select(col("doc_id"), col("sh")))
     // heal-then-read: the segment's `bucket` data column is computed at
     // the CURRENT operative P and recorded in the segment's own `_BUCKETS`
     // marker (after the parquet overwrite, before the doc segment commits)
@@ -2682,9 +2652,7 @@ object Dedup {
         new org.apache.hadoop.fs.Path(s"$indexPath/bandsegs/$segName"), bb)
     }
     batch.write.mode("overwrite").parquet(s"$indexPath/segs/$segName")
-    val n = batch.count()
-    graft.core.Blocks.free(batch)
-    n
+    batch.count()
   }
 
   /** Connected components over a duplicate-pair list: every node appearing
@@ -2733,7 +2701,7 @@ object Dedup {
       pairs: DataFrame,
       aCol: String = "doc_a",
       bCol: String = "doc_b",
-      maxIter: Int = 20): (DataFrame, Int) = {
+      maxIter: Int = 20): (DataFrame, Int) = Stage.scope { _ =>
     // the pair list is materialized once, with its row count and its count
     // of rows holding a null id observed in that same job. It is the pair
     // list, not the symmetric edge list: the distinct that builds the
@@ -2744,20 +2712,20 @@ object Dedup {
     // provably-empty input). Null ids also go there: the loop gives a null
     // node labels (it collects its neighbours' minimum) without ever
     // joining on it, a semantics the driver path does not copy.
-    val obs = org.apache.spark.sql.Observation(s"cc_edges_${java.util.UUID.randomUUID()}")
-    val edges = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
-      .observe(obs, count(lit(1)).as("n"),
-        count(when(col("src").isNull || col("dst").isNull, 1)).as("n_null"))
-      .localCheckpoint()
-    val m = org.apache.spark.sql.GraftObservationAccess.getOrEmpty(obs)
-    val onDriver = edges.schema.forall(_.dataType == LongType) &&
-      m.get("n").exists(n => 2 * n.asInstanceOf[Long] <= DriverEdgeBound && m("n_null") == 0L)
-    if (onDriver) try componentsOnDriver(edges, maxIter) finally graft.core.Blocks.free(edges)
-    else {
-      val sym = symmetricEdges(edges, "src", "dst").localCheckpoint()
-      graft.core.Blocks.free(edges)
-      componentsLoop(sym, maxIter)
+    // The pair checkpoint is freed as soon as the driver rounds or the
+    // symmetric edge list have read it, before the distributed loop runs.
+    val driverOrEdges = Stage.scope { s =>
+      val obs = org.apache.spark.sql.Observation(s"cc_edges_${java.util.UUID.randomUUID()}")
+      val edges = s(pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
+        .observe(obs, count(lit(1)).as("n"),
+          count(when(col("src").isNull || col("dst").isNull, 1)).as("n_null")))
+      val m = org.apache.spark.sql.GraftObservationAccess.getOrEmpty(obs)
+      val onDriver = edges.schema.forall(_.dataType == LongType) &&
+        m.get("n").exists(n => 2 * n.asInstanceOf[Long] <= DriverEdgeBound && m("n_null") == 0L)
+      if (onDriver) Left(componentsOnDriver(edges, maxIter))
+      else Right(s(symmetricEdges(edges, "src", "dst")))
     }
+    driverOrEdges.fold(identity, componentsLoop(_, maxIter))
   }
 
   /** Directed-edge bound of the driver path of [[connectedComponents]]:
@@ -2771,7 +2739,7 @@ object Dedup {
       aCol: String = "doc_a",
       bCol: String = "doc_b",
       maxIter: Int = 20): (DataFrame, Int) =
-    componentsLoop(symmetricEdges(pairs, aCol, bCol).localCheckpoint(), maxIter)
+    Stage.scope(s => componentsLoop(s(symmetricEdges(pairs, aCol, bCol)), maxIter))
 
   private def symmetricEdges(pairs: DataFrame, aCol: String, bCol: String): DataFrame = {
     val e = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
@@ -2846,9 +2814,9 @@ object Dedup {
   }
 
   /** The distributed min-label propagation over the materialized symmetric
-    * edge list `sym` (freed on return). */
-  private def componentsLoop(sym: DataFrame, maxIter: Int): (DataFrame, Int) = {
-    // resetInheritedStats on every loop checkpoint: localCheckpoint copies
+    * edge list `sym`. */
+  private def componentsLoop(sym: DataFrame, maxIter: Int): (DataFrame, Int) = Stage.scope { s =>
+    // s.loop on every loop checkpoint: localCheckpoint copies
     // the truncated plan's SIZE ESTIMATE into the new leaf, and this loop
     // joins the previous round's table against itself-derived frames — the
     // inherited estimate compounds as ~size^2 every round, so its BigInt
@@ -2857,12 +2825,10 @@ object Dedup {
     // on q30c2 while probing a 3-joins-per-round variant, which merely hit
     // the same wall two rounds sooner — the blow-up is latent in ANY
     // round count >~12). The re-wrap keeps the SAME persisted RDD
-    // (Blocks.free still releases it, partitioning/ordering preserved) and
+    // (its scope still frees it, partitioning/ordering preserved) and
     // resets the estimate to the non-compounding session default.
-    def fresh(df: DataFrame): DataFrame =
-      org.apache.spark.sql.GraftCheckpointStats.resetInheritedStats(df)
-    var labels = fresh(sym.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id")).localCheckpoint())
+    var labels = s.loop(sym.select(col("src").as("id")).distinct()
+      .withColumn("label", col("id")))
     var iter = 0
     var prevSum: Option[java.math.BigDecimal] = None
     var converged = labels.isEmpty // no pairs => nothing to do
@@ -2883,43 +2849,43 @@ object Dedup {
       // more |V|-row shuffle join per round for zero rounds saved.)
       val obs = org.apache.spark.sql.Observation(
         s"cc_round_${java.util.UUID.randomUUID()}")
-      val next = merged
-        .join(
-          labels.select(col("id").as("_bid"), col("label").as("_blabel")),
-          col("label") === col("_bid"), "left")
-        .select(col("id"),
-          least(col("label"), coalesce(col("_blabel"), col("label"))).as("label"))
-        // the convergence sum is OBSERVED inside the checkpoint
-        // materialization itself: the former standalone aggregate re-read
-        // the whole label table once more per round — a full |V| pass per
-        // round at any scale, spent on one number the checkpoint job
-        // already streams past. Exact decimal sum as before (ids may span
-        // the full long range); labels.isEmpty was checked before the
-        // loop, so the metrics always materialize (no empty-relation
-        // collapse — the label table is non-empty by construction).
-        // Distributed-deployment caveat (ADVICE r14 #1): task/stage
-        // retries can double-count rows into this accumulator-backed sum.
-        // A corrupted sum can delay convergence by a round (cheap) or —
-        // only if two consecutive corrupted sums collide exactly —
-        // spuriously signal it. A cluster deployment that sees retries
-        // should cross-check with a second observation round or the exact
-        // standalone aggregate before trusting an early exit.
-        .observe(obs, sum(col("label").cast("decimal(38,0)")).as("lsum"))
-        .localCheckpoint()
-      val s = obs.get("lsum") match {
+      // the round's scope adopts the superseded table and frees it once
+      // `next` has materialized, keeping peak storage at 2x|V| instead of
+      // rounds x|V|
+      labels = Stage.scope { r =>
+        r.adopt(labels)
+        r.loop(merged
+          .join(
+            labels.select(col("id").as("_bid"), col("label").as("_blabel")),
+            col("label") === col("_bid"), "left")
+          .select(col("id"),
+            least(col("label"), coalesce(col("_blabel"), col("label"))).as("label"))
+          // the convergence sum is OBSERVED inside the checkpoint
+          // materialization itself: the former standalone aggregate re-read
+          // the whole label table once more per round — a full |V| pass per
+          // round at any scale, spent on one number the checkpoint job
+          // already streams past. Exact decimal sum as before (ids may span
+          // the full long range); labels.isEmpty was checked before the
+          // loop, so the metrics always materialize (no empty-relation
+          // collapse — the label table is non-empty by construction).
+          // Distributed-deployment caveat (ADVICE r14 #1): task/stage
+          // retries can double-count rows into this accumulator-backed sum.
+          // A corrupted sum can delay convergence by a round (cheap) or —
+          // only if two consecutive corrupted sums collide exactly —
+          // spuriously signal it. A cluster deployment that sees retries
+          // should cross-check with a second observation round or the exact
+          // standalone aggregate before trusting an early exit.
+          .observe(obs, sum(col("label").cast("decimal(38,0)")).as("lsum")))
+      }
+      val lsum = obs.get("lsum") match {
         case d: java.math.BigDecimal => d
         case d: scala.math.BigDecimal => d.bigDecimal
         case other => sys.error(s"convergence sum came back as $other")
       }
-      converged = prevSum.exists(_.compareTo(s) == 0)
-      prevSum = Some(s)
-      // next is materialized (checkpointed) — the superseded round's table
-      // can be freed now, keeping peak storage at 2x|V| instead of rounds x|V|
-      graft.core.Blocks.free(labels)
-      labels = fresh(next)
+      converged = prevSum.exists(_.compareTo(lsum) == 0)
+      prevSum = Some(lsum)
       iter += 1
     }
-    graft.core.Blocks.free(sym)
     requireConverged(converged, maxIter)
     (labels.select(col("id").as("doc_id"), col("label").as("component")), iter)
   }

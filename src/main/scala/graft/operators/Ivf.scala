@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.core.Parquet
+import graft.core.{Parquet, Stage}
 import graft.functions.VectorOps
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -139,16 +139,18 @@ object Ivf {
     // min(perList, size) back to its full row set, so the output is the
     // exact window answer regardless of how the tail probability lands.
     val spark = assigned.sparkSession
-    // corpus-length block sets pinned by the prefilter passes; freed below
-    // after the (perList x lists)-bounded result materializes, so a loop
-    // of balancedSample calls cannot accumulate corpus-sized checkpoints
-    val pinned = Seq.newBuilder[DataFrame]
-    val survivors = if (!prefilter) assigned else {
+    def window(survivors: DataFrame): DataFrame = {
+      val w = Window.partitionBy(col("bucket")).orderBy(col("_h"), col(idCol))
+      survivors
+        .withColumn("_rn", row_number().over(w))
+        .filter(col("_rn") <= perList)
+        .select(col(idCol), col("bucket"))
+    }
+    if (!prefilter) window(assigned) else Stage.scope { s =>
       // the prefilter makes multiple passes (counts, candidates, rare
       // fallback): materialize the slim (id, bucket, hash) rows once so
       // the assignment kernel runs over the corpus exactly once
-      val a = assigned.localCheckpoint()
-      pinned += a
+      val a = s(assigned)
       val counts = a.groupBy("bucket").count().collect()
         .map(r => r.get(0) -> r.getLong(1)) // model-sized: one row per list
       val span = 1.8446744073709552e19 // 2^64 as double (exact power of two)
@@ -162,8 +164,7 @@ object Ivf {
           }
         org.apache.spark.sql.Row(b, thr)
       }
-      if (thrRows.forall(_.getLong(1) == Long.MaxValue)) a
-      else {
+      val survivors = if (thrRows.forall(_.getLong(1) == Long.MaxValue)) a else {
         val thrDf = spark.createDataFrame(
           java.util.Arrays.asList(thrRows: _*),
           org.apache.spark.sql.types.StructType(Seq(
@@ -171,10 +172,9 @@ object Ivf {
               "bucket", assigned.schema("bucket").dataType),
             org.apache.spark.sql.types.StructField(
               "_thr", org.apache.spark.sql.types.LongType))))
-        val cand = a.join(broadcast(thrDf), Seq("bucket"))
-          .filter(col("_h") <= col("_thr")).drop("_thr")
-          .localCheckpoint() // verified then windowed: scan the corpus once
-        pinned += cand
+        // verified then windowed: scan the corpus once
+        val cand = s(a.join(broadcast(thrDf), Seq("bucket"))
+          .filter(col("_h") <= col("_thr")).drop("_thr"))
         val got = cand.groupBy("bucket").count().collect()
           .map(r => r.get(0) -> r.getLong(1)).toMap[Any, Long]
         val fallback = counts.collect {
@@ -184,18 +184,10 @@ object Ivf {
         else cand.filter(!col("bucket").isin(fallback: _*))
           .unionByName(a.filter(col("bucket").isin(fallback: _*)))
       }
-    }
-    val w = Window.partitionBy(col("bucket")).orderBy(col("_h"), col(idCol))
-    val keep = survivors
-      .withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") <= perList)
-      .select(col(idCol), col("bucket"))
-    val internal = pinned.result()
-    if (internal.isEmpty) keep
-    else {
-      val out = keep.localCheckpoint() // keep-list-sized (<= perList * lists)
-      internal.foreach(graft.core.Blocks.free(_))
-      out
+      // keep-list-sized (<= perList * lists): the corpus-length prefilter
+      // passes are freed once it has materialized, so a loop of
+      // balancedSample calls cannot accumulate corpus-sized checkpoints
+      s(window(survivors))
     }
   }
 
@@ -506,15 +498,14 @@ object Ivf {
     // count the BATCH, not (after - before) over the whole lists dir: the
     // difference form lists every existing file's footer twice per append
     // and mis-attributes rows under a concurrent appender
-    val batch = newVectors.select(
-      col(idCol).as("n_id"), col(vecCol).as("n_vec"),
-      VectorOps.normSq(col(vecCol)).as("n_nsq"),
-      nearestCentroid(col(vecCol), model).as("bucket"))
-      .localCheckpoint()
-    batch.write.partitionBy("bucket").mode("append").parquet(s"$root/lists")
-    val n = batch.count()
-    graft.core.Blocks.free(batch) // free the blocks: append loops call this per batch
-    n
+    Stage.scope { s =>
+      val batch = s(newVectors.select(
+        col(idCol).as("n_id"), col(vecCol).as("n_vec"),
+        VectorOps.normSq(col(vecCol)).as("n_nsq"),
+        nearestCentroid(col(vecCol), model).as("bucket")))
+      batch.write.partitionBy("bucket").mode("append").parquet(s"$root/lists")
+      batch.count()
+    }
   }
 
   private val Seg = graft.core.Segments
@@ -816,12 +807,11 @@ object Ivf {
       removedIds: DataFrame,
       path: String,
       idCol: String = "vec_id"): Long = {
-    val batch = removedIds.select(col(idCol).cast("long").as("n_id"))
-      .distinct().localCheckpoint()
-    batch.write.mode("append").parquet(s"$path/tombs")
-    val n = batch.count()
-    graft.core.Blocks.free(batch)
-    n
+    Stage.scope { s =>
+      val batch = s(removedIds.select(col(idCol).cast("long").as("n_id")).distinct())
+      batch.write.mode("append").parquet(s"$path/tombs")
+      batch.count()
+    }
   }
 
   /** The SEMANTIC MICRO-PROBE shared by
@@ -840,8 +830,8 @@ object Ivf {
     * null embedding would NPE the driver's bucket collect and, since the
     * failed batch replays on restart, permanently wedge the stream.
     *
-    * Returns (assigned, pairs, assigningGen) — the frames locally
-    * checkpointed (the caller frees both after its batch lands), and the
+    * Returns (assigned, pairs, assigningGen) — the two checkpoints, which
+    * pass to the caller's batch scope, and the
     * NAME of the generation whose quantizer assigned `bucket`. The caller
     * MUST pass that name to [[writeListSegment]]: a rebuild can flip the
     * pointer between this assignment and the segment write (a 100 TB
@@ -855,12 +845,12 @@ object Ivf {
       indexPath: String,
       threshold: Double,
       idCol: String,
-      vecCol: String): (DataFrame, DataFrame, String) = {
+      vecCol: String): (DataFrame, DataFrame, String) = Stage.scope { s =>
     val ss = batch.sparkSession
     val fs = Seg.fs(ss, indexPath)
     val curGen = genNameOf(fs, indexPath)
     val model = readModelAt(ss, genDirOf(indexPath, curGen))
-    val assigned = batch
+    val assigned = s(batch
       .select(col(idCol).cast("long").as("n_id"), col(vecCol).as("n_vec"))
       .withColumn("n_nsq", graft.functions.VectorOps.normSq(col("n_vec")))
       .withColumn("bucket", nearestCentroid(col("n_vec"), model))
@@ -868,8 +858,7 @@ object Ivf {
       // bucket for null AND wrong-dimension AND null-element vectors — an
       // isNotNull on the vector alone would still let the latter two NPE
       // the probed-bucket collect below
-      .filter(col("bucket").isNotNull)
-      .localCheckpoint()
+      .filter(col("bucket").isNotNull))
     // one candidate-pair frame PER GENERATION GROUP, each probed in its
     // own quantizer's bucket space (normally one group; old-generation
     // segments appear only in the drain window after a rebuild flip, and
@@ -902,10 +891,9 @@ object Ivf {
     }
     // in-batch pairs are their own frame (current bucket space), so they
     // survive even when the index holds no rows yet (empty-seeded store)
-    val pairs = (corpusPairs :+ pairsAgainst(assigned, assigned))
+    val pairs = s((corpusPairs :+ pairsAgainst(assigned, assigned))
       .reduce(_ unionByName _)
-      .dropDuplicates("doc_a", "doc_b")
-      .localCheckpoint()
+      .dropDuplicates("doc_a", "doc_b"))
     (assigned, pairs, curGen)
   }
 
@@ -919,8 +907,8 @@ object Ivf {
     * / [[rebuildIndex]]. Returns rows written. */
   def writeListSegment(
       assigned: DataFrame, path: String, segName: String,
-      assignedGen: Option[String] = None): Long = {
-    val batch = assigned.select("n_id", "n_vec", "n_nsq", "bucket").localCheckpoint()
+      assignedGen: Option[String] = None): Long = Stage.scope { s =>
+    val batch = s(assigned.select("n_id", "n_vec", "n_nsq", "bucket"))
     // cluster by bucket before the partitioned write: each bucket lands in
     // exactly one task => ONE file per touched bucket per segment, not one
     // per (task x bucket) — a week of micro-batches would otherwise strand
@@ -942,9 +930,7 @@ object Ivf {
     Seg.writeAtomic(fs, Seg.conf(spark),
       new org.apache.hadoop.fs.Path(s"$path/segs/$segName/_GEN"),
       assignedGen.getOrElse(genNameOf(fs, path)))
-    val n = batch.count()
-    graft.core.Blocks.free(batch)
-    n
+    batch.count()
   }
 
   /** Fold accumulated streaming segments AND tombstones into the main

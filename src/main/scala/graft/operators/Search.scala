@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.core.Parquet
+import graft.core.{Parquet, Stage}
 import graft.functions.TextOps
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -62,22 +62,22 @@ object Search {
     // discipline) and the hit-sized tf aggregate — (doc, matched term)
     // rows, never corpus-sized — is materialized eagerly so the observed
     // values are readable before scoring is planned. The checkpoint block
-    // lives with the returned plan (the bench's per-rep unpersist sweep
-    // frees it); that is the price of the removed corpus pass.
+    // lives with the returned plan (it passes to the caller's scope; the
+    // bench's per-rep unpersist sweep frees it); that is the price of the
+    // removed corpus pass.
     val obs = org.apache.spark.sql.Observation(
       s"bm25_stats_${java.util.UUID.randomUUID()}")
     // per-(doc, matched term) frequencies; dl rides along (constant per
     // doc). tokenizedDocs: one tokenizer run per row — size + explode as
     // sibling trees each re-ran the regex (see tokenizedDocs)
-    val tf = tokenizedDocs(documents, idCol, textCol)
+    val tf = Stage.scope(_(tokenizedDocs(documents, idCol, textCol)
       .observe(obs, count(lit(1)).as("n_docs"),
         coalesce(sum(size(col("_toks")).cast("long")), lit(0L)).as("sum_dl"))
       .select(col("doc_id"), size(col("_toks")).cast("long").as("dl"),
         explode(col("_toks")).as("tok"))
       .join(broadcast(terms.select("tok").distinct()), Seq("tok"), "left_semi")
       .groupBy(col("doc_id"), col("tok"))
-      .agg(count(lit(1)).cast("double").as("tf"), max("dl").cast("double").as("dl"))
-      .localCheckpoint()
+      .agg(count(lit(1)).cast("double").as("tf"), max("dl").cast("double").as("dl"))))
     // empty-relation propagation can collapse the plan and prune the
     // CollectMetrics node (empty corpus, or a query batch with zero terms
     // — the semi-join's broadcast side folds to empty): fall back to the
@@ -428,12 +428,13 @@ object Search {
     val fs = graft.core.Segments.fs(spark, path)
     val root = basePostingsRoot(fs, path)
     val buckets = readRootBuckets(fs, root).getOrElse(meta.getInt(2))
-    val batch = postingsRows(newDocs, buckets, idCol, textCol).localCheckpoint()
-    batch.repartition(col("pb"))
-      .write.partitionBy("pb").mode("append").parquet(root.toString)
-    val bm = batch.select("doc_id", "dl").groupBy("doc_id").agg(max("dl").as("dl"))
-      .agg(count(lit(1)), coalesce(sum("dl"), lit(0L))).head()
-    graft.core.Blocks.free(batch)
+    val bm = Stage.scope { s =>
+      val batch = s(postingsRows(newDocs, buckets, idCol, textCol))
+      batch.repartition(col("pb"))
+        .write.partitionBy("pb").mode("append").parquet(root.toString)
+      batch.select("doc_id", "dl").groupBy("doc_id").agg(max("dl").as("dl"))
+        .agg(count(lit(1)), coalesce(sum("dl"), lit(0L))).head()
+    }
     import spark.implicits._
     // meta keeps its ORIGINAL bucket value: it is the fallback P of
     // PRE-MARKER roots (old segments), so only a compaction — which
@@ -468,15 +469,14 @@ object Search {
       +: liveSegments(spark, path).map(_ + "/postings"))
       .filter(r => hasDataFiles(fs, new org.apache.hadoop.fs.Path(r)))
     if (roots.isEmpty) return 0L
-    val batch = roots
-      .map(Parquet.read(spark, _)).reduce(_ unionByName _)
-      .join(broadcast(ids), Seq("doc_id"), "left_semi")
-      .groupBy("doc_id").agg(max("dl").as("dl"))
-      .localCheckpoint()
-    batch.write.mode("append").parquet(s"$path/tombs")
-    val n = batch.count()
-    graft.core.Blocks.free(batch)
-    n
+    Stage.scope { s =>
+      val batch = s(roots
+        .map(Parquet.read(spark, _)).reduce(_ unionByName _)
+        .join(broadcast(ids), Seq("doc_id"), "left_semi")
+        .groupBy("doc_id").agg(max("dl").as("dl")))
+      batch.write.mode("append").parquet(s"$path/tombs")
+      batch.count()
+    }
   }
 
   /** The live STREAMED segments of a text index — the replay-idempotent
@@ -531,21 +531,22 @@ object Search {
     // `_BUCKETS` marker — probes prune this root at the marker P, so a
     // later base re-bucket can never mis-filter these rows
     val buckets = effectiveBuckets(spark, path)
-    val batch = postingsRows(newDocs, buckets, idCol, textCol).localCheckpoint()
     val segRoot = s"$path/segs/$segName/postings"
-    // flat floor: a micro-batch's postings partitioned across a grown P
-    // would be all tiny files — below the floor the segment writes ONE
-    // file sorted by pb (pb as a data column readers push a filter on)
-    if (batch.count() / math.max(1, buckets) < MinPostingsFileRows)
-      batch.coalesce(1).sortWithinPartitions("pb")
-        .write.mode("overwrite").parquet(segRoot)
-    else
-      batch.repartition(col("pb"))
-        .write.partitionBy("pb").mode("overwrite").parquet(segRoot)
-    writeRootBuckets(fs, new org.apache.hadoop.fs.Path(segRoot), buckets)
-    val m = batch.select("doc_id", "dl").groupBy("doc_id").agg(max("dl").as("dl"))
-      .agg(count(lit(1)), coalesce(sum("dl"), lit(0L))).head()
-    graft.core.Blocks.free(batch)
+    val m = Stage.scope { s =>
+      val batch = s(postingsRows(newDocs, buckets, idCol, textCol))
+      // flat floor: a micro-batch's postings partitioned across a grown P
+      // would be all tiny files — below the floor the segment writes ONE
+      // file sorted by pb (pb as a data column readers push a filter on)
+      if (batch.count() / math.max(1, buckets) < MinPostingsFileRows)
+        batch.coalesce(1).sortWithinPartitions("pb")
+          .write.mode("overwrite").parquet(segRoot)
+      else
+        batch.repartition(col("pb"))
+          .write.partitionBy("pb").mode("overwrite").parquet(segRoot)
+      writeRootBuckets(fs, new org.apache.hadoop.fs.Path(segRoot), buckets)
+      batch.select("doc_id", "dl").groupBy("doc_id").agg(max("dl").as("dl"))
+        .agg(count(lit(1)), coalesce(sum("dl"), lit(0L))).head()
+    }
     import spark.implicits._
     Seq((m.getLong(0), m.getLong(1))).toDF("n_docs", "sum_dl")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/segs/$segName/segmeta")

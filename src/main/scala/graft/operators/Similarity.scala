@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Stage
 import graft.functions.VectorOps
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
@@ -148,12 +149,12 @@ object Similarity {
       numTables: Int = 8,
       planesPerTable: Int = 8,
       idCol: String = "vec_id",
-      vecCol: String = "embedding"): DataFrame = {
+      vecCol: String = "embedding"): DataFrame = Stage.scope { s =>
     require(numTables > 0, s"numTables must be positive, got $numTables")
     require(planesPerTable > 0 && planesPerTable <= 62,
       s"planesPerTable must be in [1, 62], got $planesPerTable")
-    val cq = quantizeInt8(corpus, dim, idCol, vecCol).localCheckpoint() // feeds buckets AND scoring
-    val qq = quantizeInt8(queries, dim, idCol, vecCol).localCheckpoint()
+    val cq = s(quantizeInt8(corpus, dim, idCol, vecCol)) // feeds buckets AND scoring
+    val qq = s(quantizeInt8(queries, dim, idCol, vecCol))
     // the query batch is the small side by construction — broadcast its
     // buckets so the corpus side never shuffles into the collision join
     val cand = broadcast(int8Buckets(qq, dim, numTables, planesPerTable)).as("a")
@@ -171,14 +172,10 @@ object Similarity {
     val w = Window.partitionBy(col("q_id")).orderBy(col("dot").desc, col("n_id").asc)
     // materialize BEFORE the checkpointed inputs are freed (the result is
     // candidate-topk-sized; callers re-read it without recompute)
-    val out = scored
+    s(scored
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
-      .select(col("q_id"), col("n_id"), col("rank"), col("dot"))
-      .localCheckpoint()
-    graft.core.Blocks.free(cq)
-    graft.core.Blocks.free(qq)
-    out
+      .select(col("q_id"), col("n_id"), col("rank"), col("dot")))
   }
 
   /** `floor(x * 127)` int8 quantization to (id, qv: Array[Long]) — floor,
@@ -291,14 +288,14 @@ object Similarity {
       c: Int = 16,
       nProbe: Int = 4,
       idCol: String = "vec_id",
-      vecCol: String = "embedding"): DataFrame = {
+      vecCol: String = "embedding"): DataFrame = Stage.scope { s =>
     require(k > 0, s"k must be positive, got $k")
     require(c > 0, s"c must be positive, got $c")
     require(nProbe > 0 && nProbe <= c, s"nProbe must be in [1, $c], got $nProbe")
     val cb = typedLit(int8Codebook(c, dim))
-    val cq = int8Assign(quantizeInt8(corpus, dim, idCol, vecCol), c, dim)
-      .localCheckpoint() // feeds the collision join AND scoring
-    val qq = quantizeInt8(queries, dim, idCol, vecCol).localCheckpoint()
+    // feeds the collision join AND scoring
+    val cq = s(int8Assign(quantizeInt8(corpus, dim, idCol, vecCol), c, dim))
+    val qq = s(quantizeInt8(queries, dim, idCol, vecCol))
     // nProbe nearest centroids per query: sort the same (d2, ci) struct
     // array the assignment minimizes, take the prefix — query-batch-sized
     val probes = qq.select(
@@ -320,15 +317,12 @@ object Similarity {
         aggregate(zip_with(col("qa"), col("qb"), (x, y) => x * y),
           lit(0L), (acc, v) => acc + v))
     val w = Window.partitionBy(col("q_id")).orderBy(col("dot").desc, col("n_id").asc)
-    val out = scored
+    // materialize BEFORE the inputs are freed
+    s(scored
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
       .select(col("q_id"), col("n_id"), col("rank"), col("dot"),
-        col("bucket").as("n_bucket"))
-      .localCheckpoint() // materialize BEFORE the inputs are freed
-    graft.core.Blocks.free(cq)
-    graft.core.Blocks.free(qq)
-    out
+        col("bucket").as("n_bucket")))
   }
 
   /** All pairs with cosine >= threshold, blocked on an exact-match column

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.functions.{Aggregators, TextOps}
 import graft.operators.{Dedup, Multimodal, Similarity}
-import graft.core.{Parquet, Tables}
+import graft.core.{Parquet, Stage, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -1711,14 +1711,15 @@ object PipelineQueries {
     // manually-chained standalone operators.
     QueryDef(
       "q29p_pipeline",
-      (s, dir) => {
+      (s, dir) => Stage.scope { _ =>
         val docs = Tables.documents(s, dir)
-        val (corpus, funnel) = graft.operators.Curation.curationPipeline(
+        // the funnel is the result here: the corpus passes to this scope
+        // and is freed on return
+        val (_, funnel) = graft.operators.Curation.curationPipeline(
           docs,
           graft.operators.Curation.defaultQualityRules(),
           benchmark = Some(docs.orderBy("doc_id").limit(20)),
           budgetTokens = Some(100000L))
-        graft.core.Blocks.free(corpus) // the funnel is the result here
         funnel
       },
       Some(s"""WITH RECURSIVE
@@ -2402,7 +2403,7 @@ object PipelineQueries {
               .select((col("doc_id") + 100000L).as("doc_id"), col("doc_id").as("seed")),
             seedCol = "seed", noise = 8)
             .drop("seed"))
-        val hashes = Multimodal.imageHashes(base.unionByName(twins)).localCheckpoint()
+        val hashes = Stage.scope(_(Multimodal.imageHashes(base.unionByName(twins))))
         val kept = graft.operators.Dedup.collapseDuplicates(
           hashes.select("doc_id"), Multimodal.imageDupPairs(hashes, maxHamming = 10),
           idCol = "doc_id", aCol = "doc_a", bCol = "doc_b")
@@ -2439,7 +2440,7 @@ object PipelineQueries {
           ids.filter(col("doc_id") % 10 === 0)
             .select((col("doc_id") + 300000L).as("doc_id"), col("doc_id").as("seed")),
           idCol = "seed").drop("seed")
-        val hashes = Multimodal.imageHashes(base.unionByName(twins)).localCheckpoint()
+        val hashes = Stage.scope(_(Multimodal.imageHashes(base.unionByName(twins))))
         val kept = graft.operators.Dedup.collapseDuplicates(
           hashes.select("doc_id"), Multimodal.imageDupPairs(hashes, maxHamming = 10),
           idCol = "doc_id", aCol = "doc_a", bCol = "doc_b")
@@ -2523,7 +2524,7 @@ object PipelineQueries {
               .select((col("doc_id") + 100001L).as("doc_id"), col("doc_id").as("seed")),
             seedCol = "seed", noise = 8)
             .drop("seed"))
-        val hashes = Multimodal.audioHashes(base.unionByName(twins)).localCheckpoint()
+        val hashes = Stage.scope(_(Multimodal.audioHashes(base.unionByName(twins))))
         val kept = graft.operators.Dedup.collapseDuplicates(
           hashes.select("doc_id"), Multimodal.audioDupPairs(hashes, maxHamming = 10),
           idCol = "doc_id", aCol = "doc_a", bCol = "doc_b")
@@ -2563,7 +2564,7 @@ object PipelineQueries {
           ids.filter(col("doc_id") % 10 === 0)
             .select((col("doc_id") + 300000L).as("doc_id"), col("doc_id").as("seed")),
           idCol = "seed").drop("seed")
-        val hashes = Multimodal.audioHashes(base.unionByName(twins)).localCheckpoint()
+        val hashes = Stage.scope(_(Multimodal.audioHashes(base.unionByName(twins))))
         val kept = graft.operators.Dedup.collapseDuplicates(
           hashes.select("doc_id"), Multimodal.audioDupPairs(hashes, maxHamming = 10),
           idCol = "doc_id", aCol = "doc_a", bCol = "doc_b")
@@ -2692,7 +2693,7 @@ object PipelineQueries {
               .select((col("doc_id") + 200000L).as("doc_id"), col("doc_id").as("seed")),
             seedCol = "seed", noise = 90)
             .drop("seed"))
-        val emb = Multimodal.imageEmbeddings(base.unionByName(twins)).localCheckpoint()
+        val emb = Stage.scope(_(Multimodal.imageEmbeddings(base.unionByName(twins))))
         val docs = emb.select(col("vec_id").as("doc_id"))
         // lists <= 0 = AUTO (constant ~128-vector lists however large the
         // corpus — the 100 TB default): an explicit small C left ~3400
@@ -2800,7 +2801,7 @@ object PipelineQueries {
               .select((col("doc_id") + 100002L).as("doc_id"), col("doc_id").as("seed")),
             seedCol = "seed", frames = 4, noise = 8)
             .drop("seed"))
-        val hashes = Multimodal.videoHashes(base.unionByName(twins)).localCheckpoint()
+        val hashes = Stage.scope(_(Multimodal.videoHashes(base.unionByName(twins))))
         val kept = graft.operators.Dedup.collapseDuplicates(
           hashes.select("doc_id"),
           Multimodal.videoDupPairs(hashes, maxHamming = 10)
@@ -2828,18 +2829,16 @@ object PipelineQueries {
       (s, dir) => {
         val ids = Tables.documents(s, dir).select("doc_id")
         val idx = QueryDef.tempDirForResult("graft_vid_idx_").toString
-        val baseHashes = Multimodal.videoHashes(
+        Stage.scope(t => Multimodal.writeVideoIndex(t(Multimodal.videoHashes(
           cachedPayloads(s, dir, "vid4")(
-            Multimodal.withVideoPayload(ids, frames = 4))).localCheckpoint()
-        Multimodal.writeVideoIndex(baseHashes, idx)
-        graft.core.Blocks.free(baseHashes)
-        val twinHashes = Multimodal.videoHashes(
+            Multimodal.withVideoPayload(ids, frames = 4)))), idx))
+        val twinHashes = Stage.scope(_(Multimodal.videoHashes(
           cachedPayloads(s, dir, "vid4_twins")(
             Multimodal.withVideoPayload(
               ids.filter(col("doc_id") % 10 === 0)
                 .select((col("doc_id") + 100002L).as("doc_id"), col("doc_id").as("seed")),
               seedCol = "seed", frames = 4, noise = 8)
-              .drop("seed"))).localCheckpoint()
+              .drop("seed")))))
         val pairs = Multimodal.videoIncremental(twinHashes, idx, maxHamming = 10)
         val kept = graft.operators.Dedup.collapseDuplicatesArrival(
           twinHashes.select("doc_id"), pairs)
@@ -2949,9 +2948,9 @@ object PipelineQueries {
         val qs = Seq(
           (1L, "dup scan"), (2L, "spark query merge"), (3L, "zebra"))
           .toDF("query_id", "query_text")
-        val bm = graft.operators.Search.bm25(docs, qs, topK = 10)
-          .select(col("query_id"), col("doc_id"), col("rank"))
-          .localCheckpoint() // feeds both fusion inputs
+        // feeds both fusion inputs
+        val bm = Stage.scope(_(graft.operators.Search.bm25(docs, qs, topK = 10)
+          .select(col("query_id"), col("doc_id"), col("rank"))))
         val w2 = Window.partitionBy(col("query_id"))
           .orderBy(col("q").desc, col("doc_id"))
         // candidate-bounded quality: the tiny candidate set broadcasts and

@@ -1,7 +1,8 @@
 package graft.streaming
 
-import graft.core.Parquet
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import graft.core.{Parquet, Stage}
+import graft.operators.{Curation, Dedup, Ivf, Multimodal, Search}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -104,6 +105,121 @@ object Ingest {
     * (kv/db/db_impl.cpp:1542-1619). `maxFilesPerTrigger = None` opts out. */
   val DefaultMaxFilesPerTrigger = 1024
 
+  private def markDir(checkpointDir: String): String = s"$checkpointDir/graft-marks"
+
+  /** The file-source micro-batch loop every ingest shares: parquet files
+    * appearing under `sourceDir` (at most `maxFilesPerTrigger` per batch),
+    * each batch handed to `perBatch` inside its own [[Stage.scope]] — every
+    * checkpoint the batch takes, directly or inside an operator, is freed
+    * when the batch ends — and the batch's mark written after that, as its
+    * last step: the mark is the commit point. `perBatch` returns the mark's
+    * (base seq, row count). */
+  private def ingest(
+      spark: SparkSession,
+      sourceDir: String,
+      schema: StructType,
+      checkpointDir: String,
+      availableNow: Boolean,
+      maxFilesPerTrigger: Option[Int],
+      triggerInterval: String)(
+      perBatch: (Stage.Scope, DataFrame, Long) => (Long, Long)): StreamingQuery = {
+    val reader = spark.readStream.schema(schema)
+    maxFilesPerTrigger.fold(reader)(n => reader.option("maxFilesPerTrigger", n))
+      .parquet(sourceDir)
+      .writeStream
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+        val (base, n) = Stage.scope(perBatch(_, batch, batchId))
+        Marks.write(markDir(checkpointDir), batchId, base, n,
+          batch.sparkSession.sparkContext.hadoopConfiguration)
+      }
+      .trigger(if (availableNow) Trigger.AvailableNow() else Trigger.ProcessingTime(triggerInterval))
+      .start()
+  }
+
+  /** Write a batch's kept rows as its sink directory (per-batch directory +
+    * overwrite: replay-idempotent); their count is the batch's mark. */
+  private def land(kept: DataFrame, sinkDir: String, batchId: Long): (Long, Long) = {
+    kept.write.mode("overwrite").parquet(s"$sinkDir/batch_id=$batchId")
+    (0L, kept.count())
+  }
+
+  private def redactText(d: DataFrame, textCol: String): DataFrame =
+    Curation.redact(d, textCol)
+      .withColumn(textCol, col("redacted"))
+      .drop("redacted", "n_emails", "n_ips", "n_phones")
+
+  /** One micro-batch through the exact-dedup index ([[startDedupIngest]]
+    * and the pipeline's exact stage): the first occurrences of `d`,
+    * checkpointed, after the batch's keys are appended to the index as the
+    * named segment `seg_batch_<batchId>`. */
+  private def exactBatch(
+      d: DataFrame, indexPath: String, batchId: Long, idCol: String, textCol: String): DataFrame =
+    Stage.scope { s =>
+      val keptIds = Dedup.exactIncremental(d, indexPath, idCol, textCol)
+        .filter(col("is_kept"))
+        .select(idCol)
+      // left_semi, NOT inner: a malformed batch carrying the same id
+      // twice would otherwise fan out (2 kept ids x 2 rows = 4 sink
+      // rows) — the batch pipeline's exact stage uses the same semi form
+      val kept = s(d.join(keptIds, Seq(idCol), "left_semi"))
+      // the batch's INPUT keys append (an exact copy of a doc a LATER
+      // pipeline stage drops is still suppressed downstream by that
+      // stage's own index). Written AFTER the classification
+      // materialized: a replay's overwrite of the crashed attempt's
+      // segment must not invalidate the file listing the classification
+      // plan captured
+      Dedup.writeExactIndexSegment(d, indexPath, s"seg_batch_$batchId", idCol, textCol)
+      kept
+    }
+
+  /** One micro-batch through the MinHash index ([[startNearDupIngest]] and
+    * the pipeline's near-dup stage): the arrival-order survivors of `d`,
+    * checkpointed, after their signature rows are appended to the index as
+    * the named segment `seg_batch_<batchId>`. */
+  private def nearDupBatch(
+      d: DataFrame, indexPath: String, threshold: Double, batchId: Long,
+      idCol: String, textCol: String): DataFrame = Stage.scope { s =>
+    // sign ONCE per batch; the sig frame feeds the probe AND the kept
+    // segment write
+    val sigs = s(Dedup.minHashBatchSigs(d, indexPath, idCol, textCol))
+    // the MICRO probe shape: batch side broadcast, corpus scanned
+    // map-side only — no corpus shuffle or sort per trigger. Sound
+    // because maxFilesPerTrigger bounds the batch (the banded batch is
+    // batchRows x bands slim rows); a corpus-sized batch belongs on
+    // the merge-join form (minHashIncremental), not here. The candidates
+    // are freed once the verified pairs have materialized.
+    val pairs = Stage.scope(t => t(Dedup.minHashMicroVerify(
+      t(Dedup.minHashMicroCandidates(sigs, indexPath)), sigs, indexPath, threshold)))
+    val kept = s(Dedup.collapseDuplicatesArrival(d, pairs, idCol))
+    // only near-dup SURVIVORS' signatures fold in — the index mirrors
+    // what this step keeps
+    Dedup.writeMinHashSegment(
+      sigs.join(kept.select(col(idCol).as("doc")), Seq("doc")),
+      indexPath, f"seg_batch_$batchId%06d")
+    kept
+  }
+
+  /** One micro-batch through the IVF index ([[startSemanticIngest]] and
+    * the pipeline's semantic stage): the arrival-order survivors of `d`,
+    * checkpointed, after their assigned vectors are appended to the index
+    * as the named segment `seg_batch_<batchId>`. */
+  private def semanticBatch(
+      d: DataFrame, indexPath: String, threshold: Double, batchId: Long,
+      idCol: String, vecCol: String): DataFrame = Stage.scope { s =>
+    // shared micro-probe (Ivf.semanticMicroPairs): null-vector rows are
+    // excluded from assignment — they appear in no pair, so the
+    // collapse KEEPS them, and the segment write below (joined against
+    // `assigned`) never indexes them
+    val (assigned, pairs, assignedGen) =
+      Ivf.semanticMicroPairs(d, indexPath, threshold, idCol, vecCol)
+    val kept = s(Dedup.collapseDuplicatesArrival(d, pairs, idCol))
+    Ivf.writeListSegment(
+      assigned.join(kept.select(col(idCol).cast("long").as("n_id")), Seq("n_id")),
+      indexPath, f"seg_batch_$batchId%06d", Some(assignedGen))
+    kept
+  }
+
   /** Start a file-source changelog ingest: reads parquet files appearing under
     * `sourceDir`, stamps contiguous seqs, appends to `sinkDir` as parquet
     * (one `batch_id=<id>` directory per micro-batch).
@@ -127,12 +243,6 @@ object Ingest {
       maxFilesPerTrigger: Option[Int] = Some(DefaultMaxFilesPerTrigger),
       triggerInterval: String = "1 second",
       bloomCols: Seq[String] = Seq.empty): StreamingQuery = {
-    val reader = spark.readStream.schema(schema)
-    val src = maxFilesPerTrigger
-      .fold(reader)(n => reader.option("maxFilesPerTrigger", n))
-      .parquet(sourceDir)
-    val markDir = s"$checkpointDir/graft-marks"
-
     // Per-query high-water cache: ONE full mark scan on the first trigger
     // after (re)start, then maintained in memory — per-trigger mark IO is
     // O(1) (this batch's own file), not O(#batches). A continuous ingest
@@ -140,17 +250,16 @@ object Ingest {
     // opens/trigger after a day, quadratic cumulative metadata IO.
     // foreachBatch calls are serialized per query, so the var is safe.
     var highWater: Long = -1L
-    src.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
+    ingest(spark, sourceDir, schema, checkpointDir, availableNow, maxFilesPerTrigger, triggerInterval) {
+      (_, batch, batchId) =>
         val ss = batch.sparkSession
         val hconf = ss.sparkContext.hadoopConfiguration
         if (highWater < 0L)
-          highWater = Marks.read(markDir, hconf).values
+          highWater = Marks.read(markDir(checkpointDir), hconf).values
             .map { case (b, c) => b + c }.foldLeft(0L)(math.max)
         // crash-replayed batch: reuse its recorded base so seqs are stable;
         // fresh batch: base = max committed (base + count) so far
-        val base: Long = Marks.readOne(markDir, batchId, hconf).map(_._1)
+        val base: Long = Marks.readOne(markDir(checkpointDir), batchId, hconf).map(_._1)
           .getOrElse(highWater)
 
         // Contiguous seq assignment without a global window: range-partition
@@ -189,12 +298,9 @@ object Ingest {
           .mode("overwrite")
           .parquet(s"$sinkDir/batch_id=$batchId")
         sortedRdd.unpersist(blocking = false)
-        Marks.write(markDir, batchId, base, n, hconf)
         highWater = math.max(highWater, base + n)
-        ()
-      }
-      .trigger(if (availableNow) Trigger.AvailableNow() else Trigger.ProcessingTime(triggerInterval))
-      .start()
+        (base, n)
+    }
   }
 
   /** Streaming DEDUP ingest — dedup-on-write for a document stream: each
@@ -233,47 +339,12 @@ object Ingest {
       textCol: String = "text",
       availableNow: Boolean = true,
       maxFilesPerTrigger: Option[Int] = Some(DefaultMaxFilesPerTrigger),
-      triggerInterval: String = "1 second"): StreamingQuery = {
-    val reader = spark.readStream.schema(schema)
-    val src = maxFilesPerTrigger
-      .fold(reader)(n => reader.option("maxFilesPerTrigger", n))
-      .parquet(sourceDir)
-    val markDir = s"$checkpointDir/graft-marks"
-    src.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
-        val ss = batch.sparkSession
-        val hconf = ss.sparkContext.hadoopConfiguration
-        val b = batch.localCheckpoint() // one source read feeds classify + keep-join
-        // the keyed projection is checkpointed HERE, not inside the
-        // operator, so this loop can release it per micro-batch — the
-        // one-shot exactIncremental wrapper would pin one orphaned block
-        // set per batch, growing storage without bound over a long ingest
-        val keyed = graft.operators.Dedup
-          .keyedBatch(b, indexPath, idCol, textCol).localCheckpoint()
-        val keptIds = graft.operators.Dedup
-          .exactIncrementalKeyed(keyed, indexPath, idCol)
-          .filter(col("is_kept"))
-          .select(idCol)
-        // left_semi, NOT inner: a malformed batch carrying the same id
-        // twice would otherwise fan out (2 kept ids x 2 rows = 4 sink
-        // rows) — the batch pipeline's exact stage uses the same semi form
-        val kept = b.join(keptIds, Seq(idCol), "left_semi").localCheckpoint()
-        kept.write.mode("overwrite").parquet(s"$sinkDir/batch_id=$batchId")
-        graft.operators.Dedup.writeExactIndexSegment(
-          b, indexPath, s"seg_batch_$batchId", idCol, textCol)
-        Marks.write(markDir, batchId, 0L, kept.count(), hconf)
-        // free this batch's checkpoint blocks (see startCuratedIngest);
-        // Blocks.free, not Dataset.unpersist — the latter is a no-op on
-        // local checkpoints (graft.core.Blocks)
-        graft.core.Blocks.free(kept)
-        graft.core.Blocks.free(keyed)
-        graft.core.Blocks.free(b)
-        ()
-      }
-      .trigger(if (availableNow) Trigger.AvailableNow() else Trigger.ProcessingTime(triggerInterval))
-      .start()
-  }
+      triggerInterval: String = "1 second"): StreamingQuery =
+    ingest(spark, sourceDir, schema, checkpointDir, availableNow, maxFilesPerTrigger, triggerInterval) {
+      (s, batch, batchId) =>
+        // one source read feeds classify + keep-join
+        land(exactBatch(s(batch), indexPath, batchId, idCol, textCol), sinkDir, batchId)
+    }
 
   /** Streaming NEAR-DUP ingest — MinHash/LSH dedup-on-write: each
     * micro-batch is signed with the index's own LSH parameters, probed
@@ -322,55 +393,13 @@ object Ingest {
       textCol: String = "text",
       availableNow: Boolean = true,
       maxFilesPerTrigger: Option[Int] = Some(DefaultMaxFilesPerTrigger),
-      triggerInterval: String = "1 second"): StreamingQuery = {
-    val reader = spark.readStream.schema(schema)
-    val src = maxFilesPerTrigger
-      .fold(reader)(n => reader.option("maxFilesPerTrigger", n))
-      .parquet(sourceDir)
-    val markDir = s"$checkpointDir/graft-marks"
-    src.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
-        val ss = batch.sparkSession
-        val hconf = ss.sparkContext.hadoopConfiguration
-        val b = batch.localCheckpoint() // one source read feeds sign + keep-join
-        // sign ONCE per batch; the sig frame feeds the probe AND the kept
-        // segment write, and is freed per micro-batch (the one-shot
-        // minHashIncremental wrapper would orphan one block set per batch)
-        val sigs = graft.operators.Dedup
-          .minHashBatchSigs(b, indexPath, idCol, textCol).localCheckpoint()
-        // the MICRO probe shape: batch side broadcast, corpus scanned
-        // map-side only — no corpus shuffle or sort per trigger. Sound
-        // because maxFilesPerTrigger bounds the batch (the banded batch is
-        // batchRows x bands slim rows); a corpus-sized batch belongs on
-        // the merge-join form (minHashIncremental), not here
-        val cands = graft.operators.Dedup
-          .minHashMicroCandidates(sigs, indexPath).localCheckpoint()
-        val pairs = graft.operators.Dedup
-          .minHashMicroVerify(cands, sigs, indexPath, threshold).localCheckpoint()
-        graft.core.Blocks.free(cands)
-        val kept0 = graft.operators.Dedup.collapseDuplicatesArrival(b, pairs, idCol)
-        val kept = kept0.localCheckpoint()
-        kept.write.mode("overwrite").parquet(s"$sinkDir/batch_id=$batchId")
-        graft.operators.Dedup.writeMinHashSegment(
-          sigs.join(kept.select(col(idCol).as("doc")), Seq("doc")),
-          indexPath, f"seg_batch_$batchId%06d")
-        Marks.write(markDir, batchId, 0L, kept.count(), hconf)
-        // free this batch's checkpoint blocks (Blocks.free, not the no-op
-        // Dataset.unpersist — see graft.core.Blocks). kept0's plan sweep
-        // also releases the connected-components fixpoint's FINAL label
-        // table (checkpointed inside collapseDuplicatesArrival, otherwise
-        // unreachable — the uptime soak measured it as a per-batch residue)
-        graft.core.Blocks.free(kept)
-        graft.core.Blocks.free(kept0)
-        graft.core.Blocks.free(pairs)
-        graft.core.Blocks.free(sigs)
-        graft.core.Blocks.free(b)
-        ()
-      }
-      .trigger(if (availableNow) Trigger.AvailableNow() else Trigger.ProcessingTime(triggerInterval))
-      .start()
-  }
+      triggerInterval: String = "1 second"): StreamingQuery =
+    ingest(spark, sourceDir, schema, checkpointDir, availableNow, maxFilesPerTrigger, triggerInterval) {
+      (s, batch, batchId) =>
+        // one source read feeds sign + keep-join
+        land(nearDupBatch(s(batch), indexPath, threshold, batchId, idCol, textCol),
+          sinkDir, batchId)
+    }
 
   /** Streaming SEMANTIC ingest — embedding near-dup dedup-on-write, the
     * third of the dedup-at-ingest family (exact [[startDedupIngest]],
@@ -421,44 +450,12 @@ object Ingest {
       vecCol: String = "embedding",
       availableNow: Boolean = true,
       maxFilesPerTrigger: Option[Int] = Some(DefaultMaxFilesPerTrigger),
-      triggerInterval: String = "1 second"): StreamingQuery = {
-    import graft.operators.{Dedup, Ivf}
-    val reader = spark.readStream.schema(schema)
-    val src = maxFilesPerTrigger
-      .fold(reader)(n => reader.option("maxFilesPerTrigger", n))
-      .parquet(sourceDir)
-    val markDir = s"$checkpointDir/graft-marks"
-    src.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
-        val ss = batch.sparkSession
-        val hconf = ss.sparkContext.hadoopConfiguration
-        val b = batch.localCheckpoint()
-        // shared micro-probe (Ivf.semanticMicroPairs): null-vector rows are
-        // excluded from assignment — they appear in no pair, so the
-        // collapse KEEPS them, and the segment write below (joined against
-        // `assigned`) never indexes them
-        val (assigned, pairs, assignedGen) =
-          Ivf.semanticMicroPairs(b, indexPath, threshold, idCol, vecCol)
-        val kept0 = Dedup.collapseDuplicatesArrival(b, pairs, idCol)
-        val kept = kept0.localCheckpoint()
-        kept.write.mode("overwrite").parquet(s"$sinkDir/batch_id=$batchId")
-        Ivf.writeListSegment(
-          assigned.join(kept.select(col(idCol).cast("long").as("n_id")), Seq("n_id")),
-          indexPath, f"seg_batch_$batchId%06d", Some(assignedGen))
-        Marks.write(markDir, batchId, 0L, kept.count(), hconf)
-        // per-batch block hygiene; kept0's sweep frees the components'
-        // internal label checkpoint (see startNearDupIngest)
-        graft.core.Blocks.free(kept)
-        graft.core.Blocks.free(kept0)
-        graft.core.Blocks.free(pairs)
-        graft.core.Blocks.free(assigned)
-        graft.core.Blocks.free(b)
-        ()
-      }
-      .trigger(if (availableNow) Trigger.AvailableNow() else Trigger.ProcessingTime(triggerInterval))
-      .start()
-  }
+      triggerInterval: String = "1 second"): StreamingQuery =
+    ingest(spark, sourceDir, schema, checkpointDir, availableNow, maxFilesPerTrigger, triggerInterval) {
+      (s, batch, batchId) =>
+        land(semanticBatch(s(batch), indexPath, threshold, batchId, idCol, vecCol),
+          sinkDir, batchId)
+    }
 
   /** Streaming ExactSubstr ingest — SUB-DOCUMENT dedup-on-write: each
     * micro-batch is excised against the persisted span catalog (token
@@ -490,18 +487,10 @@ object Ingest {
       textCol: String = "text",
       availableNow: Boolean = true,
       maxFilesPerTrigger: Option[Int] = Some(DefaultMaxFilesPerTrigger),
-      triggerInterval: String = "1 second"): StreamingQuery = {
-    val reader = spark.readStream.schema(schema)
-    val src = maxFilesPerTrigger
-      .fold(reader)(n => reader.option("maxFilesPerTrigger", n))
-      .parquet(sourceDir)
-    val markDir = s"$checkpointDir/graft-marks"
-    src.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
-        val ss = batch.sparkSession
-        val hconf = ss.sparkContext.hadoopConfiguration
-        val b = batch.localCheckpoint() // one source read feeds probe + rebuild
+      triggerInterval: String = "1 second"): StreamingQuery =
+    ingest(spark, sourceDir, schema, checkpointDir, availableNow, maxFilesPerTrigger, triggerInterval) {
+      (s, batch, batchId) =>
+        val b = s(batch) // one source read feeds probe + rebuild
         // null-id rows bypass the dedup fold entirely: the min-fold below
         // keys by id, so two DISTINCT-text null-id rows would collapse to
         // one text and fan it back to both. They pass through with the
@@ -516,35 +505,26 @@ object Ingest {
         // must not fan out through the rejoin (2x2 rows), and the
         // reduction must be DETERMINISTIC or crash replay would rewrite a
         // different sink (dropDuplicates picks an arbitrary row)
-        val cleaned = graft.operators.Curation
+        val cleaned = s(Curation
           .exciseDuplicateSpansIncremental(bIds, indexPath, textCol, idCol)
           .groupBy(col(idCol))
-          .agg(min(col("text_clean")).as("text_clean"))
-          .localCheckpoint()
+          .agg(min(col("text_clean")).as("text_clean")))
         // splice the cleaned text back under the batch's own schema (and
         // column order) — the sink looks exactly like the source, deduped
         val c = cleaned
           .withColumnRenamed(idCol, "_graft_cid")
           .withColumnRenamed("text_clean", textCol)
-        val out = bIds.drop(textCol)
+        val out = s(bIds.drop(textCol)
           .join(c, col(idCol) === col("_graft_cid"))
           .select(b.columns.map(col).toIndexedSeq: _*)
-          .unionByName(bNulls)
-          .localCheckpoint()
+          .unionByName(bNulls))
         out.write.mode("overwrite").parquet(s"$sinkDir/batch_id=$batchId")
         // catalog the SINK rows (not the raw batch): the catalog stays the
         // exact span catalog of what actually landed
-        graft.operators.Dedup.writeSpanCatalogSegment(
+        Dedup.writeSpanCatalogSegment(
           out, indexPath, s"seg_batch_$batchId", textCol, idCol)
-        Marks.write(markDir, batchId, 0L, out.count(), hconf)
-        graft.core.Blocks.free(out)
-        graft.core.Blocks.free(cleaned)
-        graft.core.Blocks.free(b)
-        ()
-      }
-      .trigger(if (availableNow) Trigger.AvailableNow() else Trigger.ProcessingTime(triggerInterval))
-      .start()
-  }
+        (0L, out.count())
+    }
 
   /** Curation-on-ingest: each micro-batch runs the ordered quality
     * [[graft.operators.Curation.filterChain]] (and, when `redactPii`, PII
@@ -570,43 +550,20 @@ object Ingest {
       textCol: String = "text",
       availableNow: Boolean = true,
       maxFilesPerTrigger: Option[Int] = Some(DefaultMaxFilesPerTrigger),
-      triggerInterval: String = "1 second"): StreamingQuery = {
-    val reader = spark.readStream.schema(schema)
-    val src = maxFilesPerTrigger
-      .fold(reader)(n => reader.option("maxFilesPerTrigger", n))
-      .parquet(sourceDir)
-    val markDir = s"$checkpointDir/graft-marks"
-    src.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
-        val ss = batch.sparkSession
-        val hconf = ss.sparkContext.hadoopConfiguration
-        val chained = graft.operators.Curation
-          .filterChain(batch, rules).localCheckpoint() // one source read feeds funnel + sink
-        graft.operators.Curation.filterReport(chained)
+      triggerInterval: String = "1 second"): StreamingQuery =
+    ingest(spark, sourceDir, schema, checkpointDir, availableNow, maxFilesPerTrigger, triggerInterval) {
+      (s, batch, batchId) =>
+        // one source read feeds funnel + sink
+        val chained = s(Curation.filterChain(batch, rules))
+        Curation.filterReport(chained)
           .coalesce(1).write.mode("overwrite")
           .parquet(s"$sinkDir/_funnel/batch_id=$batchId")
         val keptRaw = chained.filter(col("keep") === 1L).drop("fail_rule", "keep")
         // checkpoint the redacted frame too: the sink write and the mark's
         // count() below would otherwise each recompute the 3-pass PII
         // projection from `chained`
-        val kept =
-          (if (!redactPii) keptRaw
-          else graft.operators.Curation.redact(keptRaw, textCol)
-            .withColumn(textCol, col("redacted"))
-            .drop("redacted", "n_emails", "n_ips", "n_phones")).localCheckpoint()
-        kept.write.mode("overwrite").parquet(s"$sinkDir/batch_id=$batchId")
-        Marks.write(markDir, batchId, 0L, kept.count(), hconf)
-        // free this batch's checkpoint blocks: a continuous-trigger ingest
-        // would otherwise accumulate block-manager storage batch after batch
-        // (Blocks.free, not the no-op Dataset.unpersist)
-        graft.core.Blocks.free(kept)
-        graft.core.Blocks.free(chained)
-        ()
-      }
-      .trigger(if (availableNow) Trigger.AvailableNow() else Trigger.ProcessingTime(triggerInterval))
-      .start()
-  }
+        land(s(if (redactPii) redactText(keptRaw, textCol) else keptRaw), sinkDir, batchId)
+    }
 
   /** Streaming CONTENT-SIGNATURE dedup-on-write — the dedup-at-ingest
     * family's multimodal member: each micro-batch is signed by `signer`
@@ -646,46 +603,24 @@ object Ingest {
       idCol: String = "doc_id",
       availableNow: Boolean = true,
       maxFilesPerTrigger: Option[Int] = Some(DefaultMaxFilesPerTrigger),
-      triggerInterval: String = "1 second"): StreamingQuery = {
-    import graft.operators.Dedup
-    val reader = spark.readStream.schema(schema)
-    val src = maxFilesPerTrigger
-      .fold(reader)(n => reader.option("maxFilesPerTrigger", n))
-      .parquet(sourceDir)
-    val markDir = s"$checkpointDir/graft-marks"
-    src.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
-        val ss = batch.sparkSession
-        val hconf = ss.sparkContext.hadoopConfiguration
-        val b = batch.localCheckpoint()
+      triggerInterval: String = "1 second"): StreamingQuery =
+    ingest(spark, sourceDir, schema, checkpointDir, availableNow, maxFilesPerTrigger, triggerInterval) {
+      (s, batch, batchId) =>
+        val b = s(batch)
         // sign ONCE: the signature frame feeds the probe AND the kept
         // segment write (decode cost is the dominant term — images/audio
         // decode exactly once per payload per batch)
-        val sigs = signer(b).localCheckpoint()
+        val sigs = s(signer(b))
         // the MICRO probe shape: batch side broadcast, stored signatures
         // scanned map-side only — no corpus shuffle or sort per trigger
-        // (the merge form would sort the full banded corpus every batch,
-        // and its internal checkpoint would leak one block set per batch)
-        val pairs = Dedup.signatureMicroIncremental(sigs, indexPath, maxHamming)
-          .localCheckpoint()
-        val kept0 = Dedup.collapseDuplicatesArrival(b, pairs, idCol)
-        val kept = kept0.localCheckpoint()
-        kept.write.mode("overwrite").parquet(s"$sinkDir/batch_id=$batchId")
+        // (the merge form would sort the full banded corpus every batch)
+        val pairs = s(Dedup.signatureMicroIncremental(sigs, indexPath, maxHamming))
+        val kept = s(Dedup.collapseDuplicatesArrival(b, pairs, idCol))
         Dedup.writeSignatureSegment(
           sigs.join(kept.select(col(idCol).cast("long").as("doc_id")), Seq("doc_id")),
           indexPath, f"seg_batch_$batchId%06d")
-        Marks.write(markDir, batchId, 0L, kept.count(), hconf)
-        graft.core.Blocks.free(kept)
-        graft.core.Blocks.free(kept0) // sweeps the components label checkpoint
-        graft.core.Blocks.free(pairs)
-        graft.core.Blocks.free(sigs)
-        graft.core.Blocks.free(b)
-        ()
-      }
-      .trigger(if (availableNow) Trigger.AvailableNow() else Trigger.ProcessingTime(triggerInterval))
-      .start()
-  }
+        land(kept, sinkDir, batchId)
+    }
 
   /** Streaming VIDEO dedup-on-write — [[startSignatureIngest]] for clip
     * corpora: each micro-batch's `payload` column (MJPEG-AVI) is decoded
@@ -724,43 +659,22 @@ object Ingest {
       availableNow: Boolean = true,
       maxFilesPerTrigger: Option[Int] = Some(DefaultMaxFilesPerTrigger),
       triggerInterval: String = "1 second"): StreamingQuery = {
-    import graft.operators.{Dedup, Multimodal}
     require(maxFrames <= Multimodal.VideoSlotCap,
       s"maxFrames must fit the slot encoding (<= ${Multimodal.VideoSlotCap})")
-    val reader = spark.readStream.schema(schema)
-    val src = maxFilesPerTrigger
-      .fold(reader)(n => reader.option("maxFilesPerTrigger", n))
-      .parquet(sourceDir)
-    val markDir = s"$checkpointDir/graft-marks"
-    src.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
-        val ss = batch.sparkSession
-        val hconf = ss.sparkContext.hadoopConfiguration
-        val b = batch.localCheckpoint()
+    ingest(spark, sourceDir, schema, checkpointDir, availableNow, maxFilesPerTrigger, triggerInterval) {
+      (s, batch, batchId) =>
+        val b = s(batch)
         // decode ONCE: the slim hash frame feeds the probe and the kept
         // segment write (per-frame JPEG decode is the dominant term)
-        val hashes = Multimodal.videoHashes(b, maxFrames, idCol).localCheckpoint()
-        val pairs = Multimodal.videoIncremental(
-            hashes, indexPath, maxHamming, minMatchRatio)
-          .localCheckpoint()
-        val kept0 = Dedup.collapseDuplicatesArrival(b, pairs, idCol)
-        val kept = kept0.localCheckpoint()
-        kept.write.mode("overwrite").parquet(s"$sinkDir/batch_id=$batchId")
+        val hashes = s(Multimodal.videoHashes(b, maxFrames, idCol))
+        val pairs = s(Multimodal.videoIncremental(hashes, indexPath, maxHamming, minMatchRatio))
+        val kept = s(Dedup.collapseDuplicatesArrival(b, pairs, idCol))
         Dedup.writeSignatureSegment(
           Multimodal.videoSlotSignatures(
             hashes.join(kept.select(col(idCol).cast("long").as("doc_id")), Seq("doc_id"))),
           indexPath, f"seg_batch_$batchId%06d")
-        Marks.write(markDir, batchId, 0L, kept.count(), hconf)
-        graft.core.Blocks.free(kept)
-        graft.core.Blocks.free(kept0) // sweeps the components label checkpoint
-        graft.core.Blocks.free(pairs)
-        graft.core.Blocks.free(hashes)
-        graft.core.Blocks.free(b)
-        ()
-      }
-      .trigger(if (availableNow) Trigger.AvailableNow() else Trigger.ProcessingTime(triggerInterval))
-      .start()
+        land(kept, sinkDir, batchId)
+    }
   }
 
   /** Streaming SEARCHABLE-ON-WRITE: each micro-batch's postings land as a
@@ -785,26 +699,12 @@ object Ingest {
       textCol: String = "text",
       availableNow: Boolean = true,
       maxFilesPerTrigger: Option[Int] = Some(DefaultMaxFilesPerTrigger),
-      triggerInterval: String = "1 second"): StreamingQuery = {
-    val reader = spark.readStream.schema(schema)
-    val src = maxFilesPerTrigger
-      .fold(reader)(n => reader.option("maxFilesPerTrigger", n))
-      .parquet(sourceDir)
-    val markDir = s"$checkpointDir/graft-marks"
-    src.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
-        val ss = batch.sparkSession
-        val b = batch.localCheckpoint()
-        val n = graft.operators.Search.writePostingsSegment(
-          b, indexPath, f"seg_batch_$batchId%06d", idCol, textCol)
-        Marks.write(markDir, batchId, 0L, n, ss.sparkContext.hadoopConfiguration)
-        graft.core.Blocks.free(b)
-        ()
-      }
-      .trigger(if (availableNow) Trigger.AvailableNow() else Trigger.ProcessingTime(triggerInterval))
-      .start()
-  }
+      triggerInterval: String = "1 second"): StreamingQuery =
+    ingest(spark, sourceDir, schema, checkpointDir, availableNow, maxFilesPerTrigger, triggerInterval) {
+      (s, batch, batchId) =>
+        (0L, Search.writePostingsSegment(
+          s(batch), indexPath, f"seg_batch_$batchId%06d", idCol, textCol))
+    }
 
   /** The STREAMING composition of the whole curation pipeline — ONE ingest
     * running filter → redact → exact dedup → near-dup → (optional
@@ -821,7 +721,7 @@ object Ingest {
     * Stage semantics are EXACTLY the standalone ingests': the quality
     * cascade labels with the first violated rule; exact dedup probes and
     * appends the persisted key index
-    * ([[graft.operators.Dedup.exactIncrementalKeyed]]); near-dup probes
+    * ([[graft.operators.Dedup.exactIncremental]]); near-dup probes
     * the MinHash index with the MICRO shape (batch side broadcast — no
     * corpus shuffle per trigger) and keeps by ARRIVAL order; the optional
     * semantic stage (pass `semanticIndexPath`; the source schema must
@@ -862,113 +762,45 @@ object Ingest {
       availableNow: Boolean = true,
       maxFilesPerTrigger: Option[Int] = Some(DefaultMaxFilesPerTrigger),
       triggerInterval: String = "1 second"): StreamingQuery = {
-    import graft.operators.{Curation, Dedup, Ivf}
     require(semanticIndexPath.isEmpty || schema.fieldNames.contains(vecCol),
       s"semantic stage needs a '$vecCol' column in the source schema")
-    val reader = spark.readStream.schema(schema)
-    val src = maxFilesPerTrigger
-      .fold(reader)(n => reader.option("maxFilesPerTrigger", n))
-      .parquet(sourceDir)
-    val markDir = s"$checkpointDir/graft-marks"
-    src.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
-        val ss = batch.sparkSession
-        val hconf = ss.sparkContext.hadoopConfiguration
+    ingest(spark, sourceDir, schema, checkpointDir, availableNow, maxFilesPerTrigger, triggerInterval) {
+      (s, batch, batchId) =>
         val funnel = Seq.newBuilder[(Int, String, Long, Long)]
-        val toFree = Seq.newBuilder[org.apache.spark.sql.Dataset[_]]
         var ord = 0
-        var cur = batch.localCheckpoint()
+        var cur = s(batch)
         var nCur = cur.count()
-        // the curationPipeline stage loop, per micro-batch: checkpoint each
-        // stage's output (one computation feeds the count, the next stage,
-        // and any segment write); every stage frame — including the
-        // pre-checkpoint plan, whose sweep frees operator-internal
-        // checkpoints like the components label table — is released at
-        // BATCH END, not between stages: segment writes after a stage still
-        // read its input frame, and storage stays batch-bounded either way
+        // the curationPipeline stage loop, per micro-batch: each stage
+        // returns its output checkpointed (one computation feeds the count,
+        // the next stage, and any segment write). Every stage frame and
+        // operator-internal checkpoint is freed by the batch's scope at
+        // BATCH END, not between stages: storage stays batch-bounded either
+        // way
         def stage(name: String)(f: DataFrame => DataFrame): Unit = {
-          val raw = f(cur)
-          val next = raw.localCheckpoint()
+          val next = f(cur)
           val nNext = next.count()
           funnel += ((ord, name, nCur, nNext))
           ord += 1
-          toFree += raw
-          toFree += cur
           cur = next
           nCur = nNext
         }
-        stage("filter")(d => Curation.filterChain(d, rules)
-          .filter(col("keep") === 1L).drop("fail_rule", "keep"))
-        if (redactPii) stage("redact")(d => Curation.redact(d, textCol)
-          .withColumn(textCol, col("redacted"))
-          .drop("redacted", "n_emails", "n_ips", "n_phones"))
-        var exactInput: DataFrame = null
-        stage("exact") { d =>
-          exactInput = d
-          val keyed = Dedup.keyedBatch(d, exactIndexPath, idCol, textCol).localCheckpoint()
-          toFree += keyed
-          val keptIds = Dedup.exactIncrementalKeyed(keyed, exactIndexPath, idCol)
-            .filter(col("is_kept")).select(idCol)
-          d.join(keptIds, Seq(idCol), "left_semi") // semi: duplicate-id rows must not fan out
-        }
-        // the exact stage's INPUT keys append (startDedupIngest's replay
-        // contract); an exact copy of a doc a LATER stage drops is still
-        // suppressed downstream by that stage's own index. Written AFTER
-        // the classification materialized: a replay's overwrite of the
-        // crashed attempt's segment must not invalidate the file listing
-        // the classification plan captured
-        Dedup.writeExactIndexSegment(
-          exactInput, exactIndexPath, s"seg_batch_$batchId", idCol, textCol)
-        var sigs: DataFrame = null
-        stage("neardup") { d =>
-          sigs = Dedup.minHashBatchSigs(d, nearDupIndexPath, idCol, textCol).localCheckpoint()
-          toFree += sigs
-          val cands = Dedup.minHashMicroCandidates(sigs, nearDupIndexPath).localCheckpoint()
-          val pairs = Dedup
-            .minHashMicroVerify(cands, sigs, nearDupIndexPath, nearDupThreshold)
-            .localCheckpoint()
-          graft.core.Blocks.free(cands)
-          toFree += pairs
-          Dedup.collapseDuplicatesArrival(d, pairs, idCol)
-        }
-        // only near-dup SURVIVORS' signatures fold in — the index mirrors
-        // what this stage keeps, exactly like the standalone ingest
-        Dedup.writeMinHashSegment(
-          sigs.join(cur.select(col(idCol).as("doc")), Seq("doc")),
-          nearDupIndexPath, f"seg_batch_$batchId%06d")
-        semanticIndexPath.foreach { ivfPath =>
-          var assigned: DataFrame = null
-          var assignedGen: String = ""
-          stage("semantic") { d =>
-            // shared micro-probe (Ivf.semanticMicroPairs — identical to
-            // startSemanticIngest by construction): null-vector rows are
-            // excluded from assignment, kept by the collapse, and never
-            // indexed (the segment write joins against `assigned`)
-            val (a, pairs, g) =
-              Ivf.semanticMicroPairs(d, ivfPath, semanticThreshold, idCol, vecCol)
-            assigned = a
-            assignedGen = g
-            toFree += assigned
-            toFree += pairs
-            Dedup.collapseDuplicatesArrival(d, pairs, idCol)
-          }
-          Ivf.writeListSegment(
-            assigned.join(cur.select(col(idCol).cast("long").as("n_id")), Seq("n_id")),
-            ivfPath, f"seg_batch_$batchId%06d", Some(assignedGen))
-        }
-        import ss.implicits._
+        stage("filter")(d => s(Curation.filterChain(d, rules)
+          .filter(col("keep") === 1L).drop("fail_rule", "keep")))
+        if (redactPii) stage("redact")(d => s(redactText(d, textCol)))
+        // each dedup stage is the standalone ingest's batch step, so it
+        // folds only what IT passed into its index
+        stage("exact")(exactBatch(_, exactIndexPath, batchId, idCol, textCol))
+        stage("neardup")(
+          nearDupBatch(_, nearDupIndexPath, nearDupThreshold, batchId, idCol, textCol))
+        semanticIndexPath.foreach(ivfPath => stage("semantic")(
+          semanticBatch(_, ivfPath, semanticThreshold, batchId, idCol, vecCol)))
+        import batch.sparkSession.implicits._
         funnel.result().toDF("ord", "stage", "docs_in", "docs_out")
           .coalesce(1).write.mode("overwrite")
           .parquet(s"$sinkDir/_funnel/batch_id=$batchId")
         cur.write.mode("overwrite").parquet(s"$sinkDir/batch_id=$batchId")
-        Marks.write(markDir, batchId, 0L, nCur, hconf)
-        toFree.result().foreach(graft.core.Blocks.free(_))
-        graft.core.Blocks.free(cur)
-        ()
-      }
-      .trigger(if (availableNow) Trigger.AvailableNow() else Trigger.ProcessingTime(triggerInterval))
-      .start()
+        (0L, nCur)
+    }
   }
 
   /** Aggregate cross-stage funnel of a [[startPipelineIngest]] sink over
@@ -977,7 +809,7 @@ object Ingest {
     * corpus. */
   def pipelineFunnel(spark: SparkSession, sinkDir: String, checkpointDir: String): DataFrame = {
     val committed = Marks.read(
-      s"$checkpointDir/graft-marks", spark.sparkContext.hadoopConfiguration).keys.toSeq.sorted
+      markDir(checkpointDir), spark.sparkContext.hadoopConfiguration).keys.toSeq.sorted
     require(committed.nonEmpty, s"no committed batches under $checkpointDir")
     Parquet.read(spark, Map("basePath" -> s"$sinkDir/_funnel"),
         committed.map(b => s"$sinkDir/_funnel/batch_id=$b"): _*)
@@ -992,7 +824,7 @@ object Ingest {
     * tables, never the corpus. */
   def curationFunnel(spark: SparkSession, sinkDir: String, checkpointDir: String): DataFrame = {
     val committed = Marks.read(
-      s"$checkpointDir/graft-marks", spark.sparkContext.hadoopConfiguration).keys.toSeq.sorted
+      markDir(checkpointDir), spark.sparkContext.hadoopConfiguration).keys.toSeq.sorted
     require(committed.nonEmpty, s"no committed batches under $checkpointDir")
     Parquet.read(spark, Map("basePath" -> s"$sinkDir/_funnel"),
         committed.map(b => s"$sinkDir/_funnel/batch_id=$b"): _*)
@@ -1010,7 +842,7 @@ object Ingest {
     * schema. The per-batch paths keep partition pruning on `batch_id`. */
   def readCommitted(spark: SparkSession, sinkDir: String, checkpointDir: String): DataFrame = {
     val committed = Marks.read(
-      s"$checkpointDir/graft-marks", spark.sparkContext.hadoopConfiguration).keys.toSeq.sorted
+      markDir(checkpointDir), spark.sparkContext.hadoopConfiguration).keys.toSeq.sorted
     require(committed.nonEmpty, s"no committed batches under $checkpointDir")
     Parquet.read(spark, Map("basePath" -> sinkDir),
         committed.map(b => s"$sinkDir/batch_id=$b"): _*)
@@ -1043,7 +875,7 @@ object Ingest {
     * sequence. One tiny mark-dir listing; never scans data. */
   def ingestProperties(spark: SparkSession, checkpointDir: String): Map[String, String] = {
     val marks = Marks.read(
-      s"$checkpointDir/graft-marks", spark.sparkContext.hadoopConfiguration)
+      markDir(checkpointDir), spark.sparkContext.hadoopConfiguration)
     Map(
       "graft.ingest.committed.batches" -> marks.size.toString,
       "graft.ingest.committed.rows" -> marks.values.map(_._2).sum.toString,
@@ -1071,7 +903,6 @@ object Ingest {
     * reference's repair has the same property (recovered data is best
     * effort, kv/db/repair.cc semantics). */
   def repairMarks(spark: SparkSession, sinkDir: String, checkpointDir: String): Int = {
-    val markDir = s"$checkpointDir/graft-marks"
     val root = new org.apache.hadoop.fs.Path(sinkDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(root)) return 0
@@ -1090,7 +921,7 @@ object Ingest {
           .head()
         if (!range.isNullAt(0)) {
           val (lo, hi) = (range.getLong(0), range.getLong(1))
-          Marks.write(markDir, batchId, lo - 1, hi - lo + 1,
+          Marks.write(markDir(checkpointDir), batchId, lo - 1, hi - lo + 1,
             spark.sparkContext.hadoopConfiguration)
           repaired += 1
         }

@@ -60,9 +60,9 @@ object BandDiag {
       t(s"micro verify rep$r") {
         Dedup.minHashMicroVerify(cands, sigs, bkt, threshold = 0.5).count()
       }
-      graft.core.Blocks.free(cands)
+      graft.core.Stage.free(cands)
     }
-    graft.core.Blocks.free(sigs)
+    graft.core.Stage.free(sigs)
     spark.stop()
   }
 }

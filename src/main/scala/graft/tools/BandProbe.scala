@@ -86,8 +86,8 @@ object BandProbe {
         val cands = Dedup.minHashMicroCandidates(sigs, idx).localCheckpoint()
         val pairs = Dedup.minHashMicroVerify(cands, sigs, idx, threshold = 0.5).count()
         val secs = (System.nanoTime() - t) / 1e9
-        graft.core.Blocks.free(cands)
-        graft.core.Blocks.free(sigs)
+        graft.core.Stage.free(cands)
+        graft.core.Stage.free(sigs)
         (secs, pairs)
       }
       for (idx <- Seq(flat, bkt)) {
@@ -98,7 +98,7 @@ object BandProbe {
           f"min=${runs.map(_._1).min}%.3f max=${runs.map(_._1).max}%.3f " +
           f"pairs(median rep)=${runs(reps / 2)._2}")
       }
-      graft.core.Blocks.free(docs)
+      graft.core.Stage.free(docs)
     }
     spark.stop()
   }

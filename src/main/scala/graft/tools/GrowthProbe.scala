@@ -79,7 +79,7 @@ object GrowthProbe {
       val cands = Dedup.minHashMicroCandidates(sigs, idx).localCheckpoint()
       Dedup.minHashMicroVerify(cands, sigs, idx, threshold = 0.5).count()
       val secs = (System.nanoTime() - t) / 1e9
-      graft.core.Blocks.free(cands); graft.core.Blocks.free(sigs)
+      graft.core.Stage.free(cands); graft.core.Stage.free(sigs)
       secs
     }
 
@@ -94,7 +94,7 @@ object GrowthProbe {
       val seed = corpus(spark, 0, startDocs).localCheckpoint()
       Dedup.writeMinHashIndex(seed, idx, shingleN = 3, numHashes = 64, bands = 16,
         bandBuckets = seedP)
-      graft.core.Blocks.free(seed)
+      graft.core.Stage.free(seed)
 
       var n = startDocs
       var nextCheckpoint = startDocs * 2
@@ -106,7 +106,7 @@ object GrowthProbe {
         val sigs = Dedup.minHashBatchSigs(corpus(spark, n, n + chunkDocs), idx)
           .localCheckpoint()
         Dedup.writeMinHashSegment(sigs, idx, f"g_$batch%05d")
-        graft.core.Blocks.free(sigs)
+        graft.core.Stage.free(sigs)
         n += chunkDocs; batch += 1
         if (batch % foldEvery == 0)
           // the beside-live maintenance cycle: fold the segments, gc

@@ -64,7 +64,7 @@ object NewcomerProbe {
           hashes.select("doc_id"), Multimodal.imageDupPairs(hashes, maxHamming = 10),
           idCol = "doc_id", aCol = "doc_a", bCol = "doc_b")
         kept.count()
-        graft.core.Blocks.free(hashes)
+        graft.core.Stage.free(hashes)
       }
     })
 
@@ -79,7 +79,7 @@ object NewcomerProbe {
           hashes.select("doc_id"), Multimodal.audioDupPairs(hashes, maxHamming = 10),
           idCol = "doc_id", aCol = "doc_a", bCol = "doc_b")
         kept.count()
-        graft.core.Blocks.free(hashes)
+        graft.core.Stage.free(hashes)
       }
     })
 
@@ -139,7 +139,7 @@ object NewcomerProbe {
       val hybrid = median((1 to reps).map { _ =>
         time { Search.hybridTopK(docs, emb, qv, topK = 10).count() }
       })
-      graft.core.Blocks.free(docs)
+      graft.core.Stage.free(docs)
       (rrf, hybrid)
     }
 

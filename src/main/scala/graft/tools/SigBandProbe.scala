@@ -83,7 +83,7 @@ object SigBandProbe {
         val t = System.nanoTime()
         val pairs = Dedup.signatureMicroIncremental(batch, idx, maxHamming = 6).count()
         val secs = (System.nanoTime() - t) / 1e9
-        graft.core.Blocks.free(batch)
+        graft.core.Stage.free(batch)
         (secs, pairs)
       }
       for (idx <- Seq(flat, bkt)) {
@@ -94,7 +94,7 @@ object SigBandProbe {
           f"min=${runs.map(_._1).min}%.3f max=${runs.map(_._1).max}%.3f " +
           f"pairs(median rep)=${runs(reps / 2)._2}")
       }
-      graft.core.Blocks.free(sigs)
+      graft.core.Stage.free(sigs)
     }
     spark.stop()
   }

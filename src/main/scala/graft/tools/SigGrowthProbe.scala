@@ -72,7 +72,7 @@ object SigGrowthProbe {
       val t = System.nanoTime()
       val pairs = Dedup.signatureMicroIncremental(batch, idx, maxHamming = 6).count()
       val secs = (System.nanoTime() - t) / 1e9
-      graft.core.Blocks.free(batch)
+      graft.core.Stage.free(batch)
       (secs, pairs)
     }
 
@@ -88,7 +88,7 @@ object SigGrowthProbe {
       val seed = sigRows(spark, 0, startSigs, horizon).localCheckpoint()
       Dedup.writeSignatureIndex(seed, idx, maxHamming = 6, comboSize = 2,
         sigBuckets = seedP)
-      graft.core.Blocks.free(seed)
+      graft.core.Stage.free(seed)
 
       var n = startSigs
       var nextCheckpoint = startSigs * 2
@@ -101,7 +101,7 @@ object SigGrowthProbe {
       while (n < horizon) {
         val sigs = sigRows(spark, n, n + chunkSigs, horizon).localCheckpoint()
         Dedup.writeSignatureSegment(sigs, idx, f"g_$batch%05d")
-        graft.core.Blocks.free(sigs)
+        graft.core.Stage.free(sigs)
         n += chunkSigs; batch += 1
         if (batch % foldEvery == 0)
           Dedup.foldDocSegments(spark, idx, gc = true) // beside-live cycle

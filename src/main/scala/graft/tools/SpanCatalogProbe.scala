@@ -80,7 +80,7 @@ object SpanCatalogProbe {
         }
         println(f"docs=$size%8d grams=$grams%10d batch=$batchDocs%5d " +
           f"probe=${median(times)}%6.3f s (min ${times.min}%6.3f)")
-        graft.core.Blocks.free(b)
+        graft.core.Stage.free(b)
       }
       // grow by appending (the deployment shape), then double
       if (size * 2 <= horizon) {

@@ -303,7 +303,7 @@ object UptimeSoakProbe {
     val ivfPath = s"$out/ivf_index"
     val lists = 64
     Ivf.writeIndex(base, Ivf.train(base, lists, iters = 2, maxTrainRows = 3000L), ivfPath)
-    graft.core.Blocks.free(base)
+    graft.core.Stage.free(base)
     val expectVecKeys = vecs.select("_key").distinct().count()
     println(f"[soak] semantic base=$baseKeys%,d keys, streaming ${n - baseN}%,d rows, " +
       f"expect $expectVecKeys%,d distinct keys, C=$lists")
@@ -370,7 +370,7 @@ object UptimeSoakProbe {
     val semWall = (System.nanoTime() - t4) / 1e9
     spark.streams.removeListener(cap4)
     vGcRemoved += Ivf.gcIndexSegments(spark, ivfPath)
-    graft.core.Blocks.free(probeQs)
+    graft.core.Stage.free(probeQs)
     val (f4, l4, peak4) = report("semantic", cap4, 50)
     println(f"[soak] semantic wall=$semWall%.1f s folds=$vFolds gc-removed=$vGcRemoved " +
       f"peak-live-segs=$peakVSegs final-live-segs=${liveVSegCount()}")
@@ -496,7 +496,7 @@ object UptimeSoakProbe {
       .drop("_key").localCheckpoint()
     Ivf.writeIndex(baseVecs,
       Ivf.train(baseVecs, 64, iters = 2, maxTrainRows = 3000L), pvIdx)
-    graft.core.Blocks.free(baseVecs)
+    graft.core.Stage.free(baseVecs)
     val cap7 = new Capture(spark)
     spark.streams.addListener(cap7)
     val t7 = System.nanoTime()
@@ -599,7 +599,7 @@ object UptimeSoakProbe {
     val bK = bKept.select(xxhash64(col("text")).as("k"))
     val keyDiff = sK.exceptAll(bK).count() + bK.exceptAll(sK).count()
     val bExact = bFunnel.collect().find(_.getString(0) == "exact").get.getLong(2)
-    graft.core.Blocks.free(bKept)
+    graft.core.Stage.free(bKept)
     require(keyDiff == 0L,
       s"streamed sink != batch curationPipeline kept keys ($keyDiff rows differ)")
     require(bExact == expectKeys,

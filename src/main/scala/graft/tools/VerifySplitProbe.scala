@@ -50,7 +50,7 @@ object VerifySplitProbe {
       val t1 = System.nanoTime()
       Dedup.minHashMicroVerify(cands, sigs, idx, threshold = 0.5).count()
       val t2 = System.nanoTime()
-      graft.core.Blocks.free(cands); graft.core.Blocks.free(sigs)
+      graft.core.Stage.free(cands); graft.core.Stage.free(sigs)
       ((t1 - t0) / 1e9, (t2 - t1) / 1e9, nCands)
     }
 

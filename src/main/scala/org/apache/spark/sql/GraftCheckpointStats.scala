@@ -16,8 +16,8 @@ import org.apache.spark.sql.execution.LogicalRDD
   * has 10^5+ digits and every stats visit burns minutes of driver CPU in
   * BigInteger Toom-Cook multiplication (observed: q30c2's component loop
   * pinning the driver RUNNABLE in computeStats). [[resetInheritedStats]]
-  * re-wraps the SAME persisted RDD (so `graft.core.Blocks.free` still
-  * releases the right blocks, and partitioning/ordering are preserved)
+  * re-wraps the SAME persisted RDD (so its `graft.core.Stage` scope still
+  * frees the right blocks, and partitioning/ordering are preserved)
   * without `originStats`, falling back to the session default size — the
   * estimate a fresh scan of unknown data gets, and the only value that
   * cannot compound. The truncated plan's constraints (its inferred

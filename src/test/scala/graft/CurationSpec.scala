@@ -485,7 +485,7 @@ class CurationSpec extends AnyFunSuite {
     assert(corpus.columns.toSeq == docs.columns.toSeq)
     // shards landed and cover the corpus exactly
     assert(spark.read.parquet(s"$tmp/shards").count() == nBudget)
-    graft.core.Blocks.free(corpus)
+    graft.core.Stage.free(corpus)
     graft.queries.QueryDef.deleteRecursively(java.nio.file.Paths.get(tmp))
   }
 
@@ -501,7 +501,7 @@ class CurationSpec extends AnyFunSuite {
     // horizon check caught them leaking one pair per invocation. After
     // freeing the returned corpus, a long-lived driver must hold ZERO new
     // blocks.
-    graft.core.Blocks.free(corpus)
+    graft.core.Stage.free(corpus)
     val after = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(after.isEmpty, s"curationPipeline leaked RDD blocks: $after")
   }
@@ -833,7 +833,7 @@ class CurationSpec extends AnyFunSuite {
     val got = corpus.select("doc_id").collect().map(_.getLong(0)).toSet
     assert(got == hand, "pipeline output must equal the hand-chained stages")
     assert(f.last == (("dsir_select", f(5)._3, got.size.toLong)), s"funnel tail: ${f.last}")
-    graft.core.Blocks.free(corpus)
+    graft.core.Stage.free(corpus)
   }
 
   test("classifierRule verdict equals classifierScore.is_quality doc for doc; chains as a rule") {

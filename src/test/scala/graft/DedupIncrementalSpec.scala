@@ -467,7 +467,7 @@ class DedupIncrementalSpec extends AnyFunSuite {
     assert(!p.contains("SortMergeJoin"), s"no store merge join:\n$p")
     assert("Exchange hashpartitioning".r.findAllIn(p).size == 1,
       s"exactly the candidate-dedup shuffle:\n$p")
-    graft.core.Blocks.free(batchSigs)
+    graft.core.Stage.free(batchSigs)
   }
 
   test("in-flight takedown (tombs dir exists, no files yet) never fails a live probe") {
@@ -741,8 +741,8 @@ class DedupIncrementalSpec extends AnyFunSuite {
       .queryExecution.executedPlan.toString
     assert(vp.contains("LeftSemi, BuildRight") || vp.contains("LeftSemi"),
       s"candidate-id restriction must be a broadcast semi join:\n$vp")
-    graft.core.Blocks.free(cands)
-    graft.core.Blocks.free(sigs)
+    graft.core.Stage.free(cands)
+    graft.core.Stage.free(sigs)
   }
 
   test("exact micro probe pushes literal batch keys to parquet; row groups without them are skipped") {
@@ -834,7 +834,7 @@ class DedupIncrementalSpec extends AnyFunSuite {
     def probe(idx: String, sigs: DataFrame) = {
       val cands = Dedup.minHashMicroCandidates(sigs, idx).localCheckpoint()
       val pairs = pairSet(Dedup.minHashMicroVerify(cands, sigs, idx, threshold = 0.5))
-      graft.core.Blocks.free(cands)
+      graft.core.Stage.free(cands)
       pairs
     }
     for (mod <- Seq(5, 50)) { // ~100-doc batch (fallback) and ~10-doc (pruned)
@@ -845,7 +845,7 @@ class DedupIncrementalSpec extends AnyFunSuite {
       assert(bucketed == probe(s"$tmp/flat", sigs),
         s"bucketed probe must equal the flat-layout probe (mod=$mod)")
       assert(bucketed.nonEmpty, s"the planted copies must surface (mod=$mod)")
-      graft.core.Blocks.free(sigs)
+      graft.core.Stage.free(sigs)
     }
 
     // pruning mechanics: a one-doc batch hits <= 16 of the 512 buckets, and
@@ -862,7 +862,7 @@ class DedupIncrementalSpec extends AnyFunSuite {
     assert(pathCounts.nonEmpty, s"expected a band-store scan in the plan:\n$ps")
     assert(pathCounts.max <= 16,
       s"one doc's band read must list at most its 16 bucket dirs, saw $pathCounts")
-    graft.core.Blocks.free(one)
+    graft.core.Stage.free(one)
   }
 
   test("band-bucketed index lifecycle: segments, fold+gc, takedown, and compaction keep the probe exact") {
@@ -880,7 +880,7 @@ class DedupIncrementalSpec extends AnyFunSuite {
         .localCheckpoint()
       val cands = Dedup.minHashMicroCandidates(sigs, s"$tmp/idx").localCheckpoint()
       val out = pairSet(Dedup.minHashMicroVerify(cands, sigs, s"$tmp/idx", threshold = 0.5))
-      graft.core.Blocks.free(cands); graft.core.Blocks.free(sigs)
+      graft.core.Stage.free(cands); graft.core.Stage.free(sigs)
       out
     }
 
@@ -889,7 +889,7 @@ class DedupIncrementalSpec extends AnyFunSuite {
     val seg1 = Dedup.minHashBatchSigs(
       Seq((3000L, freshA)).toDF("doc_id", "text"), s"$tmp/idx").localCheckpoint()
     Dedup.writeMinHashSegment(seg1, s"$tmp/idx", "seg_a")
-    graft.core.Blocks.free(seg1)
+    graft.core.Stage.free(seg1)
     assert(new java.io.File(s"$tmp/idx/bandsegs/seg_a").exists(),
       "a bucketed index's segment must write its band rows")
     assert(probePairs(Seq((4000L, corpusText))).map(p => (p._1, p._2)) == Set((7L, 4000L)),
@@ -901,7 +901,7 @@ class DedupIncrementalSpec extends AnyFunSuite {
     val seg2 = Dedup.minHashBatchSigs(
       Seq((3001L, freshB)).toDF("doc_id", "text"), s"$tmp/idx").localCheckpoint()
     Dedup.writeMinHashSegment(seg2, s"$tmp/idx", "seg_b")
-    graft.core.Blocks.free(seg2)
+    graft.core.Stage.free(seg2)
     val before = probePairs(Seq((4002L, freshA), (4003L, freshB)))
     Dedup.foldDocSegments(spark, s"$tmp/idx", gc = false)
     assert(Dedup.gcDocIndex(spark, s"$tmp/idx") >= 2L)
@@ -968,7 +968,7 @@ class DedupIncrementalSpec extends AnyFunSuite {
     val cands = Dedup.minHashMicroCandidates(sigs, s"$tmp/idx").localCheckpoint()
     val pairs = pairSet(Dedup.minHashMicroVerify(cands, sigs, s"$tmp/idx", threshold = 0.5))
     assert(pairs.map(p => (p._1, p._2)) == Set((2001L, 5000L)))
-    graft.core.Blocks.free(cands); graft.core.Blocks.free(sigs)
+    graft.core.Stage.free(cands); graft.core.Stage.free(sigs)
   }
 
   test("near-dup ingest: arrival wins over id order — a lower-id duplicate of a kept corpus doc drops") {
@@ -1522,7 +1522,7 @@ class DedupIncrementalSpec extends AnyFunSuite {
       s"the verify's corpus scan must push the candidate-id In filter:\n$ps")
     assert(verified.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       == Set((7L, 9007L)), "the pruned verify still confirms the planted twin")
-    graft.core.Blocks.free(cands); graft.core.Blocks.free(twin)
+    graft.core.Stage.free(cands); graft.core.Stage.free(twin)
   }
 
   /** Sign documents with the SimHash family — the micro-batch signer shape
@@ -1550,7 +1550,7 @@ class DedupIncrementalSpec extends AnyFunSuite {
       assert(bucketed == tri(Dedup.signatureMicroIncremental(sigs, s"$tmp/flat", maxHamming = 6)),
         s"bucketed probe must equal the flat-layout probe (mod=$mod)")
       assert(bucketed.nonEmpty, s"the planted copies must surface (mod=$mod)")
-      graft.core.Blocks.free(sigs)
+      graft.core.Stage.free(sigs)
     }
     // a probe at DIFFERENT banding parameters than the frozen layout must
     // fall back to the (correct-at-any-parameters) flat scan
@@ -1559,7 +1559,7 @@ class DedupIncrementalSpec extends AnyFunSuite {
     assert(tri(Dedup.signatureMicroIncremental(alt, s"$tmp/bkt", maxHamming = 4)) ==
       tri(Dedup.signatureMicroIncremental(alt, s"$tmp/flat", maxHamming = 4)),
       "parameter-mismatched probe falls back to the flat scan")
-    graft.core.Blocks.free(alt)
+    graft.core.Stage.free(alt)
 
     // pruning mechanics: one doc has 28 block-combination keys (C(8,2) at
     // maxHamming=6, comboSize=2), so its probe lists at most 28 of the 2048
@@ -1581,7 +1581,7 @@ class DedupIncrementalSpec extends AnyFunSuite {
     assert(ps.contains("BroadcastHashJoin"), s"batch side must broadcast:\n$ps")
     assert("Exchange hashpartitioning".r.findAllIn(ps).size == 1,
       s"exactly the pair-dedup shuffle:\n$ps")
-    graft.core.Blocks.free(one)
+    graft.core.Stage.free(one)
   }
 
   test("band-bucketed signature store lifecycle: segments, fold+gc, takedown, compaction keep the probe exact") {
@@ -1598,7 +1598,7 @@ class DedupIncrementalSpec extends AnyFunSuite {
       val sigs = simSign(rows.toDF("doc_id", "text")).localCheckpoint()
       val out = Dedup.signatureMicroIncremental(sigs, s"$tmp/idx", maxHamming = 6)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      graft.core.Blocks.free(sigs)
+      graft.core.Stage.free(sigs)
       out
     }
 
@@ -1606,7 +1606,7 @@ class DedupIncrementalSpec extends AnyFunSuite {
     // batch pair via the base store, then a cross-SEGMENT pair via bandsegs
     val seg1 = simSign(Seq((3000L, freshA)).toDF("doc_id", "text")).localCheckpoint()
     Dedup.writeSignatureSegment(seg1, s"$tmp/idx", "seg_a")
-    graft.core.Blocks.free(seg1)
+    graft.core.Stage.free(seg1)
     assert(new java.io.File(s"$tmp/idx/bandsegs/seg_a").exists(),
       "a bucketed signature store's segment must write its band rows")
     assert(probePairs(Seq((4000L, corpusText))) == Set((7L, 4000L)),
@@ -1617,7 +1617,7 @@ class DedupIncrementalSpec extends AnyFunSuite {
     // a second segment, then fold beside + gc: view unchanged, twins folded
     val seg2 = simSign(Seq((3001L, freshB)).toDF("doc_id", "text")).localCheckpoint()
     Dedup.writeSignatureSegment(seg2, s"$tmp/idx", "seg_b")
-    graft.core.Blocks.free(seg2)
+    graft.core.Stage.free(seg2)
     val before = probePairs(Seq((4002L, freshA), (4003L, freshB)))
     Dedup.foldDocSegments(spark, s"$tmp/idx", gc = false)
     assert(Dedup.gcDocIndex(spark, s"$tmp/idx") >= 2L)
@@ -1686,7 +1686,7 @@ class DedupIncrementalSpec extends AnyFunSuite {
     val pairs = Dedup.signatureMicroIncremental(sigs, s"$tmp/idx", maxHamming = 6)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs == Set((2001L, 5000L)))
-    graft.core.Blocks.free(sigs)
+    graft.core.Stage.free(sigs)
   }
 
   test("compactDocIndex rerun after a crash between docs swap and segs delete does not duplicate") {
@@ -1744,7 +1744,7 @@ class DedupIncrementalSpec extends AnyFunSuite {
       val sigs = simSign(rows.toDF("doc_id", "text")).localCheckpoint()
       val out = Dedup.signatureMicroIncremental(sigs, s"$tmp/idx", maxHamming = 6)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      graft.core.Blocks.free(sigs)
+      graft.core.Stage.free(sigs)
       out
     }
     val oldText = oldCorpus.filter(col("doc_id") === 7).select("text").head().getString(0)
@@ -1779,7 +1779,7 @@ class DedupIncrementalSpec extends AnyFunSuite {
     assert(fs.exists(bands), "the probe heals the crashed band swap")
     assert(healed == tri(Dedup.signatureMicroIncremental(b1, s"$tmp/flat", maxHamming = 6)) &&
       healed.nonEmpty, "healed probe equals the flat-layout probe")
-    graft.core.Blocks.free(b1)
+    graft.core.Stage.free(b1)
     // bands/ gone entirely (no staged tree to heal): meta still advertises a
     // bucketed store, but the probe must take the flat scan — pre-fix it
     // silently read segment band rows only and missed every base-store pair
@@ -1788,7 +1788,7 @@ class DedupIncrementalSpec extends AnyFunSuite {
     assert(tri(Dedup.signatureMicroIncremental(b2, s"$tmp/bkt", maxHamming = 6)) ==
       tri(Dedup.signatureMicroIncremental(b2, s"$tmp/flat", maxHamming = 6)),
       "a band-less bucketed store probes through the flat scan, losing nothing")
-    graft.core.Blocks.free(b2)
+    graft.core.Stage.free(b2)
   }
 
   test("compaction heals band rows lost by a crashed direct append") {
@@ -1806,12 +1806,12 @@ class DedupIncrementalSpec extends AnyFunSuite {
     // new documents as duplicates of a doc existing nowhere)
     val orphan = simSign(Seq((5000L, fresh)).toDF("doc_id", "text")).localCheckpoint()
     orphan.write.mode("append").parquet(s"$tmp/idx/docs")
-    graft.core.Blocks.free(orphan)
+    graft.core.Stage.free(orphan)
     def probeTwin(): Set[(Long, Long)] = {
       val sigs = simSign(Seq((6000L, fresh)).toDF("doc_id", "text")).localCheckpoint()
       val out = Dedup.signatureMicroIncremental(sigs, s"$tmp/idx", maxHamming = 6)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      graft.core.Blocks.free(sigs)
+      graft.core.Stage.free(sigs)
       out
     }
     assert(!probeTwin().contains((5000L, 6000L)),
@@ -1837,7 +1837,7 @@ class DedupIncrementalSpec extends AnyFunSuite {
       val sigs = simSign(Seq((id, baseText)).toDF("doc_id", "text")).localCheckpoint()
       val out = Dedup.signatureMicroIncremental(sigs, s"$tmp/idx", maxHamming = 6)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      graft.core.Blocks.free(sigs)
+      graft.core.Stage.free(sigs)
       out
     }
     // crash window: bands/ renamed away, the complete staged tree waiting.
@@ -1885,7 +1885,7 @@ class DedupIncrementalSpec extends AnyFunSuite {
     val segSigs = simSign(corpus.filter(col("doc_id") >= 300 && col("doc_id") < 310))
       .localCheckpoint()
     Dedup.writeSignatureSegment(segSigs, idx, "batch_00000")
-    graft.core.Blocks.free(segSigs)
+    graft.core.Stage.free(segSigs)
     Dedup.deleteFromDocIndex(Seq(150L).toDF("doc_id"), idx)
     Dedup.writeSimHashIndex(newCorpus, idx)
     val fs = graft.core.Segments.fs(spark, tmp)
@@ -1897,7 +1897,7 @@ class DedupIncrementalSpec extends AnyFunSuite {
       val sigs = simSign(rows.toDF("doc_id", "text")).localCheckpoint()
       val out = Dedup.signatureMicroIncremental(sigs, idx, maxHamming = 6)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      graft.core.Blocks.free(sigs)
+      graft.core.Stage.free(sigs)
       out
     }
     // pre-fix: the stale tombstone on 150 anti-joined the NEW doc 150 out
@@ -2014,7 +2014,7 @@ class DedupIncrementalSpec extends AnyFunSuite {
     assert(auto == tri(Dedup.signatureMicroIncremental(one, s"$tmp/sbkt", maxHamming = 6)),
       "bucketed probe must equal the flat probe")
     assert(auto.exists(p => p._1 == 7L), "the planted twin must surface")
-    graft.core.Blocks.free(one)
+    graft.core.Stage.free(one)
   }
 
   test("compactDocIndex PROMOTES an auto-flat store that grew past the crossover; probes stay exact") {
@@ -2060,7 +2060,7 @@ class DedupIncrementalSpec extends AnyFunSuite {
     // idempotence: a second compaction with nothing outgrown is a no-op
     Dedup.compactDocIndex(spark, idx)
     assert(treeBuckets(idx) == Some(p))
-    graft.core.Blocks.free(twin)
+    graft.core.Stage.free(twin)
     } finally sys.props.remove("graft.crossover.sig")
   }
 
@@ -2164,7 +2164,7 @@ class DedupIncrementalSpec extends AnyFunSuite {
       val seg = Dedup.minHashBatchSigs(
         corpus.withColumn("doc_id", col("doc_id") + 10000), idx).localCheckpoint()
       Dedup.writeMinHashSegment(seg, idx, "batch_1")
-      graft.core.Blocks.free(seg)
+      graft.core.Stage.free(seg)
       assert(!new java.io.File(s"$idx/bandsegs/batch_1").exists(),
         "a flat-era MinHash segment has no band twin")
 
@@ -2175,7 +2175,7 @@ class DedupIncrementalSpec extends AnyFunSuite {
         val cands = Dedup.minHashMicroCandidates(sigs, idx).localCheckpoint()
         val out = Dedup.minHashMicroVerify(cands, sigs, idx, threshold = 0.5)
           .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-        graft.core.Blocks.free(cands); graft.core.Blocks.free(sigs)
+        graft.core.Stage.free(cands); graft.core.Stage.free(sigs)
         out
       }
       assert(probe7(90001L) == Set((7L, 90001L), (10007L, 90001L)),
@@ -2351,7 +2351,7 @@ class DedupIncrementalSpec extends AnyFunSuite {
     // and the store still works: a segment lands, the probe finds twins
     val seg = Dedup.minHashBatchSigs(corpus.filter(col("doc_id") === 7), idx).localCheckpoint()
     Dedup.writeMinHashSegment(seg, idx, "batch_00000")
-    graft.core.Blocks.free(seg)
+    graft.core.Stage.free(seg)
     val twin = Dedup.minHashBatchSigs(
       corpus.filter(col("doc_id") === 7).withColumn("doc_id", col("doc_id") + 5000),
       idx).localCheckpoint()
@@ -2359,7 +2359,7 @@ class DedupIncrementalSpec extends AnyFunSuite {
     val pairs = Dedup.minHashMicroVerify(cands, twin, idx, threshold = 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs == Set((7L, 5007L)), s"segment twin must pair on the empty-base store: $pairs")
-    graft.core.Blocks.free(cands); graft.core.Blocks.free(twin)
+    graft.core.Stage.free(cands); graft.core.Stage.free(twin)
   }
 
   test("orphaned docs from a crashed append are reported, and the fold cycle heals them") {
@@ -2396,6 +2396,6 @@ class DedupIncrementalSpec extends AnyFunSuite {
     assert(pairs().contains((60007L, 70007L)),
       "after the heal, the orphan doc pairs like any stored doc")
     assert(pairs().contains((7L, 70007L)), "the base corpus still pairs")
-    graft.core.Blocks.free(twin); graft.core.Blocks.free(orphanSigs)
+    graft.core.Stage.free(twin); graft.core.Stage.free(orphanSigs)
   }
 }

@@ -653,7 +653,7 @@ class IvfSpec extends AnyFunSuite {
       .toDF("vec_id", "embedding")
     val (assigned, pairs, _) = Ivf.semanticMicroPairs(batch, tmp, 0.999, "vec_id", "embedding")
     val got = pairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    graft.core.Blocks.free(assigned); graft.core.Blocks.free(pairs)
+    graft.core.Stage.free(assigned); graft.core.Stage.free(pairs)
     assert(got.contains((405L, 900000L)),
       s"micro-probe must pair against the old-generation segment: $got")
     // gc must NOT sweep the quantizer a live segment still probes with

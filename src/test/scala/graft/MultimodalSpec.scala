@@ -838,7 +838,7 @@ class MultimodalSpec extends AnyFunSuite {
     val kept = graft.operators.Dedup.semanticDedup(
         docs, emb, threshold = 0.85, lists = 16)
       .collect().map(_.getLong(0)).toSet
-    graft.core.Blocks.free(emb)
+    graft.core.Stage.free(emb)
     // RECALL: no planted twin survives — including every hash-missed one
     // (min-id keep: the twin's cluster always contains its lower-id
     // original, so the twin is never the representative)
@@ -1510,7 +1510,7 @@ class MultimodalSpec extends AnyFunSuite {
     graft.operators.Dedup.compactDocIndex(spark, tmp)
     assert(pairsOf(Multimodal.videoIncremental(reprobe, tmp, maxHamming = 10)) == after,
       "probe unchanged across compaction")
-    graft.core.Blocks.free(batchHashes); graft.core.Blocks.free(corpusHashes)
+    graft.core.Stage.free(batchHashes); graft.core.Stage.free(corpusHashes)
   }
 
   test("streaming video dedup-on-write: corpus/cross-batch/in-batch clip twins drop; crash replay stable") {

@@ -7,7 +7,7 @@ import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 /** The engine's parquet read ([[Parquet.read]]) against `spark.read.parquet`
@@ -128,32 +128,5 @@ class ParquetReadSpec extends AnyFunSuite {
     assertSame(ours, theirs)
     assert(ours.columns.toSeq == Seq("id", "x", "y"))
     assert(oursJobs == sparkJobs && oursJobs >= 1, s"$oursJobs vs $sparkJobs")
-  }
-
-  /** A parquet read through `spark.read`, optionally with `.option(s)(...)`
-    * between; `.schema(...)` reads infer nothing and are not matched. */
-  private val SparkRead =
-    """\bread\s*(?:\.\s*options?\s*\((?:[^()]|\([^()]*\))*\)\s*)*\.\s*parquet\s*\(""".r
-
-  test("engine sources read parquet only through graft.core.Parquet (tools/ exempt)") {
-    Seq("spark.read.parquet(p)", "s.read.parquet(a, b)", "df.sparkSession.read.parquet(p)",
-      "spark.read\n  .option(\"basePath\", s\"$d\")\n  .parquet(p)", "spark.read.options(m(x)).parquet(p)")
-      .foreach(s => assert(SparkRead.findFirstIn(s).isDefined, s))
-    Seq("spark.readStream.schema(s).parquet(d)", "spark.read.schema(\"id LONG\").parquet(d)",
-      "df.write.parquet(d)", "Parquet.read(spark, p)")
-      .foreach(s => assert(SparkRead.findFirstIn(s).isEmpty, s))
-
-    val root = Paths.get("src/main/scala/graft")
-    assert(Files.isDirectory(root), s"run from the repository root (cwd ${Paths.get("").toAbsolutePath})")
-    val exempt = Set(root.resolve("core/Parquet.scala"))
-    val walk = Files.walk(root)
-    val files = try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList finally walk.close()
-    val offenders = files
-      .filterNot(p => exempt(p) || p.startsWith(root.resolve("tools")))
-      .flatMap { p: Path =>
-        val text = new String(Files.readAllBytes(p), "UTF-8")
-        SparkRead.findAllMatchIn(text).map(m => s"$p:${text.take(m.start).count(_ == '\n') + 1}")
-      }
-    assert(files.size > 20 && offenders.isEmpty, offenders.mkString("route through Parquet.read: ", ", ", ""))
   }
 }

@@ -26,7 +26,7 @@ class PlanSpec extends AnyFunSuite {
       assert(before.constraints.nonEmpty && after.constraints == before.constraints)
       assert(before.stats.sizeInBytes < default)
       assert(after.stats.sizeInBytes == default && after.stats.rowCount.isEmpty)
-    } finally graft.core.Blocks.free(df)
+    } finally graft.core.Stage.free(df)
   }
 
   test("q01: column pruning reaches the scan (ReadSchema excludes unused columns)") {

@@ -1,0 +1,72 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
+import scala.util.matching.Regex
+
+/** Source rules for the engine under `src/main/scala` (`tools/` exempt):
+  * every parquet read goes through `graft.core.Parquet`, every eager
+  * checkpoint through `graft.core.Stage`. Each pattern is first checked
+  * against snippets it must and must not match. */
+class SourceGuardSpec extends AnyFunSuite {
+  private val main = Paths.get("src/main/scala")
+  private val graftRoot = main.resolve("graft")
+
+  private def selfCheck(pattern: Regex, matching: Seq[String], nonMatching: Seq[String]): Unit = {
+    matching.foreach(s => assert(pattern.findFirstIn(s).isDefined, s))
+    nonMatching.foreach(s => assert(pattern.findFirstIn(s).isEmpty, s))
+  }
+
+  /** `file:line` of every match of `pattern` in the `.scala` files under
+    * `root`, outside `graft/tools` and the `exempt` files. */
+  private def offenders(pattern: Regex, root: Path, exempt: Set[Path]): Seq[String] = {
+    assert(Files.isDirectory(root), s"run from the repository root (cwd ${Paths.get("").toAbsolutePath})")
+    val walk = Files.walk(root)
+    val files = try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList finally walk.close()
+    assert(files.size > 20, s"${files.size} sources under $root")
+    files
+      .filterNot(p => exempt(p) || p.startsWith(graftRoot.resolve("tools")))
+      .flatMap { p =>
+        val text = new String(Files.readAllBytes(p), "UTF-8")
+        pattern.findAllMatchIn(text).map(m => s"$p:${text.take(m.start).count(_ == '\n') + 1}")
+      }
+  }
+
+  /** A parquet read through `spark.read`, optionally with `.option(s)(...)`
+    * between; `.schema(...)` reads infer nothing and are not matched. */
+  private val SparkRead =
+    """\bread\s*(?:\.\s*options?\s*\((?:[^()]|\([^()]*\))*\)\s*)*\.\s*parquet\s*\(""".r
+
+  test("engine sources read parquet only through graft.core.Parquet (tools/ exempt)") {
+    selfCheck(SparkRead,
+      Seq("spark.read.parquet(p)", "s.read.parquet(a, b)", "df.sparkSession.read.parquet(p)",
+        "spark.read\n  .option(\"basePath\", s\"$d\")\n  .parquet(p)", "spark.read.options(m(x)).parquet(p)"),
+      Seq("spark.readStream.schema(s).parquet(d)", "spark.read.schema(\"id LONG\").parquet(d)",
+        "df.write.parquet(d)", "Parquet.read(spark, p)"))
+    val bad = offenders(SparkRead, graftRoot, Set(graftRoot.resolve("core/Parquet.scala")))
+    assert(bad.isEmpty, bad.mkString("route through Parquet.read: ", ", ", ""))
+  }
+
+  private val Checkpoint = """\.\s*localCheckpoint\s*\(""".r
+
+  test("engine sources checkpoint only through graft.core.Stage (tools/ exempt)") {
+    selfCheck(Checkpoint,
+      Seq("df.localCheckpoint()", "df\n  .select(c)\n  .localCheckpoint()", "df.localCheckpoint(eager = true)"),
+      Seq("s(df)", "s.loop(df)", "// a localCheckpoint here could never be freed",
+        "df.checkpoint()", "localCheckpointed"))
+    val bad = offenders(Checkpoint, graftRoot, Set(graftRoot.resolve("core/Stage.scala")))
+    assert(bad.isEmpty, bad.mkString("checkpoint through Stage.scope: ", ", ", ""))
+  }
+
+  private val BlocksRef = """\bBlocks\b""".r
+
+  test("no engine source refers to the removed graft.core.Blocks (tools/ exempt)") {
+    selfCheck(BlocksRef,
+      Seq("graft.core.Blocks.free(df)", "import graft.core.Blocks", "Blocks.free(x)"),
+      Seq("val nBlocks = 3", "minHashBuildingBlocks", "skipSubBlocks(b, pos)", "Stage.free(df)"))
+    val bad = offenders(BlocksRef, main, Set.empty)
+    assert(bad.isEmpty, bad.mkString("free through Stage: ", ", ", ""))
+  }
+}
