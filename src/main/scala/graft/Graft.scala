@@ -449,7 +449,7 @@ final class Graft(val spark: SparkSession, val dir: String) {
     Dedup.deleteFromSpanCatalog(removedDocs, path)
 
   /** Fold appended span-catalog segments (and gram tombstones) into one
-    * (merged view unchanged; same fold-marker protocol as
+    * (merged view unchanged; the [[graft.core.SegmentLog]] fold, as
     * [[compactDedupIndex]]). */
   def compactSpanCatalog(path: String, gc: Boolean = true): Unit =
     Dedup.compactSpanCatalog(spark, path, gc)

@@ -1,7 +1,8 @@
 package graft.operators
 
-import graft.core.{Parquet, Stage}
+import graft.core.{Parquet, SegmentLog, Stage}
 import graft.functions.TextOps
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -82,36 +83,15 @@ object Dedup {
   // proves the equality), because the corpus representative of any shared
   // group is also the union-wide minimum.
   //
-  // SEGMENT PROTOCOL (visibility, deletion, concurrent compaction):
-  //   - every segment is a DIRECTORY under `keys/` (additions) or `tombs/`
-  //     (key tombstones, see [[deleteFromExactIndex]]) holding parquet rows
-  //     stamped with the segment's sequence number `_seq`, plus a `_SEQ`
-  //     sidecar written LAST via temp+atomic-rename. A segment without its
-  //     sidecar does not exist — the sidecar is the segment's commit mark
-  //     (manifest-visibility, kv/db/version_set.cpp:920-1018), so a
-  //     half-written segment is never read;
-  //   - `_seq` totally orders segments (next = max live + 1) and implements
-  //     the reference's newest-wins rule (O20, kv/db/dbformat.h:49-53) for
-  //     deletions: a tombstone kills every addition of its key with
-  //     `_seq <= tombstone._seq`; later re-additions outrank it;
-  //   - compaction ([[compactExactIndex]]) writes the folded result as a new
-  //     `compact_*` segment, INVISIBLE until its fold marker under
-  //     `_folded/` commits (temp+rename): readers treat a `compact_*`
-  //     segment as live iff its marker exists, and exclude every segment a
-  //     marker lists as folded — ONE atomic rename flips the view from the
-  //     folded set to the compacted segment, with no window where a reader
-  //     sees both (double counts) or neither (data loss). Folded segments
-  //     stay on disk, excluded, until [[gcExactIndex]];
-  //   - the safe concurrency envelope: ONE appending writer (e.g. the dedup
-  //     ingest) plus ONE maintenance actor compacting beside it, any number
-  //     of readers. GC is the only step needing a grace period — a reader
-  //     that PLANNED its scan before a fold marker committed still reads the
-  //     folded directories, so run [[gcExactIndex]] once such readers have
-  //     drained (per-micro-batch readers drain within one trigger).
-
-  /** Tiny-file + listing plumbing for the segment protocol — shared with
-    * the vector index's segment fold ([[graft.core.Segments]]). */
-  private val Seg = graft.core.Segments
+  // SEGMENTS: `keys/` (additions) and `tombs/` (key tombstones, see
+  // [[deleteFromExactIndex]]) under the [[graft.core.SegmentLog]] protocol,
+  // committed by the `_SEQ` sidecar. Rows carry their segment's sequence
+  // number `_seq`, which totally orders segments (next = max live + 1) and
+  // implements the reference's newest-wins rule (O20,
+  // kv/db/dbformat.h:49-53) for deletions: a tombstone kills every addition
+  // of its key with `_seq <= tombstone._seq`; later re-additions outrank it.
+  // A compacted segment carries the max seq of what it folded, so the order
+  // survives folds.
 
   /** Max distinct batch keys the micro probe turns into a literal
     * parquet-pushed IN filter (row-group skipping via stats + blooms);
@@ -141,53 +121,20 @@ object Dedup {
     graft.core.Maintenance.bloomOptions(Seq(idCol)) +
       ("parquet.block.size" -> (2 << 20).toString)
 
-  /** Snapshot of an index's live segment set: (dir, seq) for key segments
-    * and tombstone segments, plus the folded-awaiting-GC relative paths. */
-  private final case class IndexSnapshot(
-      keySegs: Seq[(String, Long)],
-      tombSegs: Seq[(String, Long)],
-      folded: Set[String])
+  private def snapshot(spark: SparkSession, path: String): SegmentLog.Snapshot =
+    SegmentLog.Sequenced.live(SegmentLog.fs(spark, path), new Path(path))
 
-  /** List the LIVE segments under the fold-marker protocol. Markers are
-    * listed BEFORE segment directories: a marker committed between the two
-    * listings then leaves the reader on the consistent PRE-compaction view
-    * (compacted segment present but ignored — its marker was not seen), and
-    * a marker that WAS seen implies its compacted data was fully committed
-    * first (happens-before through the rename). */
-  private def snapshot(spark: SparkSession, path: String): IndexSnapshot = {
-    val fs = Seg.fs(spark, path)
-    val markers = Seg.readMarkers(fs, new org.apache.hadoop.fs.Path(path))
-    val committedCompacts = markers.keySet
-    val foldedRel = markers.values.flatten.toSet
-    def live(kind: String): Seq[(String, Long)] =
-      Seg.listDirs(fs, new org.apache.hadoop.fs.Path(s"$path/$kind")).flatMap { d =>
-        val name = d.getName
-        val visible = !foldedRel(s"$kind/$name") &&
-          (!name.startsWith("compact_") || committedCompacts(name))
-        if (!visible) None
-        else Seg.readSeq(fs, d).map(seq => (d.toString, seq)) // no _SEQ => uncommitted
-      }
-    IndexSnapshot(live("keys"), live("tombs"), foldedRel)
-  }
-
-  /** Next segment sequence: one past the max live seq (folded segments are
-    * excluded, but a compacted segment carries the max of what it folded, so
-    * the order is preserved). */
-  private def nextSeq(spark: SparkSession, path: String): Long = {
-    val s = snapshot(spark, path)
-    ((s.keySegs ++ s.tombSegs).map(_._2) :+ -1L).max + 1
-  }
+  private def nextSeq(spark: SparkSession, path: String): Long =
+    snapshot(spark, path).maxSeq + 1
 
   /** Write one committed segment: parquet rows stamped with `_seq`, then the
-    * `_SEQ` sidecar (the commit mark) published atomically LAST. */
+    * commit mark published atomically LAST. */
   private def writeSegment(df: DataFrame, dir: String, seq: Long): Unit = {
-    val spark = df.sparkSession
     df.withColumn("_seq", lit(seq))
       .write.mode("overwrite")
       .option("parquet.bloom.filter.enabled#_k", "true")
       .parquet(dir)
-    Seg.writeAtomic(Seg.fs(spark, dir), Seg.conf(spark),
-      new org.apache.hadoop.fs.Path(dir, "_SEQ"), seq.toString)
+    SegmentLog.commitSeq(SegmentLog.fs(df.sparkSession, dir), new Path(dir), seq)
   }
 
   /** Build an exact-dedup corpus index at `path`: one row per distinct
@@ -204,8 +151,7 @@ object Dedup {
       textCol: String = "text",
       wideKey: Boolean = false): Unit = {
     val spark = documents.sparkSession
-    val fs = Seg.fs(spark, path)
-    fs.delete(new org.apache.hadoop.fs.Path(path), true) // rebuild = fresh index
+    SegmentLog.fs(spark, path).delete(new Path(path), true) // rebuild = fresh index
     writeSegment(segmentGroups(documents, idCol, textCol, wideKey), s"$path/keys/base", 0L)
   }
 
@@ -251,15 +197,15 @@ object Dedup {
   }
 
   private def mergeView(
-      spark: SparkSession, s: IndexSnapshot,
+      spark: SparkSession, s: SegmentLog.Snapshot,
       restrictTo: Option[DataFrame] = None): DataFrame = {
-    require(s.keySegs.nonEmpty, "no committed index key segments")
-    val adds0 = Parquet.read(spark, s.keySegs.map(_._1): _*)
+    require(s.paths("keys").nonEmpty, "no committed index key segments")
+    val adds0 = Parquet.read(spark, s.paths("keys"): _*)
     val adds = restrictTo.fold(adds0)(restrictKeys(adds0, _))
     val alive =
-      if (s.tombSegs.isEmpty) adds
+      if (s.paths("tombs").isEmpty) adds
       else {
-        val del = Parquet.read(spark, s.tombSegs.map(_._1): _*)
+        val del = Parquet.read(spark, s.paths("tombs"): _*)
           .groupBy("_k").agg(max("_seq").as("_del_seq"))
         adds.join(broadcast(del), Seq("_k"), "left")
           .filter(col("_del_seq").isNull || col("_seq") > col("_del_seq"))
@@ -283,20 +229,15 @@ object Dedup {
     * replay-idempotent. A replay also REUSES the segment's original
     * sequence number, so a deletion issued between the crash and the replay
     * still outranks the replayed rows. */
-  /** The shared named-segment replay protocol: name validation plus the
-    * sequence derivation every exactly-once writer relies on — a replayed
-    * segment REUSES its original `_SEQ` (so a deletion issued between the
-    * crash and the replay still outranks the replayed rows), a fresh one
-    * takes one past the snapshot's max live seq. One definition, or the
-    * stores' exactly-once invariants could diverge. */
-  private def requireSegmentName(segment: String): Unit =
-    require(segment.nonEmpty && !segment.contains("/") && !segment.startsWith(".") &&
-      !segment.startsWith("compact_"), s"bad segment name: $segment")
-
+  /** The shared named-segment replay protocol: a replayed segment REUSES
+    * its original `_SEQ` (so a deletion issued between the crash and the
+    * replay still outranks the replayed rows), a fresh one takes one past
+    * the snapshot's max live seq. One definition, or the stores'
+    * exactly-once invariants could diverge. */
   private def replaySegmentSeq(
-      spark: SparkSession, indexPath: String, dir: String, s: IndexSnapshot): Long =
-    Seg.readSeq(Seg.fs(spark, indexPath), new org.apache.hadoop.fs.Path(dir))
-      .getOrElse(((s.keySegs ++ s.tombSegs).map(_._2) :+ -1L).max + 1)
+      spark: SparkSession, indexPath: String, dir: String, s: SegmentLog.Snapshot): Long =
+    SegmentLog.readSeq(SegmentLog.fs(spark, indexPath), new Path(dir))
+      .getOrElse(s.maxSeq + 1)
 
   def writeExactIndexSegment(
       batchDocs: DataFrame,
@@ -304,7 +245,7 @@ object Dedup {
       segment: String,
       idCol: String = "doc_id",
       textCol: String = "text"): Unit = {
-    requireSegmentName(segment)
+    SegmentLog.requireName(segment)
     val spark = batchDocs.sparkSession
     val dir = s"$indexPath/keys/$segment"
     // ONE snapshot serves both the next-seq derivation and the key-width
@@ -322,9 +263,9 @@ object Dedup {
   private def indexIsWide(spark: SparkSession, path: String): Boolean =
     snapshotIsWide(spark, path, snapshot(spark, path))
 
-  private def snapshotIsWide(spark: SparkSession, path: String, s: IndexSnapshot): Boolean = {
-    require(s.keySegs.nonEmpty, s"no committed index key segments under $path")
-    Parquet.read(spark, s.keySegs.head._1)
+  private def snapshotIsWide(spark: SparkSession, path: String, s: SegmentLog.Snapshot): Boolean = {
+    require(s.paths("keys").nonEmpty, s"no committed index key segments under $path")
+    Parquet.read(spark, s.paths("keys").head)
       .schema("_k").dataType == org.apache.spark.sql.types.BinaryType
   }
 
@@ -421,11 +362,9 @@ object Dedup {
 
   /** Fold all live segments (and tombstones) into one — the index's
     * compaction. The merged view is unchanged (DedupIncrementalSpec), and
-    * the publish is SAFE BESIDE A RUNNING INGEST: the folded result lands
-    * as an invisible `compact_*` segment and becomes the view in one atomic
-    * fold-marker rename (see the segment-protocol notes above) — no reader
-    * ever sees double counts or a gap, and a concurrently-appended segment
-    * (not in the fold snapshot) stays live untouched. A crash before the
+    * the publish is SAFE BESIDE A RUNNING INGEST under the
+    * [[graft.core.SegmentLog]] fold: a concurrently-appended segment (not
+    * in the fold snapshot) stays live untouched, and a crash before the
     * marker leaves the old view fully intact; just compact again.
     *
     * `gc = true` (the single-actor convenience) immediately deletes the
@@ -440,52 +379,20 @@ object Dedup {
     * identical. */
   private def compactIndexWith(
       spark: SparkSession, path: String, gc: Boolean)(
-      merged: IndexSnapshot => DataFrame): Unit = {
+      merged: SegmentLog.Snapshot => DataFrame): Unit = {
     val s = snapshot(spark, path)
-    if (s.keySegs.size > 1 || s.tombSegs.nonEmpty) {
-      val seq = (s.keySegs ++ s.tombSegs).map(_._2).max
-      val name = s"compact_${java.util.UUID.randomUUID().toString.take(12)}"
-      writeSegment(merged(s).sortWithinPartitions("_k"), s"$path/keys/$name", seq)
-      val folded = s.keySegs.map(p => "keys/" + new org.apache.hadoop.fs.Path(p._1).getName) ++
-        s.tombSegs.map(p => "tombs/" + new org.apache.hadoop.fs.Path(p._1).getName)
-      Seg.writeAtomic(Seg.fs(spark, path), Seg.conf(spark),
-        new org.apache.hadoop.fs.Path(s"$path/_folded/$name"), folded.mkString("\n"))
-    }
+    if (s.paths("keys").size > 1 || s.paths("tombs").nonEmpty)
+      SegmentLog.Sequenced.fold(SegmentLog.fs(spark, path), new Path(path), s.segments)(dir =>
+        writeSegment(merged(s).sortWithinPartitions("_k"), dir.toString, s.maxSeq))
     if (gc) gcExactIndex(spark, path)
   }
 
-  /** Delete folded (superseded) segment directories, fold markers whose
-    * compacted segment is itself gone, and orphaned uncommitted `compact_*`
-    * directories from a crashed compaction. Returns directories removed.
-    * Run from the maintenance actor only (never concurrently with a running
-    * [[compactExactIndex]]), after readers that planned before the last
-    * fold marker have drained — the folded data is invisible to every scan
-    * planned after the marker, so any later moment is safe. */
-  def gcExactIndex(spark: SparkSession, path: String): Long = {
-    val fs = Seg.fs(spark, path)
-    val root = new org.apache.hadoop.fs.Path(path)
-    val markerDir = new org.apache.hadoop.fs.Path(root, "_folded")
-    val markers = Seg.readMarkers(fs, root)
-    var removed = 0L
-    markers.values.flatten.toSet[String].foreach { rel =>
-      val d = new org.apache.hadoop.fs.Path(root, rel)
-      if (fs.exists(d)) { fs.delete(d, true); removed += 1 }
-    }
-    // a marker whose compacted segment was itself folded (and just deleted
-    // above) has no live referent left — drop it
-    markers.keys.foreach { name =>
-      if (!fs.exists(new org.apache.hadoop.fs.Path(root, s"keys/$name")))
-        fs.delete(new org.apache.hadoop.fs.Path(markerDir, name), false)
-    }
-    // uncommitted compact_* leftovers of a crashed compaction are invisible
-    // to every reader and safe to drop (no compaction is in flight here)
-    Seg.listDirs(fs, new org.apache.hadoop.fs.Path(root, "keys")).foreach { d =>
-      if (d.getName.startsWith("compact_") && !markers.contains(d.getName)) {
-        fs.delete(d, true); removed += 1
-      }
-    }
-    removed
-  }
+  /** [[graft.core.SegmentLog.gc]] of the exact index or span catalog.
+    * Returns directories removed. Run from the maintenance actor only
+    * (never concurrently with a running [[compactExactIndex]]), after
+    * readers that planned before the last fold marker have drained. */
+  def gcExactIndex(spark: SparkSession, path: String): Long =
+    SegmentLog.Sequenced.gc(SegmentLog.fs(spark, path), new Path(path))()
 
   /** GetProperty-style health of a persisted dedup index: live segment and
     * tombstone-segment counts, folded directories awaiting GC, distinct
@@ -497,15 +404,11 @@ object Dedup {
       .agg(count(lit(1)).as("keys"), sum("group_size").as("docs")).head()
     val keys = agg.getLong(0)
     val docs = if (agg.isNullAt(1)) 0L else agg.getLong(1)
-    // markers outlive GC (they keep compact_* segments visible), so count
-    // only folded directories still on disk — the ones GC has yet to reclaim
-    val fs = Seg.fs(spark, path)
-    val awaitingGc = s.folded.count(rel =>
-      fs.exists(new org.apache.hadoop.fs.Path(new org.apache.hadoop.fs.Path(path), rel)))
     Map(
-      "graft.dedup.segments" -> s.keySegs.size.toString,
-      "graft.dedup.tombstone-segments" -> s.tombSegs.size.toString,
-      "graft.dedup.folded-awaiting-gc" -> awaitingGc.toString,
+      "graft.dedup.segments" -> s.paths("keys").size.toString,
+      "graft.dedup.tombstone-segments" -> s.paths("tombs").size.toString,
+      "graft.dedup.folded-awaiting-gc" ->
+        SegmentLog.Sequenced.awaitingGc(SegmentLog.fs(spark, path), new Path(path), s).toString,
       "graft.dedup.keys" -> keys.toString,
       "graft.dedup.docs" -> docs.toString,
       "graft.dedup.dup-ratio" ->
@@ -572,8 +475,7 @@ object Dedup {
       textCol: String = "text",
       idCol: String = "doc_id"): Unit = {
     val spark = documents.sparkSession
-    val fs = Seg.fs(spark, path)
-    fs.delete(new org.apache.hadoop.fs.Path(path), true) // rebuild = fresh catalog
+    SegmentLog.fs(spark, path).delete(new Path(path), true) // rebuild = fresh catalog
     spanNCache.remove(path) // the ONLY meta writer invalidates the memo
     import spark.implicits._
     Seq(n).toDF("n").coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
@@ -594,8 +496,8 @@ object Dedup {
   private val spanNCache =
     new java.util.concurrent.ConcurrentHashMap[String, (String, Int)]()
   private[operators] def spanCatalogN(spark: SparkSession, path: String): Int = {
-    val stamp = Seg.fs(spark, path)
-      .listStatus(new org.apache.hadoop.fs.Path(s"$path/meta"))
+    val stamp = SegmentLog.fs(spark, path)
+      .listStatus(new Path(s"$path/meta"))
       .map(f => s"${f.getPath.getName}:${f.getLen}:${f.getModificationTime}")
       .sorted.mkString(",")
     val cached = spanNCache.get(path)
@@ -608,18 +510,18 @@ object Dedup {
   }
 
   private def spanMergeView(
-      spark: SparkSession, s: IndexSnapshot,
+      spark: SparkSession, s: SegmentLog.Snapshot,
       restrictTo: Option[DataFrame] = None): DataFrame = {
-    require(s.keySegs.nonEmpty, "no committed span-catalog segments")
-    val adds0 = Parquet.read(spark, s.keySegs.map(_._1): _*)
+    require(s.paths("keys").nonEmpty, "no committed span-catalog segments")
+    val adds0 = Parquet.read(spark, s.paths("keys"): _*)
     val adds = restrictTo.fold(adds0)(restrictKeys(adds0, _))
     // gram tombstones apply newest-wins exactly as the exact index's key
     // tombstones: an addition survives iff no tombstone of its gram has
     // _seq >= the addition's (takedown-sized side, broadcast)
     val alive =
-      if (s.tombSegs.isEmpty) adds
+      if (s.paths("tombs").isEmpty) adds
       else {
-        val del = Parquet.read(spark, s.tombSegs.map(_._1): _*)
+        val del = Parquet.read(spark, s.paths("tombs"): _*)
           .groupBy("_k").agg(max("_seq").as("_del_seq"))
         adds.join(broadcast(del), Seq("_k"), "left")
           .filter(col("_del_seq").isNull || col("_seq") > col("_del_seq"))
@@ -666,7 +568,7 @@ object Dedup {
       segment: String,
       textCol: String = "text",
       idCol: String = "doc_id"): Unit = {
-    requireSegmentName(segment)
+    SegmentLog.requireName(segment)
     val spark = batchDocs.sparkSession
     val dir = s"$catalogPath/keys/$segment"
     val s = snapshot(spark, catalogPath)
@@ -716,13 +618,11 @@ object Dedup {
   def spanCatalogStats(spark: SparkSession, path: String): Map[String, String] = {
     val s = snapshot(spark, path)
     val grams = spanMergeView(spark, s).count()
-    val fs = Seg.fs(spark, path)
-    val awaitingGc = s.folded.count(rel =>
-      fs.exists(new org.apache.hadoop.fs.Path(new org.apache.hadoop.fs.Path(path), rel)))
     Map(
-      "graft.spans.segments" -> s.keySegs.size.toString,
-      "graft.spans.tomb-segments" -> s.tombSegs.size.toString,
-      "graft.spans.folded-awaiting-gc" -> awaitingGc.toString,
+      "graft.spans.segments" -> s.paths("keys").size.toString,
+      "graft.spans.tomb-segments" -> s.paths("tombs").size.toString,
+      "graft.spans.folded-awaiting-gc" ->
+        SegmentLog.Sequenced.awaitingGc(SegmentLog.fs(spark, path), new Path(path), s).toString,
       "graft.spans.grams" -> grams.toString,
       "graft.spans.n" -> spanCatalogN(spark, path).toString)
   }
@@ -897,14 +797,12 @@ object Dedup {
     * anti-join silently hiding any new doc that reuses a tombstoned id.
     * All deletes no-op on a fresh path. */
   private def retractIndexTrees(spark: SparkSession, path: String): Unit = {
-    val fs = Seg.fs(spark, path)
-    val gens = Seg.listDirs(fs, new org.apache.hadoop.fs.Path(path))
-      .map(_.getName).filter(_.startsWith("bands_v"))
-    (Seq("meta", "bands", "bands_staging", "bandsegs", "segs", "tombs",
-        "_folded", "docs_staging", BandsPointer) ++ gens).foreach { t =>
-      val p = new org.apache.hadoop.fs.Path(s"$path/$t")
-      if (fs.exists(p)) { fs.delete(p, true); () }
-    }
+    val (fs, root) = (SegmentLog.fs(spark, path), new Path(path))
+    val gens = BandGens.all(fs, root)
+    def drop(trees: Seq[String]): Unit = trees.foreach(t => fs.delete(new Path(root, t), true))
+    drop(Seq("meta", "bands", "bands_staging", "bandsegs"))
+    SegmentLog.Docs.retire(fs, root)
+    drop(Seq("docs_staging", BandGens.pointer) ++ gens)
   }
 
   def writeMinHashIndex(
@@ -949,8 +847,8 @@ object Dedup {
           bandRows(rows, bands, numHashes / bands, p)
             .repartition(col("bucket"))
             .write.mode("overwrite").partitionBy("bucket").parquet(s"$path/bands")
-          writeBandTreeBuckets(Seg.fs(spark, path),
-            new org.apache.hadoop.fs.Path(s"$path/bands"), p)
+          SegmentLog.writeBuckets(SegmentLog.fs(spark, path),
+            new Path(s"$path/bands"), p)
         }
         p
       }
@@ -1056,62 +954,25 @@ object Dedup {
     * => pushed filter); the operative P rides the marker either way. */
   private val MinBucketFileRows = 1024L
 
-  /** The `_BANDS` pointer file at an index root: names the CURRENT base
-    * band root (a generation dir `bands_v<k>` once any re-bucket has
-    * published; absent on build-time stores, whose root is the legacy
-    * `bands/`). A re-bucket WRITES A NEW GENERATION and flips this pointer
-    * atomically instead of delete-then-renaming `bands/` in place — the
-    * in-place swap has a window where a concurrently-planned probe's file
-    * list points at deleted paths (FAILED_READ_FILE under a live ingest,
-    * and non-atomic on object stores where rename is a copy). The
-    * superseded generation outlives the flip until readers drain, swept by
-    * [[gcDocIndex]] (the drain-safe maintenance slot, same contract as
-    * folded segment dirs) or immediately by the stop-the-world
-    * [[compactDocIndex]]. */
-  private val BandsPointer = "_BANDS"
+  /** The base band generations behind the `_BANDS` pointer (a generation
+    * dir `bands_v<k>` once any re-bucket has published; the legacy `bands/`
+    * on build-time stores). A re-bucket WRITES A NEW GENERATION and flips
+    * the pointer atomically instead of delete-then-renaming `bands/` in
+    * place — the in-place swap has a window where a concurrently-planned
+    * probe's file list points at deleted paths (FAILED_READ_FILE under a
+    * live ingest, and non-atomic on object stores where rename is a copy).
+    * The superseded generation is swept by [[gcDocIndex]] or the
+    * stop-the-world [[compactDocIndex]]. Every band tree carries its own
+    * `_BUCKETS` marker, written into a new generation BEFORE the pointer
+    * flips to it and into `bandsegs/<name>` before the doc segment commits,
+    * so it never describes a partitioning the rows don't have — unlike the
+    * meta value, which cannot be updated atomically with any tree.
+    * Marker-less (pre-marker) stores fall back to the frozen meta value. */
+  private val BandGens = SegmentLog.Generations("_BANDS", "bands", "bands", Seq("bands"))
 
-  /** Resolve an index's CURRENT base band root: the `_BANDS` pointer's
-    * target when present, else the legacy `bands/`. */
-  private def baseBandRoot(
-      fs: org.apache.hadoop.fs.FileSystem, indexPath: String): org.apache.hadoop.fs.Path = {
-    val ptr = new org.apache.hadoop.fs.Path(indexPath, BandsPointer)
-    val rel =
-      if (!fs.exists(ptr)) "bands"
-      else scala.util.Try(Seg.readSmall(fs, ptr).trim).toOption
-        .filter(n => n.nonEmpty && !n.contains('/')).getOrElse("bands")
-    new org.apache.hadoop.fs.Path(indexPath, rel)
-  }
-
-  /** Read the `_BUCKETS` marker riding INSIDE a band tree — the bucket
-    * count the tree is ACTUALLY partitioned by. Underscore-prefixed, so
-    * parquet listing ignores it; written into a new generation BEFORE the
-    * pointer flips to it (and into `bandsegs/<name>` before the doc
-    * segment commits), so it can never describe a partitioning the rows
-    * don't have — unlike the meta value, which cannot be updated
-    * atomically with any tree. Absent on pre-marker stores: callers fall
-    * back to the meta value, which for those stores is frozen-correct. */
-  private def readBandTreeBuckets(
-      fs: org.apache.hadoop.fs.FileSystem,
-      bandsRoot: org.apache.hadoop.fs.Path): Option[Int] = {
-    val m = new org.apache.hadoop.fs.Path(bandsRoot, "_BUCKETS")
-    if (!fs.exists(m)) None
-    else {
-      val in = fs.open(m)
-      try {
-        val buf = new Array[Byte](32)
-        val n = in.read(buf)
-        scala.util.Try(new String(buf, 0, math.max(n, 0), "UTF-8").trim.toInt)
-          .toOption.filter(_ > 0)
-      } finally in.close()
-    }
-  }
-
-  private def writeBandTreeBuckets(
-      fs: org.apache.hadoop.fs.FileSystem,
-      bandsRoot: org.apache.hadoop.fs.Path, p: Int): Unit = {
-    val out = fs.create(new org.apache.hadoop.fs.Path(bandsRoot, "_BUCKETS"), true)
-    try out.write(p.toString.getBytes("UTF-8")) finally out.close()
-  }
+  /** The CURRENT base band root. */
+  private def baseBandRoot(fs: FileSystem, indexPath: String): Path =
+    new Path(indexPath, BandGens.current(fs, new Path(indexPath)))
 
   /** The OPERATIVE bucket count of a MinHash index: the CURRENT base band
     * root's `_BUCKETS` marker when present (a re-bucket may have outgrown
@@ -1120,8 +981,8 @@ object Dedup {
     val mb = metaBandBuckets(spark, indexPath)
     if (mb == 0) 0 // explicit flat (or not a MinHash meta): never bucketed
     else {
-      val fs = Seg.fs(spark, indexPath)
-      val marker = readBandTreeBuckets(fs, baseBandRoot(fs, indexPath))
+      val fs = SegmentLog.fs(spark, indexPath)
+      val marker = SegmentLog.readBuckets(fs, baseBandRoot(fs, indexPath))
       if (mb > 0) marker.getOrElse(mb)
       // AutoBuckets meta: an ONLINE promotion publishes the band tree and
       // flips the `_BANDS` pointer WITHOUT rewriting meta (a meta overwrite
@@ -1205,27 +1066,12 @@ object Dedup {
       .dropDuplicates("doc_a", "doc_b")
   }
 
-  /** The LIVE streaming segments of a doc-row index, under the same
-    * fold-marker protocol as the exact index (see [[snapshot]]): markers
-    * under `_folded/` are listed BEFORE segment directories, a segment a
-    * marker lists as folded is excluded, and a `compact_*` segment is
-    * visible iff its marker committed. A batch segment is committed iff
-    * its parquet `_SUCCESS` job-commit mark exists — a compactor snapshot
-    * taken mid-rewrite (streaming replay) skips the half-written dir. */
-  private def liveDocSegs(
-      spark: SparkSession, indexPath: String)
-      : (Map[String, Seq[String]], Seq[org.apache.hadoop.fs.Path]) = {
-    val fs = Seg.fs(spark, indexPath)
-    val markers = Seg.readMarkers(fs, new org.apache.hadoop.fs.Path(indexPath))
-    val folded = markers.values.flatten.toSet
-    val live = Seg.listDirs(fs, new org.apache.hadoop.fs.Path(s"$indexPath/segs")).filter { d =>
-      val name = d.getName
-      !folded(name) && (
-        if (name.startsWith("compact_")) markers.contains(name)
-        else fs.exists(new org.apache.hadoop.fs.Path(d, "_SUCCESS")))
-    }
-    (markers, live)
-  }
+  /** The LIVE streaming segments of a doc-row index under `segs/`
+    * ([[graft.core.SegmentLog.Docs]]: a batch segment commits with its
+    * parquet `_SUCCESS`, so a compactor snapshot taken mid-rewrite skips the
+    * half-written dir). */
+  private def liveDocSegs(spark: SparkSession, indexPath: String): Seq[Path] =
+    SegmentLog.Docs.live(SegmentLog.fs(spark, indexPath), new Path(indexPath)).segments.map(_.dir)
 
   /** The MICRO-BATCH candidate stage: banded batch sigs joined against the
     * stored corpus WITH THE BATCH SIDE BROADCAST — the streaming-ingest
@@ -1326,12 +1172,12 @@ object Dedup {
     * only and miss every base-store pair until the next compaction
     * happened to rerun — so the caller must take the flat scan instead. */
   private def bandTreeUsable(spark: SparkSession, indexPath: String): Boolean = {
-    val fs = Seg.fs(spark, indexPath)
+    val fs = SegmentLog.fs(spark, indexPath)
     // legacy staging heal: pre-generation stores re-bucketed with the
     // in-place swap may have crashed mid-swap; generation publishes have
     // no such window (the pointer flips only after the new root is whole)
-    Seg.healSwap(fs, new org.apache.hadoop.fs.Path(s"$indexPath/bands_staging"),
-      new org.apache.hadoop.fs.Path(s"$indexPath/bands"))
+    SegmentLog.healSwap(fs, new Path(s"$indexPath/bands_staging"),
+      new Path(s"$indexPath/bands"))
     fs.exists(baseBandRoot(fs, indexPath))
   }
 
@@ -1339,10 +1185,10 @@ object Dedup {
       spark: SparkSession, indexPath: String, bandVals: Option[Array[Long]],
       baseP: Int, bandTwinless: DataFrame => DataFrame,
       cols: Seq[String] = Seq("doc", "band")): DataFrame = {
-    val fs = Seg.fs(spark, indexPath)
-    val (_, live) = liveDocSegs(spark, indexPath)
+    val fs = SegmentLog.fs(spark, indexPath)
+    val live = liveDocSegs(spark, indexPath)
     val (twinned, twinless) = live.partition(d =>
-      fs.exists(new org.apache.hadoop.fs.Path(s"$indexPath/bandsegs/${d.getName}")))
+      fs.exists(new Path(s"$indexPath/bandsegs/${d.getName}")))
     val roots = baseBandRoot(fs, indexPath).toString +:
       twinned.map(d => s"$indexPath/bandsegs/${d.getName}")
     // EACH ROOT PRUNES AT ITS OWN P: a live segment written before a
@@ -1356,11 +1202,11 @@ object Dedup {
     // never coexist.
     val views = roots.flatMap { r =>
       val hit = bandVals.map { vs =>
-        val p = readBandTreeBuckets(fs, new org.apache.hadoop.fs.Path(r))
+        val p = SegmentLog.readBuckets(fs, new Path(r))
           .getOrElse(baseP).toLong
         vs.map(v => java.lang.Math.floorMod(v, p).toInt).distinct.sorted.toSeq
       }
-      readBandRoot(spark, fs, r, hit, cols)
+      SegmentLog.readPruned(spark, fs, r, "bucket", hit).map(_.select(cols.map(col): _*))
     }
     // FLAT-ERA segments (no band twin: committed while the store was still
     // auto-flat, before an ONLINE promotion published the band tree) are
@@ -1378,38 +1224,6 @@ object Dedup {
     if (all.isEmpty)
       spark.range(0).select(cols.map(c => col("id").as(c)): _*)
     else all.reduce(_.unionByName(_))
-  }
-
-  /** One band-store root as (doc, band), pruned to `buckets`: a
-    * bucket-partitioned root (base store, folded compact segments) reads
-    * only the hit `bucket=` subdirectories; a flat root (batch segments)
-    * reads whole with a pushed bucket row filter. None = nothing to read
-    * (no hit buckets, or an empty partitioned store). */
-  private def readBandRoot(
-      spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
-      root: String, buckets: Option[Seq[Int]],
-      cols: Seq[String] = Seq("doc", "band")): Option[DataFrame] = {
-    val proj = cols.map(col)
-    val parts = Seg.listDirs(fs, new org.apache.hadoop.fs.Path(root))
-      .map(_.getName).filter(_.startsWith("bucket="))
-    if (parts.nonEmpty) buckets match {
-      case Some(bs) =>
-        val present = parts.map(_.stripPrefix("bucket=").toInt).toSet
-        val dirs = bs.filter(present).map(b => s"$root/bucket=$b")
-        if (dirs.isEmpty) None
-        else Some(Parquet.read(spark, dirs: _*).select(proj: _*))
-      case None =>
-        Some(Parquet.read(spark, root).select(proj: _*))
-    } else {
-      val hasData = Seg.listFiles(fs, new org.apache.hadoop.fs.Path(root))
-        .exists(_.getName.endsWith(".parquet"))
-      if (!hasData) None
-      else {
-        val df = Parquet.read(spark, root)
-        Some(buckets.fold(df)(bs => df.filter(col("bucket").isin(bs: _*)))
-          .select(proj: _*))
-      }
-    }
   }
 
   /** The MICRO-BATCH verify stage: exact-Jaccard verification of
@@ -1458,7 +1272,7 @@ object Dedup {
   private def storedDocs(
       spark: SparkSession, indexPath: String, idCol: String,
       restrictTo: Option[Seq[Long]] = None): DataFrame = {
-    val paths = s"$indexPath/docs" +: liveDocSegs(spark, indexPath)._2.map(_.toString)
+    val paths = s"$indexPath/docs" +: liveDocSegs(spark, indexPath).map(_.toString)
     val docs0 = Parquet.read(spark, paths: _*)
     // `restrictTo` (<= MaxInProbe candidate ids — the micro-verify shape)
     // becomes a LITERAL IN pushed to parquet, evaluated against each row
@@ -1471,8 +1285,8 @@ object Dedup {
     // pre-round-12 stores evaluate the same filter as a scan — correct,
     // just unpruned.
     val docs = restrictTo.fold(docs0)(ids => docs0.filter(col(idCol).isin(ids: _*)))
-    val tombs = new org.apache.hadoop.fs.Path(s"$indexPath/tombs")
-    if (!Seg.fs(spark, indexPath).exists(tombs)) docs
+    val tombs = new Path(s"$indexPath/tombs")
+    if (!SegmentLog.fs(spark, indexPath).exists(tombs)) docs
     else docs.join(
       broadcast(readDocTombs(spark, indexPath).withColumnRenamed("doc_id", idCol)),
       Seq(idCol), "left_anti")
@@ -1529,8 +1343,8 @@ object Dedup {
     * for flat stores (no band tree to maintain). */
   private def bandLayout(spark: SparkSession, indexPath: String)
       : Option[(Long, Int, (DataFrame, Int) => DataFrame)] = {
-    val fs = Seg.fs(spark, indexPath)
-    val hasMeta = fs.exists(new org.apache.hadoop.fs.Path(s"$indexPath/meta"))
+    val fs = SegmentLog.fs(spark, indexPath)
+    val hasMeta = fs.exists(new Path(s"$indexPath/meta"))
     val bb = if (hasMeta) effectiveBandBuckets(spark, indexPath) else 0
     if (bb > 0) {
       val m = Parquet.read(spark, s"$indexPath/meta").head()
@@ -1542,33 +1356,18 @@ object Dedup {
     }
   }
 
-  /** Footer-only row count of a band tree, 0 when it holds no data files —
-    * a partitionBy write of ZERO rows (an index built over an empty corpus,
-    * the streaming-ingest starting state) leaves just `_SUCCESS`, and
-    * reading such a tree cannot infer a schema (throws). */
-  private def bandTreeCount(
-      spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path): Long = {
-    if (!fs.exists(dir)) return 0L
-    var hasData = false
-    val it = fs.listFiles(dir, true)
-    while (!hasData && it.hasNext)
-      hasData = it.next().getPath.getName.endsWith(".parquet")
-    if (!hasData) 0L else Parquet.read(spark, dir.toString).count()
-  }
-
   /** Every live segment's band twin carries its own `_BUCKETS` marker —
     * the gate for re-bucketing BESIDE live segments: a marker-less twin
     * (pre-marker store) was written at the then-operative base P, and its
     * rows would be mis-pruned the moment that P moved, so growth is held
     * back until a fold or compaction has retired it. */
   private def liveBandsegsMarked(
-      spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
+      spark: SparkSession, fs: FileSystem,
       indexPath: String): Boolean = {
-    val (_, live) = liveDocSegs(spark, indexPath)
-    live.map(d => new org.apache.hadoop.fs.Path(s"$indexPath/bandsegs/${d.getName}"))
+    val live = liveDocSegs(spark, indexPath)
+    live.map(d => new Path(s"$indexPath/bandsegs/${d.getName}"))
       .filter(fs.exists)
-      .forall(b => readBandTreeBuckets(fs, b).isDefined)
+      .forall(b => SegmentLog.readBuckets(fs, b).isDefined)
   }
 
   /** Rebuild a bucketed store's BASE band tree from `docs/` (an explode
@@ -1592,7 +1391,7 @@ object Dedup {
       spark: SparkSession, indexPath: String, dropBandSegs: Boolean,
       targetP: Option[Int] = None): Unit =
     bandLayout(spark, indexPath).foreach { case (perDoc, effP, mkRows) =>
-      val fs = Seg.fs(spark, indexPath)
+      val fs = SegmentLog.fs(spark, indexPath)
       val kept = Parquet.read(spark, s"$indexPath/docs")
       // `targetP` sizes growth off the TOTAL live store (docs/ + live
       // segments — [[reconcileBandOrphans]] computes it): a pure-streaming
@@ -1605,63 +1404,30 @@ object Dedup {
       val newP = if (canGrow && autoP >= 2 * effP) autoP else effP
       publishBandTree(spark, fs, indexPath, mkRows(kept, newP), newP, rowCount)
       if (dropBandSegs) {
-        val bandsegs = new org.apache.hadoop.fs.Path(s"$indexPath/bandsegs")
+        val bandsegs = new Path(s"$indexPath/bandsegs")
         if (fs.exists(bandsegs)) { fs.delete(bandsegs, true); () }
       }
     }
 
-  /** Publish a COMPLETE band tree as a new generation: `rowsAtP` (already
-    * carrying `bucket` computed at `p`) land in a fresh `bands_v<k>` dir
-    * with the `_BUCKETS` marker written BEFORE the rows (append-mode
-    * parquet preserves it), then the `_BANDS` pointer flips to it in one
-    * atomic rename — the commit point. Readers planned against the old
-    * root keep reading it untouched (it is swept only after they drain,
-    * [[gcDocIndex]] / stop-the-world compaction); a crash before the flip
-    * leaves an unreferenced generation the same sweep collects. Publishers
-    * are serialized by the maintenance contract (one maintenance actor, or
-    * stop-the-world), so the generation counter cannot race. */
+  /** Publish a COMPLETE band tree as a new generation ([[BandGens]]):
+    * `rowsAtP` (already carrying `bucket` computed at `p`) land with the
+    * `_BUCKETS` marker written BEFORE the rows (append-mode parquet
+    * preserves it), then the `_BANDS` pointer flips. */
   private def publishBandTree(
-      spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
-      indexPath: String, rowsAtP: DataFrame, p: Int, rowCount: Long): Unit = {
-    val root = new org.apache.hadoop.fs.Path(indexPath)
-    val nextGen = 1 + Seg.listDirs(fs, root).map(_.getName)
-      .filter(_.startsWith("bands_v"))
-      .flatMap(n => scala.util.Try(n.stripPrefix("bands_v").toInt).toOption)
-      .foldLeft(0)(math.max)
-    val gen = s"bands_v$nextGen"
-    val dir = new org.apache.hadoop.fs.Path(root, gen)
-    if (fs.exists(dir)) fs.delete(dir, true)
-    fs.mkdirs(dir)
-    writeBandTreeBuckets(fs, dir, p)
-    if (rowCount / math.max(1, p) >= MinBucketFileRows)
-      rowsAtP.repartition(col("bucket"))
-        .write.mode("append").partitionBy("bucket").parquet(dir.toString)
-    else
-      // thin root (e.g. the docs/-only base tree of a streaming-heavy
-      // store after a growth re-bucket): one sorted-by-bucket file —
-      // probes push a bucket-In filter instead of listing hit dirs
-      rowsAtP.coalesce(1).sortWithinPartitions("bucket")
-        .write.mode("append").parquet(dir.toString)
-    Seg.writeAtomic(fs, Seg.conf(spark),
-      new org.apache.hadoop.fs.Path(root, BandsPointer), gen)
-  }
-
-  /** Delete every band root the `_BANDS` pointer does NOT reference —
-    * superseded generations, the legacy `bands/` once a generation took
-    * over, and crashed unreferenced publishes. DRAIN-GATED like folded
-    * segment dirs: call only from the maintenance slot after concurrent
-    * readers planned against the old root have drained ([[gcDocIndex]]),
-    * or under stop-the-world ([[compactDocIndex]]). */
-  private def sweepStaleBandRoots(
-      fs: org.apache.hadoop.fs.FileSystem, indexPath: String): Unit = {
-    val root = new org.apache.hadoop.fs.Path(indexPath)
-    val current = baseBandRoot(fs, indexPath).getName
-    val stale = Seg.listDirs(fs, root).map(_.getName)
-      .filter(n => (n.startsWith("bands_v") || n == "bands") && n != current)
-    stale.foreach { n =>
-      fs.delete(new org.apache.hadoop.fs.Path(root, n), true); ()
+      spark: SparkSession, fs: FileSystem,
+      indexPath: String, rowsAtP: DataFrame, p: Int, rowCount: Long): Unit =
+    BandGens.publish(fs, new Path(indexPath)) { dir =>
+      SegmentLog.writeBuckets(fs, dir, p)
+      if (rowCount / math.max(1, p) >= MinBucketFileRows)
+        rowsAtP.repartition(col("bucket"))
+          .write.mode("append").partitionBy("bucket").parquet(dir.toString)
+      else
+        // thin root (e.g. the docs/-only base tree of a streaming-heavy
+        // store after a growth re-bucket): one sorted-by-bucket file —
+        // probes push a bucket-In filter instead of listing hit dirs
+        rowsAtP.coalesce(1).sortWithinPartitions("bucket")
+          .write.mode("append").parquet(dir.toString)
     }
-  }
 
   /** Promote an AUTO-FLAT store — auto layout requested at build time but
     * the corpus was below its family's crossover
@@ -1698,20 +1464,20 @@ object Dedup {
     * never promotes. */
   private def promoteAutoFlat(
       spark: SparkSession, indexPath: String, online: Boolean = false): Unit = {
-    val fs = Seg.fs(spark, indexPath)
-    val metaPath = new org.apache.hadoop.fs.Path(s"$indexPath/meta")
+    val fs = SegmentLog.fs(spark, indexPath)
+    val metaPath = new Path(s"$indexPath/meta")
     if (!fs.exists(metaPath)) return
     val metaDf = Parquet.read(spark, metaPath.toString)
     import spark.implicits._
 
     // footer-count rows living in segments (0 after a stop-the-world fold)
-    def liveSegRows: Long = liveDocSegs(spark, indexPath)._2
+    def liveSegRows: Long = liveDocSegs(spark, indexPath)
       .map(d => Parquet.read(spark, d.toString).count()).sum
 
     def promote(
         perDoc: Long, crossover: Long,
         mkRows: (DataFrame, Int) => DataFrame, writeMeta: Int => Unit): Unit = {
-      val existing = readBandTreeBuckets(fs, baseBandRoot(fs, indexPath))
+      val existing = SegmentLog.readBuckets(fs, baseBandRoot(fs, indexPath))
       if (existing.isDefined) {
         // already promoted online (tree + marker live, meta still -1):
         // stop-the-world persists the operative P into meta, online no-ops
@@ -1765,9 +1531,9 @@ object Dedup {
     bandLayout(spark, indexPath) match {
       case None => 0L
       case Some((perDoc, effP, _)) =>
-        val fs = Seg.fs(spark, indexPath)
+        val fs = SegmentLog.fs(spark, indexPath)
         val docsCount = Parquet.read(spark, s"$indexPath/docs").count()
-        val bandsCount = bandTreeCount(spark, fs, baseBandRoot(fs, indexPath))
+        val bandsCount = SegmentLog.rowCount(spark, fs, baseBandRoot(fs, indexPath))
         val missing = docsCount * perDoc - bandsCount
         val orphans = if (missing > 0) (missing + perDoc - 1) / perDoc else 0L
         // GROWTH rides the same fold-cycle slot as the heal: a store that
@@ -1784,7 +1550,7 @@ object Dedup {
         // NEXT fold's compact twin (re-bucketed at the operative P, its
         // own marker); until then old segments prune exactly at their
         // recorded P. Safe beside live segments by the same markers.
-        val liveDocs = liveDocSegs(spark, indexPath)._2
+        val liveDocs = liveDocSegs(spark, indexPath)
           .map(d => Parquet.read(spark, d.toString).count()).sum
         val autoP = autoBucketCount((docsCount + liveDocs) * perDoc)
         val growDue = heal && autoP >= 2 * effP &&
@@ -1804,13 +1570,13 @@ object Dedup {
     * the next [[foldDocSegments]] cycle or [[compactDocIndex]] heals. All
     * counts are parquet footer metadata — no data pages. */
   def docIndexStats(spark: SparkSession, indexPath: String): Map[String, String] = {
-    val fs = Seg.fs(spark, indexPath)
+    val fs = SegmentLog.fs(spark, indexPath)
     val docsCount = Parquet.read(spark, s"$indexPath/docs").count()
-    val (_, live) = liveDocSegs(spark, indexPath)
-    val tombsPath = new org.apache.hadoop.fs.Path(s"$indexPath/tombs")
+    val live = liveDocSegs(spark, indexPath)
+    val tombsPath = new Path(s"$indexPath/tombs")
     val tombCount =
       if (fs.exists(tombsPath)) readDocTombs(spark, indexPath).count() else 0L
-    val bandsCount = bandTreeCount(spark, fs, baseBandRoot(fs, indexPath))
+    val bandsCount = SegmentLog.rowCount(spark, fs, baseBandRoot(fs, indexPath))
     val layout = bandLayout(spark, indexPath)
     val orphans = layout.fold(0L) { case (perDoc, _, _) =>
       val missing = docsCount * perDoc - bandsCount
@@ -1826,19 +1592,19 @@ object Dedup {
   }
 
   def compactDocIndex(spark: SparkSession, indexPath: String): Unit = {
-    val fs = Seg.fs(spark, indexPath)
-    val docsDir = new org.apache.hadoop.fs.Path(s"$indexPath/docs")
-    val staging = new org.apache.hadoop.fs.Path(s"$indexPath/docs_staging")
-    Seg.healSwap(fs, staging, docsDir) // finish a crashed prior swap first
+    val (fs, root) = (SegmentLog.fs(spark, indexPath), new Path(indexPath))
+    val docsDir = new Path(s"$indexPath/docs")
+    val staging = new Path(s"$indexPath/docs_staging")
+    SegmentLog.healSwap(fs, staging, docsDir) // finish a crashed prior swap first
     // heal a crashed BANDS swap too (bucketed indexes): a crash inside
     // swapInto(bandStaging, bands) between delete and rename would
     // otherwise leave the index with no bands/ tree until a later
     // compaction happened to rerun the band rebuild
-    Seg.healSwap(fs,
-      new org.apache.hadoop.fs.Path(s"$indexPath/bands_staging"),
-      new org.apache.hadoop.fs.Path(s"$indexPath/bands"))
-    val tombs = new org.apache.hadoop.fs.Path(s"$indexPath/tombs")
-    val segs = new org.apache.hadoop.fs.Path(s"$indexPath/segs")
+    SegmentLog.healSwap(fs,
+      new Path(s"$indexPath/bands_staging"),
+      new Path(s"$indexPath/bands"))
+    val tombs = new Path(s"$indexPath/tombs")
+    val segs = new Path(s"$indexPath/segs")
     val layout = bandLayout(spark, indexPath)
     val haveFold = fs.exists(tombs) || fs.exists(segs)
     if (!haveFold && layout.isEmpty) {
@@ -1857,25 +1623,24 @@ object Dedup {
       // docs rewrite the general fold below pays.
       // with segs/ gone, surviving fold markers are pure hazard: a
       // marker listing batch_N as folded would HIDE a future segment
-      // reusing that name (liveDocSegs excludes folded names) — sweep
-      // them here, exactly as the full fold's tail does
-      val markers = new org.apache.hadoop.fs.Path(s"$indexPath/_folded")
-      if (fs.exists(markers)) fs.delete(markers, true)
+      // reusing that name — retire them here, exactly as the full fold's
+      // tail does
+      SegmentLog.Docs.retire(fs, root)
       val (perDoc, effP, _) = layout.get
       val bandsDir = baseBandRoot(fs, indexPath)
       val docsCount = Parquet.read(spark, docsDir.toString).count()
       val bandsCount =
-        if (fs.exists(bandsDir)) bandTreeCount(spark, fs, bandsDir) else -1L
+        if (fs.exists(bandsDir)) SegmentLog.rowCount(spark, fs, bandsDir) else -1L
       if (bandsCount == docsCount * perDoc
           && autoBucketCount(docsCount * perDoc) < 2 * effP) {
-        sweepStaleBandRoots(fs, indexPath) // stop-the-world: drain-free
+        BandGens.sweep(fs, root) // stop-the-world: drain-free
         return
       }
       rebuildBandTree(spark, indexPath, dropBandSegs = true)
-      sweepStaleBandRoots(fs, indexPath)
+      BandGens.sweep(fs, root)
       return
     }
-    // stage-then-swap (Segments.swapInto): the folded view streams from
+    // stage-then-swap (SegmentLog.swapInto): the folded view streams from
     // the live tree into a durable sibling; a crash at any point leaves a
     // complete docs tree on disk, where the previous localCheckpoint +
     // in-place overwrite lost both old and new if the JVM died mid-write.
@@ -1891,28 +1656,24 @@ object Dedup {
       .sortWithinPartitions(idc)
       .write.mode("overwrite").options(docRowOptions(idc))
       .parquet(staging.toString)
-    Seg.swapInto(fs, staging, docsDir)
+    SegmentLog.swapInto(fs, staging, docsDir)
     rebuildBandTree(spark, indexPath, dropBandSegs = true)
-    if (fs.exists(tombs)) fs.delete(tombs, true)
-    if (fs.exists(segs)) fs.delete(segs, true)
-    val markers = new org.apache.hadoop.fs.Path(s"$indexPath/_folded")
-    if (fs.exists(markers)) fs.delete(markers, true)
+    // segments before tombstones: a crash in between must not leave a
+    // tombstoned segment doc for the rerun without its tombstone
+    SegmentLog.Docs.retire(fs, root)
     // AFTER the fold (so the promotion decision sees the folded row
     // count): an auto-flat store that has grown past the crossover gets
     // its band tree here — or, if a fold-cycle ONLINE promotion already
     // published it beside the ingest, just its meta persisted at the
     // operative P.
     promoteAutoFlat(spark, indexPath)
-    sweepStaleBandRoots(fs, indexPath) // stop-the-world: drain-free
+    BandGens.sweep(fs, root) // stop-the-world: drain-free
   }
 
   /** Fold the LIVE streaming segments of a doc-row index into one —
-    * SAFE BESIDE A RUNNING [[graft.streaming.Ingest.startNearDupIngest]],
-    * exactly like [[compactExactIndex]] beside the exact-dedup ingest: the
-    * folded rows land as an invisible `segs/compact_*` directory and become
-    * the view in one atomic fold-marker rename; a concurrently-appended
-    * batch segment (not in the fold snapshot) stays live untouched, and a
-    * crash before the marker leaves the old view fully intact. The base
+    * SAFE BESIDE A RUNNING [[graft.streaming.Ingest.startNearDupIngest]]
+    * under the [[graft.core.SegmentLog]] fold, with the compact band twin
+    * written before the marker. The base
     * `docs/` store and tombstones are NOT touched (that full fold is
     * [[compactDocIndex]], stop-the-world) — this bounds the per-probe
     * listing+read cost of a week-long ingest at O(1) segments instead of
@@ -1931,10 +1692,11 @@ object Dedup {
     // banded, so the probe flattens one cadence after the line is crossed.
     // One meta head + (pre-promotion only) live footer counts per cycle.
     promoteAutoFlat(spark, indexPath, online = true)
-    val (_, live) = liveDocSegs(spark, indexPath)
-    if (live.size > 1) {
-      val fs = Seg.fs(spark, indexPath)
-      val name = s"compact_${java.util.UUID.randomUUID().toString.take(12)}"
+    val (fs, root) = (SegmentLog.fs(spark, indexPath), new Path(indexPath))
+    val segs = SegmentLog.Docs.live(fs, root).segments
+    val live = segs.map(_.dir)
+    if (live.size > 1) SegmentLog.Docs.fold(fs, root, segs) { dir =>
+      val twin = s"$indexPath/bandsegs/${dir.getName}"
       // band rows first (when bucketed): the fold MARKER is the publish
       // point for both trees, and a committed marker must find the compact
       // band segment on disk. The compact twin is derived from the folded
@@ -1954,13 +1716,11 @@ object Dedup {
         // partitioned across a grown P would be all tiny files
         if (foldRows / math.max(1, foldP) < MinBucketFileRows)
           folded.coalesce(1).sortWithinPartitions("bucket")
-            .write.mode("overwrite").parquet(s"$indexPath/bandsegs/$name")
+            .write.mode("overwrite").parquet(twin)
         else
-          folded
-            .repartition(col("bucket"))
-            .write.mode("overwrite").partitionBy("bucket").parquet(s"$indexPath/bandsegs/$name")
-        writeBandTreeBuckets(fs,
-          new org.apache.hadoop.fs.Path(s"$indexPath/bandsegs/$name"), foldP)
+          folded.repartition(col("bucket"))
+            .write.mode("overwrite").partitionBy("bucket").parquet(twin)
+        SegmentLog.writeBuckets(fs, new Path(twin), foldP)
       }
       // range-cluster the fold by id (replacing the earlier plain
       // coalesce, which only consolidated file count): the compact doc
@@ -1974,10 +1734,7 @@ object Dedup {
           math.max(1, spark.sparkContext.defaultParallelism / 2), col(idc))
         .sortWithinPartitions(idc)
         .write.mode("overwrite").options(docRowOptions(idc))
-        .parquet(s"$indexPath/segs/$name")
-      Seg.writeAtomic(fs, Seg.conf(spark),
-        new org.apache.hadoop.fs.Path(s"$indexPath/_folded/$name"),
-        live.map(_.getName).mkString("\n"))
+        .parquet(dir.toString)
     }
     if (gc) gcDocIndex(spark, indexPath)
     // the footer-count orphan reconcile rides every fold cycle: a crashed
@@ -1989,58 +1746,31 @@ object Dedup {
     ()
   }
 
-  /** Delete a doc-row index's folded (superseded) segment directories,
-    * fold markers whose compacted segment is itself gone, and orphaned
-    * uncommitted `compact_*` directories from a crashed fold. Same
-    * contract as [[gcExactIndex]]: run from the maintenance actor only,
-    * after readers that planned before the last fold marker have drained.
-    * Markers whose compacted segment is still live OUTLIVE GC — they both
-    * keep the `compact_*` segment visible and keep a crash-replayed batch
-    * segment rewrite excluded (its rows already live in the compacted
-    * segment). Returns directories removed. */
+  /** [[graft.core.SegmentLog.gc]] of a doc-row index, plus the band twins
+    * and the superseded base band generations. Same contract as
+    * [[gcExactIndex]]: run from the maintenance actor only, after readers
+    * that planned before the last fold marker or pointer flip have
+    * drained. Returns segment directories removed. */
   def gcDocIndex(spark: SparkSession, indexPath: String): Long = {
-    val fs = Seg.fs(spark, indexPath)
-    val root = new org.apache.hadoop.fs.Path(indexPath)
-    val markerDir = new org.apache.hadoop.fs.Path(root, "_folded")
-    val markers = Seg.readMarkers(fs, root)
-    var removed = 0L
+    val (fs, root) = (SegmentLog.fs(spark, indexPath), new Path(indexPath))
     // a doc segment's band twin (bucketed indexes) shares its name and its
     // lifecycle: folded => delete both; orphaned compact_* => delete both.
     // NON-compact band segments without a doc twin are left alone — they
     // can be a crashed batch's pre-commit write that a replay is about to
     // overwrite (deleting one concurrently with the ingest would lose the
     // replayed batch's band rows).
-    def deleteSeg(name: String): Unit = {
-      val d = new org.apache.hadoop.fs.Path(root, s"segs/$name")
-      if (fs.exists(d)) { fs.delete(d, true); removed += 1 }
-      val b = new org.apache.hadoop.fs.Path(root, s"bandsegs/$name")
-      if (fs.exists(b)) { fs.delete(b, true); () }
-    }
-    markers.values.flatten.toSet[String].foreach(deleteSeg)
-    markers.keys.foreach { name =>
-      if (!fs.exists(new org.apache.hadoop.fs.Path(root, s"segs/$name")))
-        fs.delete(new org.apache.hadoop.fs.Path(markerDir, name), false)
-    }
-    Seg.listDirs(fs, new org.apache.hadoop.fs.Path(root, "segs")).foreach { d =>
-      if (d.getName.startsWith("compact_") && !markers.contains(d.getName)) {
-        fs.delete(d, true); removed += 1
-        val b = new org.apache.hadoop.fs.Path(root, s"bandsegs/${d.getName}")
-        if (fs.exists(b)) fs.delete(b, true)
-      }
-    }
+    val removed = SegmentLog.Docs.gc(fs, root)(name =>
+      fs.delete(new Path(root, s"bandsegs/$name"), true))
     // a compact band segment whose doc twin never committed (crash between
     // the band fold and the doc fold) is unreachable — sweep it
-    Seg.listDirs(fs, new org.apache.hadoop.fs.Path(root, "bandsegs")).foreach { d =>
-      if (d.getName.startsWith("compact_") &&
-          !fs.exists(new org.apache.hadoop.fs.Path(root, s"segs/${d.getName}")))
+    SegmentLog.listDirs(fs, new Path(root, "bandsegs")).foreach { d =>
+      if (SegmentLog.isCompact(d.getName) && !fs.exists(new Path(root, s"segs/${d.getName}")))
         fs.delete(d, true)
     }
-    // superseded base band GENERATIONS (a beside-live re-bucket published
-    // a new root and flipped the `_BANDS` pointer, leaving the old root
-    // for readers planned before the flip) and crashed unreferenced
-    // publishes: GC is the drain-safe slot, so they sweep here alongside
-    // the folded segment dirs
-    sweepStaleBandRoots(fs, indexPath)
+    // superseded base band GENERATIONS and crashed unreferenced publishes:
+    // GC is the drain-safe slot, so they sweep here alongside the folded
+    // segment dirs
+    BandGens.sweep(fs, root)
     removed
   }
 
@@ -2073,8 +1803,8 @@ object Dedup {
       bandRows(batch, meta.getInt(2), meta.getInt(1) / meta.getInt(2), bb)
         .coalesce(1)
         .write.mode("overwrite").parquet(s"$indexPath/bandsegs/$segName")
-      writeBandTreeBuckets(Seg.fs(spark, indexPath),
-        new org.apache.hadoop.fs.Path(s"$indexPath/bandsegs/$segName"), bb)
+      SegmentLog.writeBuckets(SegmentLog.fs(spark, indexPath),
+        new Path(s"$indexPath/bandsegs/$segName"), bb)
     }
     batch.sortWithinPartitions("doc")
       .write.mode("overwrite").options(docRowOptions("doc"))
@@ -2110,7 +1840,7 @@ object Dedup {
       bandRows(batch, meta.getInt(2), meta.getInt(1) / meta.getInt(2), bb)
         .repartition(col("bucket"))
         .write.mode("append").partitionBy("bucket")
-        .parquet(baseBandRoot(Seg.fs(spark, indexPath), indexPath).toString)
+        .parquet(baseBandRoot(SegmentLog.fs(spark, indexPath), indexPath).toString)
     batch.sortWithinPartitions("doc")
       .write.mode("append").options(docRowOptions("doc"))
       .parquet(s"$indexPath/docs")
@@ -2402,8 +2132,8 @@ object Dedup {
           signatureBandRows(rows, maxHamming, comboSize, p)
             .repartition(col("bucket"))
             .write.mode("overwrite").partitionBy("bucket").parquet(s"$path/bands")
-          writeBandTreeBuckets(Seg.fs(spark, path),
-            new org.apache.hadoop.fs.Path(s"$path/bands"), p)
+          SegmentLog.writeBuckets(SegmentLog.fs(spark, path),
+            new Path(s"$path/bands"), p)
         }
         p
       }
@@ -2441,8 +2171,8 @@ object Dedup {
     * combo_size, sig_buckets)` from its meta file; None for flat stores
     * (no meta, or a MinHash meta). */
   private def sigMetaBuckets(spark: SparkSession, indexPath: String): Option[(Int, Int, Int)] = {
-    val meta = new org.apache.hadoop.fs.Path(s"$indexPath/meta")
-    if (!Seg.fs(spark, indexPath).exists(meta)) None
+    val meta = new Path(s"$indexPath/meta")
+    if (!SegmentLog.fs(spark, indexPath).exists(meta)) None
     else {
       val df = Parquet.read(spark, meta.toString)
       if (!df.columns.contains("sig_buckets")) None
@@ -2459,8 +2189,8 @@ object Dedup {
     * outgrown the build-time meta value), else the meta value. */
   private def effectiveSigBuckets(spark: SparkSession, indexPath: String): Option[(Int, Int, Int)] =
     sigMetaBuckets(spark, indexPath).map { case (mh, cs, sb) =>
-      val fs = Seg.fs(spark, indexPath)
-      (mh, cs, readBandTreeBuckets(fs, baseBandRoot(fs, indexPath)).getOrElse(sb))
+      val fs = SegmentLog.fs(spark, indexPath)
+      (mh, cs, SegmentLog.readBuckets(fs, baseBandRoot(fs, indexPath)).getOrElse(sb))
     }.filter(_._3 > 0) // AUTO-FLAT meta (sig_buckets = -1, no tree): flat
 
   /** All pairs within `maxHamming` bits TOUCHING a batch of precomputed
@@ -2542,9 +2272,9 @@ object Dedup {
           val stored0 = storedBands(spark, indexPath, Some(bandVals), bb,
             segDocs => signatureBandRows(segDocs, mh, cs, 1),
             cols = Seq("doc", "band", "sh"))
-          val tombsPath = new org.apache.hadoop.fs.Path(s"$indexPath/tombs")
+          val tombsPath = new Path(s"$indexPath/tombs")
           val stored =
-            if (!Seg.fs(spark, indexPath).exists(tombsPath)) stored0
+            if (!SegmentLog.fs(spark, indexPath).exists(tombsPath)) stored0
             else stored0.join(
               broadcast(readDocTombs(spark, indexPath)
                 .select(col("doc_id").as("doc"))),
@@ -2616,7 +2346,7 @@ object Dedup {
         signatureBandRows(batch, mh, cs, bb)
           .repartition(col("bucket"))
           .write.mode("append").partitionBy("bucket")
-          .parquet(baseBandRoot(Seg.fs(spark, indexPath), indexPath).toString)
+          .parquet(baseBandRoot(SegmentLog.fs(spark, indexPath), indexPath).toString)
       }
     batch.count()
   }
@@ -2648,8 +2378,8 @@ object Dedup {
       signatureBandRows(batch, mh, cs, bb)
         .coalesce(1)
         .write.mode("overwrite").parquet(s"$indexPath/bandsegs/$segName")
-      writeBandTreeBuckets(Seg.fs(spark, indexPath),
-        new org.apache.hadoop.fs.Path(s"$indexPath/bandsegs/$segName"), bb)
+      SegmentLog.writeBuckets(SegmentLog.fs(spark, indexPath),
+        new Path(s"$indexPath/bandsegs/$segName"), bb)
     }
     batch.write.mode("overwrite").parquet(s"$indexPath/segs/$segName")
     batch.count()

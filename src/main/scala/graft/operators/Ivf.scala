@@ -1,7 +1,8 @@
 package graft.operators
 
-import graft.core.{Parquet, Stage}
+import graft.core.{Parquet, SegmentLog, Stage}
 import graft.functions.VectorOps
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -457,9 +458,7 @@ object Ivf {
     // legacy trees become the base again and stale generations sweep at
     // the next gc. No-op when `path` is itself a generation dir (the
     // rebuildIndex publish) or a fresh store.
-    val fs = Seg.fs(spark, path)
-    val ptr = new org.apache.hadoop.fs.Path(path, ListsPointer)
-    if (fs.exists(ptr)) { fs.delete(ptr, false); () }
+    SegmentLog.fs(spark, path).delete(new Path(path, ListGens.pointer), false)
   }
 
   /** Persist the quantizer tree, keyed by (level, bucket) with the leaf
@@ -493,7 +492,7 @@ object Ivf {
     val spark = newVectors.sparkSession
     // the CURRENT generation's model and lists, read as one consistent
     // pair (pointer first, then that generation's immutable trees)
-    val root = genRoot(Seg.fs(spark, path), path)
+    val root = genRoot(SegmentLog.fs(spark, path), path)
     val model = readModelAt(spark, root)
     // count the BATCH, not (after - before) over the whole lists dir: the
     // difference form lists every existing file's footer twice per append
@@ -508,10 +507,8 @@ object Ivf {
     }
   }
 
-  private val Seg = graft.core.Segments
-
-  // ---- base GENERATIONS: the `_LISTS` pointer (the Dedup `_BANDS` /
-  // ---- Search `_POSTINGS` discipline, applied to the vector index) -----
+  // ---- base GENERATIONS behind the `_LISTS` pointer
+  // ---- ([[graft.core.SegmentLog.Generations]]) -----------------------
   //
   // A generation is the atomic unit of QUANTIZER + ASSIGNMENT consistency:
   // `lists/`, `centroids/`, and `meta/` always live together under one
@@ -530,38 +527,27 @@ object Ivf {
   // the flip. Superseded generations outlive the flip until readers
   // drain ([[gcIndexSegments]]).
 
-  private val ListsPointer = "_LISTS"
+  private val ListGens =
+    SegmentLog.Generations("_LISTS", "gen", "", Seq("lists", "centroids", "meta"))
 
   /** The current generation's NAME: the pointer content, or "" for the
     * legacy root layout. */
-  private def genNameOf(
-      fs: org.apache.hadoop.fs.FileSystem, path: String): String = {
-    val ptr = new org.apache.hadoop.fs.Path(path, ListsPointer)
-    if (!fs.exists(ptr)) ""
-    else scala.util.Try(Seg.readSmall(fs, ptr).trim).toOption
-      .filter(n => n.nonEmpty && !n.contains('/')).getOrElse("")
-  }
+  private def genNameOf(fs: FileSystem, path: String): String = ListGens.current(fs, new Path(path))
 
   /** Directory of a generation by name ("" = the index root itself). */
   private def genDirOf(path: String, gen: String): String =
     if (gen.isEmpty) path else s"$path/$gen"
 
   /** The current generation's root (lists/centroids/meta live here). */
-  private[graft] def genRoot(
-      fs: org.apache.hadoop.fs.FileSystem, path: String): String =
+  private[graft] def genRoot(fs: FileSystem, path: String): String =
     genDirOf(path, genNameOf(fs, path))
 
   /** The generation that ASSIGNED a segment's rows — its `_GEN` marker;
     * absent (pre-generation segments) means whatever generation was
     * current at write time, which for a store that has never flipped is
     * the current one. */
-  private def readSegGen(
-      fs: org.apache.hadoop.fs.FileSystem,
-      segDir: org.apache.hadoop.fs.Path, curGen: String): String = {
-    val m = new org.apache.hadoop.fs.Path(segDir, "_GEN")
-    if (!fs.exists(m)) curGen
-    else scala.util.Try(Seg.readSmall(fs, m).trim).toOption.getOrElse(curGen)
-  }
+  private def readSegGen(fs: FileSystem, segDir: Path, curGen: String): String =
+    scala.util.Try(SegmentLog.readSmall(fs, new Path(segDir, "_GEN")).trim).getOrElse(curGen)
 
   /** Segment names a generation's lists ABSORBED at publish time — the
     * retire-list rides INSIDE the generation dir, so the pointer flip
@@ -569,35 +555,18 @@ object Ivf {
     * they folded in (no window where a row is served twice). Carried
     * forward across rebuilds for any still-on-disk dir, so a crash-replay
     * rewrite of a long-retired segment stays excluded. */
-  private def readAbsorbed(
-      fs: org.apache.hadoop.fs.FileSystem, genDir: String): Set[String] = {
-    val m = new org.apache.hadoop.fs.Path(genDir, "_ABSORBED")
-    if (!fs.exists(m)) Set.empty
-    else Seg.readSmall(fs, m).split("\n").map(_.trim).filter(_.nonEmpty).toSet
-  }
-
-  /** True iff the tree under `root` holds any parquet DATA file — a
-    * zero-row partitioned write leaves only `_SUCCESS`, and schema
-    * inference over it throws (the Search/Dedup no-data-files guard). */
-  private def hasDataFiles(
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Boolean = {
-    if (!fs.exists(root)) return false
-    var hasData = false
-    val it = fs.listFiles(root, true)
-    while (!hasData && it.hasNext)
-      hasData = it.next().getPath.getName.endsWith(".parquet")
-    hasData
-  }
+  private def readAbsorbed(fs: FileSystem, genDir: String): Set[String] =
+    scala.util.Try(SegmentLog.readSmall(fs, new Path(genDir, "_ABSORBED"))).getOrElse("")
+      .split("\n").map(_.trim).filter(_.nonEmpty).toSet
 
   /** Live tombstoned ids (`n_id`), or None when none exist — data-file
     * gated: [[rebuildIndex]] deletes the tombstone files it folded in,
     * which can leave the dir holding only `_SUCCESS`. */
   private def tombsRows(
       spark: org.apache.spark.sql.SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, path: String): Option[DataFrame] = {
-    val dir = new org.apache.hadoop.fs.Path(s"$path/tombs")
-    if (!hasDataFiles(fs, dir)) None
+      fs: FileSystem, path: String): Option[DataFrame] = {
+    val dir = new Path(s"$path/tombs")
+    if (!SegmentLog.hasData(fs, dir)) None
     else Some(Parquet.read(spark, dir.toString).select("n_id"))
   }
 
@@ -611,17 +580,16 @@ object Ivf {
   private[graft] def liveGenGroups(
       spark: org.apache.spark.sql.SparkSession,
       path: String): Seq[(String, Model, DataFrame)] = {
-    val fs = Seg.fs(spark, path)
+    val fs = SegmentLog.fs(spark, path)
     val curGen = genNameOf(fs, path)
-    val (_, segs) = liveListSegs(spark, path)
+    val segs = liveListSegs(spark, path).map(_.dir)
     val byGen: Map[String, Seq[String]] =
       (segs.map(d => readSegGen(fs, d, curGen) -> d.toString)
         :+ (curGen -> s"${genDirOf(path, curGen)}/lists"))
         .groupBy(_._1).map { case (g, rs) => g -> rs.map(_._2) }
     val tombs = tombsRows(spark, fs, path)
     byGen.toSeq.sortBy(_._1).flatMap { case (g, roots) =>
-      val withData = roots.filter(r =>
-        hasDataFiles(fs, new org.apache.hadoop.fs.Path(r)))
+      val withData = roots.filter(r => SegmentLog.hasData(fs, new Path(r)))
       if (withData.isEmpty) None
       else {
         val m = readModelAt(spark, genDirOf(path, g))
@@ -633,32 +601,14 @@ object Ivf {
     }
   }
 
-  /** The LIVE streaming segments of a vector index, under the same
-    * fold-marker protocol as the dedup doc-row indexes
-    * ([[graft.operators.Dedup.foldDocSegments]]): markers under `_folded/`
-    * are listed BEFORE segment directories (a marker committed between the
-    * listings leaves the reader on the consistent pre-fold view), a
-    * segment a marker lists as folded is excluded, a `compact_*` segment
-    * is visible iff its marker committed, and a batch segment is committed
-    * iff its parquet `_SUCCESS` job-commit mark exists (a fold snapshot
-    * taken mid-rewrite during streaming replay skips the half-written
-    * dir). */
+  /** The LIVE streaming segments of a vector index under `segs/`
+    * ([[graft.core.SegmentLog.Docs]]). Segments the current generation's
+    * lists absorbed at publish retire exactly like folded ones — their rows
+    * already live in the base tree. */
   private def liveListSegs(
-      spark: org.apache.spark.sql.SparkSession, path: String)
-      : (Map[String, Seq[String]], Seq[org.apache.hadoop.fs.Path]) = {
-    val fs = Seg.fs(spark, path)
-    val markers = Seg.readMarkers(fs, new org.apache.hadoop.fs.Path(path))
-    // segments the current generation's lists absorbed at publish retire
-    // exactly like folded ones — their rows already live in the base tree
-    val folded = markers.values.flatten.toSet ++
-      readAbsorbed(fs, genRoot(fs, path))
-    val live = Seg.listDirs(fs, new org.apache.hadoop.fs.Path(s"$path/segs")).filter { d =>
-      val name = d.getName
-      !folded(name) && (
-        if (name.startsWith("compact_")) markers.contains(name)
-        else fs.exists(new org.apache.hadoop.fs.Path(d, "_SUCCESS")))
-    }
-    (markers, live)
+      spark: org.apache.spark.sql.SparkSession, path: String): Seq[SegmentLog.Segment] = {
+    val fs = SegmentLog.fs(spark, path)
+    SegmentLog.Docs.live(fs, new Path(path), readAbsorbed(fs, genRoot(fs, path))).segments
   }
 
   /** The index's LIVE inverted lists: the base `lists/` tree plus the live
@@ -673,14 +623,14 @@ object Ivf {
     * the plain union. */
   private[graft] def readListsWithSegments(
       spark: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
-    val fs = Seg.fs(spark, path)
+    val fs = SegmentLog.fs(spark, path)
     // NOTE: bucket values in this union may span GENERATIONS (a live
     // segment assigned by a superseded quantizer) — valid for row-level
     // reads (compaction re-assigns, stats count); bucket-pruned probes
     // must go through [[liveGenGroups]] instead.
     val roots = (s"${genRoot(fs, path)}/lists"
-      +: liveListSegs(spark, path)._2.map(_.toString))
-      .filter(r => hasDataFiles(fs, new org.apache.hadoop.fs.Path(r)))
+      +: liveListSegs(spark, path).map(_.dir.toString))
+      .filter(r => SegmentLog.hasData(fs, new Path(r)))
     require(roots.nonEmpty, s"no vector data under $path")
     val raw = roots.map(Parquet.read(spark, _)).reduce(_ unionByName _)
     tombsRows(spark, fs, path).fold(raw)(t =>
@@ -688,13 +638,9 @@ object Ivf {
   }
 
   /** Fold the LIVE streaming segments of a vector index into one — SAFE
-    * BESIDE A RUNNING [[graft.streaming.Ingest.startSemanticIngest]],
-    * exactly like [[graft.operators.Dedup.foldDocSegments]] beside the
-    * near-dup ingest: the folded rows land as an invisible
-    * `segs/compact_*` bucket-partitioned tree and become the view in one
-    * atomic fold-marker rename; a concurrently-appended batch segment (not
-    * in the fold snapshot) stays live untouched, and a crash before the
-    * marker leaves the old view fully intact. The base `lists/` tree and
+    * BESIDE A RUNNING [[graft.streaming.Ingest.startSemanticIngest]]
+    * under the [[graft.core.SegmentLog]] fold, one bucket-partitioned
+    * compact segment per assigning generation. The base `lists/` tree and
     * tombstones are NOT touched (that full fold is
     * [[compactIndexSegments]], stop-the-world) — this bounds the
     * per-probe listing+read cost of a week-long semantic ingest at O(1)
@@ -706,89 +652,50 @@ object Ivf {
     * the per-micro-batch readers drain (one trigger). */
   def foldIndexSegments(
       spark: org.apache.spark.sql.SparkSession, path: String, gc: Boolean = true): Unit = {
-    val fs = Seg.fs(spark, path)
+    val (fs, root) = (SegmentLog.fs(spark, path), new Path(path))
     val curGen = genNameOf(fs, path)
-    val (_, live) = liveListSegs(spark, path)
     // fold PER ASSIGNING GENERATION: bucket values from different
     // quantizers must never share one root (probes prune each root in its
     // own generation's bucket space). Normally one group; a mixed set
     // appears only in the drain window after a rebuild flip.
-    live.groupBy(d => readSegGen(fs, d, curGen)).foreach { case (g, segs) =>
-      if (segs.size > 1) {
-        val name = s"compact_${java.util.UUID.randomUUID().toString.take(12)}"
+    val byGen = liveListSegs(spark, path).groupBy(d => readSegGen(fs, d.dir, curGen))
+    byGen.foreach { case (g, segs) =>
+      if (segs.size > 1) SegmentLog.Docs.fold(fs, root, segs) { dir =>
         // each segment is its own bucket-partitioned tree: read per root and
         // union (one multi-root read trips partition discovery). repartition
         // by bucket before the write: a narrow union would map each input
         // file to an output file, so the compacted segment would carry the
         // SAME O(batches) tiny files it exists to consolidate
-        val withData = segs.filter(d => hasDataFiles(fs, d))
+        val withData = segs.map(_.dir).filter(d => SegmentLog.hasData(fs, d))
         if (withData.nonEmpty)
           withData.map(d => Parquet.read(spark, d.toString)).reduce(_ unionByName _)
             .repartition(col("bucket"))
-            .write.partitionBy("bucket").mode("overwrite").parquet(s"$path/segs/$name")
+            .write.partitionBy("bucket").mode("overwrite").parquet(dir.toString)
         else // all-empty group: an empty (but committed) compact segment
-          fs.mkdirs(new org.apache.hadoop.fs.Path(s"$path/segs/$name"))
-        Seg.writeAtomic(fs, Seg.conf(spark),
-          new org.apache.hadoop.fs.Path(s"$path/segs/$name/_GEN"), g)
-        Seg.writeAtomic(fs, Seg.conf(spark),
-          new org.apache.hadoop.fs.Path(s"$path/_folded/$name"),
-          segs.map(_.getName).mkString("\n"))
+          fs.mkdirs(dir)
+        SegmentLog.writeAtomic(fs, new Path(dir, "_GEN"), g)
       }
     }
     if (gc) { gcIndexSegments(spark, path); () }
   }
 
-  /** Delete a vector index's folded (superseded) segment directories, fold
-    * markers whose compacted segment is itself gone, and orphaned
-    * uncommitted `compact_*` directories from a crashed fold — the
-    * [[graft.operators.Dedup.gcDocIndex]] contract: run from the
-    * maintenance actor only, after readers that planned before the last
-    * fold marker have drained. Markers whose compacted segment is still
-    * live OUTLIVE GC — they keep the `compact_*` segment visible and keep
-    * a crash-replayed batch-segment rewrite excluded (its rows already
-    * live in the compacted segment). Returns directories removed. */
+  /** [[graft.core.SegmentLog.gc]] of a vector index, with the segments the
+    * current generation absorbed retired like folded ones, plus the
+    * superseded generations — the [[graft.operators.Dedup.gcDocIndex]]
+    * contract: run from the maintenance actor only, after readers that
+    * planned before the last fold marker or pointer flip have drained.
+    * Returns directories removed. */
   def gcIndexSegments(spark: org.apache.spark.sql.SparkSession, path: String): Long = {
-    val fs = Seg.fs(spark, path)
-    val root = new org.apache.hadoop.fs.Path(path)
-    val markerDir = new org.apache.hadoop.fs.Path(root, "_folded")
-    val markers = Seg.readMarkers(fs, root)
+    val (fs, root) = (SegmentLog.fs(spark, path), new Path(path))
     val curGen = genNameOf(fs, path)
-    var removed = 0L
-    // folded segments AND segments the current generation's lists absorbed
-    // at publish — both have their rows in a live tree already
-    (markers.values.flatten.toSet ++
-      readAbsorbed(fs, genDirOf(path, curGen))).foreach { name =>
-      val d = new org.apache.hadoop.fs.Path(root, s"segs/$name")
-      if (fs.exists(d)) { fs.delete(d, true); removed += 1 }
-    }
-    markers.keys.foreach { name =>
-      if (!fs.exists(new org.apache.hadoop.fs.Path(root, s"segs/$name")))
-        fs.delete(new org.apache.hadoop.fs.Path(markerDir, name), false)
-    }
-    Seg.listDirs(fs, new org.apache.hadoop.fs.Path(root, "segs")).foreach { d =>
-      if (d.getName.startsWith("compact_") && !markers.contains(d.getName)) {
-        fs.delete(d, true); removed += 1
-      }
-    }
+    val removed = SegmentLog.Docs.gc(fs, root, readAbsorbed(fs, genDirOf(path, curGen)))()
     // superseded GENERATIONS: swept only when no live segment still probes
     // with their quantizer (a segment assigned under gen g needs g's
     // centroids until it folds or retires). Includes unreferenced gen dirs
     // from a rebuild that crashed before its flip, and the legacy root
     // trees once a generation serves.
-    val liveGens = liveListSegs(spark, path)._2
-      .map(d => readSegGen(fs, d, curGen)).toSet + curGen
-    Seg.listDirs(fs, root).map(_.getName)
-      .filter(n => n.startsWith("gen_v") && n != curGen && !liveGens(n))
-      .foreach { n =>
-        fs.delete(new org.apache.hadoop.fs.Path(root, n), true); removed += 1
-      }
-    if (curGen.nonEmpty && !liveGens("")) {
-      Seq("lists", "centroids", "meta").foreach { t =>
-        val d = new org.apache.hadoop.fs.Path(root, t)
-        if (fs.exists(d)) { fs.delete(d, true); removed += 1 }
-      }
-    }
-    removed
+    val liveGens = liveListSegs(spark, path).map(d => readSegGen(fs, d.dir, curGen)).toSet + curGen
+    removed + ListGens.sweep(fs, root, liveGens)
   }
 
   /** Retract vectors from a persisted index by id — the takedown path for
@@ -847,7 +754,7 @@ object Ivf {
       idCol: String,
       vecCol: String): (DataFrame, DataFrame, String) = Stage.scope { s =>
     val ss = batch.sparkSession
-    val fs = Seg.fs(ss, indexPath)
+    val fs = SegmentLog.fs(ss, indexPath)
     val curGen = genNameOf(fs, indexPath)
     val model = readModelAt(ss, genDirOf(indexPath, curGen))
     val assigned = s(batch
@@ -926,9 +833,8 @@ object Ivf {
     // bucket space forever (the writePostingsSegment single-read
     // discipline, which reads P once for both rows and marker).
     val spark = assigned.sparkSession
-    val fs = Seg.fs(spark, path)
-    Seg.writeAtomic(fs, Seg.conf(spark),
-      new org.apache.hadoop.fs.Path(s"$path/segs/$segName/_GEN"),
+    val fs = SegmentLog.fs(spark, path)
+    SegmentLog.writeAtomic(fs, new Path(s"$path/segs/$segName/_GEN"),
       assignedGen.getOrElse(genNameOf(fs, path)))
     batch.count()
   }
@@ -941,14 +847,13 @@ object Ivf {
     * [[graft.streaming.Ingest.startSemanticIngest]], use
     * [[foldIndexSegments]] instead. */
   def compactIndexSegments(spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (fs, root) = (SegmentLog.fs(spark, path), new Path(path))
     val curRoot = genRoot(fs, path)
-    val listsDir = new org.apache.hadoop.fs.Path(s"$curRoot/lists")
-    val staging = new org.apache.hadoop.fs.Path(s"$curRoot/lists_staging")
-    Seg.healSwap(fs, staging, listsDir) // finish a crashed prior swap first
-    val segsDir = new org.apache.hadoop.fs.Path(s"$path/segs")
-    val tombsDir = new org.apache.hadoop.fs.Path(s"$path/tombs")
+    val listsDir = new Path(s"$curRoot/lists")
+    val staging = new Path(s"$curRoot/lists_staging")
+    SegmentLog.healSwap(fs, staging, listsDir) // finish a crashed prior swap first
+    val segsDir = new Path(s"$path/segs")
+    val tombsDir = new Path(s"$path/tombs")
     if (!fs.exists(segsDir) && !fs.exists(tombsDir)) return
     // STAGE-THEN-SWAP, not overwrite-in-place: the merged view streams
     // from the live tree into a durable sibling (repartitioned so each
@@ -975,24 +880,11 @@ object Ivf {
       .withColumn("bucket", nearestCentroid(col("n_vec"), model))
       .repartition(col("bucket"))
       .write.partitionBy("bucket").mode("overwrite").parquet(staging.toString)
-    Seg.swapInto(fs, staging, listsDir)
-    if (fs.exists(segsDir)) { fs.delete(segsDir, true); () }
-    if (fs.exists(tombsDir)) { fs.delete(tombsDir, true); () }
-    val markerDir = new org.apache.hadoop.fs.Path(s"$path/_folded")
-    if (fs.exists(markerDir)) { fs.delete(markerDir, true); () }
+    SegmentLog.swapInto(fs, staging, listsDir)
+    SegmentLog.Docs.retire(fs, root)
     // every root outside the current generation is retired here:
     // stop-the-world, so superseded generations sweep drain-free
-    val curGen = genNameOf(fs, path)
-    Seg.listDirs(fs, new org.apache.hadoop.fs.Path(path)).map(_.getName)
-      .filter(n => n.startsWith("gen_v") && n != curGen)
-      .foreach { n =>
-        fs.delete(new org.apache.hadoop.fs.Path(path, n), true); ()
-      }
-    if (curGen.nonEmpty)
-      Seq("lists", "centroids", "meta").foreach { t =>
-        val d = new org.apache.hadoop.fs.Path(path, t)
-        if (fs.exists(d)) { fs.delete(d, true); () }
-      }
+    ListGens.sweep(fs, root)
   }
 
   /** Inverted-list health of a persisted index: LIVE row totals (base
@@ -1004,7 +896,7 @@ object Ivf {
     val sizes = readListsWithSegments(spark, path)
       .groupBy("bucket").count().collect().map(_.getLong(1))
     val total = sizes.sum
-    val fs = new org.apache.hadoop.fs.Path(path)
+    val fs = new Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val trained = Parquet.read(spark, s"${genRoot(fs, path)}/meta").head().getLong(0)
     val avg = if (sizes.nonEmpty) total.toDouble / sizes.length else 0.0
@@ -1070,21 +962,18 @@ object Ivf {
       iters: Int = 3,
       branch: Int = 0,
       maxTrainRows: Long = 0L): Unit = {
-    val fs = Seg.fs(spark, path)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(path)
-    val curGen = genNameOf(fs, path)
-    val curRoot = genDirOf(path, curGen)
+    val (fs, root) = (SegmentLog.fs(spark, path), new Path(path))
+    val curRoot = genRoot(fs, path)
     // ---- fold-set snapshot (names and files only; no data copied) ----
-    val (_, segs0) = liveListSegs(spark, path)
-    val tombsDir = new org.apache.hadoop.fs.Path(s"$path/tombs")
-    val tombFiles0: Seq[org.apache.hadoop.fs.Path] =
+    val segs0 = liveListSegs(spark, path).map(_.dir)
+    val tombsDir = new Path(s"$path/tombs")
+    val tombFiles0: Seq[Path] =
       if (!fs.exists(tombsDir)) Seq.empty
-      else Seg.listFiles(fs, tombsDir)
+      else SegmentLog.listFiles(fs, tombsDir)
         .filter(_.getName.endsWith(".parquet")).map(f =>
-          new org.apache.hadoop.fs.Path(tombsDir, f.getName))
+          new Path(tombsDir, f.getName))
     val srcRoots = (s"$curRoot/lists" +: segs0.map(_.toString))
-      .filter(r => hasDataFiles(fs, new org.apache.hadoop.fs.Path(r)))
+      .filter(r => SegmentLog.hasData(fs, new Path(r)))
     require(srcRoots.nonEmpty, s"rebuildIndex: no vectors under $path")
     // dropDuplicates(vec_id): after a crash-rerun of a fold/compaction a
     // row can appear in both the base lists and a still-live segment
@@ -1100,26 +989,16 @@ object Ivf {
     val model =
       if (branch > 0) trainHier(corpus, lists, branch, iters, maxTrainRows = maxTrainRows)
       else train(corpus, lists, iters, maxTrainRows = maxTrainRows)
-    // ---- publish invisibly, then one atomic commit ----
-    val nextGen = 1 + Seg.listDirs(fs, root).map(_.getName)
-      .filter(_.startsWith("gen_v"))
-      .flatMap(n => scala.util.Try(n.stripPrefix("gen_v").toInt).toOption)
-      .foldLeft(0)(math.max)
-    val gen = s"gen_v$nextGen"
-    val genDir = new org.apache.hadoop.fs.Path(root, gen)
-    if (fs.exists(genDir)) fs.delete(genDir, true) // a crashed prior attempt
-    writeIndex(corpus, model, genDir.toString)
-    // carry forward the previous absorbed names whose dirs still exist, so
-    // a late crash-replay rewrite of a long-retired segment stays excluded
-    val absorbed = segs0.map(_.getName) ++
-      readAbsorbed(fs, curRoot).filter(n =>
-        fs.exists(new org.apache.hadoop.fs.Path(s"$path/segs/$n")))
-    if (absorbed.nonEmpty)
-      Seg.writeAtomic(fs, conf,
-        new org.apache.hadoop.fs.Path(genDir, "_ABSORBED"),
-        absorbed.distinct.mkString("\n"))
-    Seg.writeAtomic(fs, conf,
-      new org.apache.hadoop.fs.Path(root, ListsPointer), gen) // COMMIT
+    // ---- publish invisibly, then one atomic commit (the pointer flip) ----
+    ListGens.publish(fs, root) { genDir =>
+      writeIndex(corpus, model, genDir.toString)
+      // carry forward the previous absorbed names whose dirs still exist, so
+      // a late crash-replay rewrite of a long-retired segment stays excluded
+      val absorbed = segs0.map(_.getName) ++
+        readAbsorbed(fs, curRoot).filter(n => fs.exists(new Path(s"$path/segs/$n")))
+      if (absorbed.nonEmpty)
+        SegmentLog.writeAtomic(fs, new Path(genDir, "_ABSORBED"), absorbed.distinct.mkString("\n"))
+    }
     // ---- cleanup (all safe to crash out of: a rerun or gc finishes) ----
     // the snapshot tombstones were excluded from the retrain corpus;
     // tombstones that arrived DURING the retrain are not in tombFiles0 and
@@ -1134,7 +1013,7 @@ object Ivf {
     * the index was assigned by. A pre-hierarchical layout (no `level`
     * column) loads as the flat model it was. */
   def readModel(spark: org.apache.spark.sql.SparkSession, path: String): Model =
-    readModelAt(spark, genRoot(Seg.fs(spark, path), path))
+    readModelAt(spark, genRoot(SegmentLog.fs(spark, path), path))
 
   /** [[readModel]] against an EXPLICIT generation root (no pointer
     * indirection) — the mixed-generation probe paths load each segment's

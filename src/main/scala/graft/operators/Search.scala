@@ -1,7 +1,8 @@
 package graft.operators
 
-import graft.core.{Parquet, Stage}
+import graft.core.{Parquet, SegmentLog, Stage}
 import graft.functions.TextOps
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -273,8 +274,8 @@ object Search {
           .agg(count(lit(1)), coalesce(sum("dl"), lit(0L))).head()
         (r.getLong(0), r.getLong(1))
       }
-    val fs = graft.core.Segments.fs(spark, path)
-    writeRootBuckets(fs, new org.apache.hadoop.fs.Path(s"$path/postings"), buckets)
+    val fs = SegmentLog.fs(spark, path)
+    SegmentLog.writeBuckets(fs, new Path(s"$path/postings"), buckets)
     // a rebuild over an existing index retracts the generation pointer:
     // from here the legacy `postings/` (just written, marker inside) is
     // the base root again, and stale generations are swept by the next
@@ -286,8 +287,7 @@ object Search {
     // if a crash lands in between. The residual window (pointer retracted,
     // meta not yet written) is two small writes wide, and a rebuild rerun
     // repairs it.
-    val ptr = new org.apache.hadoop.fs.Path(path, PostingsPointer)
-    if (fs.exists(ptr)) { fs.delete(ptr, false); () }
+    fs.delete(new Path(path, PostingsGens.pointer), false)
     import spark.implicits._
     Seq((m._1, m._2, buckets)).toDF("n_docs", "sum_dl", "buckets")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
@@ -311,49 +311,25 @@ object Search {
   // stop-the-world) when per-bucket postings have doubled, sized off the
   // LIVE postings count (base + streamed segments).
 
-  /** The `_POSTINGS` pointer at an index root: names the CURRENT base
-    * postings root (a generation dir `postings_v<k>` once any re-bucket
-    * has published; absent on build-time stores, whose root is the legacy
-    * `postings/`). */
-  private val PostingsPointer = "_POSTINGS"
+  /** The base postings generations behind the `_POSTINGS` pointer
+    * (`postings_v<k>` once any re-bucket has published; the legacy
+    * `postings/` on build-time stores). Every postings root carries the
+    * `_BUCKETS` marker of the P its rows were written at; pre-marker roots
+    * fall back to the meta value, frozen-correct because growth is gated on
+    * every live root carrying a marker. */
+  private val PostingsGens =
+    SegmentLog.Generations("_POSTINGS", "postings", "postings", Seq("postings"))
 
-  private def basePostingsRoot(
-      fs: org.apache.hadoop.fs.FileSystem, path: String): org.apache.hadoop.fs.Path = {
-    val ptr = new org.apache.hadoop.fs.Path(path, PostingsPointer)
-    val rel =
-      if (!fs.exists(ptr)) "postings"
-      else scala.util.Try(graft.core.Segments.readSmall(fs, ptr).trim).toOption
-        .filter(n => n.nonEmpty && !n.contains('/')).getOrElse("postings")
-    new org.apache.hadoop.fs.Path(path, rel)
-  }
-
-  /** The `_BUCKETS` marker riding INSIDE a postings root — the bucket
-    * count its rows are ACTUALLY partitioned by. Absent on pre-marker
-    * roots: callers fall back to the meta value, frozen-correct because
-    * growth is gated on every live root carrying a marker. */
-  private def readRootBuckets(
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Option[Int] = {
-    val m = new org.apache.hadoop.fs.Path(root, "_BUCKETS")
-    if (!fs.exists(m)) None
-    else scala.util.Try(graft.core.Segments.readSmall(fs, m).trim.toInt)
-      .toOption.filter(_ > 0)
-  }
-
-  private def writeRootBuckets(
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path, p: Int): Unit = {
-    val out = fs.create(new org.apache.hadoop.fs.Path(root, "_BUCKETS"), true)
-    try out.write(p.toString.getBytes("UTF-8")) finally out.close()
-  }
+  private def basePostingsRoot(fs: FileSystem, path: String): Path =
+    new Path(path, PostingsGens.current(fs, new Path(path)))
 
   /** The OPERATIVE bucket count: the current base root's marker when
     * present (a re-bucket may have outgrown the build-time meta value),
     * else meta. */
   private def effectiveBuckets(
       spark: org.apache.spark.sql.SparkSession, path: String): Int = {
-    val fs = graft.core.Segments.fs(spark, path)
-    readRootBuckets(fs, basePostingsRoot(fs, path))
+    val fs = SegmentLog.fs(spark, path)
+    SegmentLog.readBuckets(fs, basePostingsRoot(fs, path))
       .getOrElse(Parquet.read(spark, s"$path/meta").head().getInt(2))
   }
 
@@ -425,9 +401,9 @@ object Search {
     // it past the build-time meta value). Direct appends share the
     // maintenance contract with the band stores: they must not race the
     // fold/compaction slot (streaming deployments use segments instead).
-    val fs = graft.core.Segments.fs(spark, path)
+    val fs = SegmentLog.fs(spark, path)
     val root = basePostingsRoot(fs, path)
-    val buckets = readRootBuckets(fs, root).getOrElse(meta.getInt(2))
+    val buckets = SegmentLog.readBuckets(fs, root).getOrElse(meta.getInt(2))
     val bm = Stage.scope { s =>
       val batch = s(postingsRows(newDocs, buckets, idCol, textCol))
       batch.repartition(col("pb"))
@@ -462,12 +438,12 @@ object Search {
     // id-type-generic, and a long cast would null out string ids — turning
     // the takedown into a silent no-op
     val ids = removedIds.select(col(idCol).as("doc_id")).distinct()
-    val fs = graft.core.Segments.fs(spark, path)
+    val fs = SegmentLog.fs(spark, path)
     // data-less roots (empty-seeded base, zero-doc segments) can't be
     // schema-inferred — and hold nothing to tombstone anyway
     val roots = (basePostingsRoot(fs, path).toString
       +: liveSegments(spark, path).map(_ + "/postings"))
-      .filter(r => hasDataFiles(fs, new org.apache.hadoop.fs.Path(r)))
+      .filter(r => SegmentLog.hasData(fs, new Path(r)))
     if (roots.isEmpty) return 0L
     Stage.scope { s =>
       val batch = s(roots
@@ -480,37 +456,13 @@ object Search {
   }
 
   /** The live STREAMED segments of a text index — the replay-idempotent
-    * append form ([[writePostingsSegment]]): a segment is visible iff both
-    * its postings tree and its `segmeta` committed (`segmeta` is written
-    * last, so it is the commit point; a crash mid-write leaves the segment
-    * invisible and the replay overwrites it whole), filtered through the
-    * FOLD-MARKER protocol ([[foldTextSegments]] — the
-    * [[graft.operators.Dedup.foldDocSegments]] discipline): segments a
-    * committed `_folded/<compact>` marker names are superseded by that
-    * compact segment, which itself is visible only through its marker; a
-    * crash-replayed batch that rewrites an already-folded segment stays
-    * excluded (its rows live in the compact segment). */
-  private def liveSegments(
-      spark: org.apache.spark.sql.SparkSession, path: String): Seq[String] = {
-    val root = new org.apache.hadoop.fs.Path(s"$path/segs")
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) Nil
-    else {
-      val markers = graft.core.Segments.readMarkers(
-        fs, new org.apache.hadoop.fs.Path(path))
-      val folded = markers.values.flatten.toSet
-      fs.listStatus(root).filter(_.isDirectory).map(_.getPath)
-        .filter { d =>
-          val name = d.getName
-          !folded(name) &&
-            (if (name.startsWith("compact_")) markers.contains(name)
-             else
-               fs.exists(new org.apache.hadoop.fs.Path(d, "postings/_SUCCESS")) &&
-                 fs.exists(new org.apache.hadoop.fs.Path(d, "segmeta/_SUCCESS")))
-        }
-        .map(_.toString).sorted.toSeq
-    }
-  }
+    * append form ([[writePostingsSegment]]) under the
+    * [[graft.core.SegmentLog.Text]] rule: a segment is visible iff both its
+    * postings tree and its `segmeta` committed (`segmeta` is written last,
+    * so it is the commit point; a crash mid-write leaves the segment
+    * invisible and the replay overwrites it whole). */
+  private def liveSegments(spark: org.apache.spark.sql.SparkSession, path: String): Seq[String] =
+    SegmentLog.Text.live(SegmentLog.fs(spark, path), new Path(path)).segments.map(_.dir.toString)
 
   /** Write a document batch's postings as a NAMED segment under
     * `segs/<segName>` with overwrite semantics plus its own stats row —
@@ -526,7 +478,7 @@ object Search {
       idCol: String = "doc_id",
       textCol: String = "text"): Long = {
     val spark = newDocs.sparkSession
-    val fs = graft.core.Segments.fs(spark, path)
+    val fs = SegmentLog.fs(spark, path)
     // the CURRENT operative P, recorded in the segment root's own
     // `_BUCKETS` marker — probes prune this root at the marker P, so a
     // later base re-bucket can never mis-filter these rows
@@ -543,7 +495,7 @@ object Search {
       else
         batch.repartition(col("pb"))
           .write.partitionBy("pb").mode("overwrite").parquet(segRoot)
-      writeRootBuckets(fs, new org.apache.hadoop.fs.Path(segRoot), buckets)
+      SegmentLog.writeBuckets(fs, new Path(segRoot), buckets)
       batch.select("doc_id", "dl").groupBy("doc_id").agg(max("dl").as("dl"))
         .agg(count(lit(1)), coalesce(sum("dl"), lit(0L))).head()
     }
@@ -555,15 +507,12 @@ object Search {
 
   /** Fold live streamed segments into ONE compact segment and grow the
     * base root's bucket count when outgrown — SAFE BESIDE a running
-    * [[graft.streaming.Ingest.startTextIndexIngest]], the text-index
-    * analogue of [[graft.operators.Dedup.foldDocSegments]]: the folded
-    * postings land invisibly and become the view in one atomic
-    * fold-marker rename ([[liveSegments]]' protocol); a
-    * concurrently-appended segment (not in the fold snapshot) stays live
-    * untouched, and a crash before the marker leaves the old view fully
-    * intact. The base root and tombstones are NOT touched (that full fold
-    * is [[compactTextIndex]], stop-the-world) — this bounds the per-query
-    * listing + segmeta cost of a week-long ingest at O(1) segments.
+    * [[graft.streaming.Ingest.startTextIndexIngest]] under the
+    * [[graft.core.SegmentLog]] fold, the compact `segmeta` summing the
+    * folded stats rows. The base root and tombstones are NOT touched (that
+    * full fold is [[compactTextIndex]], stop-the-world) — this bounds the
+    * per-query listing + segmeta cost of a week-long ingest at O(1)
+    * segments.
     *
     * GROWTH rides the same slot, BEFORE the fold (so this fold's compact
     * segment lands at the new P): when the auto bucket count sized off
@@ -583,17 +532,18 @@ object Search {
   def foldTextSegments(
       spark: org.apache.spark.sql.SparkSession, path: String,
       gc: Boolean = true): Unit = {
-    val fs = graft.core.Segments.fs(spark, path)
+    val (fs, root) = (SegmentLog.fs(spark, path), new Path(path))
     val base = basePostingsRoot(fs, path)
-    val segs = liveSegments(spark, path)
+    val live = SegmentLog.Text.live(fs, root).segments
+    val segs = live.map(_.dir.toString)
     // ---- growth (before the fold; footer counts only) ----
     if (fs.exists(base)) {
       val eff = effectiveBuckets(spark, path)
       val roots = base.toString +: segs.map(_ + "/postings")
-      val liveRows = roots.map(r => postingsCount(spark, fs, r)).sum
+      val liveRows = roots.map(r => SegmentLog.rowCount(spark, fs, new Path(r))).sum
       val auto = autoPostingsBuckets(liveRows)
-      val allMarked = segs.forall(s => readRootBuckets(
-        fs, new org.apache.hadoop.fs.Path(s"$s/postings")).isDefined)
+      val allMarked = segs.forall(s => SegmentLog.readBuckets(
+        fs, new Path(s"$s/postings")).isDefined)
       if (auto >= 2 * eff && allMarked) {
         // an empty-seeded pure-streaming store has a DATA-LESS base root
         // (build over zero rows writes only _SUCCESS) — reading it for the
@@ -602,29 +552,28 @@ object Search {
         // operative P still grows, so this fold's compact segment (and
         // every segment after it) lands at the new P.
         val baseRows =
-          if (hasDataFiles(fs, base)) Some(Parquet.read(spark, base.toString))
+          if (SegmentLog.hasData(fs, base)) Some(Parquet.read(spark, base.toString))
           else None
-        publishPostingsGen(spark, fs, path, baseRows, auto)
+        publishPostingsGen(fs, path, baseRows, auto)
       }
     }
-    // ---- fold (marker protocol, [[foldDocSegments]]'s shape) ----
-    if (segs.size > 1) {
-      val name = s"compact_${java.util.UUID.randomUUID().toString.take(12)}"
+    // ---- fold ([[graft.core.SegmentLog.fold]]) ----
+    if (segs.size > 1) SegmentLog.Text.fold(fs, root, live) { dir =>
       val p = effectiveBuckets(spark, path)
-      val foldRows = segs.map(s => postingsCount(spark, fs, s + "/postings")).sum
+      val foldRows = segs.map(s => SegmentLog.rowCount(spark, fs, new Path(s + "/postings"))).sum
       // recompute pb at the CURRENT operative P: folded segments may have
       // been written at different P's, and pb is a pure function of tok
       val folded = segs.map(s => Parquet.read(spark, s + "/postings"))
         .reduce(_ unionByName _)
         .withColumn("pb", pmod(xxhash64(col("tok")), lit(p.toLong)).cast("int"))
-      val segRoot = s"$path/segs/$name/postings"
+      val segRoot = s"$dir/postings"
       if (foldRows / math.max(1, p) < MinPostingsFileRows)
         folded.coalesce(1).sortWithinPartitions("pb")
           .write.mode("overwrite").parquet(segRoot)
       else
         folded.repartition(col("pb"))
           .write.partitionBy("pb").mode("overwrite").parquet(segRoot)
-      writeRootBuckets(fs, new org.apache.hadoop.fs.Path(segRoot), p)
+      SegmentLog.writeBuckets(fs, new Path(segRoot), p)
       // compact segmeta = the exact sum of the folded stats rows
       val (n, sd) = segs.foldLeft((0L, 0L)) { case ((a, d), s) =>
         val r = Parquet.read(spark, s"$s/segmeta").head()
@@ -632,137 +581,36 @@ object Search {
       }
       import spark.implicits._
       Seq((n, sd)).toDF("n_docs", "sum_dl")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/segs/$name/segmeta")
-      graft.core.Segments.writeAtomic(fs, graft.core.Segments.conf(spark),
-        new org.apache.hadoop.fs.Path(s"$path/_folded/$name"),
-        segs.map(s => new org.apache.hadoop.fs.Path(s).getName).mkString("\n"))
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/segmeta")
     }
     if (gc) { gcTextIndex(spark, path); () }
   }
 
-  /** One postings root as (doc_id, tok, tf, dl), pruned to `hit` buckets:
-    * a partitioned root reads ONLY the hit `pb=` subdirectories (path
-    * construction, one listing — never a per-bucket re-list); a flat root
-    * (small segments below the file floor) reads whole with a pushed pb
-    * row filter. None = nothing to read. The term `tok IN` filter rides
-    * every read as a rowgroup filter. */
-  private def readPostingsRoot(
-      spark: org.apache.spark.sql.SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: String, hit: Seq[Int], termList: Seq[String]): Option[DataFrame] = {
-    val proj = Seq("doc_id", "tok", "tf", "dl").map(col)
-    val tokIn = col("tok").isin(termList: _*)
-    val parts = graft.core.Segments.listDirs(fs, new org.apache.hadoop.fs.Path(root))
-      .map(_.getName).filter(_.startsWith("pb="))
-    if (parts.nonEmpty) {
-      val present = parts.map(_.stripPrefix("pb=").toInt).toSet
-      val dirs = hit.filter(present).map(b => s"$root/pb=$b")
-      if (dirs.isEmpty) None
-      else Some(Parquet.read(spark, dirs: _*).filter(tokIn).select(proj: _*))
-    } else {
-      val hasData = graft.core.Segments
-        .listFiles(fs, new org.apache.hadoop.fs.Path(root))
-        .exists(_.getName.endsWith(".parquet"))
-      if (!hasData) None
-      else Some(Parquet.read(spark, root)
-        .filter(col("pb").isin(hit: _*) && tokIn).select(proj: _*))
-    }
-  }
-
-  /** True iff the tree under `root` holds any parquet DATA file. An index
-    * built (or a generation published) over zero rows writes only
-    * `_SUCCESS` — `partitionBy` of an empty frame emits no part files —
-    * and schema inference over such a root THROWS, so every raw
-    * parquet read of a postings root gates on this (the
-    * `bandTreeCount` no-data-files guard, [[graft.operators.Dedup]]). */
-  private def hasDataFiles(
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Boolean = {
-    if (!fs.exists(root)) return false
-    var hasData = false
-    val it = fs.listFiles(root, true)
-    while (!hasData && it.hasNext)
-      hasData = it.next().getPath.getName.endsWith(".parquet")
-    hasData
-  }
-
-  /** Parquet-footer row count of a postings root; 0 when it holds no data
-    * files. */
-  private def postingsCount(
-      spark: org.apache.spark.sql.SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, root: String): Long = {
-    if (!hasDataFiles(fs, new org.apache.hadoop.fs.Path(root))) 0L
-    else Parquet.read(spark, root).count()
-  }
-
-  /** Publish a COMPLETE base postings tree as a new generation behind the
-    * `_POSTINGS` pointer — marker before rows, pointer flip (atomic
-    * rename) as the commit point; a crash before the flip leaves an
-    * unreferenced generation the sweep collects. The
-    * [[graft.operators.Dedup]] `publishBandTree` discipline. */
+  /** Publish a COMPLETE base postings tree as a new generation
+    * ([[PostingsGens]]) — marker before rows, pointer flip as the commit
+    * point. `None` publishes an EMPTY generation (marker only, no data
+    * files): the empty-seeded pure-streaming store's growth path — the
+    * operative P still moves, and every reader already tolerates data-less
+    * roots. */
   private def publishPostingsGen(
-      spark: org.apache.spark.sql.SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem,
-      path: String, rows: Option[DataFrame], p: Int): Unit = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val nextGen = 1 + graft.core.Segments.listDirs(fs, root).map(_.getName)
-      .filter(_.startsWith("postings_v"))
-      .flatMap(n => scala.util.Try(n.stripPrefix("postings_v").toInt).toOption)
-      .foldLeft(0)(math.max)
-    val gen = s"postings_v$nextGen"
-    val dir = new org.apache.hadoop.fs.Path(root, gen)
-    if (fs.exists(dir)) fs.delete(dir, true)
-    fs.mkdirs(dir)
-    writeRootBuckets(fs, dir, p)
-    // `None` publishes an EMPTY generation (marker only, no data files):
-    // the empty-seeded pure-streaming store's growth path — the operative
-    // P still moves, and every reader already tolerates data-less roots
-    rows.foreach(_
-      .withColumn("pb", pmod(xxhash64(col("tok")), lit(p.toLong)).cast("int"))
-      .repartition(col("pb"))
-      .write.mode("append").partitionBy("pb").parquet(dir.toString))
-    graft.core.Segments.writeAtomic(fs, graft.core.Segments.conf(spark),
-      new org.apache.hadoop.fs.Path(root, PostingsPointer), gen)
-  }
+      fs: FileSystem, path: String, rows: Option[DataFrame], p: Int): Unit =
+    PostingsGens.publish(fs, new Path(path)) { dir =>
+      SegmentLog.writeBuckets(fs, dir, p)
+      rows.foreach(_
+        .withColumn("pb", pmod(xxhash64(col("tok")), lit(p.toLong)).cast("int"))
+        .repartition(col("pb"))
+        .write.mode("append").partitionBy("pb").parquet(dir.toString))
+    }
 
-  /** Delete a text index's folded (superseded) segment directories, fold
-    * markers whose compact segment is itself gone, orphaned uncommitted
-    * `compact_*` directories from a crashed fold, and base generations the
-    * `_POSTINGS` pointer no longer references. Run from the maintenance
-    * actor only, after readers that planned before the last fold
-    * marker/pointer flip have drained ([[graft.operators.Dedup.gcDocIndex]]'s
-    * contract). Returns directories removed. */
-  def gcTextIndex(
-      spark: org.apache.spark.sql.SparkSession, path: String): Long = {
-    val fs = graft.core.Segments.fs(spark, path)
-    val root = new org.apache.hadoop.fs.Path(path)
-    val markers = graft.core.Segments.readMarkers(fs, root)
-    val folded = markers.values.flatten.toSet
-    var removed = 0L
-    val segsDir = new org.apache.hadoop.fs.Path(s"$path/segs")
-    graft.core.Segments.listDirs(fs, segsDir).foreach { d =>
-      val name = d.getName
-      val committedCompact = name.startsWith("compact_") && markers.contains(name)
-      if (folded(name) || (name.startsWith("compact_") && !committedCompact)) {
-        fs.delete(d, true); removed += 1
-      }
-    }
-    // markers whose compact segment is gone are spent; markers whose
-    // compact is live must OUTLIVE gc (they keep replayed rewrites of
-    // folded names excluded)
-    markers.keys.foreach { m =>
-      if (!fs.exists(new org.apache.hadoop.fs.Path(segsDir, m))) {
-        fs.delete(new org.apache.hadoop.fs.Path(s"$path/_folded/$m"), false)
-        removed += 1
-      }
-    }
-    val current = basePostingsRoot(fs, path).getName
-    graft.core.Segments.listDirs(fs, root).map(_.getName)
-      .filter(n => (n.startsWith("postings_v") || n == "postings") && n != current)
-      .foreach { n =>
-        fs.delete(new org.apache.hadoop.fs.Path(root, n), true); removed += 1
-      }
-    removed
+  /** [[graft.core.SegmentLog.gc]] of a text index, plus the base
+    * generations the `_POSTINGS` pointer no longer references. Run from
+    * the maintenance actor only, after readers that planned before the
+    * last fold marker or pointer flip have drained
+    * ([[graft.operators.Dedup.gcDocIndex]]'s contract). Returns
+    * directories removed. */
+  def gcTextIndex(spark: org.apache.spark.sql.SparkSession, path: String): Long = {
+    val (fs, root) = (SegmentLog.fs(spark, path), new Path(path))
+    SegmentLog.Text.gc(fs, root)() + PostingsGens.sweep(fs, root)
   }
 
   /** Fold streamed segments AND tombstones into the base postings: one
@@ -773,32 +621,31 @@ object Search {
     * STOP-THE-WORLD for this index (rewrites `postings/` in place, the
     * [[Ivf.compactIndexSegments]] contract). */
   def compactTextIndex(spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (fs, root) = (SegmentLog.fs(spark, path), new Path(path))
     // finish a crashed legacy stage-then-swap before anything else
     // (pre-generation indexes compacted in place; generation publishes
     // have no such window)
-    graft.core.Segments.healSwap(fs,
-      new org.apache.hadoop.fs.Path(s"$path/postings_staging"),
-      new org.apache.hadoop.fs.Path(s"$path/postings"))
-    val tombsDir = new org.apache.hadoop.fs.Path(s"$path/tombs")
+    SegmentLog.healSwap(fs,
+      new Path(s"$path/postings_staging"),
+      new Path(s"$path/postings"))
+    val tombsDir = new Path(s"$path/tombs")
     val segs = liveSegments(spark, path)
     val base = basePostingsRoot(fs, path)
     // GROW-ONLY RE-BUCKET rides the compaction: when live postings have
     // outgrown the operative P (auto >= 2x — per-bucket rows doubled),
     // the folded tree lands at the new auto P; stop-the-world, so no
     // marker gate is needed — every root is retired here
-    val eff = readRootBuckets(fs, base)
+    val eff = SegmentLog.readBuckets(fs, base)
       .getOrElse(Parquet.read(spark, s"$path/meta").head().getInt(2))
     val liveRows = (base.toString +: segs.map(_ + "/postings"))
-      .map(r => postingsCount(spark, fs, r)).sum
+      .map(r => SegmentLog.rowCount(spark, fs, new Path(r))).sum
     val auto = autoPostingsBuckets(liveRows)
     val grown = auto >= 2 * eff
     if (!fs.exists(tombsDir) && segs.isEmpty && !grown) return
     // data-less roots (empty-seeded base, zero-doc segments) can't be
     // schema-inferred; fold only the roots that hold rows
     val dataRoots = (base.toString +: segs.map(_ + "/postings"))
-      .filter(r => hasDataFiles(fs, new org.apache.hadoop.fs.Path(r)))
+      .filter(r => SegmentLog.hasData(fs, new Path(r)))
     val live = if (dataRoots.isEmpty) None else {
       val raw = dataRoots
         .map(Parquet.read(spark, _)).reduce(_ unionByName _)
@@ -815,7 +662,7 @@ object Search {
     // point): a crash at any point leaves a complete referenced tree on
     // disk — the old one before the flip, the new one after
     val newP = if (grown) auto else eff
-    publishPostingsGen(spark, fs, path, live, newP)
+    publishPostingsGen(fs, path, live, newP)
     // the recounted meta lands BEFORE the segment/tombstone deletes: a
     // crash in between leaves readers double-counting segment stats until
     // the rerun (which re-folds through the dedupe and re-deletes), but
@@ -828,7 +675,7 @@ object Search {
     // generation — recount as zeros rather than schema-inferring it.
     val newRoot = basePostingsRoot(fs, path)
     val (nDocs, sumDl) =
-      if (!hasDataFiles(fs, newRoot)) (0L, 0L)
+      if (!SegmentLog.hasData(fs, newRoot)) (0L, 0L)
       else {
         val m = Parquet.read(spark, newRoot.toString)
           .select("doc_id", "dl").groupBy("doc_id").agg(max("dl").as("dl"))
@@ -838,19 +685,9 @@ object Search {
     import spark.implicits._
     Seq((nDocs, sumDl, newP)).toDF("n_docs", "sum_dl", "buckets")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-    val segsDir = new org.apache.hadoop.fs.Path(s"$path/segs")
-    if (fs.exists(segsDir)) { fs.delete(segsDir, true); () }
-    if (fs.exists(tombsDir)) { fs.delete(tombsDir, true); () }
-    val markerDir = new org.apache.hadoop.fs.Path(s"$path/_folded")
-    if (fs.exists(markerDir)) { fs.delete(markerDir, true); () }
+    SegmentLog.Text.retire(fs, root)
     // stop-the-world: superseded generations sweep drain-free
-    val current = basePostingsRoot(fs, path).getName
-    graft.core.Segments.listDirs(fs, new org.apache.hadoop.fs.Path(path))
-      .map(_.getName)
-      .filter(n => (n.startsWith("postings_v") || n == "postings") && n != current)
-      .foreach { n =>
-        fs.delete(new org.apache.hadoop.fs.Path(path, n), true); ()
-      }
+    PostingsGens.sweep(fs, root)
   }
 
   /** GetProperty-style health of a persisted text index (the
@@ -869,9 +706,9 @@ object Search {
       val r = Parquet.read(spark, s"$seg/segmeta").head()
       (a + r.getLong(0), d + r.getLong(1))
     }
-    val fs = new org.apache.hadoop.fs.Path(path)
+    val fs = new Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tombsDir = new org.apache.hadoop.fs.Path(s"$path/tombs")
+    val tombsDir = new Path(s"$path/tombs")
     val (tombN, tombDl) =
       if (!fs.exists(tombsDir)) (0L, 0L)
       else {
@@ -885,7 +722,7 @@ object Search {
     // schema-inferred and hold zero postings by definition
     val dataRoots = (basePostingsRoot(fs, path).toString
       +: segs.map(_ + "/postings"))
-      .filter(r => hasDataFiles(fs, new org.apache.hadoop.fs.Path(r)))
+      .filter(r => SegmentLog.hasData(fs, new Path(r)))
     val (nPostings, nTerms) =
       if (dataRoots.isEmpty) (0L, 0L)
       else {
@@ -943,9 +780,9 @@ object Search {
     }
     // tombstoned docs leave N/avgdl exactly as a rebuild-without-them
     // would: their length mass rides the tombstones (takedown-sized)
-    val fs = new org.apache.hadoop.fs.Path(path)
+    val fs = new Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tombsDir = new org.apache.hadoop.fs.Path(s"$path/tombs")
+    val tombsDir = new Path(s"$path/tombs")
     val tombs = if (fs.exists(tombsDir))
       // not checkpointed: the returned plan anti-joins this frame, so a
       // checkpoint block here would outlive the call (the r14 text-soak
@@ -976,11 +813,12 @@ object Search {
     // its own marker P
     val roots = basePostingsRoot(fs, path).toString +: segs.map(_ + "/postings")
     val views = roots.flatMap { r =>
-      val p = readRootBuckets(fs, new org.apache.hadoop.fs.Path(r))
+      val p = SegmentLog.readBuckets(fs, new Path(r))
         .getOrElse(metaBuckets).toLong
       val hit = termHashes.map(h => java.lang.Math.floorMod(h, p).toInt)
         .distinct.sorted.toSeq
-      readPostingsRoot(spark, fs, r, hit, termList)
+      SegmentLog.readPruned(spark, fs, r, "pb", Some(hit))
+        .map(_.filter(col("tok").isin(termList: _*)).select("doc_id", "tok", "tf", "dl"))
     }
     val raw =
       if (views.nonEmpty) views.reduce(_ unionByName _)
@@ -991,7 +829,7 @@ object Search {
       // cannot be schema-inferred); a store with docs but zero posting
       // rows (all-empty texts) falls back to an explicitly-typed frame —
       // it is empty, so the long id type is moot.
-      else roots.find(r => hasDataFiles(fs, new org.apache.hadoop.fs.Path(r))) match {
+      else roots.find(r => SegmentLog.hasData(fs, new Path(r))) match {
         case Some(r) => Parquet.read(spark, r)
           .filter(lit(false)).select("doc_id", "tok", "tf", "dl")
         case None =>

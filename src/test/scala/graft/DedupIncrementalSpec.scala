@@ -1734,7 +1734,7 @@ class DedupIncrementalSpec extends AnyFunSuite {
     // probe ran against the OLD corpus's band rows: pairing with deleted
     // docs and finding nothing against the new ones
     Dedup.writeSimHashIndex(newCorpus, s"$tmp/idx", sigBuckets = 0) // FLAT rebuild over the bucketed store
-    val fs = graft.core.Segments.fs(spark, tmp)
+    val fs = graft.core.SegmentLog.fs(spark, tmp)
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$tmp/idx/meta")),
       "a flat rebuild must retract the stale bucketed meta")
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$tmp/idx/bands")),
@@ -1764,7 +1764,7 @@ class DedupIncrementalSpec extends AnyFunSuite {
     // buckets, so the probe takes the bucketed path (the path under test)
     Dedup.writeSimHashIndex(corpus, s"$tmp/bkt", maxHamming = 6, comboSize = 2,
       sigBuckets = 2048)
-    val fs = graft.core.Segments.fs(spark, tmp)
+    val fs = graft.core.SegmentLog.fs(spark, tmp)
     val bands = new org.apache.hadoop.fs.Path(s"$tmp/bkt/bands")
     val staging = new org.apache.hadoop.fs.Path(s"$tmp/bkt/bands_staging")
     def tri(df: DataFrame) =
@@ -1829,7 +1829,7 @@ class DedupIncrementalSpec extends AnyFunSuite {
     val tmp = java.nio.file.Files.createTempDirectory("graft_sgappendheal_").toString
     Dedup.writeSimHashIndex(corpus, s"$tmp/idx", maxHamming = 6, comboSize = 2,
       sigBuckets = 2048)
-    val fs = graft.core.Segments.fs(spark, tmp)
+    val fs = graft.core.SegmentLog.fs(spark, tmp)
     val bands = new org.apache.hadoop.fs.Path(s"$tmp/idx/bands")
     val staging = new org.apache.hadoop.fs.Path(s"$tmp/idx/bands_staging")
     val baseText = corpus.filter(col("doc_id") === 7).select("text").head().getString(0)
@@ -1888,7 +1888,7 @@ class DedupIncrementalSpec extends AnyFunSuite {
     graft.core.Stage.free(segSigs)
     Dedup.deleteFromDocIndex(Seq(150L).toDF("doc_id"), idx)
     Dedup.writeSimHashIndex(newCorpus, idx)
-    val fs = graft.core.Segments.fs(spark, tmp)
+    val fs = graft.core.SegmentLog.fs(spark, tmp)
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$idx/segs")),
       "rebuild retracts the old corpus's live segments")
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$idx/tombs")),
@@ -1917,14 +1917,13 @@ class DedupIncrementalSpec extends AnyFunSuite {
     val tmp = java.nio.file.Files.createTempDirectory("graft_sgnoop_").toString
     val idx = s"$tmp/idx"
     Dedup.writeSimHashIndex(corpus, idx, maxHamming = 6, comboSize = 2, sigBuckets = 256)
-    val fs = graft.core.Segments.fs(spark, tmp)
-    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = graft.core.SegmentLog.fs(spark, tmp)
     // a stale fold marker with segs/ gone is a hazard (it would HIDE a
     // future segment reusing the name) — the no-op path must sweep it
-    graft.core.Segments.writeAtomic(fs, conf,
+    graft.core.SegmentLog.writeAtomic(fs,
       new org.apache.hadoop.fs.Path(s"$idx/_folded/stale_marker"), "batch_00000\n")
     def tree(dir: String): Set[(String, Long, Long)] =
-      graft.core.Segments.listFiles(fs, new org.apache.hadoop.fs.Path(s"$idx/$dir"))
+      graft.core.SegmentLog.listFiles(fs, new org.apache.hadoop.fs.Path(s"$idx/$dir"))
         .map { p =>
           val s = fs.getFileStatus(p); (p.getName, s.getLen, s.getModificationTime)
         }.toSet

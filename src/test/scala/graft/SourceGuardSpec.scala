@@ -8,7 +8,8 @@ import scala.util.matching.Regex
 
 /** Source rules for the engine under `src/main/scala` (`tools/` exempt):
   * every parquet read goes through `graft.core.Parquet`, every eager
-  * checkpoint through `graft.core.Stage`. Each pattern is first checked
+  * checkpoint through `graft.core.Stage`, and only `graft.core.SegmentLog`
+  * names the segment protocol's files. Each pattern is first checked
   * against snippets it must and must not match. */
 class SourceGuardSpec extends AnyFunSuite {
   private val main = Paths.get("src/main/scala")
@@ -68,5 +69,20 @@ class SourceGuardSpec extends AnyFunSuite {
       Seq("val nBlocks = 3", "minHashBuildingBlocks", "skipSubBlocks(b, pos)", "Stage.free(df)"))
     val bad = offenders(BlocksRef, main, Set.empty)
     assert(bad.isEmpty, bad.mkString("free through Stage: ", ", ", ""))
+  }
+
+  /** A segment-protocol file or directory name inside a string: the fold
+    * markers, the `_SEQ` commit mark, the `_BUCKETS` marker, or a compact
+    * segment name. */
+  private val ProtocolLiteral = """(?:"|/)(?:_folded|_SEQ|_BUCKETS)(?:"|/)|"compact_""".r
+
+  test("engine sources name the segment protocol's files only in graft.core.SegmentLog (tools/ exempt)") {
+    selfCheck(ProtocolLiteral,
+      Seq("new Path(root, \"_folded\")", "s\"$path/_folded/$name\"", "new Path(dir, \"_SEQ\")",
+        "s\"$root/_BUCKETS\"", "\"_BUCKETS\"", "s\"compact_${uuid}\"", "name.startsWith(\"compact_\")"),
+      Seq("// under `_folded/` commits", "SegmentLog.isCompact(name)", "the `_SEQ` sidecar",
+        "\"_BANDS\"", "s\"$path/segs/$name\"", "`segs/compact_*`", "\"_SUCCESS\""))
+    val bad = offenders(ProtocolLiteral, graftRoot, Set(graftRoot.resolve("core/SegmentLog.scala")))
+    assert(bad.isEmpty, bad.mkString("name protocol files through SegmentLog: ", ", ", ""))
   }
 }
