@@ -396,7 +396,7 @@ final class Graft(val spark: SparkSession, val dir: String) {
     Dedup.compactExactIndex(spark, path, gc)
 
   /** Delete folded (superseded) dedup-index segments left by a
-    * `gc = false` compaction. */
+    * `gc = false` compaction. Returns every directory removed. */
   def gcDedupIndex(path: String): Long =
     Dedup.gcExactIndex(spark, path)
 
@@ -510,8 +510,9 @@ final class Graft(val spark: SparkSession, val dir: String) {
   def foldDocSegments(path: String, gc: Boolean = true): Unit =
     Dedup.foldDocSegments(spark, path, gc)
 
-  /** Delete a doc index's folded segment directories and stale fold
-    * markers after concurrent readers have drained. */
+  /** Delete a doc index's folded segment directories, their band twins,
+    * stale fold markers and superseded band generations after concurrent
+    * readers have drained. Returns every directory removed. */
   def gcDocIndex(path: String): Long =
     Dedup.gcDocIndex(spark, path)
 
@@ -742,8 +743,8 @@ final class Graft(val spark: SparkSession, val dir: String) {
     Ivf.foldIndexSegments(spark, path, gc)
 
   /** Sweep a vector index's folded/absorbed segment directories and
-    * superseded generations once readers have drained. Returns
-    * directories removed. */
+    * superseded generations once readers have drained. Returns every
+    * directory removed. */
   def gcVectorIndexSegments(path: String): Long =
     Ivf.gcIndexSegments(spark, path)
 
@@ -952,7 +953,8 @@ final class Graft(val spark: SparkSession, val dir: String) {
     operators.Search.foldTextSegments(spark, path, gc)
 
   /** Delete a text index's folded segment directories, spent fold
-    * markers, and superseded base generations (run after readers drain). */
+    * markers, and superseded base generations (run after readers drain).
+    * Returns every directory removed. */
   def gcTextIndex(path: String): Long =
     operators.Search.gcTextIndex(spark, path)
 
@@ -1020,8 +1022,8 @@ final class Graft(val spark: SparkSession, val dir: String) {
     * the engine can't decode silently skip content dedup" into a number.
     * Image content decode covers PNG, BMP, JPEG (baseline + progressive),
     * GIF (first frame), and lossless WebP (VP8L, all four transforms);
-    * audio covers 8/16-bit PCM WAV. Everything else
-    * (lossy-VP8 WebP, MP3/AAC/FLAC, compressed/float WAV, arithmetic
+    * audio covers PCM, G.711 and IMA-ADPCM WAV, FLAC and AIFF. Everything
+    * else (lossy-VP8 WebP, MP3/AAC, float WAV, arithmetic
     * or 12-bit JPEG, palette/interlaced PNG) reports `decodable = false`
     * and skips dedup; watch the ratio before trusting a corpus's dedup
     * coverage. Per-row form: [[Multimodal.decodeStatus]]. */

@@ -126,16 +126,17 @@ private[graft] final case class SegmentLog(dirs: Seq[String], marks: Seq[String]
 
   /** Delete folded directories (and `retired` ones), markers whose compact
     * segment is gone, and uncommitted `compact_*` directories. `twin` runs
-    * with the name of every folded or orphaned segment, present or not.
-    * Returns directories removed. */
+    * with the name of every folded or orphaned segment, present or not,
+    * and returns the directories it removed. Returns every directory
+    * removed: the segments' and their twins'. */
   def gc(fs: FileSystem, root: Path, retired: Set[String] = Set.empty)(
-      twin: String => Unit = _ => ()): Long = {
+      twin: String => Long = _ => 0L): Long = {
     val markers = readMarkers(fs, root)
     val home = new Path(root, dirs.head)
     var removed = 0L
     def drop(d: Path): Unit = {
       if (fs.delete(d, true)) removed += 1
-      twin(d.getName)
+      removed += twin(d.getName)
     }
     (markers.values.flatten.toSet ++ retired).foreach(r => drop(dirOf(root, r)))
     markers.keys.foreach { name =>
@@ -303,8 +304,8 @@ private[graft] object SegmentLog {
   def fs(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Atomic small-file publish: temp write + rename-overwrite (the mark
-    * protocol of [[graft.streaming.Ingest.Marks]]). */
+  /** Atomic small-file publish: temp write + rename-overwrite. The ingest
+    * batch marks ([[graft.streaming.Ingest.Marks]]) publish through it. */
   def writeAtomic(fs: FileSystem, dst: Path, content: String): Unit = {
     fs.mkdirs(dst.getParent)
     val tmp = new Path(dst.getParent, s".${dst.getName}.tmp")

@@ -388,9 +388,11 @@ object Dedup {
   }
 
   /** [[graft.core.SegmentLog.gc]] of the exact index or span catalog.
-    * Returns directories removed. Run from the maintenance actor only
-    * (never concurrently with a running [[compactExactIndex]]), after
-    * readers that planned before the last fold marker have drained. */
+    * Returns every directory removed: folded key and tombstone segments
+    * and orphaned compacts (the store has no twins or generations). Run
+    * from the maintenance actor only (never concurrently with a running
+    * [[compactExactIndex]]), after readers that planned before the last
+    * fold marker have drained. */
   def gcExactIndex(spark: SparkSession, path: String): Long =
     SegmentLog.Sequenced.gc(SegmentLog.fs(spark, path), new Path(path))()
 
@@ -1750,7 +1752,9 @@ object Dedup {
     * and the superseded base band generations. Same contract as
     * [[gcExactIndex]]: run from the maintenance actor only, after readers
     * that planned before the last fold marker or pointer flip have
-    * drained. Returns segment directories removed. */
+    * drained. Returns every directory removed: segments, their
+    * `bandsegs/` twins, unreachable compact band segments and band
+    * generations. */
   def gcDocIndex(spark: SparkSession, indexPath: String): Long = {
     val (fs, root) = (SegmentLog.fs(spark, indexPath), new Path(indexPath))
     // a doc segment's band twin (bucketed indexes) shares its name and its
@@ -1760,18 +1764,17 @@ object Dedup {
     // overwrite (deleting one concurrently with the ingest would lose the
     // replayed batch's band rows).
     val removed = SegmentLog.Docs.gc(fs, root)(name =>
-      fs.delete(new Path(root, s"bandsegs/$name"), true))
+      if (fs.delete(new Path(root, s"bandsegs/$name"), true)) 1L else 0L)
     // a compact band segment whose doc twin never committed (crash between
     // the band fold and the doc fold) is unreachable — sweep it
-    SegmentLog.listDirs(fs, new Path(root, "bandsegs")).foreach { d =>
-      if (SegmentLog.isCompact(d.getName) && !fs.exists(new Path(root, s"segs/${d.getName}")))
+    val unreachable = SegmentLog.listDirs(fs, new Path(root, "bandsegs")).count { d =>
+      SegmentLog.isCompact(d.getName) && !fs.exists(new Path(root, s"segs/${d.getName}")) &&
         fs.delete(d, true)
     }
     // superseded base band GENERATIONS and crashed unreferenced publishes:
     // GC is the drain-safe slot, so they sweep here alongside the folded
     // segment dirs
-    BandGens.sweep(fs, root)
-    removed
+    removed + unreachable + BandGens.sweep(fs, root)
   }
 
   /** Write already-signed rows ([[minHashBatchSigs]] output, possibly

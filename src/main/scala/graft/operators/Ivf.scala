@@ -684,7 +684,8 @@ object Ivf {
     * superseded generations — the [[graft.operators.Dedup.gcDocIndex]]
     * contract: run from the maintenance actor only, after readers that
     * planned before the last fold marker or pointer flip have drained.
-    * Returns directories removed. */
+    * Returns every directory removed: folded, retired and orphaned
+    * segments, superseded generations and the legacy root trees. */
   def gcIndexSegments(spark: org.apache.spark.sql.SparkSession, path: String): Long = {
     val (fs, root) = (SegmentLog.fs(spark, path), new Path(path))
     val curGen = genNameOf(fs, path)

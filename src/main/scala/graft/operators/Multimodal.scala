@@ -68,7 +68,8 @@ object Multimodal {
     * truncated input yields `unknown` with zeroed metadata — never throws.
     * Formats per their public specs: PNG (RFC 2083), GIF89a (W3C), BMP
     * (BITMAPINFOHEADER), WAV (RIFF), JPEG (ITU T.81 segment markers),
-    * MP4/ISO-BMFF (ISO/IEC 14496-12 box walk).
+    * MP4/ISO-BMFF (ISO/IEC 14496-12 box walk), MP3 (ISO/IEC 11172-3
+    * frame walk).
     */
   object ContainerParser {
     final case class Meta(format: String, width: Int, height: Int, nFrames: Int, durationMs: Long)
@@ -96,20 +97,62 @@ object Multimodal {
         else if (b.length >= 42 && be32(b, 0) == 0x664c6143) parseFlac(b) // "fLaC"
         else if (b.length >= 4 && u8(b, 0) == 0xff && u8(b, 1) == 0xd8) parseJpeg(b)
         else if (b.length >= 12 && be32(b, 4) == 0x66747970) parseMp4(b) // "ftyp"
-        else if (Mp3.header(b, Mp3.skipId3(b)).isDefined) parseMp3Audio(b)
-        else Unknown
+        else parseMp3Audio(b)
       } catch { case _: ArrayIndexOutOfBoundsException => Unknown }
+
+    /** An MPEG-1 Layer III frame header (ISO/IEC 11172-3): what the frame
+      * walk needs to step to the next frame. */
+    private final case class Mp3Header(
+        bitrateKbps: Int, sampleRate: Int, padding: Int, channels: Int, crc: Boolean) {
+      def frameBytes: Int = 144 * bitrateKbps * 1000 / sampleRate + padding
+      def sideInfoBytes: Int = if (channels == 1) 17 else 32
+    }
+    private val Mp3Bitrates = Array(0, 32, 40, 48, 56, 64, 80, 96, 112, 128, 160, 192, 224, 256, 320)
+    private val Mp3SampleRates = Array(44100, 48000, 32000)
+
+    /** The MPEG-1 Layer III header at `off`; None if not one (free-format
+      * and reserved indexes included). */
+    private def mp3Header(b: Array[Byte], off: Int): Option[Mp3Header] = {
+      if (off + 4 > b.length) return None
+      val h1 = u8(b, off + 1); val h2 = u8(b, off + 2); val h3 = u8(b, off + 3)
+      if (u8(b, off) != 0xff || (h1 & 0xe0) != 0xe0) return None
+      if ((h1 & 0x18) != 0x18 || (h1 & 0x06) != 0x02) return None // MPEG-1 Layer III only
+      val brIdx = (h2 >> 4) & 0xf
+      val srIdx = (h2 >> 2) & 0x3
+      if (brIdx == 0 || brIdx == 15 || srIdx == 3) return None
+      Some(Mp3Header(Mp3Bitrates(brIdx), Mp3SampleRates(srIdx), (h2 >> 1) & 1,
+        if (((h3 >> 6) & 0x3) == 3) 1 else 2, (h1 & 1) == 0))
+    }
+
+    /** Skip a leading ID3v2 container if present (syncsafe size). */
+    private def skipId3(b: Array[Byte]): Int =
+      if (b.length >= 10 && b(0) == 'I' && b(1) == 'D' && b(2) == '3') {
+        val sz = ((b(6) & 0x7f) << 21) | ((b(7) & 0x7f) << 14) | ((b(8) & 0x7f) << 7) | (b(9) & 0x7f)
+        math.min(b.length, 10 + sz)
+      } else 0
+
+    /** True when the frame at `off` carries a Xing/Info tag after its side
+      * info: an encoder's metadata frame, not audio. */
+    private def xingInfo(b: Array[Byte], off: Int, h: Mp3Header): Boolean = {
+      val at = off + 4 + (if (h.crc) 2 else 0) + h.sideInfoBytes
+      at + 8 <= b.length && {
+        val tag = new String(b, at, 4, StandardCharsets.US_ASCII)
+        tag == "Xing" || tag == "Info"
+      }
+    }
 
     /** MPEG-1 Layer III: bounded frame walk counting audio frames (an
       * Info/Xing first frame is metadata, not audio); duration from the
-      * spec's 1152 samples/frame at the header rate. */
+      * spec's 1152 samples/frame at the header rate. Unknown when no frame
+      * header starts the stream. Samples are declared out of the decode
+      * matrix: only the container metadata is read. */
     private def parseMp3Audio(b: Array[Byte]): Meta = {
-      var off = Mp3.skipId3(b)
-      val h0 = Mp3.header(b, off).getOrElse(return Unknown)
-      if (Mp3.xingInfo(b, off, h0).isDefined) off += h0.frameBytes
+      var off = skipId3(b)
+      val h0 = mp3Header(b, off).getOrElse(return Unknown)
+      if (xingInfo(b, off, h0)) off += h0.frameBytes
       var frames = 0
       while (frames < 24000 && off + 4 <= b.length) {
-        Mp3.header(b, off) match {
+        mp3Header(b, off) match {
           case Some(h) if off + h.frameBytes <= b.length =>
             frames += 1
             off += h.frameBytes
@@ -3623,8 +3666,8 @@ object Multimodal {
     * CONTENT decoders can actually open the payload — image formats
     * through [[ImageDecoder]], `wav` through [[WavDecoder]]. A format the
     * engine recognizes but cannot pixel/sample-decode (interlaced PNG,
-    * arithmetic JPEG, compressed-audio RIFF, lossy-VP8 WebP, and the
-    * declared-out video codecs avc1/vp09/av01/mp4a) reports
+    * arithmetic JPEG, compressed-audio RIFF, lossy-VP8 WebP, MP3, and
+    * the declared-out video codecs avc1/vp09/av01/mp4a) reports
     * `decodable = false` — and the coding column turns that aggregated
     * share into PER-CODEC rows an operator can watch. Partition-parallel;
     * payload bytes never leave the executors. */
@@ -3639,7 +3682,6 @@ object Multimodal {
             case "wav" => WavDecoder.decode(payload).isDefined
             case "flac" => FlacDecoder.decode(payload).isDefined
             case "aiff" => AiffDecoder.decode(payload).isDefined
-            case "mp3" => Mp3.decode(payload).isDefined
             // MJPEG frames decode (both containers); H.264/VP9/AV1 etc.
             // report false — the skipped share a video corpus must watch.
             // Decodability needs ONE frame: bound slice DISCOVERY at 1 too
@@ -4075,15 +4117,21 @@ object Multimodal {
       "FORM".getBytes(StandardCharsets.US_ASCII) ++ be32(body.length) ++ body
     }
 
-    /** The same waveform as an MPEG-1 Layer III stream ([[Mp3.encode]]:
-      * mono 32 kHz 320 kbps long blocks, Info first frame with gapless
-      * delay/padding). The ONE lossy member of the rotation: the decoded
-      * samples approximate the waveform (quantizer-bound SNR), so its
-      * fingerprint matches the lossless twins within the Hamming dedup
-      * budget rather than bit-identically — MultimodalSpec measures and
-      * pins that closeness. */
-    def mp3(n: Int, seed: Long, noise: Int = 0, gain: Double = 1.0): Array[Byte] =
-      Mp3.encode(samples(n, seed, noise, gain))
+    /** A valid, SILENT MPEG-1 Layer III stream spanning `n` samples:
+      * ceil(n / 1152) mono frames at 32 kHz and 320 kbps, each a 4-byte
+      * header followed by zeroed side info and main data. MP3 is a
+      * recognized, declared-out format — [[ContainerParser]] reads its
+      * frame count and duration, no decoder opens its samples — so the
+      * rotation's MP3 slot carries the container and no waveform. */
+    def mp3(n: Int): Array[Byte] = {
+      val frameBytes = 144 * 320 * 1000 / 32000 // 1440, no padding
+      val frames = (n + 1151) / 1152
+      // 0xFFFB: MPEG-1 Layer III, no CRC; 0xE8: 320 kbps, 32 kHz; 0xC0: mono
+      val header = Array(0xff, 0xfb, 0xe8, 0xc0).map(_.toByte)
+      val b = new Array[Byte](frames * frameBytes)
+      (0 until frames).foreach(f => header.copyToArray(b, f * frameBytes))
+      b
+    }
   }
 
   /** Sample decode for RIFF/WAVE — the content-level step beyond
@@ -4538,7 +4586,7 @@ object Multimodal {
       case 4 | -4 => AudioGen.wavAdpcm(n, seed, noise)
       case 5 | -5 => AudioGen.flac(n, seed, noise)
       case 6 | -6 => AudioGen.aiff(n, seed, noise)
-      case _ => AudioGen.mp3(n, seed, noise)
+      case _ => AudioGen.mp3(n)
     })
 
   /** Attach a deterministic audio payload — the audio analogue of
@@ -4546,11 +4594,11 @@ object Multimodal {
     * noisy twins can be planted. Ids rotate the ENCODING/CONTAINER of
     * the same waveform — `id % 8`: 8-bit PCM, 16-bit PCM, G.711 µ-law,
     * G.711 A-law, IMA-ADPCM, FLAC, AIFF, MP3 — so sample-width,
-    * companding/block-compression, native-lossless, big-endian-container
-    * AND perceptual-lossy independence are part of what q30d exercises
-    * (an id-shifted twin generally lands in a different encoding than
-    * its original; the MP3 slot's twins must collapse within the Hamming
-    * budget, not bit-identically — it is the one lossy member). */
+    * companding/block-compression, native-lossless and big-endian-container
+    * independence are part of what q30d exercises (an id-shifted twin
+    * generally lands in a different encoding than its original). The MP3
+    * slot is a silent, declared-out stream ([[AudioGen.mp3]]): it counts
+    * in the decode matrix and yields no fingerprint. */
   def withAudioPayload(
       documents: DataFrame,
       idCol: String = "doc_id",
@@ -4646,14 +4694,14 @@ object Multimodal {
   }
 
   /** Audio sample dispatch: RIFF/WAVE families via [[WavDecoder]],
-    * native FLAC via [[FlacDecoder]], FORM/AIFF via [[AiffDecoder]],
-    * MPEG-1 Layer III via [[Mp3]] — one normalized mono [-1, 1] contract
-    * each way, so the fingerprint is encoding- AND container-blind. */
+    * native FLAC via [[FlacDecoder]], FORM/AIFF via [[AiffDecoder]] — one
+    * normalized mono [-1, 1] contract each way, so the fingerprint is
+    * encoding- AND container-blind. MP3 is declared out: its stream is no
+    * RIFF container, so [[WavDecoder]] refuses it with None. */
   private[graft] def decodeAudioSamples(b: Array[Byte]): Option[Array[Double]] =
     if (b.length >= 4 && b(0) == 'f' && b(1) == 'L' && b(2) == 'a' && b(3) == 'C')
       FlacDecoder.decode(b)
     else if (AiffDecoder.isAiff(b)) AiffDecoder.decode(b)
-    else if (Mp3.header(b, Mp3.skipId3(b)).isDefined) Mp3.decode(b)
     else WavDecoder.decode(b)
 
   def audioHashes(withPayload: DataFrame, idCol: String = "doc_id"): DataFrame = {

@@ -606,8 +606,9 @@ object Search {
     * generations the `_POSTINGS` pointer no longer references. Run from
     * the maintenance actor only, after readers that planned before the
     * last fold marker or pointer flip have drained
-    * ([[graft.operators.Dedup.gcDocIndex]]'s contract). Returns
-    * directories removed. */
+    * ([[graft.operators.Dedup.gcDocIndex]]'s contract). Returns every
+    * directory removed: folded and orphaned segments, superseded base
+    * generations and the legacy postings tree. */
   def gcTextIndex(spark: org.apache.spark.sql.SparkSession, path: String): Long = {
     val (fs, root) = (SegmentLog.fs(spark, path), new Path(path))
     SegmentLog.Text.gc(fs, root)() + PostingsGens.sweep(fs, root)

@@ -2510,8 +2510,9 @@ object PipelineQueries {
     // guaranteed-recall Hamming banding. Twins are the SAME waveform
     // re-rendered with per-sample noise under a new id — and the base
     // corpus itself alternates 8-bit and 16-bit containers, so matching
-    // twins to originals also crosses sample widths. Not SQL-expressible
-    // => rows-only; MultimodalSpec pins decode, gain/width invariance,
+    // twins to originals also crosses sample widths. The MP3 slot
+    // (id % 8 = 7) is declared out of sample decode and yields no row.
+    // Not SQL-expressible => rows-only; MultimodalSpec pins decode, gain/width invariance,
     // fixture hash, and twin collapse.
     QueryDef(
       "q30d_audio_dedup",
@@ -2710,7 +2711,7 @@ object PipelineQueries {
 
     // Q30f: the DECODE MATRIX — per-format rows / content-decodable rows /
     // ratio over a mixed media corpus (the full image rotation, an audio
-    // corpus, and a planted slice of 8-byte-truncated payloads that parse
+    // corpus whose MP3 slot is recognized but declared out, and a planted slice of 8-byte-truncated payloads that parse
     // as nothing). This is the introspection that turns "formats the
     // engine can't decode silently skip content dedup" into a measurable
     // number. FULLY ORACLE-CHECKED: the generator's container rotation and
@@ -2759,7 +2760,7 @@ object PipelineQueries {
              |               CASE WHEN doc_id % 8 = 5 THEN 'flac'
              |                    WHEN doc_id % 8 = 6 THEN 'aiff'
              |                    WHEN doc_id % 8 = 7 THEN 'mp3' ELSE 'wav' END AS format,
-             |               '' AS coding, 1 AS ok
+             |               '' AS coding, CASE WHEN doc_id % 8 = 7 THEN 0 ELSE 1 END AS ok
              |        FROM documents),
              |vid AS (SELECT doc_id,
              |               CASE WHEN doc_id % 4 IN (0, 1) THEN 'avi' ELSE 'mp4' END AS format,

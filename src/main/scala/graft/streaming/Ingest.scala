@@ -42,60 +42,44 @@ object Ingest {
     * (kv/db/version_set.cpp:920-1018); rename is atomic on HDFS and on the
     * local FS. */
   private[streaming] object Marks {
+    import graft.core.SegmentLog
     import org.apache.hadoop.conf.Configuration
     import org.apache.hadoop.fs.Path
+
+    private def parse(content: String): Option[(Long, Long, Long)] =
+      content.trim.split(" ") match {
+        case Array(id, base, count) => Some((id.toLong, base.toLong, count.toLong))
+        case _ => None
+      }
 
     def read(markDir: String, conf: Configuration): Map[Long, (Long, Long)] = {
       val dir = new Path(markDir)
       val fs = dir.getFileSystem(conf)
-      if (!fs.exists(dir)) return Map.empty
-      fs.listStatus(dir).iterator
+      SegmentLog.listFiles(fs, dir)
         // ONLY all-digit names are committed marks: a crash between
         // tmp-write and rename leaves '.N.tmp' (and local FS '.crc'
         // siblings) which must stay invisible and must not wedge parsing
-        .filter(st => st.isFile && st.getPath.getName.forall(_.isDigit))
-        .flatMap { st =>
-          val in = fs.open(st.getPath)
-          val content =
-            try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in))
-            finally in.close()
-          val parts = content.trim.split(" ")
-          if (parts.length == 3) Some(parts(0).toLong -> (parts(1).toLong, parts(2).toLong))
-          else None
-        }.toMap
+        .filter(_.getName.forall(_.isDigit))
+        .flatMap(p => parse(SegmentLog.readSmall(fs, p)))
+        .map { case (id, base, count) => id -> (base, count) }
+        .toMap
     }
 
     /** Read ONE batch's mark (base, count) — the per-trigger replay check,
       * O(1) mark IO where [[read]] opens every committed mark. */
     def readOne(markDir: String, batchId: Long, conf: Configuration): Option[(Long, Long)] = {
       val p = new Path(markDir, batchId.toString)
-      val fs = p.getFileSystem(conf)
-      if (!fs.exists(p)) return None
-      val in = fs.open(p)
-      val content =
-        try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in))
-        finally in.close()
-      val parts = content.trim.split(" ")
-      if (parts.length == 3) Some((parts(1).toLong, parts(2).toLong)) else None
+      try parse(SegmentLog.readSmall(p.getFileSystem(conf), p)).map(m => (m._2, m._3))
+      catch { case _: java.io.FileNotFoundException => None }
     }
 
+    /** Publish the mark with [[SegmentLog.writeAtomic]]: the dotted temp
+      * name stays invisible to [[read]] even if a crash strands it, and the
+      * overwriting rename lets a replayed batch rewrite its (identical) mark
+      * with no window where a concurrent reader could see it missing. */
     def write(markDir: String, batchId: Long, base: Long, count: Long, conf: Configuration): Unit = {
-      val dir = new Path(markDir)
-      val fs = dir.getFileSystem(conf)
-      fs.mkdirs(dir)
-      // write-then-rename for atomicity; the dotted temp name stays invisible
-      // to read() even if a crash strands it
-      val tmp = new Path(dir, s".$batchId.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(s"$batchId $base $count".getBytes)
-      finally out.close()
-      val dst = new Path(dir, batchId.toString)
-      // FileContext.rename with OVERWRITE: atomic replace — a replayed batch
-      // rewrites its (identical) mark without any window where a concurrent
-      // readCommitted could observe the mark missing (FileSystem.rename has
-      // no overwrite mode; delete-then-rename would open that window)
-      org.apache.hadoop.fs.FileContext.getFileContext(dir.toUri, conf)
-        .rename(tmp, dst, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+      val dst = new Path(markDir, batchId.toString)
+      SegmentLog.writeAtomic(dst.getFileSystem(conf), dst, s"$batchId $base $count")
     }
   }
 

@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.core.{GraftSession, Layout, Tables}
+import graft.core.{GraftSession, Layout, Parquet, Tables}
 import graft.streaming.Ingest
 import org.apache.spark.sql.functions._
 
@@ -33,8 +33,8 @@ object Scratch {
     println(s"PROBE-L bucketedJoinRows=$n shuffleExchanges=$shuffles (expect 0)")
 
     // repair/destroy surface
-    s.read.parquet("/root/testdata/sf0.001/events.parquet").repartition(2).write.parquet(s"$tmp/src")
-    val schema = s.read.parquet(s"$tmp/src").schema
+    Parquet.read(s, "/root/testdata/sf0.001/events.parquet").repartition(2).write.parquet(s"$tmp/src")
+    val schema = Parquet.read(s, s"$tmp/src").schema
     Ingest.startChangelogIngest(s, s"$tmp/src", schema, s"$tmp/sink", s"$tmp/ckpt",
       Seq("event_id"), maxFilesPerTrigger = Some(1)).awaitTermination()
     new java.io.File(s"$tmp/ckpt/graft-marks").listFiles().foreach(_.delete())

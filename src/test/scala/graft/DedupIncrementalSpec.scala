@@ -904,7 +904,8 @@ class DedupIncrementalSpec extends AnyFunSuite {
     graft.core.Stage.free(seg2)
     val before = probePairs(Seq((4002L, freshA), (4003L, freshB)))
     Dedup.foldDocSegments(spark, s"$tmp/idx", gc = false)
-    assert(Dedup.gcDocIndex(spark, s"$tmp/idx") >= 2L)
+    assert(Dedup.gcDocIndex(spark, s"$tmp/idx") == 4L,
+      "gc counts both folded segments and both their band twins")
     val liveSegs = new java.io.File(s"$tmp/idx/segs").listFiles().filter(_.isDirectory)
     assert(liveSegs.length == 1 && liveSegs.head.getName.startsWith("compact_"))
     val liveBands = new java.io.File(s"$tmp/idx/bandsegs").listFiles().filter(_.isDirectory)
@@ -1620,7 +1621,8 @@ class DedupIncrementalSpec extends AnyFunSuite {
     graft.core.Stage.free(seg2)
     val before = probePairs(Seq((4002L, freshA), (4003L, freshB)))
     Dedup.foldDocSegments(spark, s"$tmp/idx", gc = false)
-    assert(Dedup.gcDocIndex(spark, s"$tmp/idx") >= 2L)
+    assert(Dedup.gcDocIndex(spark, s"$tmp/idx") == 4L,
+      "gc counts both folded segments and both their band twins")
     val liveSegs = new java.io.File(s"$tmp/idx/segs").listFiles().filter(_.isDirectory)
     assert(liveSegs.length == 1 && liveSegs.head.getName.startsWith("compact_"))
     val liveBands = new java.io.File(s"$tmp/idx/bandsegs").listFiles().filter(_.isDirectory)

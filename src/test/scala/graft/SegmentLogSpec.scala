@@ -122,8 +122,9 @@ class SegmentLogSpec extends AnyFunSuite {
     fs.mkdirs(new Path(root, "segs/compact_orphan"))
     SegmentLog.writeAtomic(fs, new Path(root, "_folded/compact_gone"), "batch_9")
     val twins = scala.collection.mutable.Set.empty[String]
-    val removed = SegmentLog.Docs.gc(fs, root, retired = Set("batch_2"))(twins += _)
-    assert(removed == 4L, "batch_0, batch_1, retired batch_2, the orphan compact")
+    val removed = SegmentLog.Docs.gc(fs, root, retired = Set("batch_2"))(n => { twins += n; 1L })
+    assert(removed == 4L + 5L,
+      "batch_0, batch_1, retired batch_2, the orphan compact, and the hook's five twin deletes")
     assert(twins == Set("batch_0", "batch_1", "batch_2", "batch_9", "compact_orphan"))
     assert(SegmentLog.listDirs(fs, new Path(root, "segs")).map(_.getName) == Seq(compact))
     assert(fs.exists(new Path(root, s"_folded/$compact")), "the live compact keeps its marker")

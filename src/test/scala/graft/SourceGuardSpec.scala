@@ -6,11 +6,12 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import scala.util.matching.Regex
 
-/** Source rules for the engine under `src/main/scala` (`tools/` exempt):
-  * every parquet read goes through `graft.core.Parquet`, every eager
-  * checkpoint through `graft.core.Stage`, and only `graft.core.SegmentLog`
-  * names the segment protocol's files. Each pattern is first checked
-  * against snippets it must and must not match. */
+/** Source rules for the engine under `src/main/scala`: every parquet read
+  * goes through `graft.core.Parquet`, every eager checkpoint through
+  * `graft.core.Stage`, only `graft.core.SegmentLog` names the segment
+  * protocol's files, and no temp view or streaming query takes a fixed
+  * name. Each pattern is first checked against snippets it must and must
+  * not match. */
 class SourceGuardSpec extends AnyFunSuite {
   private val main = Paths.get("src/main/scala")
   private val graftRoot = main.resolve("graft")
@@ -21,14 +22,14 @@ class SourceGuardSpec extends AnyFunSuite {
   }
 
   /** `file:line` of every match of `pattern` in the `.scala` files under
-    * `root`, outside `graft/tools` and the `exempt` files. */
+    * `root`, outside the `exempt` files. */
   private def offenders(pattern: Regex, root: Path, exempt: Set[Path]): Seq[String] = {
     assert(Files.isDirectory(root), s"run from the repository root (cwd ${Paths.get("").toAbsolutePath})")
     val walk = Files.walk(root)
     val files = try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList finally walk.close()
     assert(files.size > 20, s"${files.size} sources under $root")
     files
-      .filterNot(p => exempt(p) || p.startsWith(graftRoot.resolve("tools")))
+      .filterNot(exempt)
       .flatMap { p =>
         val text = new String(Files.readAllBytes(p), "UTF-8")
         pattern.findAllMatchIn(text).map(m => s"$p:${text.take(m.start).count(_ == '\n') + 1}")
@@ -40,7 +41,7 @@ class SourceGuardSpec extends AnyFunSuite {
   private val SparkRead =
     """\bread\s*(?:\.\s*options?\s*\((?:[^()]|\([^()]*\))*\)\s*)*\.\s*parquet\s*\(""".r
 
-  test("engine sources read parquet only through graft.core.Parquet (tools/ exempt)") {
+  test("engine sources read parquet only through graft.core.Parquet") {
     selfCheck(SparkRead,
       Seq("spark.read.parquet(p)", "s.read.parquet(a, b)", "df.sparkSession.read.parquet(p)",
         "spark.read\n  .option(\"basePath\", s\"$d\")\n  .parquet(p)", "spark.read.options(m(x)).parquet(p)"),
@@ -52,7 +53,7 @@ class SourceGuardSpec extends AnyFunSuite {
 
   private val Checkpoint = """\.\s*localCheckpoint\s*\(""".r
 
-  test("engine sources checkpoint only through graft.core.Stage (tools/ exempt)") {
+  test("engine sources checkpoint only through graft.core.Stage") {
     selfCheck(Checkpoint,
       Seq("df.localCheckpoint()", "df\n  .select(c)\n  .localCheckpoint()", "df.localCheckpoint(eager = true)"),
       Seq("s(df)", "s.loop(df)", "// a localCheckpoint here could never be freed",
@@ -63,7 +64,7 @@ class SourceGuardSpec extends AnyFunSuite {
 
   private val BlocksRef = """\bBlocks\b""".r
 
-  test("no engine source refers to the removed graft.core.Blocks (tools/ exempt)") {
+  test("no engine source refers to the removed graft.core.Blocks") {
     selfCheck(BlocksRef,
       Seq("graft.core.Blocks.free(df)", "import graft.core.Blocks", "Blocks.free(x)"),
       Seq("val nBlocks = 3", "minHashBuildingBlocks", "skipSubBlocks(b, pos)", "Stage.free(df)"))
@@ -76,7 +77,7 @@ class SourceGuardSpec extends AnyFunSuite {
     * segment name. */
   private val ProtocolLiteral = """(?:"|/)(?:_folded|_SEQ|_BUCKETS)(?:"|/)|"compact_""".r
 
-  test("engine sources name the segment protocol's files only in graft.core.SegmentLog (tools/ exempt)") {
+  test("engine sources name the segment protocol's files only in graft.core.SegmentLog") {
     selfCheck(ProtocolLiteral,
       Seq("new Path(root, \"_folded\")", "s\"$path/_folded/$name\"", "new Path(dir, \"_SEQ\")",
         "s\"$root/_BUCKETS\"", "\"_BUCKETS\"", "s\"compact_${uuid}\"", "name.startsWith(\"compact_\")"),
@@ -84,5 +85,23 @@ class SourceGuardSpec extends AnyFunSuite {
         "\"_BANDS\"", "s\"$path/segs/$name\"", "`segs/compact_*`", "\"_SUCCESS\""))
     val bad = offenders(ProtocolLiteral, graftRoot, Set(graftRoot.resolve("core/SegmentLog.scala")))
     assert(bad.isEmpty, bad.mkString("name protocol files through SegmentLog: ", ", ", ""))
+  }
+
+  /** A temp view or streaming query registered under a fixed name: a plain
+    * literal, or an `s"…"` without interpolation. `Verify` runs queries
+    * concurrently on one session, so a fixed name in its shared catalog
+    * races. */
+  private val FixedViewName =
+    """\b(?:createOrReplaceTempView|createTempView|queryName)\s*\(\s*(?:"[^"]*"|s"[^"$]*")\s*\)""".r
+
+  test("engine sources name temp views and streaming queries per call, never fixed") {
+    selfCheck(FixedViewName,
+      Seq("df.createOrReplaceTempView(\"v_orders\")", "df.createTempView(s\"tmp\")",
+        ".queryName(\"mem\")", ".queryName( s\"graft_mem\" )", "df.createOrReplaceTempView(\"a$b\")"),
+      Seq("df.createOrReplaceTempView(s\"v_orders_$tag\")", ".queryName(name)",
+        ".queryName(s\"graft_mem_${uuid}\")", "df.createTempView(\"v_\" + tag)",
+        "df.createOrReplaceTempView(viewName)"))
+    val bad = offenders(FixedViewName, graftRoot, Set.empty)
+    assert(bad.isEmpty, bad.mkString("name views per call (Verify runs queries concurrently): ", ", ", ""))
   }
 }

@@ -1,7 +1,9 @@
 #!/bin/bash
-# Run a graft.tools probe main OUTSIDE sbt (keeps the sbt build lock free
-# for concurrent dev work — the long soaks hold it for hours otherwise).
+# Run a graft.tools main OUTSIDE sbt (keeps the sbt build lock free for
+# concurrent dev work — long runs hold it for hours otherwise).
 # Usage: tools/run_probe.sh <MainClass> [args...]
+# The mains: graft.tools.Scratch (smoke run), graft.tools.SweepBench
+# (per-query sweep timings), graft.tools.JobProfile (per-job profile of a query).
 # Mirrors build.sbt's fork JVM options (JDK17 --add-opens + Spark conf).
 set -euo pipefail
 cd "$(dirname "$0")/.."
