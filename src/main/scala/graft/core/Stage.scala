@@ -1,10 +1,14 @@
 package graft.core
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Dataset, GraftCheckpointStats}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, GraftCheckpointStats, GraftObservationAccess, Observation}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.functions.{coalesce, count, lit, sum, when}
+import org.apache.spark.sql.types.LongType
 
 import scala.collection.mutable
+import scala.reflect.ClassTag
 
 /** The engine's one eager materialization primitive, and the owner of the
   * storage it pins: a checkpoint lives until its scope ends unless the
@@ -27,8 +31,16 @@ import scala.collection.mutable
   * A frame that reaches a checkpoint only through RDD lineage
   * (`createDataFrame(x.rdd, ...)`) hides that leaf, so such a frame must be
   * returned as a checkpoint itself. Reading a freed checkpoint fails
-  * loudly ("Checkpoint block ... not found"), never silently. */
+  * loudly ("Checkpoint block ... not found"), never silently.
+  *
+  * `s.localOr(df, rowBytes)(pack)` is the one policy for small inputs:
+  * an operator whose input fits [[DriverBudget]] runs its loop in driver
+  * memory instead of as one Spark job per round. */
 object Stage {
+
+  /** The driver byte budget of [[Scope.localOr]]: 8 MB, 2^20 primitive
+    * longs. */
+  val DriverBudget: Long = 8L << 20
 
   final class Scope private[Stage] (private[Stage] val parent: Option[Scope]) {
     private val held = mutable.LinkedHashMap.empty[Int, RDD[_]]
@@ -49,6 +61,36 @@ object Stage {
       * ends unless it returns them. A loop hands each round the previous
       * round's frame, which is then freed as soon as the next one lands. */
     def adopt(df: Dataset[_]): Unit = hold(leaves(df))
+
+    /** `df` materialized now as a checkpoint, with its size observed in
+      * that same job: the sum of `rowBytes`, each row's bytes in driver
+      * memory. When every row has a size and the sum fits [[DriverBudget]],
+      * one more job collects `pack` of each partition's rows, the
+      * checkpoint is freed and `Left` holds the packs in partition order.
+      * Otherwise `Right` holds the checkpoint, which this scope holds.
+      *
+      * A null `rowBytes` marks a row the caller's driver path does not
+      * take. The observed size only picks the path: a sum inflated by a
+      * retried task, or a metrics map left empty by a pruned plan, sends
+      * the input to `Right` and never changes a result. */
+    def localOr[B: ClassTag](df: DataFrame, rowBytes: Column)(
+        pack: Iterator[InternalRow] => B): Either[Array[B], DataFrame] = {
+      val obs = Observation(s"stage_local_${java.util.UUID.randomUUID()}")
+      val cp = apply(df.observe(obs,
+        coalesce(sum(rowBytes.cast(LongType)), lit(0L)).as("bytes"),
+        count(when(rowBytes.isNull, 1)).as("unsized")))
+      val m = GraftObservationAccess.getOrEmpty(obs)
+      val fits = m.get("unsized").contains(0L) &&
+        m.get("bytes").exists(_.asInstanceOf[Long] <= DriverBudget)
+      if (!fits) Right(cp)
+      else {
+        val packs = cp.queryExecution.toRdd.mapPartitions(rows => Iterator.single(pack(rows))).collect()
+        val rdds = leaves(cp)
+        synchronized(rdds.foreach(r => held.remove(r.id)))
+        rdds.foreach(_.unpersist(blocking = false))
+        Left(packs)
+      }
+    }
 
     private[Stage] def hold(rdds: Iterable[RDD[_]]): Unit =
       synchronized(rdds.foreach(r => held(r.id) = r))

@@ -2408,14 +2408,14 @@ object Dedup {
     * `maxIter` breach throws rather than returning unconverged labels.
     *
     * Scale design: the input is the PAIR list (|pairs| ≪ corpus — the
-    * near-dup graph, not the corpus), materialized once with its row
-    * count observed in that same job. A graph of at most 2^20 directed
-    * edges (`DriverEdgeBound`: 2^19 pairs, 8 MB of primitive longs) with
-    * non-null `long` ids is collected and the SAME synchronous rounds run
-    * in driver memory: identical labels, round count, `maxIter` behaviour
-    * and output schema, returned as a local relation. That is 2 Spark
-    * jobs instead of ~2 per round, whose fixed cost dominated small pair
-    * graphs. Larger graphs run the distributed loop over the symmetric
+    * near-dup graph, not the corpus), materialized once through
+    * [[graft.core.Stage.Scope.localOr]]. A pair list with non-null `long`
+    * ids that fits the gate's driver budget (16 bytes a pair) is collected
+    * and the SAME synchronous rounds run in driver memory: identical
+    * labels, round count, `maxIter` behaviour and output schema, returned
+    * as a local relation. That is 2 Spark jobs instead of ~2 per round,
+    * whose fixed cost dominated small pair graphs. Larger graphs run the
+    * distributed loop over the symmetric
     * edge list built from that materialized pair list: every round is two
     * equi-joins plus one min-aggregation on (long, long) rows, and
     * `localCheckpoint` truncates the growing lineage each round; that
@@ -2435,35 +2435,29 @@ object Dedup {
       aCol: String = "doc_a",
       bCol: String = "doc_b",
       maxIter: Int = 20): (DataFrame, Int) = Stage.scope { _ =>
-    // the pair list is materialized once, with its row count and its count
-    // of rows holding a null id observed in that same job. It is the pair
-    // list, not the symmetric edge list: the distinct that builds the
-    // latter costs a shuffle, which the driver path does not need.
-    // Choosing a path never changes the result, so the accumulator-backed
-    // counts are safe under task retries: an inflated count only sends a
-    // small graph down the distributed path, and so do pruned metrics (a
-    // provably-empty input). Null ids also go there: the loop gives a null
-    // node labels (it collects its neighbours' minimum) without ever
-    // joining on it, a semantics the driver path does not copy.
-    // The pair checkpoint is freed as soon as the driver rounds or the
-    // symmetric edge list have read it, before the distributed loop runs.
+    // the gate sees the pair list, not the symmetric edge list: the
+    // distinct that builds the latter costs a shuffle, which the driver
+    // path does not need. Null ids take the distributed path: the loop
+    // gives a null node labels (it collects its neighbours' minimum)
+    // without ever joining on it, a semantics the driver path does not
+    // copy. The pair checkpoint is freed as soon as the driver rounds or
+    // the symmetric edge list have read it, before the distributed loop
+    // runs.
+    val edges = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
     val driverOrEdges = Stage.scope { s =>
-      val obs = org.apache.spark.sql.Observation(s"cc_edges_${java.util.UUID.randomUUID()}")
-      val edges = s(pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
-        .observe(obs, count(lit(1)).as("n"),
-          count(when(col("src").isNull || col("dst").isNull, 1)).as("n_null")))
-      val m = org.apache.spark.sql.GraftObservationAccess.getOrEmpty(obs)
-      val onDriver = edges.schema.forall(_.dataType == LongType) &&
-        m.get("n").exists(n => 2 * n.asInstanceOf[Long] <= DriverEdgeBound && m("n_null") == 0L)
-      if (onDriver) Left(componentsOnDriver(edges, maxIter))
-      else Right(s(symmetricEdges(edges, "src", "dst")))
+      val gate =
+        if (!edges.schema.forall(_.dataType == LongType)) Right(s(edges))
+        else s.localOr(edges, when(col("src").isNotNull && col("dst").isNotNull, lit(16L))) { rows =>
+          val b = Array.newBuilder[Long]
+          rows.foreach { r => b += r.getLong(0); b += r.getLong(1) }
+          b.result()
+        }
+      gate.fold(
+        packs => Left(componentsOnDriver(packs.flatten, edges, maxIter)),
+        cp => Right(s(symmetricEdges(cp, "src", "dst"))))
     }
     driverOrEdges.fold(identity, componentsLoop(_, maxIter))
   }
-
-  /** Directed-edge bound of the driver path of [[connectedComponents]]:
-    * 2^19 pairs, collected as 8 MB of primitive longs on the driver. */
-  private val DriverEdgeBound = 1L << 20
 
   /** The distributed loop whatever the graph size — the reference the
     * driver path is tested against. */
@@ -2485,15 +2479,10 @@ object Dedup {
         "the pair graph has a longer chain than near-dup clusters produce; raise maxIter")
 
   /** The rounds of [[componentsLoop]] in driver memory over the collected
-    * pair list `edges` (`src`, `dst`: non-null `long` ids): same labels,
-    * same round count, same `maxIter` breach, same output schema. */
-  private def componentsOnDriver(edges: DataFrame, maxIter: Int): (DataFrame, Int) = {
-    // one job: each partition packs its pairs as (src, dst) longs
-    val packed = edges.queryExecution.toRdd.mapPartitions { rows =>
-      val b = Array.newBuilder[Long]
-      rows.foreach { r => b += r.getLong(0); b += r.getLong(1) }
-      Iterator.single(b.result())
-    }.collect().flatten
+    * pair list `packed` (src0, dst0, src1, dst1, ...: non-null `long` ids
+    * of `edges`): same labels, same round count, same `maxIter` breach,
+    * same output schema. */
+  private def componentsOnDriver(packed: Array[Long], edges: DataFrame, maxIter: Int): (DataFrame, Int) = {
     // dense node indices in id order: the minimum index is the minimum id
     val sorted = packed.clone()
     java.util.Arrays.sort(sorted)

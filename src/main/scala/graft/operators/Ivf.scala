@@ -6,7 +6,6 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** IVF-flat approximate nearest neighbors: a coarse k-means quantizer
   * partitions the corpus into C inverted lists; a query scans only the
@@ -14,12 +13,15 @@ import org.apache.spark.sql.types.DecimalType
   * path next to hyperplane LSH ([[Similarity.lshTopK]]): recall/cost tuned
   * by (C, nProbe) instead of (tables, planes).
   *
-  * Training is a few Lloyd iterations, fully distributed and DETERMINISTIC:
-  * init = C vectors chosen by id hash order; assignment via the broadcast
-  * centroid literal; per-dimension means accumulated in DECIMAL (exact, so
-  * independent of partitioning/row order — float means would make centroids,
-  * and therefore results, nondeterministic run to run). Only the C x dim
-  * centroid matrix (model metadata, not data) ever reaches the driver.
+  * Training is a few Lloyd iterations, DETERMINISTIC: init = C vectors
+  * chosen by id hash order; assignment via the centroid kernel;
+  * per-dimension means accumulated in DECIMAL (exact, so independent of
+  * partitioning/row order — float means would make centroids, and
+  * therefore results, nondeterministic run to run). A training input that
+  * fits [[graft.core.Stage.DriverBudget]] is fitted in driver memory,
+  * bit-identical to the distributed fit ([[TrainSet]]); a larger one is
+  * fitted by Spark jobs, and then only the C x dim centroid matrix (model
+  * metadata, not data) reaches the driver.
   */
 object Ivf {
 
@@ -35,7 +37,7 @@ object Ivf {
     private[graft] def tree: Seq[Array[Array[Float]]] = levels :+ centroids
   }
 
-  private def hierProbesCol(vec: Column, tree: Seq[Array[Array[Float]]], k: Int): Column =
+  private[operators] def hierProbesCol(vec: Column, tree: Seq[Array[Array[Float]]], k: Int): Column =
     call_function("graft_hier_probes", vec,
       typedLit(tree.flatten.toArray), typedLit(tree.map(_.length).toArray), lit(k))
 
@@ -203,25 +205,38 @@ object Ivf {
     * the corpus to keep list sizes constant would otherwise pay a QUADRATIC
     * training bill (measured: 36x wall for 10x corpus at C = n/120,
     * SemanticProbe). ~40-50 rows per centroid loses nothing a coarse
-    * quantizer cares about; 0 keeps the exact full-corpus training. */
+    * quantizer cares about; 0 keeps the exact full-corpus training.
+    *
+    * The (sampled) input passes the [[graft.core.Stage.Scope.localOr]]
+    * gate: within the driver budget the Lloyd rounds run in driver memory
+    * (2 Spark jobs, whatever `iters`), beyond it as one aggregation job
+    * per round over the checkpoint ([[TrainSet.Rows.lloyd]]). The
+    * centroids are the same bits either way. */
   def train(
       corpus: DataFrame,
       c: Int,
       iters: Int = 3,
       idCol: String = "vec_id",
       vecCol: String = "embedding",
-      maxTrainRows: Long = 0L): Model = {
-    val proj = sampledProj(corpus, idCol, vecCol, maxTrainRows)
-    try {
-      // deterministic init: the C vectors with smallest xxhash64(id)
-      val init = proj
-        .orderBy(xxhash64(col("_gid")), col("_gid"))
-        .limit(c)
-        .collect()
-        .map(_.getAs[scala.collection.Seq[Float]](1).toArray)
-      require(init.nonEmpty, "Ivf.train: empty corpus")
-      Model(lloyd(proj, init, iters, flatAssign))
-    } finally proj.unpersist(blocking = false)
+      maxTrainRows: Long = 0L): Model =
+    TrainSet.fit(corpus, idCol, vecCol, maxTrainRows, driver = true)(flatFit(_, c, iters))
+
+  /** [[train]] on the distributed path whatever the input size — the
+    * reference the driver path is tested against. */
+  private[graft] def trainDistributed(
+      corpus: DataFrame,
+      c: Int,
+      iters: Int = 3,
+      idCol: String = "vec_id",
+      vecCol: String = "embedding",
+      maxTrainRows: Long = 0L): Model =
+    TrainSet.fit(corpus, idCol, vecCol, maxTrainRows, driver = false)(flatFit(_, c, iters))
+
+  private def flatFit(t: TrainSet, c: Int, iters: Int): Model = {
+    // deterministic init: the C vectors with smallest xxhash64(id)
+    val init = t.first(c)
+    require(init.nonEmpty, "Ivf.train: empty corpus")
+    Model(t.lloyd(init, iters, TrainSet.Flat))
   }
 
   /** Train a HIERARCHICAL model: a `branch`-ary centroid tree whose leaf
@@ -239,7 +254,8 @@ object Ivf {
     * corpus size, the scale fix for the flat trainer's quadratic default
     * when `leaves` tracks corpus size (measured 14x wall for 10x corpus at
     * C = n/120, SemanticProbe round 6). `leaves <= branch` falls back to
-    * the flat trainer: a depth-1 tree IS the flat model. */
+    * the flat trainer: a depth-1 tree IS the flat model. The input passes
+    * the same driver gate as [[train]]'s. */
   def trainHier(
       corpus: DataFrame,
       leaves: Int,
@@ -247,40 +263,58 @@ object Ivf {
       iters: Int = 2,
       idCol: String = "vec_id",
       vecCol: String = "embedding",
-      maxTrainRows: Long = 0L): Model = {
+      maxTrainRows: Long = 0L): Model =
+    hierOn(driver = true, corpus, leaves, branch, iters, idCol, vecCol, maxTrainRows)
+
+  /** [[trainHier]] on the distributed path whatever the input size — the
+    * reference the driver path is tested against. */
+  private[graft] def trainHierDistributed(
+      corpus: DataFrame,
+      leaves: Int,
+      branch: Int = 32,
+      iters: Int = 2,
+      idCol: String = "vec_id",
+      vecCol: String = "embedding",
+      maxTrainRows: Long = 0L): Model =
+    hierOn(driver = false, corpus, leaves, branch, iters, idCol, vecCol, maxTrainRows)
+
+  private def hierOn(
+      driver: Boolean,
+      corpus: DataFrame,
+      leaves: Int,
+      branch: Int,
+      iters: Int,
+      idCol: String,
+      vecCol: String,
+      maxTrainRows: Long): Model = {
     require(branch >= 2, s"Ivf.trainHier: branch=$branch must be >= 2")
-    if (leaves <= branch) return train(corpus, leaves, iters, idCol, vecCol, maxTrainRows)
-    val proj = sampledProj(corpus, idCol, vecCol, maxTrainRows)
-    try {
-      val nProj = proj.count()
-      // INTERNAL levels refine on a NESTED hash-subsample sized to ~48 rows
-      // per centroid of THAT level (same hash criterion as sampledProj, so a
-      // tighter threshold is a strict subset — no second source scan). A
-      // coarse internal split needs far fewer rows than the leaf fit; without
-      // this every added tree level re-pays the full-sample Lloyd cost and
-      // the 100x->1000x training ratio measured 18.7x instead of ~10x.
-      def levelProj(size: Int): DataFrame = {
-        val target = 48L * size
-        if (nProj <= target) proj
-        else {
-          val buckets = 1000000L
-          // max(1, ...): see sampledProj — a zero threshold would leave an
-          // internal level training on an EMPTY sample (its centroids
-          // frozen at init) once nProj exceeds buckets * target
-          proj.filter(
-            pmod(xxhash64(col("_gid")), lit(buckets)) <
-              lit(math.max(1L, buckets * target / nProj)))
-        }
-      }
-      val init0 = proj
-        .orderBy(xxhash64(col("_gid")), col("_gid"))
-        .limit(branch)
-        .collect()
-        .map(_.getAs[scala.collection.Seq[Float]](1).toArray)
-      require(init0.nonEmpty, "Ivf.trainHier: empty corpus")
-      if (init0.length < branch)
-        // corpus smaller than one branching factor: flat-fit what exists
-        return Model(lloyd(proj, init0, iters, flatAssign))
+    TrainSet.fit(corpus, idCol, vecCol, maxTrainRows, driver) { t =>
+      if (leaves <= branch) flatFit(t, leaves, iters) else hierFit(t, leaves, branch, iters)
+    }
+  }
+
+  private def hierFit(t: TrainSet, leaves: Int, branch: Int, iters: Int): Model = {
+    val nProj = t.n
+    // INTERNAL levels refine on a NESTED hash-subsample sized to ~48 rows
+    // per centroid of THAT level (the hash criterion of maxTrainRows'
+    // sample, so a tighter threshold is a strict subset — no second
+    // source scan). A coarse internal split needs far fewer rows than the
+    // leaf fit; without this every added tree level re-pays the
+    // full-sample Lloyd cost and the 100x->1000x training ratio measured
+    // 18.7x instead of ~10x.
+    def levelProj(size: Int): TrainSet = {
+      val target = 48L * size
+      // max(1, ...): a zero threshold would leave an internal level
+      // training on an EMPTY sample (its centroids frozen at init) once
+      // nProj exceeds buckets * target
+      if (nProj <= target) t
+      else t.hashSample(math.max(1L, TrainSet.Buckets * target / nProj))
+    }
+    val init0 = t.first(branch)
+    require(init0.nonEmpty, "Ivf.trainHier: empty corpus")
+    // corpus smaller than one branching factor: flat-fit what exists
+    if (init0.length < branch) Model(t.lloyd(init0, iters, TrainSet.Flat))
+    else {
       val depth = math.max(2, math.ceil(math.log(leaves) / math.log(branch)).toInt)
       val sizes = Array.tabulate(depth) { l =>
         if (l < depth - 1) math.pow(branch, l + 1).toInt
@@ -289,38 +323,27 @@ object Ivf {
           (((leaves + p - 1) / p) * p).toInt
         }
       }
-      var tree = Vector(lloyd(levelProj(branch), init0, iters, flatAssign))
+      var tree = Vector(levelProj(branch).lloyd(init0, iters, TrainSet.Flat))
       for (l <- 1 until depth) {
         val parents = tree.last
         val cpp = sizes(l) / sizes(l - 1) // children per parent
-        // this level's sample: the full proj for the leaf fit, the nested
-        // subsample for internal levels
-        val lp = if (l == depth - 1) proj else levelProj(sizes(l))
+        // this level's sample: the full projection for the leaf fit, the
+        // nested subsample for internal levels
+        val lp = if (l == depth - 1) t else levelProj(sizes(l))
         // deterministic init WITHIN each parent's bucket: the cpp sample
         // vectors with smallest xxhash64(id) among the rows greedy-descend
-        // assigns to that parent (one window job over the level sample;
-        // the collect is model-sized — at most sizes(l) rows)
-        val w = Window.partitionBy(col("_pb")).orderBy(xxhash64(col("_gid")), col("_gid"))
-        val picks = lp
-          .withColumn("_pb", element_at(hierProbesCol(col("_gvec"), tree, 1), 1))
-          .withColumn("_rn", row_number().over(w))
-          .filter(col("_rn") <= cpp)
-          .select(col("_pb"), col("_rn"), col("_gvec"))
-          .collect()
-          .map(r => ((r.getInt(0), r.getInt(1)), r.getAs[scala.collection.Seq[Float]](2).toArray))
-          .toMap
+        // assigns to that parent
+        val picks = lp.firstPerBucket(tree, cpp)
         val init = Array.tabulate(sizes(l)) { i =>
           // a parent with fewer sampled rows than children pads the missing
           // slots with copies of its own centroid — harmless duplicates
           // (ties go to the lowest index; the copy's list stays empty)
           picks.getOrElse((i / cpp, i % cpp + 1), parents(i / cpp))
         }
-        val above = tree
-        tree = tree :+ lloyd(lp, init, iters, (v, cents) =>
-          element_at(hierProbesCol(v, above :+ cents, 1), 1))
+        tree = tree :+ lp.lloyd(init, iters, TrainSet.Hier(tree))
       }
       Model(tree.last, tree.init)
-    } finally proj.unpersist(blocking = false)
+    }
   }
 
   /** Count-driven trainer a deployment calls without sizing anything:
@@ -347,83 +370,6 @@ object Ivf {
     val sample = rowsPerCentroid.toLong * lists
     if (lists <= 4 * branch) train(corpus, lists, iters, idCol, vecCol, maxTrainRows = sample)
     else trainHier(corpus, lists, branch, iters, idCol, vecCol, maxTrainRows = sample)
-  }
-
-  /** The trainers' shared input: a `(_gid, _gvec)` projection, optionally
-    * hash-sampled to ~`maxTrainRows` rows (deterministic hash-threshold
-    * membership — no RNG state, no shuffle), PERSISTED so the source is
-    * scanned once, not re-read per Lloyd iteration. At 100 TB the cached
-    * projection is the id + embedding columns only; the persist cost is one
-    * pass, amortized over the iterations. Caller unpersists. */
-  private[operators] def sampledProj(
-      corpus: DataFrame, idCol: String, vecCol: String, maxTrainRows: Long): DataFrame = {
-    val projAll = corpus.select(col(idCol).as("_gid"), col(vecCol).as("_gvec"))
-    val projSampled =
-      if (maxTrainRows <= 0L) projAll
-      else {
-        val n = projAll.count()
-        if (n <= maxTrainRows) projAll
-        else {
-          val buckets = 1000000L
-          // max(1, ...): integer division floors to 0 once n exceeds
-          // buckets * maxTrainRows (a 4e9-row corpus at maxTrainRows=3200)
-          // — the sample would silently go EMPTY and train() would crash
-          // with a spurious "empty corpus". The 1-bucket floor keeps
-          // ~n/1e6 rows instead: larger than asked, never zero.
-          projAll.filter(
-            pmod(xxhash64(col("_gid")), lit(buckets)) <
-              lit(math.max(1L, buckets * maxTrainRows / n)))
-        }
-      }
-    // SPREAD the projection to the session's parallelism before caching:
-    // embedding corpora often arrive as a handful of fat parquet splits
-    // (blob-heavy rows pack thousands into one scan task), and every Lloyd
-    // iteration re-scans this frame — a 2-partition cache serializes the
-    // whole fit on 2 cores (measured 3x wall at iters=3, TrainProfile).
-    // Keyed on _gid (deterministic under task retry, never round-robin);
-    // the exchange moves the slim (id, vector) projection once, is
-    // sample-bounded whenever maxTrainRows caps it, and no-ops entirely
-    // when the scan already planned enough partitions. Centroid means are
-    // exact decimal sums, so partitioning cannot move a single bit.
-    val par = projSampled.sparkSession.sparkContext.defaultParallelism
-    val spread =
-      if (projSampled.rdd.getNumPartitions < par) projSampled.repartition(par, col("_gid"))
-      else projSampled
-    spread.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-  }
-
-  private[operators] def flatAssign(v: Column, cents: Array[Array[Float]]): Column =
-    element_at(call_function("graft_centroid_probes", v, typedLit(cents), lit(1)), 1)
-
-  /** `iters` Lloyd refinement steps over the cached projection with a
-    * pluggable assignment (flat argmin for [[train]], greedy tree descend
-    * for [[trainHier]]'s deeper levels). Assignment + per-dimension means
-    * fuse into ONE aggregation job per iteration; decimal accumulation
-    * makes centroids independent of partitioning/row order; empty clusters
-    * keep their previous centroid. */
-  private[operators] def lloyd(
-      proj: DataFrame,
-      init: Array[Array[Float]],
-      iters: Int,
-      assign: (Column, Array[Array[Float]]) => Column): Array[Array[Float]] = {
-    var cents = init
-    val dim = cents.head.length
-    for (_ <- 1 to iters) {
-      val means = proj
-        .select(assign(col("_gvec"), cents).as("b"), posexplode(col("_gvec")))
-        .groupBy(col("b"), col("pos"))
-        .agg((sum(col("col").cast(DecimalType(30, 10))) / count(lit(1))).cast("double").as("m"))
-        .collect()
-        .map(r => ((r.getInt(0), r.getInt(1)), r.getDouble(2)))
-        .toMap
-      val prev = cents
-      cents = Array.tabulate(prev.length) { b =>
-        Array.tabulate(dim) { d =>
-          means.get((b, d)).map(_.toFloat).getOrElse(prev(b)(d))
-        }
-      }
-    }
-    cents
   }
 
   /** Persist an IVF index: the corpus assigned to its inverted lists and

@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   * (asymmetric distance computation: the query stays exact, only the
   * corpus side is quantized).
   *
-  * Training reuses [[Ivf]]'s deterministic distributed Lloyd machinery
+  * Training reuses [[Ivf]]'s deterministic Lloyd machinery ([[TrainSet]])
   * per subspace — decimal-accumulated means, hash-ordered init — so PQ
   * models are exactly reproducible run to run, like every other trained
   * model in the engine.
@@ -32,16 +32,20 @@ object Pq {
     def dim: Int = m * dsub
   }
 
-  /** Train a PQ codebook: deterministic Lloyd fits of all `m` subspaces,
-    * FUSED into one aggregation job per iteration over the shared cached
-    * sample (the corpus is scanned once, then `iters` slim jobs refine).
+  /** Train a PQ codebook: deterministic Lloyd fits of all `m` subspaces.
+    * The input passes the [[graft.core.Stage.Scope.localOr]] gate: within
+    * the driver budget the fits run in driver memory, subspace by
+    * subspace (2 Spark jobs, whatever `iters`); beyond it they are FUSED
+    * into one aggregation job per iteration over the shared checkpointed
+    * sample (the corpus is scanned once, then `iters` slim jobs refine),
+    * with the same codebook bits.
     *
     * The subspace fits are independent (subspace `j`'s iteration depends
     * only on `j`'s own previous centroids), so running every subspace's
     * step `i` in a single job — per-row assignment codes for all `m`
     * slices, one posexplode of the full vector, one groupBy
     * (subspace, code, pos-in-subspace) with the same exact decimal-mean
-    * accumulation as [[Ivf.lloyd]] — produces BIT-IDENTICAL codebooks to
+    * accumulation as [[TrainSet.Rows.lloyd]] — produces BIT-IDENTICAL codebooks to
     * the previous per-subspace loop (each (j, b, pos) group aggregates
     * exactly the rows the unfused (b, pos) group did, and decimal sums
     * are order-independent; IvfSpec pins BOTH halves: subspace
@@ -60,55 +64,42 @@ object Pq {
       iters: Int = 3,
       idCol: String = "vec_id",
       vecCol: String = "embedding",
-      maxTrainRows: Long = 0L): Model = {
+      maxTrainRows: Long = 0L): Model =
+    trainOn(driver = true, corpus, m, k, iters, idCol, vecCol, maxTrainRows)
+
+  /** [[train]] on the distributed path whatever the input size — the
+    * reference the driver path is tested against. */
+  private[graft] def trainDistributed(
+      corpus: DataFrame,
+      m: Int = 8,
+      k: Int = 256,
+      iters: Int = 3,
+      idCol: String = "vec_id",
+      vecCol: String = "embedding",
+      maxTrainRows: Long = 0L): Model =
+    trainOn(driver = false, corpus, m, k, iters, idCol, vecCol, maxTrainRows)
+
+  private def trainOn(
+      driver: Boolean,
+      corpus: DataFrame,
+      m: Int,
+      k: Int,
+      iters: Int,
+      idCol: String,
+      vecCol: String,
+      maxTrainRows: Long): Model = {
     require(m >= 1, "m must be >= 1")
     require(k >= 2, "k must be >= 2")
-    val proj = Ivf.sampledProj(corpus, idCol, vecCol, maxTrainRows)
-    try {
-      val dim = proj.select(size(col("_gvec"))).head().getInt(0)
+    TrainSet.fit(corpus, idCol, vecCol, maxTrainRows, driver) { t =>
+      val dim = t.dim
       require(dim % m == 0, s"Pq.train: m=$m must divide dim=$dim")
       val dsub = dim / m
       // shared deterministic init rows (the k smallest id-hashes), sliced
       // per subspace — one driver pull for all m fits
-      val initRows = proj
-        .orderBy(xxhash64(col("_gid")), col("_gid"))
-        .limit(k)
-        .collect()
-        .map(_.getAs[scala.collection.Seq[Float]](1).toArray)
+      val initRows = t.first(k)
       require(initRows.nonEmpty, "Pq.train: empty corpus")
-      var books: Array[Array[Array[Float]]] =
-        Array.tabulate(m)(j => initRows.map(_.slice(j * dsub, (j + 1) * dsub)))
-      for (_ <- 1 to iters) {
-        // per row: code of every subspace (the same flat-argmin kernel the
-        // unfused fit assigned with, over the same slice)
-        val codes = array((0 until m).map { j =>
-          Ivf.flatAssign(slice(col("_gvec"), j * dsub + 1, dsub), books(j))
-        }: _*)
-        val means = proj
-          .select(codes.as("_codes"), posexplode(col("_gvec")))
-          .select(
-            (col("pos") / dsub).cast("int").as("j"),
-            pmod(col("pos"), lit(dsub)).as("p"),
-            col("_codes"), col("col"))
-          .select(col("j"), element_at(col("_codes"), col("j") + 1).as("b"),
-            col("p"), col("col"))
-          .groupBy(col("j"), col("b"), col("p"))
-          .agg((sum(col("col").cast(org.apache.spark.sql.types.DecimalType(30, 10)))
-            / count(lit(1))).cast("double").as("m"))
-          .collect()
-          .map(r => ((r.getInt(0), r.getInt(1), r.getInt(2)), r.getDouble(3)))
-          .toMap
-        val prev = books
-        books = Array.tabulate(m) { j =>
-          Array.tabulate(prev(j).length) { b =>
-            Array.tabulate(dsub) { p =>
-              means.get((j, b, p)).map(_.toFloat).getOrElse(prev(j)(b)(p))
-            }
-          }
-        }
-      }
-      Model(books)
-    } finally proj.unpersist(blocking = false)
+      Model(t.lloydSub(Array.tabulate(m)(j => initRows.map(_.slice(j * dsub, (j + 1) * dsub))), iters))
+    }
   }
 
   /** Per-row PQ codes: `array<int>` of length `m`, code `j` = the nearest

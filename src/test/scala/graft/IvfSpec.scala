@@ -372,6 +372,87 @@ class IvfSpec extends AnyFunSuite {
       "m=1 fused training must be bit-identical to the direct Lloyd fit")
   }
 
+  /** Every centroid element's bits: NaN-safe, and -0.0 differs from 0.0. */
+  private def bits(m: Array[Array[Float]]): Seq[Int] =
+    m.toSeq.flatMap(_.map(java.lang.Float.floatToRawIntBits))
+
+  private def bitsOf(m: Ivf.Model): Seq[Int] = m.tree.flatMap(bits)
+
+  /** `body`'s value and the number of Spark jobs it ran. */
+  private def jobs[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = n.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      val r = body
+      org.apache.spark.GraftTestBus.drain(sc)
+      (r, n.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("driver-path training is bit-identical to the distributed path") {
+    import spark.implicits._
+    val nanRow = Seq((999L, Array.fill(64)(Float.NaN)), (998L, Array.tabulate(64)(i => if (i % 3 == 0) Float.NaN else 0.5f)))
+      .toDF("vec_id", "embedding")
+    val nanCorpus = emb.filter(col("vec_id") < 50).select("vec_id", "embedding").unionByName(nanRow)
+    // duplicate init vectors: 6 lists over 3 distinct vectors, so three
+    // centroids tie with a lower index and keep their init
+    val dup = (1L to 30L).map(i => (i, Array.fill(8)((i % 3).toFloat))).toDF("vec_id", "embedding")
+    val fixtures = Seq(
+      ("sf0.001, c = 16", emb, 16, 0L),
+      ("c beyond the row count", emb.filter(col("vec_id") < 5), 32, 0L),
+      ("empty clusters", dup, 6, 0L),
+      ("NaN embeddings", nanCorpus, 4, 0L),
+      ("maxTrainRows sample", emb, 16, 200L),
+      ("int ids", emb.withColumn("vec_id", col("vec_id").cast("int")), 8, 0L))
+    fixtures.foreach { case (name, corpus, c, cap) =>
+      val (driver, driverJobs) = jobs(Ivf.train(corpus, c, iters = 3, maxTrainRows = cap))
+      val (dist, distJobs) = jobs(Ivf.trainDistributed(corpus, c, iters = 3, maxTrainRows = cap))
+      assert(driver.c == dist.c && bitsOf(driver) == bitsOf(dist), s"Ivf.train, $name")
+      // the driver path ran: the gate and its collect, after the sample's
+      // count (a map and a result job)
+      assert(driverJobs <= (if (cap > 0) 4 else 2) && distJobs > driverJobs + 2,
+        s"$name: jobs $driverJobs vs $distJobs")
+      val pqDriver = graft.operators.Pq.train(corpus, m = 2, k = c, iters = 2, maxTrainRows = cap)
+      val pqDist = graft.operators.Pq.trainDistributed(corpus, m = 2, k = c, iters = 2, maxTrainRows = cap)
+      assert(pqDriver.codebooks.toSeq.flatMap(bits) == pqDist.codebooks.toSeq.flatMap(bits), s"Pq.train, $name")
+    }
+    val dupModel = Ivf.train(dup, 6, iters = 3)
+    assert(dupModel.centroids.map(_.toSeq).distinct.length == 3, "the tied centroids stay empty")
+    // a hierarchical tree: nested level samples (500 rows > 48 x 4) and
+    // per-parent init, with and without a training sample
+    for (cap <- Seq(0L, 300L)) {
+      val driver = Ivf.trainHier(emb, leaves = 16, branch = 4, iters = 2, maxTrainRows = cap)
+      val dist = Ivf.trainHierDistributed(emb, leaves = 16, branch = 4, iters = 2, maxTrainRows = cap)
+      assert(driver.levels.length == 1 && bitsOf(driver) == bitsOf(dist), s"Ivf.trainHier, maxTrainRows = $cap")
+    }
+  }
+
+  test("training that fails on the distributed path fails alike on small inputs") {
+    import spark.implicits._
+    // the NaN vector is the init with the smallest id hash: cluster 0 then
+    // holds only NaN rows, whose decimal mean is null
+    val ids = (1L to 6L).toDF("vec_id")
+    val nanId = ids.select(col("vec_id"), xxhash64(col("vec_id")).as("h"))
+      .orderBy("h", "vec_id").head().getLong(0)
+    val corpus = (1L to 6L).map { i =>
+      (i, if (i == nanId) Array.fill(4)(Float.NaN) else Array.fill(4)(i.toFloat))
+    }.toDF("vec_id", "embedding")
+    val driver = intercept[Exception](Ivf.train(corpus, c = 6, iters = 1))
+    val dist = intercept[Exception](Ivf.trainDistributed(corpus, c = 6, iters = 1))
+    assert(driver.getClass == dist.getClass && driver.getMessage == dist.getMessage, s"$driver vs $dist")
+    // mixed vector lengths and null vectors keep their distributed outcome
+    val mixed = Seq((1L, Array(1f, 2f)), (2L, Array(1f, 2f, 3f)), (3L, Array(0f, 1f))).toDF("vec_id", "embedding")
+    val mixedDriver = intercept[Exception](Ivf.train(mixed, c = 2, iters = 1))
+    val mixedDist = intercept[Exception](Ivf.trainDistributed(mixed, c = 2, iters = 1))
+    assert(mixedDriver.getClass == mixedDist.getClass, s"$mixedDriver vs $mixedDist")
+    val empty = Seq.empty[(Long, Array[Float])].toDF("vec_id", "embedding")
+    assert(intercept[IllegalArgumentException](Ivf.train(empty, c = 2)).getMessage.contains("empty corpus"))
+  }
+
   test("balancedSample: exact hash-order keeps per bucket, cap respected, deterministic") {
     val model = Ivf.train(emb, c = 8, iters = 2)
     val perList = 5

@@ -8,7 +8,7 @@ import scala.util.matching.Regex
 
 /** Source rules for the engine under `src/main/scala`: every parquet read
   * goes through `graft.core.Parquet`, every eager checkpoint through
-  * `graft.core.Stage`, only `graft.core.SegmentLog` names the segment
+  * `graft.core.Stage` (and no operator persists or unpersists), only `graft.core.SegmentLog` names the segment
   * protocol's files, and no temp view or streaming query takes a fixed
   * name. Each pattern is first checked against snippets it must and must
   * not match. */
@@ -60,6 +60,19 @@ class SourceGuardSpec extends AnyFunSuite {
         "df.checkpoint()", "localCheckpointed"))
     val bad = offenders(Checkpoint, graftRoot, Set(graftRoot.resolve("core/Stage.scala")))
     assert(bad.isEmpty, bad.mkString("checkpoint through Stage.scope: ", ", ", ""))
+  }
+
+  private val Persist = """\.\s*(?:un)?persist\s*\(""".r
+
+  test("operators neither persist nor unpersist: graft.core.Stage owns materialization") {
+    selfCheck(Persist,
+      Seq("proj.persist(StorageLevel.MEMORY_AND_DISK)", "proj.unpersist(blocking = false)",
+        "df\n  .select(c)\n  .persist()", "df.unpersist ()"),
+      Seq("s(df)", "Stage.free(df)", "// with per-round unpersist", "sc.getPersistentRDDs",
+        "persistent()", "df.localCheckpoint()"))
+    val operators = graftRoot.resolve("operators").toString + "/"
+    val bad = offenders(Persist, graftRoot, Set.empty).filter(_.startsWith(operators))
+    assert(bad.isEmpty, bad.mkString("materialize through Stage.scope: ", ", ", ""))
   }
 
   private val BlocksRef = """\bBlocks\b""".r

@@ -148,6 +148,41 @@ class StageSpec extends AnyFunSuite {
     assert(n == 38, s"near-dup ingest batch jobs: $n")
   }
 
+  test("localOr collects an input that fits the driver budget and checkpoints one that does not") {
+    def gate(rows: Long) = Stage.scope { s =>
+      val before = persistent()
+      val (out, jobs) =
+        jobGroups(s.localOr(range(rows).toDF(), lit(Stage.DriverBudget / 8))(_.map(_.getLong(0)).toArray))
+      (out.left.map(_.flatten.sorted.toSeq), out.map(_.count()), persistent() -- before, jobs.size)
+    }
+    // eight rows fill the budget exactly: collected, and the checkpoint freed
+    val (fits, _, heldFits, fitsJobs) = gate(8)
+    assert(fits == Left(0L until 8L) && heldFits.isEmpty && fitsJobs == 2, s"$fits $heldFits $fitsJobs")
+    // one row over: the checkpoint, held by the scope, and no collect job
+    val (over, overRows, heldOver, overJobs) = gate(9)
+    assert(over.isRight && overRows == Right(9L) && heldOver.size == 1 && overJobs == 1,
+      s"$over $heldOver $overJobs")
+    // a row without a size sends a small input to the checkpoint too
+    val unsized = Stage.scope(_.localOr(range(3).toDF(), when(col("id") =!= 1, lit(8L)))(_.size))
+    assert(unsized.isRight)
+  }
+
+  test("Ivf.train and buildVectorIndex run a fixed number of jobs on a small corpus") {
+    val emb = Tables.embeddings(spark, TestSpark.Sf0001)
+    val group = s"stage-spec-${java.util.UUID.randomUUID}"
+    def jobs[T](body: => T): Int = {
+      spark.sparkContext.setJobGroup(group, group)
+      try jobGroups(body)._2.count(_ == group) finally spark.sparkContext.clearJobGroup()
+    }
+    // the gate's checkpoint and its collect; the Lloyd rounds add none
+    assert(jobs(Ivf.train(emb, c = 16, iters = 3)) == 2)
+    assert(jobs(Ivf.train(emb, c = 16, iters = 6)) == 2)
+    val tmp = java.nio.file.Files.createTempDirectory("graft_stage_ivf_").toString
+    // the training's 2, then the index writes
+    val build = jobs(Graft(spark, TestSpark.Sf0001).buildVectorIndex(s"$tmp/ivf", lists = 16, iters = 3))
+    assert(build == 7, s"buildVectorIndex jobs: $build")
+  }
+
   test("the dedup, near-dup, semantic and pipeline ingests leave no blocks behind") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft_stage_ingest_").toString
