@@ -72,9 +72,10 @@ import scala.util.Try
   * pointer resolves to the store's legacy root. Publishers are serialized
   * by the maintenance contract, so the generation counter cannot race.
   *
-  * Per-root `_BUCKETS` markers ([[readBuckets]]) record the bucket count a
-  * partitioned root's rows were ACTUALLY written at; readers prune each
-  * root at its own count ([[readPruned]]). */
+  * BUCKETED ROOTS ([[SegmentLog.Buckets]]): the band stores and the text
+  * postings share one layout policy — the operative bucket count of a
+  * root, the auto size, the thin-root floor and its writer, the grow rule
+  * and the pruned multi-root read. */
 private[graft] final case class SegmentLog(dirs: Seq[String], marks: Seq[String]) {
   import SegmentLog._
 
@@ -247,6 +248,91 @@ private[graft] object SegmentLog {
       (gens ++ legacyDirs).count(fs.delete(_, true)).toLong
     }
   }
+
+  /** THE bucketed-root policy of the MinHash and signature band stores
+    * ([[graft.operators.Dedup]], `part = "bucket"`) and the text postings
+    * ([[graft.operators.Search]], `part = "pb"`). A root's rows carry
+    * `part = pmod(hash, P)`, and the root's `_BUCKETS` marker records the P
+    * they were ACTUALLY written at; a store keeps its base root behind a
+    * [[Generations]] pointer, so a re-bucket publishes a new root instead
+    * of rewriting one beside its readers.
+    *   - [[operative]]: a root's P is its marker, else the store's frozen
+    *     meta value (pre-marker roots).
+    *   - [[auto]]: clamp(rows / `target`, 64, 65536) — per-bucket rows, the
+    *     probe's read-amplification unit, stay constant as the store grows;
+    *     the floor keeps tiny stores from one directory, the ceiling bounds
+    *     file count on object stores.
+    *   - [[grow]]: grow-only, to the auto size once it reaches 2x the
+    *     operative P (per-bucket rows doubled), and only while every live
+    *     root carries a marker: a pre-marker root has no record of its
+    *     write-time P, so moving P beside it would mis-prune it.
+    *   - [[write]]: marker FIRST, then the rows. Under 1,024 rows per
+    *     bucket a root is one file sorted by `part` (partitioned, it would
+    *     be mostly tiny files: a probe of B hit buckets pays B sub-row-group
+    *     reads); readers push a `part` filter on it instead.
+    *   - [[read]]: each root pruned at its OWN P, its hit buckets derived
+    *     from the probe's raw hash values — so roots written at different
+    *     P's (a segment written before a re-bucket) coexist exactly. */
+  final case class Buckets(part: String, target: Long) {
+
+    def auto(rows: Long): Int = math.min(65536L, math.max(64L, rows / target)).toInt
+
+    def operative(fs: FileSystem, root: Path, fallback: => Int): Int =
+      readBuckets(fs, root).getOrElse(fallback)
+
+    /** The P a re-bucket of a store of `rows` rows at operative `p` writes:
+      * the auto size once it reaches 2x `p` and every one of `live` (the
+      * store's other live roots; absent ones are skipped) carries a
+      * marker, else `p`. */
+    def grow(fs: FileSystem, rows: Long, p: Int, live: => Seq[Path]): Int = {
+      val a = auto(rows)
+      if (a >= 2 * p && live.filter(fs.exists).forall(readBuckets(fs, _).isDefined)) a else p
+    }
+
+    /** The distinct buckets of raw `hashes` at `p`, sorted. */
+    def hit(hashes: Seq[Long], p: Int): Seq[Int] =
+      hashes.map(h => java.lang.Math.floorMod(h, p.toLong).toInt).distinct.sorted
+
+    /** Replace the root `dir` with `rowsAtP` (`part` computed at `p`): the
+      * marker first, then the rows appended behind it (None: the marker
+      * alone, an empty root). A root of `rows` rows under the floor is one
+      * sorted file; `rows` None is partitioned (the builds, which learn
+      * their size only by writing, and the text postings' base roots). */
+    def write(fs: FileSystem, dir: Path, p: Int, rowsAtP: Option[DataFrame],
+        rows: Option[Long] = None): Unit = {
+      fs.delete(dir, true)
+      writeBuckets(fs, dir, p)
+      rowsAtP.foreach(into(_, dir, rows.forall(_ / math.max(1, p) >= MinFileRows)))
+    }
+
+    /** Append `rowsAtP` (at the root's operative P) to the root `dir` in the
+      * root's own layout: one more sorted file in a thin root, else
+      * partitioned. */
+    def append(fs: FileSystem, dir: Path, rowsAtP: DataFrame): Unit =
+      into(rowsAtP, dir, !listStatus(fs, dir).exists(s => s.isFile && s.getPath.getName.endsWith(".parquet")))
+
+    private def into(df: DataFrame, dir: Path, partitioned: Boolean): Unit =
+      if (partitioned) writePartitioned(df.repartition(col(part)), part, "append", dir.toString)
+      else df.coalesce(1).sortWithinPartitions(part).write.mode("append").parquet(dir.toString)
+
+    /** Each of `roots` pruned to the buckets of `hashes` at its own P
+      * (`fallback` for a pre-marker root); roots with nothing to read are
+      * skipped. */
+    def read(spark: SparkSession, fs: FileSystem, roots: Seq[String], hashes: Seq[Long],
+        fallback: => Int): Seq[DataFrame] =
+      roots.flatMap { r =>
+        readPruned(spark, fs, r, part, Some(hit(hashes, operative(fs, new Path(r), fallback))))
+      }
+  }
+
+  /** The thin-root floor: rows per bucket below which a root is one file. */
+  private val MinFileRows = 1024L
+
+  /** `df` written one directory per value of `part`: the bucketed roots'
+    * writer ([[Buckets]]) and the vector index's inverted lists, which are
+    * partitioned by centroid id at a P the model fixes. */
+  def writePartitioned(df: DataFrame, part: String, mode: String, dir: String): Unit =
+    df.write.mode(mode).partitionBy(part).parquet(dir)
 
   // ---- per-root helpers ----
 

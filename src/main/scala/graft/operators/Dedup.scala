@@ -5,7 +5,7 @@ import graft.functions.TextOps
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 /** Deduplication operators for large-scale document corpora.
   *
@@ -765,28 +765,6 @@ object Dedup {
         TextOps.ngramHashes(TextOps.tokenHashes(col(textCol)), shingleN).as("sh"))
       .withColumn("sig", TextOps.minHashFromHashes(col("sh"), numHashes))
 
-  /** Build a persisted MinHash index at `path`: signature rows plus the LSH
-    * parameters. Train-once/probe-many for near-dup, mirroring
-    * [[writeExactIndex]] for exact dedup.
-    *
-    * The AUTO layout is the DEFAULT (`bandBuckets = AutoBuckets`, -1):
-    * FLAT below the family's measured crossover
-    * ([[FlatCrossoverRowsMinHash]] — there the scan-everything probe is
-    * cheaper than per-bucket directory reads) and BAND-BUCKETED above
-    * it: a slim
-    * `bands/` store of precomputed (doc, band) rows partitioned by
-    * `bucket = pmod(band, P)`, which the micro probe PARTITION-PRUNES to
-    * the batch's buckets — per-trigger cost O(|batch| · bands · N / P)
-    * instead of the O(N · bands) full signature scan, the same
-    * bucket-pruning design as the IVF vector index's inverted lists; P
-    * auto-sized so per-bucket row count stays constant
-    * ([[autoBucketCount]]). A positive count is honored verbatim; `0`
-    * pins flat forever. An auto-flat store that grows past the crossover
-    * PROMOTES at its next fold cycle ([[foldDocSegments]], online, beside
-    * a live ingest) or [[compactDocIndex]]; a bucketed one that outgrows
-    * its P re-buckets on the same slots — so a store's layout tracks its
-    * size across its whole lifetime with no operator input, even under a
-    * never-stopped ingest. */
   /** Retract EVERY auxiliary tree of an existing doc-row store before a
     * rebuild overwrites `docs/` — meta FIRST (from that point probes take
     * the flat scan over whatever docs/ holds, so a crash anywhere
@@ -807,6 +785,25 @@ object Dedup {
     drop(Seq("docs_staging", BandGens.pointer) ++ gens)
   }
 
+  /** Build a persisted MinHash index at `path`: signature rows plus the LSH
+    * parameters. Train-once/probe-many for near-dup, mirroring
+    * [[writeExactIndex]] for exact dedup.
+    *
+    * The AUTO layout is the DEFAULT (`bandBuckets = AutoBuckets`, -1):
+    * FLAT below the family's measured crossover
+    * ([[FlatCrossoverRowsMinHash]] — there the scan-everything probe is
+    * cheaper than per-bucket directory reads) and BAND-BUCKETED above
+    * it: a slim `bands/` store of precomputed (doc, band) rows partitioned
+    * by `bucket = pmod(band, P)`, which the micro probe PARTITION-PRUNES to
+    * the batch's buckets — per-trigger cost O(|batch| · bands · N / P)
+    * instead of the O(N · bands) full signature scan, the same
+    * bucket-pruning design as the IVF vector index's inverted lists. The
+    * layout policy (auto P, thin roots, growth) is
+    * [[graft.core.SegmentLog.Buckets]]. A positive count is honored
+    * verbatim; `0` pins flat forever. An auto-flat store that grows past
+    * the crossover PROMOTES at its next fold cycle ([[foldDocSegments]],
+    * online, beside a live ingest) or [[compactDocIndex]]; a bucketed one
+    * that outgrows its P re-buckets on the same slots. */
   def writeMinHashIndex(
       documents: DataFrame,
       path: String,
@@ -819,51 +816,37 @@ object Dedup {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val spark = documents.sparkSession
     retractIndexTrees(spark, path)
+    val fam = BandFamily.minHash(shingleN, numHashes, bands, bandBuckets)
+    val sigs = signatureRows(documents, shingleN, numHashes, idCol, textCol)
+    def writeDocs(rows: DataFrame): Unit = rows.sortWithinPartitions("doc")
+      .write.mode("overwrite").options(docRowOptions("doc"))
+      .parquet(s"$path/docs")
     if (bandBuckets == 0) {
-      signatureRows(documents, shingleN, numHashes, idCol, textCol)
-        .sortWithinPartitions("doc")
-        .write.mode("overwrite").options(docRowOptions("doc"))
-        .parquet(s"$path/docs")
-      import spark.implicits._
-      Seq((shingleN, numHashes, bands, 0))
-        .toDF("shingle_n", "num_hashes", "bands", "band_buckets")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-    } else {
-      // the signing pass feeds BOTH stores — checkpoint so the corpus is
-      // tokenized exactly once; freed before meta lands
-      val p = Stage.scope { s =>
-        val rows = s(signatureRows(documents, shingleN, numHashes, idCol, textCol))
-        rows.sortWithinPartitions("doc")
-          .write.mode("overwrite").options(docRowOptions("doc"))
-          .parquet(s"$path/docs")
-        // AutoBuckets: the LAYOUT decision rides the just-signed corpus size
-        // (the checkpoint makes the count free of recompute) — flat below
-        // the measured crossover where per-bucket listings cost more than
-        // the whole scan, bucketed at the constant-per-bucket auto P above
-        // it. An explicit positive count is honored verbatim (probe
-        // studies, spec fixtures).
-        val p = if (bandBuckets < 0)
-                  autoLayoutBuckets(rows.count() * bands, FlatCrossoverRowsMinHash)
-                else bandBuckets
-        if (p > 0) {
-          bandRows(rows, bands, numHashes / bands, p)
-            .repartition(col("bucket"))
-            .write.mode("overwrite").partitionBy("bucket").parquet(s"$path/bands")
-          SegmentLog.writeBuckets(SegmentLog.fs(spark, path),
-            new Path(s"$path/bands"), p)
-        }
-        p
-      }
-      // meta LAST (the commit point). AUTO-FLAT stores (auto requested,
-      // corpus below the crossover) record band_buckets = AutoBuckets
-      // (-1): probes treat any non-positive value as flat, and the marker
-      // is what lets [[compactDocIndex]] PROMOTE the store to bucketed
-      // once growth crosses the line — an explicit 0 never promotes.
-      import spark.implicits._
-      Seq((shingleN, numHashes, bands, if (p > 0) p else AutoBuckets))
-        .toDF("shingle_n", "num_hashes", "bands", "band_buckets")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
+      writeDocs(sigs)
+      fam.writeMeta(spark, path, 0)
+    } else buildBanded(fam, sigs, path)(writeDocs)
+  }
+
+  /** The bucketed build of a doc-row store: `signed` (checkpointed, so the
+    * corpus is signed once) lands in `docs/` through `writeDocs`, then the
+    * band tree at the requested P — [[AutoBuckets]] resolves to flat below
+    * the family's crossover and to the auto P above it — then meta LAST,
+    * the commit point. AUTO-FLAT stores record [[AutoBuckets]] (-1) in
+    * meta: probes treat any non-positive value as flat, and the marker is
+    * what lets a fold cycle or [[compactDocIndex]] PROMOTE the store once
+    * growth crosses the line — an explicit 0 never promotes. */
+  private def buildBanded(fam: BandFamily, signed: DataFrame, path: String)(
+      writeDocs: DataFrame => Unit): Unit = {
+    val spark = signed.sparkSession
+    val p = Stage.scope { s =>
+      val rows = s(signed)
+      writeDocs(rows)
+      val p = if (fam.metaP < 0) fam.layout(rows.count() * fam.perDoc) else fam.metaP
+      if (p > 0)
+        Bands.write(SegmentLog.fs(spark, path), new Path(s"$path/bands"), p, Some(fam.rowsAt(rows, p)))
+      p
     }
+    fam.writeMeta(spark, path, if (p > 0) p else AutoBuckets)
   }
 
   /** (doc, band, bucket) rows for the band-bucketed layout: each signature
@@ -875,36 +858,12 @@ object Dedup {
         explode(TextOps.lshBands(col("sig"), bands, rowsPerBand)).as("band"))
       .withColumn("bucket", pmod(col("band"), lit(buckets.toLong)).cast("int"))
 
-  /** The `band_buckets` of an index's meta (0 for flat / pre-bucketing
-    * indexes, whose meta lacks the column). */
-  private def metaBandBuckets(spark: SparkSession, indexPath: String): Int = {
-    val metaDf = Parquet.read(spark, s"$indexPath/meta")
-    if (metaDf.columns.contains("band_buckets"))
-      metaDf.head().getAs[Int]("band_buckets")
-    else 0
-  }
-
-  // ---- bucket-count auto-sizing + the _BUCKETS tree marker ------------------
-  //
-  // `buckets = -1` (now the DEFAULT everywhere a band-bucketed layout can
-  // be requested) auto-sizes the partition count from the store's own row
-  // count so per-bucket rows — and therefore per-trigger probe cost, which
-  // reads O(|batch| · bandsPerDoc) bucket directories — stay CONSTANT as
-  // the store grows: P = clamp(N · bandsPerDoc / TargetBucketRows,
-  // MinBuckets, MaxBuckets). The scale-safe layout is what a caller gets
-  // without asking; `0` is the explicit flat escape hatch.
-
   /** Sentinel: auto-size the bucket count from the corpus (the default). */
   val AutoBuckets: Int = -1
-  /** Per-bucket row target (the probe's read-amplification unit); the
-    * system property is a deployment-tuning + spec-fixture knob — a
-    * large-batch deployment can trade smaller buckets (more, finer
-    * `bucket=` directories) for a wider pruned-probe regime, since the
-    * pruned path engages only while `hitBuckets x 3 <= P`. */
-  private def TargetBucketRows: Long =
-    sys.props.get("graft.bucket.target.rows").map(_.toLong).getOrElse(4096L)
-  private val MinBuckets = 64
-  private val MaxBuckets = 65536
+
+  /** The band roots' layout: [[graft.core.SegmentLog.Buckets]] over
+    * `bucket`, 4,096 band rows per bucket. */
+  private val Bands = SegmentLog.Buckets("bucket", 4096L)
 
   // Below a FAMILY-SPECIFIC band-row count the FLAT layout measurably
   // wins: the bucketed probe's cost is roughly CONSTANT in the store
@@ -926,35 +885,68 @@ object Dedup {
   // online, beside a live ingest) or [[compactDocIndex]] past it.
 
   /** MinHash flat/bucketed crossover (band rows); the system property is
-    * a deployment-tuning + spec-fixture knob. */
+    * a spec-fixture hook. */
   private[graft] def FlatCrossoverRowsMinHash: Long =
     sys.props.get("graft.crossover.minhash").map(_.toLong).getOrElse(1000000L)
   /** Signature-store flat/bucketed crossover (band rows). */
   private[graft] def FlatCrossoverRowsSig: Long =
     sys.props.get("graft.crossover.sig").map(_.toLong).getOrElse(32000000L)
 
-  /** The auto LAYOUT decision: flat (0) below the family's crossover —
-    * where flat is measurably faster — else [[autoBucketCount]]. */
-  private[graft] def autoLayoutBuckets(totalBandRows: Long, crossover: Long): Int =
-    if (totalBandRows < crossover) 0 else autoBucketCount(totalBandRows)
+  /** One band family of the doc-row stores, as its meta records it: the
+    * MinHash band store (meta `shingle_n, num_hashes, bands,
+    * band_buckets`) or the signature band store (`max_hamming,
+    * combo_size, sig_buckets`). `params` are the frozen banding (meta's
+    * leading columns), `metaP` meta's bucket value (positive,
+    * [[AutoBuckets]] for auto-flat, 0 for explicit flat), `perDoc` the band
+    * rows per doc (a layout constant), `rowsAt` the band-row builder over
+    * the store's doc rows at a given P. */
+  private final case class BandFamily(
+      metaCols: Seq[String], params: Seq[Int], metaP: Int,
+      perDoc: Long, crossover: Long, rowsAt: (DataFrame, Int) => DataFrame) {
 
-  /** clamp(totalBandRows / TargetBucketRows, 64, 65536) — per-bucket row
-    * count (the unit of probe read amplification) held constant across
-    * store growth; the floor keeps tiny stores from degenerating to one
-    * directory, the ceiling bounds file count on object stores. */
-  private[graft] def autoBucketCount(totalBandRows: Long): Int =
-    math.min(MaxBuckets.toLong, math.max(MinBuckets.toLong,
-      totalBandRows / TargetBucketRows)).toInt
+    /** The auto LAYOUT decision for `rows` band rows: flat (0) below the
+      * crossover, where flat is measurably faster, else the auto P. */
+    def layout(rows: Long): Int = if (rows < crossover) 0 else Bands.auto(rows)
 
-  /** Below this many rows PER BUCKET a partitioned band root is mostly
-    * tiny files (a probe of B hit buckets pays B sub-row-group reads for
-    * a few KB each — the measured 1.6M-row base tree at P=5859 cost more
-    * in per-file overhead than its whole 25 MB scan), so re-publishes
-    * write such a root FLAT: one sorted-by-bucket file whose pushed
-    * bucket-In filter skips row groups. Partitioned vs flat is a PER-ROOT
-    * choice the readers already handle (dirs => path pruning, data column
-    * => pushed filter); the operative P rides the marker either way. */
-  private val MinBucketFileRows = 1024L
+    /** The OPERATIVE bucket count: the current base band root's marker (a
+      * re-bucket or an online promotion may have moved it past meta, which
+      * cannot be rewritten atomically beside readers), else meta; 0 = flat
+      * (explicit flat, or auto-flat with no tree published). */
+    def operative(fs: FileSystem, indexPath: String): Int =
+      if (metaP == 0) 0 else Bands.operative(fs, baseBandRoot(fs, indexPath), math.max(metaP, 0))
+
+    def writeMeta(spark: SparkSession, path: String, p: Int): Unit =
+      spark.createDataFrame(java.util.List.of(Row.fromSeq(params :+ p)),
+          StructType(metaCols.map(StructField(_, IntegerType, nullable = false))))
+        .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
+  }
+
+  private object BandFamily {
+    def minHash(shingleN: Int, numHashes: Int, bands: Int, metaP: Int): BandFamily =
+      BandFamily(Seq("shingle_n", "num_hashes", "bands", "band_buckets"),
+        Seq(shingleN, numHashes, bands), metaP, bands.toLong, FlatCrossoverRowsMinHash,
+        (docs, p) => bandRows(docs, bands, numHashes / bands, p))
+
+    def signature(maxHamming: Int, comboSize: Int, metaP: Int): BandFamily =
+      BandFamily(Seq("max_hamming", "combo_size", "sig_buckets"), Seq(maxHamming, comboSize),
+        metaP, (0 until maxHamming + comboSize).combinations(comboSize).size.toLong,
+        FlatCrossoverRowsSig, (docs, p) => signatureBandRows(docs, maxHamming, comboSize, p))
+
+    /** The family of the store at `indexPath`, read from its meta; None
+      * without a meta (a flat signature store) or with a pre-bucketing one. */
+    def of(spark: SparkSession, indexPath: String): Option[BandFamily] = {
+      val meta = new Path(s"$indexPath/meta")
+      if (!SegmentLog.fs(spark, indexPath).exists(meta)) return None
+      val df = Parquet.read(spark, meta.toString)
+      if (df.columns.contains("band_buckets")) {
+        val m = df.head()
+        Some(minHash(m.getInt(0), m.getInt(1), m.getInt(2), m.getAs[Int]("band_buckets")))
+      } else if (df.columns.contains("sig_buckets")) {
+        val m = df.head()
+        Some(signature(m.getInt(0), m.getInt(1), m.getAs[Int]("sig_buckets")))
+      } else None
+    }
+  }
 
   /** The base band generations behind the `_BANDS` pointer (a generation
     * dir `bands_v<k>` once any re-bucket has published; the legacy `bands/`
@@ -964,37 +956,16 @@ object Dedup {
     * probe's file list points at deleted paths (FAILED_READ_FILE under a
     * live ingest, and non-atomic on object stores where rename is a copy).
     * The superseded generation is swept by [[gcDocIndex]] or the
-    * stop-the-world [[compactDocIndex]]. Every band tree carries its own
+    * stop-the-world [[compactDocIndex]]. Every band root carries its own
     * `_BUCKETS` marker, written into a new generation BEFORE the pointer
     * flips to it and into `bandsegs/<name>` before the doc segment commits,
     * so it never describes a partitioning the rows don't have — unlike the
-    * meta value, which cannot be updated atomically with any tree.
-    * Marker-less (pre-marker) stores fall back to the frozen meta value. */
+    * meta value, which cannot be updated atomically with any tree. */
   private val BandGens = SegmentLog.Generations("_BANDS", "bands", "bands", Seq("bands"))
 
   /** The CURRENT base band root. */
   private def baseBandRoot(fs: FileSystem, indexPath: String): Path =
     new Path(indexPath, BandGens.current(fs, new Path(indexPath)))
-
-  /** The OPERATIVE bucket count of a MinHash index: the CURRENT base band
-    * root's `_BUCKETS` marker when present (a re-bucket may have outgrown
-    * the build-time meta value), else meta; 0 = flat. */
-  private def effectiveBandBuckets(spark: SparkSession, indexPath: String): Int = {
-    val mb = metaBandBuckets(spark, indexPath)
-    if (mb == 0) 0 // explicit flat (or not a MinHash meta): never bucketed
-    else {
-      val fs = SegmentLog.fs(spark, indexPath)
-      val marker = SegmentLog.readBuckets(fs, baseBandRoot(fs, indexPath))
-      if (mb > 0) marker.getOrElse(mb)
-      // AutoBuckets meta: an ONLINE promotion publishes the band tree and
-      // flips the `_BANDS` pointer WITHOUT rewriting meta (a meta overwrite
-      // is not atomic beside live readers) — the published tree's own
-      // marker IS the promotion commit point, exactly as it already is for
-      // the signature family ([[effectiveSigBuckets]]). No tree = still
-      // flat.
-      else marker.getOrElse(0)
-    }
-  }
 
   /** All near-dup pairs TOUCHING a new batch — batch-vs-corpus and
     * batch-vs-batch, never corpus-vs-corpus (those were found when the
@@ -1095,55 +1066,22 @@ object Dedup {
     val r = numHashes / bands
     def banded(sigs: DataFrame) = sigs
       .select(col("doc"), explode(TextOps.lshBands(col("sig"), bands, r)).as("band"))
-    // heal any crashed band-store swap BEFORE reading the operative bucket
-    // count: a staged re-bucketed tree healed in AFTER the P read would
-    // leave this probe pruning `bucket=` paths computed at the OLD P
-    // against the new partitioning — silent recall loss
-    val usable = bandTreeUsable(spark, indexPath)
-    val bb = if (usable) effectiveBandBuckets(spark, indexPath) else 0
-    // BUCKETED path only while the batch hits under a THIRD of the
-    // buckets: the explicit-directory read costs O(hit) listings +
-    // footers, so once a large batch touches a substantial share the
-    // flat signature scan is the cheaper plan — the operator picks per
-    // batch, keeping the bucketed index no worse than the flat one. The
-    // 1/3 gate is measured, not guessed (round-11 BandProbe sweep at a
-    // 400k-doc store): at hit/P = 0.08 the pruned read is 2.2x AHEAD, at
-    // hit/P = 0.49 it is 9% BEHIND — the old half-the-buckets gate
-    // admitted that losing band.
-    val batchBands0 =
-      if (bb > 0) Some(bandRows(batchSigs.select("doc", "sig"), bands, r, bb)) else None
-    // the batch's raw band VALUES (not buckets): per-root hit buckets are
-    // derived from these at each root's own P (storedBands) — a
-    // batch-bounded driver collect (<= |batch| · bands longs)
-    val bandVals = batchBands0.map(_.select("band").distinct()
-      .collect().map(_.getLong(0)))
-    val hit = bandVals.map(_.map(v => java.lang.Math.floorMod(v, bb.toLong).toInt)
-      .distinct.length)
-    val pairHalf =
-      if (bb > 0 && hit.get * 3 <= bb) {
-        // the index side is the precomputed band store, PRUNED to the
-        // batch's buckets by path construction — only |batch buckets| /
-        // bandBuckets of the index's band rows are read at all (and none
-        // of its signatures), so per-trigger cost tracks the batch, not
-        // the corpus. The bucket list is a batch-bounded driver collect
-        // (<= min(|batch| · bands, bandBuckets) ints). Tombstoned docs'
-        // band rows are NOT filtered here: a candidate pair needs both
-        // docs' stored rows in the verify stage, so a stale band row can
-        // only produce a candidate that verification drops — compaction
-        // sweeps the rows physically.
-        val batchBands = batchBands0.get
-        val stored = storedBands(spark, indexPath, bandVals, bb,
-          segDocs => banded(segDocs.select("doc", "sig")))
-        broadcast(batchBands.select("doc", "band")).as("a")
-          .join(stored.unionByName(batchBands.select("doc", "band")).as("b"),
+    // Tombstoned docs' band rows are NOT filtered on the pruned path: a
+    // candidate pair needs both docs' stored rows in the verify stage, so
+    // a stale band row can only produce a candidate that verification
+    // drops — compaction sweeps the rows physically.
+    val batch = batchSigs.select("doc", "sig")
+    val pairHalf = prunedBands(batch, indexPath, BandFamily.of(spark, indexPath)) match {
+      case Some((batchBands, stored)) =>
+        broadcast(batchBands).as("a")
+          .join(stored.unionByName(batchBands).as("b"),
             col("a.band") === col("b.band") && col("a.doc") =!= col("b.doc"))
-      } else {
-        val all = storedDocs(spark, indexPath, "doc").select("doc", "sig")
-          .unionByName(batchSigs.select("doc", "sig"))
-        broadcast(banded(batchSigs.select("doc", "sig"))).as("a")
+      case None =>
+        val all = storedDocs(spark, indexPath, "doc").select("doc", "sig").unionByName(batch)
+        broadcast(banded(batch)).as("a")
           .join(banded(all).as("b"),
             col("a.band") === col("b.band") && col("a.doc") =!= col("b.doc"))
-      }
+    }
     pairHalf
       .select(
         least(col("a.doc"), col("b.doc")).as("doc_a"),
@@ -1151,21 +1089,6 @@ object Dedup {
       .dropDuplicates("doc_a", "doc_b")
   }
 
-  /** The live (doc, band) rows of a band-bucketed index: the partitioned
-    * base `bands/` store plus each live segment's `bandsegs/<name>` rows
-    * (written by [[writeMinHashSegment]] BEFORE the doc segment, so a
-    * committed doc segment always has its band rows; an orphaned band
-    * segment whose doc segment never committed pairs only into candidates
-    * the verify stage drops).
-    *
-    * `buckets` prunes the read by PATH CONSTRUCTION, not a partition
-    * filter: one listing of each root discovers its `bucket=` directories,
-    * and only the HIT ones are handed to the reader — so per-probe listing
-    * and footer cost is O(|hit buckets|), never O(bandBuckets). (The
-    * filter-on-partition-column form re-lists every bucket directory at
-    * plan time — measured at 6-12 s per probe against a 4096-bucket store,
-    * dwarfing the scan it prunes.) Flat batch segments carry `bucket` as a
-    * data column and get a pushed row filter instead. */
   /** Bucketed-probe gate: heal a crashed band-store swap
     * ([[compactDocIndex]]'s delete-then-rename window), then require the
     * base `bands/` tree to exist. Absence after healing means the band
@@ -1183,33 +1106,53 @@ object Dedup {
     fs.exists(baseBandRoot(fs, indexPath))
   }
 
+  /** The index side of a micro probe on a band-bucketed store: the
+    * batch's band rows (`batch` is the store's doc-row shape) and the
+    * store's live band rows PRUNED to the batch's buckets, both without
+    * `bucket` — or None when the store is flat, its band tree is unusable,
+    * or the batch hits over a third of the buckets. Heal-then-read: a
+    * staged re-bucketed tree healed in AFTER the P read would leave the
+    * probe pruning paths computed at the OLD P — silent recall loss.
+    *
+    * The 1/3 gate is measured, not guessed (round-11 BandProbe sweep at a
+    * 400k-doc store): the pruned read costs O(hit) listings + footers, and
+    * at hit/P = 0.08 it is 2.2x AHEAD of the flat scan, at hit/P = 0.49 9%
+    * BEHIND — so the operator picks per batch, keeping the bucketed index
+    * no worse than the flat one. The batch's raw band VALUES are a
+    * batch-bounded driver collect; [[storedBands]] derives each root's hit
+    * buckets from them at the root's own P. `family` is read only when the
+    * band tree is usable. */
+  private def prunedBands(
+      batch: DataFrame, indexPath: String,
+      family: => Option[BandFamily]): Option[(DataFrame, DataFrame)] = {
+    val spark = batch.sparkSession
+    val fam = if (bandTreeUsable(spark, indexPath)) family else None
+    val p = fam.fold(0)(_.operative(SegmentLog.fs(spark, indexPath), indexPath))
+    if (p <= 0) return None
+    val batchBands = fam.get.rowsAt(batch, p)
+    val vals = batchBands.select("band").distinct().collect().map(_.getLong(0)).toSeq
+    if (Bands.hit(vals, p).length * 3 > p) return None
+    val bands = batchBands.drop("bucket")
+    Some((bands, storedBands(spark, indexPath, fam.get, vals, p).getOrElse(bands.limit(0))))
+  }
+
+  /** The live band rows of a band-bucketed index (`bucket` dropped): the
+    * base band root plus each live segment's `bandsegs/<name>` rows
+    * (written by [[writeDocSegment]] BEFORE the doc segment, so a committed
+    * doc segment always has its band rows; an orphaned band segment whose
+    * doc segment never committed pairs only into candidates the verify
+    * stage drops), each read by the pruned read of
+    * [[graft.core.SegmentLog.Buckets]] at its own P — pre-marker roots at
+    * the base P, frozen-correct for them because growth waits until every
+    * live twin carries a marker. */
   private def storedBands(
-      spark: SparkSession, indexPath: String, bandVals: Option[Array[Long]],
-      baseP: Int, bandTwinless: DataFrame => DataFrame,
-      cols: Seq[String] = Seq("doc", "band")): DataFrame = {
+      spark: SparkSession, indexPath: String, fam: BandFamily,
+      bandVals: Seq[Long], baseP: Int): Option[DataFrame] = {
     val fs = SegmentLog.fs(spark, indexPath)
-    val live = liveDocSegs(spark, indexPath)
-    val (twinned, twinless) = live.partition(d =>
+    val (twinned, twinless) = liveDocSegs(spark, indexPath).partition(d =>
       fs.exists(new Path(s"$indexPath/bandsegs/${d.getName}")))
     val roots = baseBandRoot(fs, indexPath).toString +:
       twinned.map(d => s"$indexPath/bandsegs/${d.getName}")
-    // EACH ROOT PRUNES AT ITS OWN P: a live segment written before a
-    // re-bucket carries bucket values computed at the P operative at ITS
-    // write (recorded in its own `_BUCKETS` marker), so the hit-bucket
-    // list must be derived per root from the batch's raw band values —
-    // one driver-side pmod over a batch-bounded long array. Marker-less
-    // roots (pre-marker stores) fall back to the base P, which for them
-    // is frozen-correct: growth is gated on every live segment carrying a
-    // marker ([[rebuildBandTree]]), so a legacy segment and a moved P can
-    // never coexist.
-    val views = roots.flatMap { r =>
-      val hit = bandVals.map { vs =>
-        val p = SegmentLog.readBuckets(fs, new Path(r))
-          .getOrElse(baseP).toLong
-        vs.map(v => java.lang.Math.floorMod(v, p).toInt).distinct.sorted.toSeq
-      }
-      SegmentLog.readPruned(spark, fs, r, "bucket", hit).map(_.select(cols.map(col): _*))
-    }
     // FLAT-ERA segments (no band twin: committed while the store was still
     // auto-flat, before an ONLINE promotion published the band tree) are
     // banded ON THE FLY from their doc rows — the flat probe's treatment,
@@ -1220,12 +1163,9 @@ object Dedup {
     // a banded compact twin.
     val flatViews =
       if (twinless.isEmpty) Nil
-      else Seq(bandTwinless(Parquet.read(spark, twinless.map(_.toString): _*))
-        .select(cols.map(col): _*))
-    val all = views ++ flatViews
-    if (all.isEmpty)
-      spark.range(0).select(cols.map(c => col("id").as(c)): _*)
-    else all.reduce(_.unionByName(_))
+      else Seq(fam.rowsAt(Parquet.read(spark, twinless.map(_.toString): _*), 1))
+    (Bands.read(spark, fs, roots, bandVals, baseP) ++ flatViews)
+      .map(_.drop("bucket")).reduceOption(_.unionByName(_))
   }
 
   /** The MICRO-BATCH verify stage: exact-Jaccard verification of
@@ -1329,113 +1269,28 @@ object Dedup {
     }
   }
 
-  /** Fold a MinHash/SimHash index's tombstones AND named streaming
-    * segments (`segs/`) into a physical rewrite: stored rows minus deleted
-    * ids land in one flat `docs/`, tombstones, segments, and fold markers
-    * dropped. STOP-THE-WORLD for this index (rewrites `docs/` in place) —
-    * the full fold including the base store and tombstone GC. For the
-    * segment-accumulation problem of a LONG-RUNNING near-dup ingest
-    * ([[graft.streaming.Ingest.startNearDupIngest]] writes one segment per
-    * micro-batch), use [[foldDocSegments]] instead: it folds segments into
-    * one beside the live ingest, no stop needed. */
-  /** The band layout of a bucketed doc-row store, layout-family agnostic:
-    * (bandRowsPerDoc — a LAYOUT CONSTANT: MinHash `bands`, signature
-    * C(maxHamming+comboSize, comboSize) block combos; operative bucket
-    * count — tree marker over meta; row builder at an arbitrary P). None
-    * for flat stores (no band tree to maintain). */
-  private def bandLayout(spark: SparkSession, indexPath: String)
-      : Option[(Long, Int, (DataFrame, Int) => DataFrame)] = {
+  /** The band family of a bucketed doc-row store and its operative P;
+    * None for flat stores (no band tree to maintain). */
+  private def bandLayout(spark: SparkSession, indexPath: String): Option[(BandFamily, Int)] = {
     val fs = SegmentLog.fs(spark, indexPath)
-    val hasMeta = fs.exists(new Path(s"$indexPath/meta"))
-    val bb = if (hasMeta) effectiveBandBuckets(spark, indexPath) else 0
-    if (bb > 0) {
-      val m = Parquet.read(spark, s"$indexPath/meta").head()
-      val bands = m.getInt(2); val rpb = m.getInt(1) / bands
-      Some((bands.toLong, bb, (kept, p) => bandRows(kept, bands, rpb, p)))
-    } else effectiveSigBuckets(spark, indexPath).map { case (mh, cs, sb) =>
-      ((0 until mh + cs).combinations(cs).size.toLong, sb,
-        (kept: DataFrame, p: Int) => signatureBandRows(kept, mh, cs, p))
-    }
+    BandFamily.of(spark, indexPath).map(f => (f, f.operative(fs, indexPath))).filter(_._2 > 0)
   }
 
-  /** Every live segment's band twin carries its own `_BUCKETS` marker —
-    * the gate for re-bucketing BESIDE live segments: a marker-less twin
-    * (pre-marker store) was written at the then-operative base P, and its
-    * rows would be mis-pruned the moment that P moved, so growth is held
-    * back until a fold or compaction has retired it. */
-  private def liveBandsegsMarked(
-      spark: SparkSession, fs: FileSystem,
-      indexPath: String): Boolean = {
-    val live = liveDocSegs(spark, indexPath)
-    live.map(d => new Path(s"$indexPath/bandsegs/${d.getName}"))
-      .filter(fs.exists)
-      .forall(b => SegmentLog.readBuckets(fs, b).isDefined)
-  }
-
-  /** Rebuild a bucketed store's BASE band tree from `docs/` (an explode
-    * over stored sig/sh columns — no text or payload re-read; tombstoned
-    * docs' stale band rows are swept because the fold that precedes this
-    * dropped their doc rows), published as a NEW GENERATION behind the
-    * `_BANDS` pointer. GROW-ONLY RE-BUCKET rides the rebuild: when the
-    * store has OUTGROWN its operative P (the auto size from the current
-    * doc count is >= 2x it, i.e. per-bucket rows — the probe's
-    * read-amplification unit — have doubled), the new generation is
-    * partitioned at the new auto P. Never shrinks: an explicitly oversized
-    * P costs only small files. Growing BESIDE LIVE SEGMENTS is safe
-    * because probes prune each band root at its OWN marker P
-    * ([[storedBands]]) — a live segment written at the old P keeps exact
-    * recall through its own marker — gated only on every live twin
-    * CARRYING a marker ([[liveBandsegsMarked]]; pre-marker segments have
-    * no record of their write-time P). `dropBandSegs` additionally drops
-    * the segment band twins — correct ONLY when no live doc segments
-    * remain (the stop-the-world compaction). */
-  private def rebuildBandTree(
-      spark: SparkSession, indexPath: String, dropBandSegs: Boolean,
-      targetP: Option[Int] = None): Unit =
-    bandLayout(spark, indexPath).foreach { case (perDoc, effP, mkRows) =>
-      val fs = SegmentLog.fs(spark, indexPath)
-      val kept = Parquet.read(spark, s"$indexPath/docs")
-      // `targetP` sizes growth off the TOTAL live store (docs/ + live
-      // segments — [[reconcileBandOrphans]] computes it): a pure-streaming
-      // deployment's rows accumulate in SEGMENTS while docs/ stays frozen,
-      // so sizing off docs/ alone would never grow exactly where growth
-      // matters most
-      val rowCount = kept.count() * perDoc
-      val autoP = targetP.getOrElse(autoBucketCount(rowCount))
-      val canGrow = dropBandSegs || liveBandsegsMarked(spark, fs, indexPath)
-      val newP = if (canGrow && autoP >= 2 * effP) autoP else effP
-      publishBandTree(spark, fs, indexPath, mkRows(kept, newP), newP, rowCount)
-      if (dropBandSegs) {
-        val bandsegs = new Path(s"$indexPath/bandsegs")
-        if (fs.exists(bandsegs)) { fs.delete(bandsegs, true); () }
-      }
-    }
-
-  /** Publish a COMPLETE band tree as a new generation ([[BandGens]]):
-    * `rowsAtP` (already carrying `bucket` computed at `p`) land with the
-    * `_BUCKETS` marker written BEFORE the rows (append-mode parquet
-    * preserves it), then the `_BANDS` pointer flips. */
+  /** Publish a COMPLETE base band tree from `docs/` (an explode over the
+    * stored sig/sh columns — no text or payload re-read) at `p` as a new
+    * generation ([[BandGens]]): the band root's writer lays it out by its
+    * `docRows` band rows, then the `_BANDS` pointer flips. */
   private def publishBandTree(
-      spark: SparkSession, fs: FileSystem,
-      indexPath: String, rowsAtP: DataFrame, p: Int, rowCount: Long): Unit =
-    BandGens.publish(fs, new Path(indexPath)) { dir =>
-      SegmentLog.writeBuckets(fs, dir, p)
-      if (rowCount / math.max(1, p) >= MinBucketFileRows)
-        rowsAtP.repartition(col("bucket"))
-          .write.mode("append").partitionBy("bucket").parquet(dir.toString)
-      else
-        // thin root (e.g. the docs/-only base tree of a streaming-heavy
-        // store after a growth re-bucket): one sorted-by-bucket file —
-        // probes push a bucket-In filter instead of listing hit dirs
-        rowsAtP.coalesce(1).sortWithinPartitions("bucket")
-          .write.mode("append").parquet(dir.toString)
-    }
+      spark: SparkSession, indexPath: String, fam: BandFamily, p: Int, docRows: Long): Unit = {
+    val fs = SegmentLog.fs(spark, indexPath)
+    val rows = fam.rowsAt(Parquet.read(spark, s"$indexPath/docs"), p)
+    BandGens.publish(fs, new Path(indexPath))(Bands.write(fs, _, p, Some(rows), Some(docRows)))
+  }
 
   /** Promote an AUTO-FLAT store — auto layout requested at build time but
-    * the corpus was below its family's crossover
-    * ([[FlatCrossoverRowsMinHash]] / [[FlatCrossoverRowsSig]]), recorded
-    * as meta bucket value [[AutoBuckets]] — to the band-bucketed layout
-    * once growth has carried it past the crossover.
+    * the corpus was below its family's crossover, recorded as meta bucket
+    * value [[AutoBuckets]] — to the band-bucketed layout once growth has
+    * carried it past the crossover.
     *
     * Two callers, one commit discipline:
     *
@@ -1445,75 +1300,44 @@ object Dedup {
     * segments while docs/ stays frozen), the tree is built from `docs/`
     * only, and META IS NEVER TOUCHED — a meta overwrite is not atomic
     * beside live readers. The `_BANDS` pointer flip (marker inside the
-    * tree) IS the commit point: both families' probes consult the marker
-    * over an AutoBuckets meta ([[effectiveBandBuckets]] /
-    * [[effectiveSigBuckets]]). Live FLAT-ERA segments have no band twins
-    * at that instant; bucketed probes flat-scan exactly those
-    * ([[storedBands]]'s twin-less arm) so the view stays complete, and the
-    * fold that carried the promotion retires them into a banded compact
-    * twin. A crash before the pointer flip leaves an unreferenced
-    * generation (swept later) and probes flat — the next cycle
-    * re-promotes idempotently; after the flip the promotion is durable.
+    * tree) IS the commit point: probes consult the marker over an
+    * AutoBuckets meta ([[BandFamily.operative]]). Live FLAT-ERA segments
+    * have no band twins at that instant; bucketed probes band exactly
+    * those on the fly ([[storedBands]]) so the view stays complete, and
+    * the fold that carried the promotion retires them into a banded
+    * compact twin. A crash before the pointer flip leaves an unreferenced
+    * generation (swept later) and probes flat — the next cycle re-promotes
+    * idempotently; after the flip the promotion is durable.
     *
     * `online = false` ([[compactDocIndex]], stop-the-world, after the full
     * fold): same tree publish when none exists yet, then meta is rewritten
     * at the operative P — persisting an earlier online promotion (tree
     * already marked: meta-only write) or committing a fresh one. A crash
     * between tree and meta is harmless (the marker already carries the
-    * promotion for both families' probes).
+    * promotion).
     *
-    * An explicitly-flat store (band/sig buckets = 0, or no meta at all)
-    * never promotes. */
+    * An explicitly-flat store (bucket value 0, or no meta at all) never
+    * promotes. */
   private def promoteAutoFlat(
-      spark: SparkSession, indexPath: String, online: Boolean = false): Unit = {
-    val fs = SegmentLog.fs(spark, indexPath)
-    val metaPath = new Path(s"$indexPath/meta")
-    if (!fs.exists(metaPath)) return
-    val metaDf = Parquet.read(spark, metaPath.toString)
-    import spark.implicits._
-
-    // footer-count rows living in segments (0 after a stop-the-world fold)
-    def liveSegRows: Long = liveDocSegs(spark, indexPath)
-      .map(d => Parquet.read(spark, d.toString).count()).sum
-
-    def promote(
-        perDoc: Long, crossover: Long,
-        mkRows: (DataFrame, Int) => DataFrame, writeMeta: Int => Unit): Unit = {
-      val existing = SegmentLog.readBuckets(fs, baseBandRoot(fs, indexPath))
-      if (existing.isDefined) {
+      spark: SparkSession, indexPath: String, online: Boolean = false): Unit =
+    BandFamily.of(spark, indexPath).filter(_.metaP == AutoBuckets).foreach { fam =>
+      val promoted = fam.operative(SegmentLog.fs(spark, indexPath), indexPath)
+      if (promoted > 0) {
         // already promoted online (tree + marker live, meta still -1):
         // stop-the-world persists the operative P into meta, online no-ops
-        if (!online) writeMeta(existing.get)
-        return
+        if (!online) fam.writeMeta(spark, indexPath, promoted)
+      } else {
+        val docRows = Parquet.read(spark, s"$indexPath/docs").count() * fam.perDoc
+        // footer-count rows living in segments (0 after a stop-the-world fold)
+        val segRows = liveDocSegs(spark, indexPath)
+          .map(d => Parquet.read(spark, d.toString).count()).sum * fam.perDoc
+        val p = fam.layout(docRows + segRows)
+        if (p > 0) {
+          publishBandTree(spark, indexPath, fam, p, docRows)
+          if (!online) fam.writeMeta(spark, indexPath, p)
+        }
       }
-      val kept = Parquet.read(spark, s"$indexPath/docs")
-      val docRows = kept.count() * perDoc
-      val p = autoLayoutBuckets(docRows + liveSegRows * perDoc, crossover)
-      if (p <= 0) return
-      publishBandTree(spark, fs, indexPath, mkRows(kept, p), p, docRows)
-      if (!online) writeMeta(p)
     }
-
-    if (metaDf.columns.contains("band_buckets")) {
-      val m = metaDf.head()
-      if (m.getAs[Int]("band_buckets") != AutoBuckets) return
-      val (sn, nh, bands) = (m.getInt(0), m.getInt(1), m.getInt(2))
-      promote(bands.toLong, FlatCrossoverRowsMinHash,
-        (kept, p) => bandRows(kept, bands, nh / bands, p),
-        p => Seq((sn, nh, bands, p))
-          .toDF("shingle_n", "num_hashes", "bands", "band_buckets")
-          .coalesce(1).write.mode("overwrite").parquet(metaPath.toString))
-    } else if (metaDf.columns.contains("sig_buckets")) {
-      val m = metaDf.head()
-      if (m.getAs[Int]("sig_buckets") != AutoBuckets) return
-      val (mh, cs) = (m.getInt(0), m.getInt(1))
-      val combos = (0 until mh + cs).combinations(cs).size
-      promote(combos.toLong, FlatCrossoverRowsSig,
-        (kept, p) => signatureBandRows(kept, mh, cs, p),
-        p => Seq((mh, cs, p)).toDF("max_hamming", "combo_size", "sig_buckets")
-          .coalesce(1).write.mode("overwrite").parquet(metaPath.toString))
-    }
-  }
 
   /** Footer-count orphan reconcile of a bucketed store's BASE band tree —
     * the detector for [[appendToSignatureIndex]]'s fail-open crash window
@@ -1527,41 +1351,40 @@ object Dedup {
     * `heal` rebuilds the base tree from `docs/` when orphans are found.
     * Runs inside every [[foldDocSegments]] cycle so a streaming deployment
     * that never stops for [[compactDocIndex]] still converges — the
-    * fail-open window is bounded by the fold cadence instead of forever. */
+    * fail-open window is bounded by the fold cadence instead of forever.
+    *
+    * GROWTH rides the same slot: the grow rule of
+    * [[graft.core.SegmentLog.Buckets]] sized off the TOTAL live store
+    * (docs/ + live segment footer counts — a streaming deployment's rows
+    * accumulate in segments while docs/ stays frozen), so a deployment
+    * that never stops for [[compactDocIndex]] still rides the flat
+    * per-trigger cost curve. The moved P reaches segment rows through the
+    * NEXT fold's compact twin; until then old segments prune at their own
+    * marker P. */
   def reconcileBandOrphans(
       spark: SparkSession, indexPath: String, heal: Boolean = true): Long =
     bandLayout(spark, indexPath) match {
       case None => 0L
-      case Some((perDoc, effP, _)) =>
+      case Some((fam, effP)) =>
         val fs = SegmentLog.fs(spark, indexPath)
         val docsCount = Parquet.read(spark, s"$indexPath/docs").count()
-        val bandsCount = SegmentLog.rowCount(spark, fs, baseBandRoot(fs, indexPath))
-        val missing = docsCount * perDoc - bandsCount
-        val orphans = if (missing > 0) (missing + perDoc - 1) / perDoc else 0L
-        // GROWTH rides the same fold-cycle slot as the heal: a store that
-        // has outgrown its P (auto size >= 2x operative — per-bucket rows
-        // doubled) re-buckets HERE, beside the live ingest, so a
-        // deployment that never stops for [[compactDocIndex]] still rides
-        // the flat per-trigger cost curve (the round-11 soak measured the
-        // fixed-P alternative at Theta(N/P) per trigger — linear drift).
-        // Sized off the TOTAL live store: a streaming deployment's rows
-        // accumulate in segments while docs/ stays frozen (the fold keeps
-        // the base store untouched by contract), so the doubling test must
-        // see segment docs too — footer counts over the (post-fold, O(1))
-        // live segment list. The moved P reaches segment rows through the
-        // NEXT fold's compact twin (re-bucketed at the operative P, its
-        // own marker); until then old segments prune exactly at their
-        // recorded P. Safe beside live segments by the same markers.
-        val liveDocs = liveDocSegs(spark, indexPath)
-          .map(d => Parquet.read(spark, d.toString).count()).sum
-        val autoP = autoBucketCount((docsCount + liveDocs) * perDoc)
-        val growDue = heal && autoP >= 2 * effP &&
-          liveBandsegsMarked(spark, fs, indexPath)
-        if ((orphans > 0 && heal) || growDue)
-          rebuildBandTree(spark, indexPath, dropBandSegs = false,
-            targetP = if (growDue) Some(autoP) else None)
+        val orphans = orphanDocs(fam.perDoc, docsCount,
+          SegmentLog.rowCount(spark, fs, baseBandRoot(fs, indexPath)))
+        val segs = liveDocSegs(spark, indexPath)
+        val liveDocs = segs.map(d => Parquet.read(spark, d.toString).count()).sum
+        val p = if (!heal) effP else Bands.grow(fs, (docsCount + liveDocs) * fam.perDoc, effP,
+          segs.map(d => new Path(s"$indexPath/bandsegs/${d.getName}")))
+        if (heal && (orphans > 0 || p != effP))
+          publishBandTree(spark, indexPath, fam, p, docsCount * fam.perDoc)
         orphans
     }
+
+  /** Docs missing their band rows: `docs` doc rows at `perDoc` band rows
+    * each against `bands` band rows. */
+  private def orphanDocs(perDoc: Long, docs: Long, bands: Long): Long = {
+    val missing = docs * perDoc - bands
+    if (missing > 0) (missing + perDoc - 1) / perDoc else 0L
+  }
 
   /** GetProperty-style health of a persisted MinHash/SimHash/signature
     * doc-row index: base docs, live segments, tombstones, the operative
@@ -1580,19 +1403,27 @@ object Dedup {
       if (fs.exists(tombsPath)) readDocTombs(spark, indexPath).count() else 0L
     val bandsCount = SegmentLog.rowCount(spark, fs, baseBandRoot(fs, indexPath))
     val layout = bandLayout(spark, indexPath)
-    val orphans = layout.fold(0L) { case (perDoc, _, _) =>
-      val missing = docsCount * perDoc - bandsCount
-      if (missing > 0) (missing + perDoc - 1) / perDoc else 0L
-    }
     Map(
       "graft.docindex.docs" -> docsCount.toString,
       "graft.docindex.segments" -> live.size.toString,
       "graft.docindex.tombstones" -> tombCount.toString,
       "graft.docindex.band-buckets" -> layout.fold(0)(_._2).toString,
       "graft.docindex.band-rows" -> bandsCount.toString,
-      "graft.docindex.orphan-docs" -> orphans.toString)
+      "graft.docindex.orphan-docs" ->
+        layout.fold(0L)(l => orphanDocs(l._1.perDoc, docsCount, bandsCount)).toString)
   }
 
+  /** Fold a MinHash/SimHash index's tombstones AND named streaming
+    * segments (`segs/`) into a physical rewrite: stored rows minus deleted
+    * ids land in one flat `docs/`, tombstones, segments, and fold markers
+    * dropped; the base band tree is rebuilt from the folded docs and
+    * re-bucketed when the grow rule says so (stop-the-world: no marker
+    * gate). STOP-THE-WORLD for this index (rewrites `docs/` in place) —
+    * the full fold including the base store and tombstone GC. For the
+    * segment-accumulation problem of a LONG-RUNNING near-dup ingest
+    * ([[graft.streaming.Ingest.startNearDupIngest]] writes one segment per
+    * micro-batch), use [[foldDocSegments]] instead: it folds segments into
+    * one beside the live ingest, no stop needed. */
   def compactDocIndex(spark: SparkSession, indexPath: String): Unit = {
     val (fs, root) = (SegmentLog.fs(spark, indexPath), new Path(indexPath))
     val docsDir = new Path(s"$indexPath/docs")
@@ -1615,6 +1446,13 @@ object Dedup {
       promoteAutoFlat(spark, indexPath)
       return
     }
+    // the base band tree rebuilt from the (folded) docs/ at the grown P;
+    // no live segment remains, so the segment band twins go too
+    def rebuildBands(docsCount: Long): Unit = layout.foreach { case (fam, effP) =>
+      val rows = docsCount * fam.perDoc
+      publishBandTree(spark, indexPath, fam, Bands.grow(fs, rows, effP, Nil), rows)
+      fs.delete(new Path(s"$indexPath/bandsegs"), true)
+    }
     if (!haveFold) {
       // Bucketed store with NOTHING to fold: the only possible damage is
       // band rows lost to a crashed direct append (docs committed, band
@@ -1628,18 +1466,15 @@ object Dedup {
       // reusing that name — retire them here, exactly as the full fold's
       // tail does
       SegmentLog.Docs.retire(fs, root)
-      val (perDoc, effP, _) = layout.get
+      val (fam, effP) = layout.get
       val bandsDir = baseBandRoot(fs, indexPath)
       val docsCount = Parquet.read(spark, docsDir.toString).count()
       val bandsCount =
         if (fs.exists(bandsDir)) SegmentLog.rowCount(spark, fs, bandsDir) else -1L
-      if (bandsCount == docsCount * perDoc
-          && autoBucketCount(docsCount * perDoc) < 2 * effP) {
-        BandGens.sweep(fs, root) // stop-the-world: drain-free
-        return
-      }
-      rebuildBandTree(spark, indexPath, dropBandSegs = true)
-      BandGens.sweep(fs, root)
+      if (bandsCount != docsCount * fam.perDoc
+          || Bands.grow(fs, docsCount * fam.perDoc, effP, Nil) != effP)
+        rebuildBands(docsCount)
+      BandGens.sweep(fs, root) // stop-the-world: drain-free
       return
     }
     // stage-then-swap (SegmentLog.swapInto): the folded view streams from
@@ -1659,7 +1494,7 @@ object Dedup {
       .write.mode("overwrite").options(docRowOptions(idc))
       .parquet(staging.toString)
     SegmentLog.swapInto(fs, staging, docsDir)
-    rebuildBandTree(spark, indexPath, dropBandSegs = true)
+    if (layout.isDefined) rebuildBands(Parquet.read(spark, docsDir.toString).count())
     // segments before tombstones: a crash in between must not leave a
     // tombstoned segment doc for the rerun without its tombstone
     SegmentLog.Docs.retire(fs, root)
@@ -1698,7 +1533,6 @@ object Dedup {
     val segs = SegmentLog.Docs.live(fs, root).segments
     val live = segs.map(_.dir)
     if (live.size > 1) SegmentLog.Docs.fold(fs, root, segs) { dir =>
-      val twin = s"$indexPath/bandsegs/${dir.getName}"
       // band rows first (when bucketed): the fold MARKER is the publish
       // point for both trees, and a committed marker must find the compact
       // band segment on disk. The compact twin is derived from the folded
@@ -1710,19 +1544,11 @@ object Dedup {
       // the CURRENT operative P, recorded in its own `_BUCKETS` marker —
       // one compact segment, one P, exact probes. The superseded
       // per-segment twins ride out with their doc segments at GC.
-      bandLayout(spark, indexPath).foreach { case (perDoc, foldP, mkRows) =>
-        // parquet-footer doc counts (no data pages) feed the flat floor
-        val foldRows = live.map(d => Parquet.read(spark, d.toString).count()).sum * perDoc
-        val folded = mkRows(Parquet.read(spark, live.map(_.toString): _*), foldP)
-        // per-root flat floor, same rule as publishBandTree: a small fold
-        // partitioned across a grown P would be all tiny files
-        if (foldRows / math.max(1, foldP) < MinBucketFileRows)
-          folded.coalesce(1).sortWithinPartitions("bucket")
-            .write.mode("overwrite").parquet(twin)
-        else
-          folded.repartition(col("bucket"))
-            .write.mode("overwrite").partitionBy("bucket").parquet(twin)
-        SegmentLog.writeBuckets(fs, new Path(twin), foldP)
+      bandLayout(spark, indexPath).foreach { case (fam, foldP) =>
+        // parquet-footer doc counts (no data pages) size the root
+        val foldRows = live.map(d => Parquet.read(spark, d.toString).count()).sum * fam.perDoc
+        Bands.write(fs, new Path(s"$indexPath/bandsegs/${dir.getName}"), foldP,
+          Some(fam.rowsAt(Parquet.read(spark, live.map(_.toString): _*), foldP)), Some(foldRows))
       }
       // range-cluster the fold by id (replacing the earlier plain
       // coalesce, which only consolidated file count): the compact doc
@@ -1777,47 +1603,78 @@ object Dedup {
     removed + unreachable + BandGens.sweep(fs, root)
   }
 
+  /** Write a checkpointed `batch` of a doc-row store's rows as the NAMED
+    * segment `segs/<segName>` through `writeDocs`, overwrite semantics — a
+    * crash-replayed micro-batch rewrites the same directory instead of
+    * appending twice. On a bucketed store the band twin
+    * `bandsegs/<segName>` lands FIRST, at the CURRENT operative P recorded
+    * in its own `_BUCKETS` marker: the doc segment's `_SUCCESS` is the
+    * commit point ([[liveDocSegs]]), so a committed doc segment always has
+    * its band rows and its P (probes prune the twin at that P, so a later
+    * base re-bucket can never mis-filter it); a crash in between leaves an
+    * orphaned band segment the replay overwrites. Heal-then-read, as in
+    * [[prunedBands]]. Returns rows written. */
+  private def writeDocSegment(batch: DataFrame, indexPath: String, segName: String)(
+      writeDocs: String => Unit): Long = {
+    val spark = batch.sparkSession
+    val fs = SegmentLog.fs(spark, indexPath)
+    val n = batch.count()
+    bandTreeUsable(spark, indexPath)
+    BandFamily.of(spark, indexPath).foreach { fam =>
+      val p = fam.operative(fs, indexPath)
+      if (p > 0) Bands.write(fs, new Path(s"$indexPath/bandsegs/$segName"), p,
+        Some(fam.rowsAt(batch, p)), Some(n * fam.perDoc))
+    }
+    writeDocs(s"$indexPath/segs/$segName")
+    n
+  }
+
+  /** Append a checkpointed `batch` of a doc-row store's rows: docs FIRST
+    * through `writeDocs`, then, on a bucketed store, their band rows into
+    * the base band root at its operative P. Band-first would let a crash
+    * window leave PHANTOM band rows — in the signature store, whose verify
+    * rides the band rows, their `sh` would verify against future twins and
+    * silently drop genuinely new documents as duplicates of a doc that
+    * exists nowhere. Docs-first fails OPEN instead: the crash window
+    * leaves stored docs missing their band rows, so the bucketed probe
+    * admits their duplicates until [[reconcileBandOrphans]] or
+    * [[compactDocIndex]] rebuilds the band tree from docs/ — a space cost,
+    * never a data loss, and the flat probe is unaffected. If the band tree
+    * is gone after the heal ([[bandTreeUsable]]), the band append is
+    * SKIPPED rather than re-creating the tree from this batch alone (its
+    * exists-check would then pass over a store whose base band rows are
+    * missing); the docs stay orphans until the same rebuild. Heal-then-
+    * read: the operative P is read only after the heal. Returns rows
+    * appended. */
+  private def appendDocs(batch: DataFrame, indexPath: String)(writeDocs: String => Unit): Long = {
+    val spark = batch.sparkSession
+    val fs = SegmentLog.fs(spark, indexPath)
+    writeDocs(s"$indexPath/docs")
+    if (bandTreeUsable(spark, indexPath)) BandFamily.of(spark, indexPath).foreach { fam =>
+      val p = fam.operative(fs, indexPath)
+      if (p > 0) Bands.append(fs, baseBandRoot(fs, indexPath), fam.rowsAt(batch, p))
+    }
+    batch.count()
+  }
+
   /** Write already-signed rows ([[minHashBatchSigs]] output, possibly
-    * filtered) as a NAMED index segment under `segs/<segName>`, overwrite
-    * semantics — the replay-idempotent streaming form of
-    * [[appendToMinHashIndex]]: a crash-replayed micro-batch rewrites the
-    * same directory instead of appending twice. Folded into flat `docs/`
-    * by [[compactDocIndex]]. Returns rows written. */
+    * filtered) as a NAMED index segment under `segs/<segName>` — the
+    * replay-idempotent streaming form of [[appendToMinHashIndex]]
+    * ([[writeDocSegment]]). Folded into flat `docs/` by
+    * [[compactDocIndex]]. Returns rows written. */
   def writeMinHashSegment(
       sigs: DataFrame,
       indexPath: String,
       segName: String): Long = Stage.scope { s =>
-    val spark = sigs.sparkSession
     val batch = s(sigs.select("doc", "sh", "sig"))
-    // heal-then-read: `bucket` rides as a data column, computed at the
-    // CURRENT operative P and recorded in the segment's own `_BUCKETS`
-    // marker — probes prune this root at the marker P, so the segment
-    // stays exactly readable even after a later re-bucket moves the base P
-    bandTreeUsable(spark, indexPath)
-    val bb = effectiveBandBuckets(spark, indexPath)
-    if (bb > 0) {
-      // band rows FIRST: the doc segment's _SUCCESS is the commit point
-      // (liveDocSegs), so a committed doc segment always has its band rows
-      // on disk; a crash in between leaves an orphaned band segment the
-      // replay overwrites. Batch-bounded => one file. The marker lands
-      // after the parquet overwrite (which wipes the dir) and before the
-      // doc segment commits — a committed segment always carries its P.
-      val meta = Parquet.read(spark, s"$indexPath/meta").head()
-      bandRows(batch, meta.getInt(2), meta.getInt(1) / meta.getInt(2), bb)
-        .coalesce(1)
-        .write.mode("overwrite").parquet(s"$indexPath/bandsegs/$segName")
-      SegmentLog.writeBuckets(SegmentLog.fs(spark, indexPath),
-        new Path(s"$indexPath/bandsegs/$segName"), bb)
-    }
-    batch.sortWithinPartitions("doc")
-      .write.mode("overwrite").options(docRowOptions("doc"))
-      .parquet(s"$indexPath/segs/$segName")
-    batch.count()
+    writeDocSegment(batch, indexPath, segName)(dir => batch.sortWithinPartitions("doc")
+      .write.mode("overwrite").options(docRowOptions("doc")).parquet(dir))
   }
 
   /** Sign a batch and append its rows to the index (no retrain, no
     * rewrite — LSH banding has no model to go stale, so unlike the IVF
-    * index there is no rebuild trigger). Returns rows appended. */
+    * index there is no rebuild trigger; [[appendDocs]]). Returns rows
+    * appended. */
   def appendToMinHashIndex(
       newDocs: DataFrame,
       indexPath: String,
@@ -1826,28 +1683,8 @@ object Dedup {
     val spark = newDocs.sparkSession
     val meta = Parquet.read(spark, s"$indexPath/meta").head()
     val batch = s(signatureRows(newDocs, meta.getInt(0), meta.getInt(1), idCol, textCol))
-    // Heal a crashed compaction swap BEFORE touching bands/ — appending
-    // with bands/ missing would re-create the tree holding only this
-    // batch, turning [[bandTreeUsable]]'s exists-check permanently green
-    // over a store whose base band rows are gone: every bucketed probe
-    // from then on silently misses the pre-crash corpus. If no staged
-    // tree heals it (bands/ truly destroyed mid-maintenance), SKIP the
-    // band append entirely — probes fall back to the flat scan
-    // (bandTreeUsable false), correct over docs/, until [[compactDocIndex]]
-    // rebuilds the band tree. Heal-then-read: the operative bucket count
-    // is read only after the heal, never from a stale meta over a
-    // re-bucketed tree.
-    val usable = bandTreeUsable(spark, indexPath)
-    val bb = if (usable) effectiveBandBuckets(spark, indexPath) else 0
-    if (bb > 0)
-      bandRows(batch, meta.getInt(2), meta.getInt(1) / meta.getInt(2), bb)
-        .repartition(col("bucket"))
-        .write.mode("append").partitionBy("bucket")
-        .parquet(baseBandRoot(SegmentLog.fs(spark, indexPath), indexPath).toString)
-    batch.sortWithinPartitions("doc")
-      .write.mode("append").options(docRowOptions("doc"))
-      .parquet(s"$indexPath/docs")
-    batch.count()
+    appendDocs(batch, indexPath)(dir => batch.sortWithinPartitions("doc")
+      .write.mode("append").options(docRowOptions("doc")).parquet(dir))
   }
 
   /** Exact pairwise shingle-Jaccard near-dup within blocking keys — the
@@ -2083,27 +1920,26 @@ object Dedup {
     * MinHash store is the DEFAULT (`sigBuckets = AutoBuckets`, -1): FLAT
     * below the family's measured crossover
     * ([[FlatCrossoverRowsSig]] — there the cheap 8-byte-signature full
-    * scan beats per-bucket directory reads), else BAND-BUCKETED: a slim `bands/` tree of
-    * precomputed `(doc, band, bucket)` rows — one row per pigeonhole
-    * block-combination key of each signature, `band` the XXH64 of the
-    * key, `bucket = pmod(band, P)` the partition directory. The micro
-    * probe ([[signatureMicroIncremental]]) then PARTITION-PRUNES the
-    * index side to the batch's hit buckets by path construction —
-    * per-trigger cost O(|batch| · combos · N / P) instead of the O(N)
-    * full signature scan that made continuous image/audio/simhash
-    * dedup-on-write linear in the index. A positive count is honored
-    * verbatim; `0` pins flat. [[compactDocIndex]] PROMOTES an auto-flat
-    * store past the crossover and re-buckets one that outgrows its P.
-    * Banding (`maxHamming`, `comboSize`) is FROZEN
-    * into the layout (meta file); a probe at different parameters falls
-    * back to the flat scan, which stays exactly as before. Recall is
-    * untouched: band equality is key equality in the collision-free
-    * limit, and an XXH64 collision can only ADD a candidate pair that
-    * the hamming verify drops. */
+    * scan beats per-bucket directory reads), else BAND-BUCKETED: a slim
+    * `bands/` tree of precomputed `(doc, band, bucket)` rows — one row per
+    * pigeonhole block-combination key of each signature, `band` the XXH64
+    * of the key, `bucket = pmod(band, P)` the partition directory, laid
+    * out by [[graft.core.SegmentLog.Buckets]]. The micro probe
+    * ([[signatureMicroIncremental]]) then PARTITION-PRUNES the index side
+    * to the batch's hit buckets by path construction — per-trigger cost
+    * O(|batch| · combos · N / P) instead of the O(N) full signature scan
+    * that made continuous image/audio/simhash dedup-on-write linear in the
+    * index. A positive count is honored verbatim; `0` pins flat (no meta
+    * at all). [[compactDocIndex]] PROMOTES an auto-flat store past the
+    * crossover and re-buckets one that outgrows its P. Banding
+    * (`maxHamming`, `comboSize`) is FROZEN into the layout (meta file); a
+    * probe at different parameters falls back to the flat scan, which
+    * stays exactly as before. Recall is untouched: band equality is key
+    * equality in the collision-free limit, and an XXH64 collision can only
+    * ADD a candidate pair that the hamming verify drops. */
   def writeSignatureIndex(
       signatures: DataFrame, path: String,
       maxHamming: Int = 6, comboSize: Int = 2, sigBuckets: Int = AutoBuckets): Unit = {
-    val spark = signatures.sparkSession
     // REBUILD-OVER-EXISTING: retract the band layout and the whole
     // incremental lifecycle FIRST ([[retractIndexTrees]] — meta before
     // bands, so a flat rebuild over a previously bucketed store can never
@@ -2113,42 +1949,11 @@ object Dedup {
     // makes the write crash-safe: meta is rewritten LAST (the commit
     // point), so a crash anywhere in between leaves a metaless store the
     // probe treats as flat — correct over whatever docs/ holds.
-    retractIndexTrees(spark, path)
-    if (sigBuckets == 0) {
-      signatures.select(col("doc_id"), col("sh"))
-        .write.mode("overwrite").parquet(s"$path/docs")
-    } else {
-      // the signing pass upstream already ran; this is an 8-byte/row frame,
-      // checkpoint so docs/ and bands/ don't recompute the source twice;
-      // freed before meta lands
-      val p = Stage.scope { s =>
-        val rows = s(signatures.select(col("doc_id"), col("sh")))
-        rows.write.mode("overwrite").parquet(s"$path/docs")
-        // AutoBuckets (the default): the LAYOUT decision — flat below the
-        // family's measured crossover (where the flat scan wins), else
-        // auto-sized P; explicit positive counts honored verbatim
-        val combos = (0 until maxHamming + comboSize).combinations(comboSize).size
-        val p = if (sigBuckets < 0)
-                  autoLayoutBuckets(rows.count() * combos, FlatCrossoverRowsSig)
-                else sigBuckets
-        if (p > 0) {
-          signatureBandRows(rows, maxHamming, comboSize, p)
-            .repartition(col("bucket"))
-            .write.mode("overwrite").partitionBy("bucket").parquet(s"$path/bands")
-          SegmentLog.writeBuckets(SegmentLog.fs(spark, path),
-            new Path(s"$path/bands"), p)
-        }
-        p
-      }
-      // AUTO-FLAT stores record sig_buckets = AutoBuckets (-1): treated as
-      // flat by every probe ([[effectiveSigBuckets]] filters non-positive),
-      // promoted to bucketed by [[compactDocIndex]] once past the
-      // crossover; an explicit 0 (flat, no meta at all) never promotes.
-      import spark.implicits._
-      Seq((maxHamming, comboSize, if (p > 0) p else AutoBuckets))
-        .toDF("max_hamming", "combo_size", "sig_buckets")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-    }
+    retractIndexTrees(signatures.sparkSession, path)
+    val rows = signatures.select(col("doc_id"), col("sh"))
+    def writeDocs(rows: DataFrame): Unit = rows.write.mode("overwrite").parquet(s"$path/docs")
+    if (sigBuckets == 0) writeDocs(rows)
+    else buildBanded(BandFamily.signature(maxHamming, comboSize, sigBuckets), rows, path)(writeDocs)
   }
 
   /** `(doc, band, sh, bucket)` rows for the bucketed signature layout:
@@ -2169,32 +1974,6 @@ object Dedup {
         explode(simHashBlockKeys(maxHamming, comboSize)).as("blk"))
       .select(col("doc"), xxhash64(col("blk")).as("band"), col("sh"))
       .withColumn("bucket", pmod(col("band"), lit(buckets.toLong)).cast("int"))
-
-  /** The frozen banding of a bucketed signature store: `(max_hamming,
-    * combo_size, sig_buckets)` from its meta file; None for flat stores
-    * (no meta, or a MinHash meta). */
-  private def sigMetaBuckets(spark: SparkSession, indexPath: String): Option[(Int, Int, Int)] = {
-    val meta = new Path(s"$indexPath/meta")
-    if (!SegmentLog.fs(spark, indexPath).exists(meta)) None
-    else {
-      val df = Parquet.read(spark, meta.toString)
-      if (!df.columns.contains("sig_buckets")) None
-      else {
-        val r = df.head()
-        Some((r.getAs[Int]("max_hamming"), r.getAs[Int]("combo_size"),
-          r.getAs[Int]("sig_buckets")))
-      }
-    }
-  }
-
-  /** [[sigMetaBuckets]] with the OPERATIVE bucket count: the band tree's
-    * `_BUCKETS` marker when present (a re-bucketing compaction may have
-    * outgrown the build-time meta value), else the meta value. */
-  private def effectiveSigBuckets(spark: SparkSession, indexPath: String): Option[(Int, Int, Int)] =
-    sigMetaBuckets(spark, indexPath).map { case (mh, cs, sb) =>
-      val fs = SegmentLog.fs(spark, indexPath)
-      (mh, cs, SegmentLog.readBuckets(fs, baseBandRoot(fs, indexPath)).getOrElse(sb))
-    }.filter(_._3 > 0) // AUTO-FLAT meta (sig_buckets = -1, no tree): flat
 
   /** All pairs within `maxHamming` bits TOUCHING a batch of precomputed
     * signatures, against a persisted store — [[simHashIncremental]]'s
@@ -2240,62 +2019,44 @@ object Dedup {
       comboSize: Int = 2): DataFrame = {
     val spark = batchSigs.sparkSession
     val batch = batchSigs.select(col("doc_id"), col("sh"))
-    // BUCKETED path when the store carries a band tree FROZEN AT EXACTLY
-    // this (maxHamming, comboSize) — a probe at other parameters needs
-    // different block keys than the stored rows, so it takes the flat scan
-    // (correct at any parameters, as before). Like minHashMicroCandidates,
-    // bucketed only while the batch hits under a THIRD of the buckets
-    // (the measured gate — see the sweep note there): past that the flat
-    // signature scan is the cheaper plan, so the bucketed index stays no
-    // worse than the flat one.
-    // heal-then-read, same order as minHashMicroCandidates: the operative
-    // bucket count must be read AFTER any crashed swap is healed in
-    val usable = bandTreeUsable(spark, indexPath)
-    effectiveSigBuckets(spark, indexPath) match {
-      case Some((mh, cs, bb)) if usable && mh == maxHamming && cs == comboSize =>
-        val batchBands = signatureBandRows(batch, mh, cs, bb)
-        // raw band values, not buckets: storedBands derives each root's
-        // hit buckets at that root's own P (batch-bounded driver collect)
-        val bandVals = batchBands.select("band").distinct()
-          .collect().map(_.getLong(0))
-        val hit = bandVals.map(v => java.lang.Math.floorMod(v, bb.toLong).toInt)
-          .distinct.length
-        if (hit * 3 <= bb) {
-          // the whole probe runs on the persisted band rows, the index side
-          // PRUNED to the batch's buckets by path construction (storedBands
-          // — the same reader as the MinHash band store): per-trigger read
-          // is O(|batch| · combos · N / sigBuckets) band rows and ZERO
-          // stored doc rows, because each band row carries its 8-byte
-          // signature and the hamming verify rides the banded join exactly
-          // as it does in the flat probe. The batch side is broadcast, so
-          // the only shuffle in the plan is the pair dedup. Tombstones
-          // must be filtered HERE (takedown-sized broadcast anti-join) —
-          // there is no later doc-row verify stage to drop a deleted doc's
-          // stale band rows; compaction sweeps them physically.
-          val stored0 = storedBands(spark, indexPath, Some(bandVals), bb,
-            segDocs => signatureBandRows(segDocs, mh, cs, 1),
-            cols = Seq("doc", "band", "sh"))
-          val tombsPath = new Path(s"$indexPath/tombs")
-          val stored =
-            if (!SegmentLog.fs(spark, indexPath).exists(tombsPath)) stored0
-            else stored0.join(
-              broadcast(readDocTombs(spark, indexPath)
-                .select(col("doc_id").as("doc"))),
-              Seq("doc"), "left_anti")
-          // dropDuplicates(doc_a, doc_b): a crash-replayed append can leave
-          // a doc's (byte-identical) band rows in both the base store and a
-          // segment, and any true pair shares several block keys anyway.
-          broadcast(batchBands.select("doc", "band", "sh")).as("a")
-            .join(stored.unionByName(batchBands.select("doc", "band", "sh")).as("b"),
-              col("a.band") === col("b.band") && col("a.doc") =!= col("b.doc"))
-            .select(
-              least(col("a.doc"), col("b.doc")).as("doc_a"),
-              greatest(col("a.doc"), col("b.doc")).as("doc_b"),
-              TextOps.hamming64(col("a.sh"), col("b.sh")).as("hamming"))
-            .filter(col("hamming") <= maxHamming)
-            .dropDuplicates("doc_a", "doc_b")
-        } else signatureMicroFlat(batch, indexPath, maxHamming, comboSize)
-      case _ => signatureMicroFlat(batch, indexPath, maxHamming, comboSize)
+    // BUCKETED path ([[prunedBands]]: a usable band tree, and the batch
+    // hits under a third of the buckets) only when the store's banding is
+    // FROZEN AT EXACTLY this (maxHamming, comboSize) — a probe at other
+    // parameters needs different block keys than the stored rows, so it
+    // takes the flat scan (correct at any parameters, as before).
+    val fam = BandFamily.of(spark, indexPath).filter(_.params == Seq(maxHamming, comboSize))
+    prunedBands(batch, indexPath, fam) match {
+      case Some((batchBands, stored0)) =>
+        // the whole probe runs on the persisted band rows, the index side
+        // PRUNED to the batch's buckets: per-trigger read is
+        // O(|batch| · combos · N / sigBuckets) band rows and ZERO stored
+        // doc rows, because each band row carries its 8-byte signature
+        // and the hamming verify rides the banded join exactly as it
+        // does in the flat probe. The batch side is broadcast, so the
+        // only shuffle in the plan is the pair dedup. Tombstones must be
+        // filtered HERE (takedown-sized broadcast anti-join) — there is
+        // no later doc-row verify stage to drop a deleted doc's stale
+        // band rows; compaction sweeps them physically.
+        val tombsPath = new Path(s"$indexPath/tombs")
+        val stored =
+          if (!SegmentLog.fs(spark, indexPath).exists(tombsPath)) stored0
+          else stored0.join(
+            broadcast(readDocTombs(spark, indexPath)
+              .select(col("doc_id").as("doc"))),
+            Seq("doc"), "left_anti")
+        // dropDuplicates(doc_a, doc_b): a crash-replayed append can leave
+        // a doc's (byte-identical) band rows in both the base store and a
+        // segment, and any true pair shares several block keys anyway.
+        broadcast(batchBands).as("a")
+          .join(stored.unionByName(batchBands).as("b"),
+            col("a.band") === col("b.band") && col("a.doc") =!= col("b.doc"))
+          .select(
+            least(col("a.doc"), col("b.doc")).as("doc_a"),
+            greatest(col("a.doc"), col("b.doc")).as("doc_b"),
+            TextOps.hamming64(col("a.sh"), col("b.sh")).as("hamming"))
+          .filter(col("hamming") <= maxHamming)
+          .dropDuplicates("doc_a", "doc_b")
+      case None => signatureMicroFlat(batch, indexPath, maxHamming, comboSize)
     }
   }
 
@@ -2320,72 +2081,22 @@ object Dedup {
   }
 
   /** Append precomputed `(doc_id, sh)` rows to a signature store (plus
-    * their band rows on a bucketed store). Returns rows appended. */
+    * their band rows on a bucketed store, [[appendDocs]]). Returns rows
+    * appended. */
   def appendToSignatureIndex(batchSigs: DataFrame, indexPath: String): Long = Stage.scope { s =>
-    val spark = batchSigs.sparkSession
     val batch = s(batchSigs.select(col("doc_id"), col("sh")))
-    // docs FIRST, band rows second — the opposite of the segment path
-    // (where the doc segment's _SUCCESS gates the band segment's
-    // visibility). A direct append into the live bands/ tree has no such
-    // gate: band-first would make a crash window leave PHANTOM band rows
-    // whose sh verifies against future twins, silently dropping genuinely
-    // new documents as duplicates of a doc that exists nowhere. Docs-first
-    // fails OPEN instead: the crash window leaves stored docs missing
-    // their band rows, so the bucketed probe admits their duplicates until
-    // [[compactDocIndex]] rebuilds the band tree from docs/ — a space
-    // cost, never a data loss, and the flat probe is unaffected.
-    batch.write.mode("append").parquet(s"$indexPath/docs")
-    // bandTreeUsable: heal a crashed compaction swap before appending into
-    // bands/, and if bands/ is truly gone (mid-maintenance destruction)
-    // DON'T re-create it from this batch alone — that would mask the
-    // damage behind a tree whose exists-check passes while the base
-    // corpus's band rows are missing. Skipping leaves these docs in the
-    // fail-open orphan state below, healed by the same compaction rebuild.
-    // Heal BEFORE reading the operative bucket count (effectiveSigBuckets)
-    // — a re-bucketed staged tree healed in after the read would take this
-    // batch's band rows under the wrong partitioning.
-    if (bandTreeUsable(spark, indexPath))
-      effectiveSigBuckets(spark, indexPath).foreach { case (mh, cs, bb) =>
-        signatureBandRows(batch, mh, cs, bb)
-          .repartition(col("bucket"))
-          .write.mode("append").partitionBy("bucket")
-          .parquet(baseBandRoot(SegmentLog.fs(spark, indexPath), indexPath).toString)
-      }
-    batch.count()
+    appendDocs(batch, indexPath)(batch.write.mode("append").parquet(_))
   }
 
   /** Write `(doc_id, sh)` rows as a NAMED overwrite segment under
     * `segs/<segName>` — the replay-idempotent streaming form of
-    * [[appendToSignatureIndex]] (a crash-replayed micro-batch rewrites the
-    * same directory instead of appending its rows twice), read through the
+    * [[appendToSignatureIndex]] ([[writeDocSegment]]), read through the
     * same live-segment view as the MinHash doc segments and foldable
-    * beside a live ingest by [[foldDocSegments]]. On a bucketed store the
-    * band twin lands under `bandsegs/<segName>` FIRST (the doc segment's
-    * `_SUCCESS` is the commit point, so a committed doc segment always has
-    * its band rows; an orphaned band segment pairs only into candidates
-    * the verify stage drops, and the replay overwrites it). Returns rows
-    * written. */
+    * beside a live ingest by [[foldDocSegments]]. Returns rows written. */
   def writeSignatureSegment(batchSigs: DataFrame, indexPath: String, segName: String): Long =
       Stage.scope { s =>
-    val spark = batchSigs.sparkSession
     val batch = s(batchSigs.select(col("doc_id"), col("sh")))
-    // heal-then-read: the segment's `bucket` data column is computed at
-    // the CURRENT operative P and recorded in the segment's own `_BUCKETS`
-    // marker (after the parquet overwrite, before the doc segment commits)
-    // — probes prune this root at the marker P, so a later base re-bucket
-    // can never mis-filter these rows
-    bandTreeUsable(spark, indexPath)
-    effectiveSigBuckets(spark, indexPath).foreach { case (mh, cs, bb) =>
-      // batch-bounded => one flat file; `bucket` rides as a data column and
-      // gets a pushed row filter in the probe (readBandRoot's flat branch)
-      signatureBandRows(batch, mh, cs, bb)
-        .coalesce(1)
-        .write.mode("overwrite").parquet(s"$indexPath/bandsegs/$segName")
-      SegmentLog.writeBuckets(SegmentLog.fs(spark, indexPath),
-        new Path(s"$indexPath/bandsegs/$segName"), bb)
-    }
-    batch.write.mode("overwrite").parquet(s"$indexPath/segs/$segName")
-    batch.count()
+    writeDocSegment(batch, indexPath, segName)(batch.write.mode("overwrite").parquet(_))
   }
 
   /** Connected components over a duplicate-pair list: every node appearing

@@ -387,11 +387,10 @@ object Ivf {
       idCol: String = "vec_id",
       vecCol: String = "embedding"): Unit = {
     val spark = corpus.sparkSession
-    corpus.select(
+    SegmentLog.writePartitioned(corpus.select(
       col(idCol).as("n_id"), col(vecCol).as("n_vec"),
       VectorOps.normSq(col(vecCol)).as("n_nsq"),
-      nearestCentroid(col(vecCol), model).as("bucket"))
-      .write.partitionBy("bucket").mode("overwrite").parquet(s"$path/lists")
+      nearestCentroid(col(vecCol), model).as("bucket")), "bucket", "overwrite", s"$path/lists")
     writeQuantizer(spark, model, path)
     import spark.implicits._
     // training-time corpus size: the baseline `needsRebuild` measures
@@ -448,7 +447,7 @@ object Ivf {
         col(idCol).as("n_id"), col(vecCol).as("n_vec"),
         VectorOps.normSq(col(vecCol)).as("n_nsq"),
         nearestCentroid(col(vecCol), model).as("bucket")))
-      batch.write.partitionBy("bucket").mode("append").parquet(s"$root/lists")
+      SegmentLog.writePartitioned(batch, "bucket", "append", s"$root/lists")
       batch.count()
     }
   }
@@ -614,9 +613,9 @@ object Ivf {
         // SAME O(batches) tiny files it exists to consolidate
         val withData = segs.map(_.dir).filter(d => SegmentLog.hasData(fs, d))
         if (withData.nonEmpty)
-          withData.map(d => Parquet.read(spark, d.toString)).reduce(_ unionByName _)
-            .repartition(col("bucket"))
-            .write.partitionBy("bucket").mode("overwrite").parquet(dir.toString)
+          SegmentLog.writePartitioned(
+            withData.map(d => Parquet.read(spark, d.toString)).reduce(_ unionByName _)
+              .repartition(col("bucket")), "bucket", "overwrite", dir.toString)
         else // all-empty group: an empty (but committed) compact segment
           fs.mkdirs(dir)
         SegmentLog.writeAtomic(fs, new Path(dir, "_GEN"), g)
@@ -767,8 +766,8 @@ object Ivf {
     // exactly one task => ONE file per touched bucket per segment, not one
     // per (task x bucket) — a week of micro-batches would otherwise strand
     // rows-count tiny files per trigger
-    batch.repartition(col("bucket"))
-      .write.partitionBy("bucket").mode("overwrite").parquet(s"$path/segs/$segName")
+    SegmentLog.writePartitioned(
+      batch.repartition(col("bucket")), "bucket", "overwrite", s"$path/segs/$segName")
     // stamp the ASSIGNING generation: probes prune this root in ITS
     // quantizer's bucket space even after a rebuild flips the base (the
     // per-root `_BUCKETS` discipline). The name must come from the caller
@@ -822,11 +821,10 @@ object Ivf {
     // current space the recomputation is the identity (assignment is a
     // deterministic function of the stored centroids).
     val model = readModelAt(spark, curRoot)
-    readListsWithSegments(spark, path)
+    SegmentLog.writePartitioned(readListsWithSegments(spark, path)
       .dropDuplicates("n_id")
       .withColumn("bucket", nearestCentroid(col("n_vec"), model))
-      .repartition(col("bucket"))
-      .write.partitionBy("bucket").mode("overwrite").parquet(staging.toString)
+      .repartition(col("bucket")), "bucket", "overwrite", staging.toString)
     SegmentLog.swapInto(fs, staging, listsDir)
     SegmentLog.Docs.retire(fs, root)
     // every root outside the current generation is retired here:

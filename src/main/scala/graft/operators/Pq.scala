@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.core.Parquet
+import graft.core.{Parquet, SegmentLog}
 import graft.functions.VectorOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -152,7 +152,7 @@ object Pq {
     // from the codes the encoder just committed to — instead of a second
     // corpus pass that would re-run the k-codeword search per subspace.
     val obs = org.apache.spark.sql.Observation(s"pq_build_${java.util.UUID.randomUUID()}")
-    corpus.select(
+    val lists = corpus.select(
       col(idCol).as("n_id"),
       col(vecCol).as("n_vec"),
       encode(col(vecCol), pq).as("n_codes"),
@@ -161,7 +161,7 @@ object Pq {
       .withColumn("_err", errFromCodes(col("n_vec"), col("n_codes"), pq))
       .observe(obs, avg(col("_err")).as("mse"), count(lit(1)).as("n"))
       .drop("n_vec", "_err")
-      .write.partitionBy("bucket").mode("overwrite").parquet(s"$path/lists")
+    SegmentLog.writePartitioned(lists, "bucket", "overwrite", s"$path/lists")
     Ivf.writeQuantizer(spark, coarse, path)
     import spark.implicits._
     pq.codebooks.zipWithIndex.flatMap { case (book, j) =>
@@ -224,7 +224,7 @@ object Pq {
     // pinning the batch's uncompressed vectors in block-manager memory
     // across the append, and no second aggregation job over them.
     val obs = org.apache.spark.sql.Observation(s"pq_append_${java.util.UUID.randomUUID()}")
-    newVectors.select(
+    val lists = newVectors.select(
       col(idCol).as("n_id"),
       col(vecCol).as("n_vec"),
       encode(col(vecCol), pq).as("n_codes"),
@@ -233,7 +233,7 @@ object Pq {
       .withColumn("_err", errFromCodes(col("n_vec"), col("n_codes"), pq))
       .observe(obs, avg(col("_err")).as("mse"), count(lit(1)).as("n"))
       .drop("n_vec", "_err")
-      .write.partitionBy("bucket").mode("append").parquet(s"$path/lists")
+    SegmentLog.writePartitioned(lists, "bucket", "append", s"$path/lists")
     val metrics = obs.get
     writeStatsMetrics(spark, path, "append", metrics, overwrite = false)
     metrics("n").asInstanceOf[Long]

@@ -249,11 +249,10 @@ object Search {
     val observed = tokenizedDocs(documents, idCol, textCol)
       .observe(obs, count(lit(1)).as("n_docs"),
         coalesce(sum(size(col("_toks")).cast("long")), lit(0L)).as("sum_dl"))
-    postingsFromTokens(observed, buckets)
-      // one task per touched bucket => one file per bucket, not per
-      // (task x bucket)
-      .repartition(col("pb"))
-      .write.partitionBy("pb").mode("overwrite").parquet(s"$path/postings")
+    val fs = SegmentLog.fs(spark, path)
+    // partitioned, one task per touched bucket => one file per bucket
+    Postings.write(fs, new Path(s"$path/postings"), buckets,
+      Some(postingsFromTokens(observed, buckets)))
     // getOrEmpty, not get: the write has already finished, so metrics
     // either arrived or never will — the blocking get relied on a
     // Spark-internal (ObservationManager posting Row.empty for a pruned
@@ -274,8 +273,6 @@ object Search {
           .agg(count(lit(1)), coalesce(sum("dl"), lit(0L))).head()
         (r.getLong(0), r.getLong(1))
       }
-    val fs = SegmentLog.fs(spark, path)
-    SegmentLog.writeBuckets(fs, new Path(s"$path/postings"), buckets)
     // a rebuild over an existing index retracts the generation pointer:
     // from here the legacy `postings/` (just written, marker inside) is
     // the base root again, and stale generations are swept by the next
@@ -293,60 +290,27 @@ object Search {
       .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
   }
 
-  // ---- bucket-count growth: per-root `_BUCKETS` markers + the
-  // ---- `_POSTINGS` generation pointer (the Dedup band-store discipline,
-  // ---- ported to the postings layout) --------------------------------
-  //
-  // `buckets` frozen at build time is the frozen-P failure mode the band
-  // stores measured and fixed: a query term's probe reads O(N / buckets)
-  // postings — linear in corpus growth. The fix is identical machinery:
-  // every postings root records the P its rows were ACTUALLY partitioned
-  // at in its own `_BUCKETS` marker (readers prune each root at its own
-  // P, so roots written at different P's coexist exactly); the base root
-  // is re-bucketed by publishing a NEW GENERATION (`postings_v<k>`,
-  // marker written before rows) and flipping the `_POSTINGS` pointer
-  // atomically — never an in-place rewrite a concurrently-planned probe
-  // could trip over; growth fires on the maintenance slots
-  // ([[foldTextSegments]] beside a live ingest, [[compactTextIndex]]
-  // stop-the-world) when per-bucket postings have doubled, sized off the
-  // LIVE postings count (base + streamed segments).
+  /** The postings roots' layout: [[graft.core.SegmentLog.Buckets]] over
+    * `pb`. The per-bucket target (a term's probe reads ~this many rows per
+    * root) is 65,536 postings; the system property is a spec-fixture hook. */
+  private def Postings = SegmentLog.Buckets("pb",
+    sys.props.get("graft.text.bucket.target.rows").map(_.toLong).getOrElse(65536L))
 
   /** The base postings generations behind the `_POSTINGS` pointer
-    * (`postings_v<k>` once any re-bucket has published; the legacy
-    * `postings/` on build-time stores). Every postings root carries the
-    * `_BUCKETS` marker of the P its rows were written at; pre-marker roots
-    * fall back to the meta value, frozen-correct because growth is gated on
-    * every live root carrying a marker. */
+    * (`postings_v<k>` once a re-bucket has published; the legacy
+    * `postings/` on build-time stores). A re-bucket fires on the
+    * maintenance slots ([[foldTextSegments]] beside a live ingest,
+    * [[compactTextIndex]] stop-the-world), sized off the live postings
+    * (base + streamed segments). */
   private val PostingsGens =
     SegmentLog.Generations("_POSTINGS", "postings", "postings", Seq("postings"))
 
   private def basePostingsRoot(fs: FileSystem, path: String): Path =
     new Path(path, PostingsGens.current(fs, new Path(path)))
 
-  /** The OPERATIVE bucket count: the current base root's marker when
-    * present (a re-bucket may have outgrown the build-time meta value),
-    * else meta. */
-  private def effectiveBuckets(
-      spark: org.apache.spark.sql.SparkSession, path: String): Int = {
-    val fs = SegmentLog.fs(spark, path)
-    SegmentLog.readBuckets(fs, basePostingsRoot(fs, path))
-      .getOrElse(Parquet.read(spark, s"$path/meta").head().getInt(2))
-  }
-
-  /** Per-bucket postings target (the probe's read-amplification unit —
-    * a term's probe reads ~this many rows per root); the system property
-    * is a deployment-tuning + spec-fixture knob. */
-  private def TargetPostingsRows: Long =
-    sys.props.get("graft.text.bucket.target.rows").map(_.toLong).getOrElse(65536L)
-  /** clamp(totalPostings / TargetPostingsRows, 64, 65536) — same clamp
-    * rationale as the band stores: the floor keeps tiny stores from one
-    * directory, the ceiling bounds file count on object stores. */
-  private def autoPostingsBuckets(totalPostings: Long): Int =
-    math.min(65536L, math.max(64L, totalPostings / TargetPostingsRows)).toInt
-  /** Below this many rows per bucket a partitioned root is mostly tiny
-    * files; such roots write FLAT (one file sorted by pb, pb as a data
-    * column readers push a filter on) — the Dedup band-segment floor. */
-  private val MinPostingsFileRows = 1024L
+  /** The build-time bucket count in `meta`: the P of pre-marker roots. */
+  private def metaBuckets(spark: org.apache.spark.sql.SparkSession, path: String): Int =
+    Parquet.read(spark, s"$path/meta").head().getInt(2)
 
   /** The postings derivation — ONE definition shared by the batch build,
     * the batch append, and the streaming segment writer, so the three
@@ -403,11 +367,10 @@ object Search {
     // fold/compaction slot (streaming deployments use segments instead).
     val fs = SegmentLog.fs(spark, path)
     val root = basePostingsRoot(fs, path)
-    val buckets = SegmentLog.readBuckets(fs, root).getOrElse(meta.getInt(2))
+    val buckets = Postings.operative(fs, root, meta.getInt(2))
     val bm = Stage.scope { s =>
       val batch = s(postingsRows(newDocs, buckets, idCol, textCol))
-      batch.repartition(col("pb"))
-        .write.partitionBy("pb").mode("append").parquet(root.toString)
+      Postings.append(fs, root, batch)
       batch.select("doc_id", "dl").groupBy("doc_id").agg(max("dl").as("dl"))
         .agg(count(lit(1)), coalesce(sum("dl"), lit(0L))).head()
     }
@@ -482,20 +445,11 @@ object Search {
     // the CURRENT operative P, recorded in the segment root's own
     // `_BUCKETS` marker — probes prune this root at the marker P, so a
     // later base re-bucket can never mis-filter these rows
-    val buckets = effectiveBuckets(spark, path)
-    val segRoot = s"$path/segs/$segName/postings"
+    val buckets = Postings.operative(fs, basePostingsRoot(fs, path), metaBuckets(spark, path))
     val m = Stage.scope { s =>
       val batch = s(postingsRows(newDocs, buckets, idCol, textCol))
-      // flat floor: a micro-batch's postings partitioned across a grown P
-      // would be all tiny files — below the floor the segment writes ONE
-      // file sorted by pb (pb as a data column readers push a filter on)
-      if (batch.count() / math.max(1, buckets) < MinPostingsFileRows)
-        batch.coalesce(1).sortWithinPartitions("pb")
-          .write.mode("overwrite").parquet(segRoot)
-      else
-        batch.repartition(col("pb"))
-          .write.partitionBy("pb").mode("overwrite").parquet(segRoot)
-      SegmentLog.writeBuckets(fs, new Path(segRoot), buckets)
+      Postings.write(fs, new Path(s"$path/segs/$segName/postings"), buckets, Some(batch),
+        Some(batch.count()))
       batch.select("doc_id", "dl").groupBy("doc_id").agg(max("dl").as("dl"))
         .agg(count(lit(1)), coalesce(sum("dl"), lit(0L))).head()
     }
@@ -515,15 +469,11 @@ object Search {
     * segments.
     *
     * GROWTH rides the same slot, BEFORE the fold (so this fold's compact
-    * segment lands at the new P): when the auto bucket count sized off
-    * LIVE postings (base + segments, parquet footer counts) reaches 2x
-    * the operative P — per-bucket postings doubled, the probe's
-    * read-amplification unit — a new base generation re-partitioned at
-    * the auto P publishes behind the `_POSTINGS` pointer. Safe beside
-    * live segments because every root prunes at its OWN `_BUCKETS`
-    * marker; gated on every live segment root carrying one (pre-marker
-    * segments have no record of their write-time P). The superseded
-    * generation outlives the flip until readers drain ([[gcTextIndex]]).
+    * segment lands at the new P): the grow rule of
+    * [[graft.core.SegmentLog.Buckets]], sized off LIVE postings (base +
+    * segments, parquet footer counts), publishes a new base generation
+    * behind the `_POSTINGS` pointer. The superseded generation outlives
+    * the flip until readers drain ([[gcTextIndex]]).
     *
     * `gc = true` immediately deletes folded directories and stale
     * generations — safe only when no concurrent reader planned before the
@@ -538,13 +488,11 @@ object Search {
     val segs = live.map(_.dir.toString)
     // ---- growth (before the fold; footer counts only) ----
     if (fs.exists(base)) {
-      val eff = effectiveBuckets(spark, path)
-      val roots = base.toString +: segs.map(_ + "/postings")
-      val liveRows = roots.map(r => SegmentLog.rowCount(spark, fs, new Path(r))).sum
-      val auto = autoPostingsBuckets(liveRows)
-      val allMarked = segs.forall(s => SegmentLog.readBuckets(
-        fs, new Path(s"$s/postings")).isDefined)
-      if (auto >= 2 * eff && allMarked) {
+      val eff = Postings.operative(fs, base, metaBuckets(spark, path))
+      val roots = base +: segs.map(s => new Path(s"$s/postings"))
+      val liveRows = roots.map(SegmentLog.rowCount(spark, fs, _)).sum
+      val grown = Postings.grow(fs, liveRows, eff, roots.tail)
+      if (grown != eff) {
         // an empty-seeded pure-streaming store has a DATA-LESS base root
         // (build over zero rows writes only _SUCCESS) — reading it for the
         // re-bucket would throw on schema inference and permanently crash
@@ -554,26 +502,19 @@ object Search {
         val baseRows =
           if (SegmentLog.hasData(fs, base)) Some(Parquet.read(spark, base.toString))
           else None
-        publishPostingsGen(fs, path, baseRows, auto)
+        publishPostingsGen(fs, path, baseRows, grown)
       }
     }
     // ---- fold ([[graft.core.SegmentLog.fold]]) ----
     if (segs.size > 1) SegmentLog.Text.fold(fs, root, live) { dir =>
-      val p = effectiveBuckets(spark, path)
+      val p = Postings.operative(fs, basePostingsRoot(fs, path), metaBuckets(spark, path))
       val foldRows = segs.map(s => SegmentLog.rowCount(spark, fs, new Path(s + "/postings"))).sum
       // recompute pb at the CURRENT operative P: folded segments may have
       // been written at different P's, and pb is a pure function of tok
       val folded = segs.map(s => Parquet.read(spark, s + "/postings"))
         .reduce(_ unionByName _)
         .withColumn("pb", pmod(xxhash64(col("tok")), lit(p.toLong)).cast("int"))
-      val segRoot = s"$dir/postings"
-      if (foldRows / math.max(1, p) < MinPostingsFileRows)
-        folded.coalesce(1).sortWithinPartitions("pb")
-          .write.mode("overwrite").parquet(segRoot)
-      else
-        folded.repartition(col("pb"))
-          .write.partitionBy("pb").mode("overwrite").parquet(segRoot)
-      SegmentLog.writeBuckets(fs, new Path(segRoot), p)
+      Postings.write(fs, new Path(s"$dir/postings"), p, Some(folded), Some(foldRows))
       // compact segmeta = the exact sum of the folded stats rows
       val (n, sd) = segs.foldLeft((0L, 0L)) { case ((a, d), s) =>
         val r = Parquet.read(spark, s"$s/segmeta").head()
@@ -587,7 +528,7 @@ object Search {
   }
 
   /** Publish a COMPLETE base postings tree as a new generation
-    * ([[PostingsGens]]) — marker before rows, pointer flip as the commit
+    * ([[PostingsGens]]), partitioned at `p`, the pointer flip as the commit
     * point. `None` publishes an EMPTY generation (marker only, no data
     * files): the empty-seeded pure-streaming store's growth path — the
     * operative P still moves, and every reader already tolerates data-less
@@ -595,11 +536,8 @@ object Search {
   private def publishPostingsGen(
       fs: FileSystem, path: String, rows: Option[DataFrame], p: Int): Unit =
     PostingsGens.publish(fs, new Path(path)) { dir =>
-      SegmentLog.writeBuckets(fs, dir, p)
-      rows.foreach(_
-        .withColumn("pb", pmod(xxhash64(col("tok")), lit(p.toLong)).cast("int"))
-        .repartition(col("pb"))
-        .write.mode("append").partitionBy("pb").parquet(dir.toString))
+      Postings.write(fs, dir, p,
+        rows.map(_.withColumn("pb", pmod(xxhash64(col("tok")), lit(p.toLong)).cast("int"))))
     }
 
   /** [[graft.core.SegmentLog.gc]] of a text index, plus the base
@@ -632,16 +570,13 @@ object Search {
     val tombsDir = new Path(s"$path/tombs")
     val segs = liveSegments(spark, path)
     val base = basePostingsRoot(fs, path)
-    // GROW-ONLY RE-BUCKET rides the compaction: when live postings have
-    // outgrown the operative P (auto >= 2x — per-bucket rows doubled),
-    // the folded tree lands at the new auto P; stop-the-world, so no
-    // marker gate is needed — every root is retired here
-    val eff = SegmentLog.readBuckets(fs, base)
-      .getOrElse(Parquet.read(spark, s"$path/meta").head().getInt(2))
+    // the grow rule rides the compaction: the folded tree lands at the
+    // grown P; stop-the-world, so no marker gate — every root is retired
+    val eff = Postings.operative(fs, base, metaBuckets(spark, path))
     val liveRows = (base.toString +: segs.map(_ + "/postings"))
       .map(r => SegmentLog.rowCount(spark, fs, new Path(r))).sum
-    val auto = autoPostingsBuckets(liveRows)
-    val grown = auto >= 2 * eff
+    val newP = Postings.grow(fs, liveRows, eff, Nil)
+    val grown = newP != eff
     if (!fs.exists(tombsDir) && segs.isEmpty && !grown) return
     // data-less roots (empty-seeded base, zero-doc segments) can't be
     // schema-inferred; fold only the roots that hold rows
@@ -662,7 +597,6 @@ object Search {
     // generation publish (marker first, pointer flip as the commit
     // point): a crash at any point leaves a complete referenced tree on
     // disk — the old one before the flip, the new one after
-    val newP = if (grown) auto else eff
     publishPostingsGen(fs, path, live, newP)
     // the recounted meta lands BEFORE the segment/tombstone deletes: a
     // crash in between leaves readers double-counting segment stats until
@@ -701,14 +635,13 @@ object Search {
       spark: org.apache.spark.sql.SparkSession, path: String): Map[String, String] = {
     val meta = Parquet.read(spark, s"$path/meta").head()
     val (n0, sd0) = (meta.getLong(0), meta.getLong(1))
-    val buckets = effectiveBuckets(spark, path)
+    val fs = SegmentLog.fs(spark, path)
+    val buckets = Postings.operative(fs, basePostingsRoot(fs, path), meta.getInt(2))
     val segs = liveSegments(spark, path)
     val (nS, sdS) = segs.foldLeft((n0, sd0)) { case ((a, d), seg) =>
       val r = Parquet.read(spark, s"$seg/segmeta").head()
       (a + r.getLong(0), d + r.getLong(1))
     }
-    val fs = new Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tombsDir = new Path(s"$path/tombs")
     val (tombN, tombDl) =
       if (!fs.exists(tombsDir)) (0L, 0L)
@@ -747,18 +680,9 @@ object Search {
     * tombstoned documents), but the per-batch cost is a pruned postings
     * read — only the query terms' hash buckets are listed and scanned —
     * instead of a corpus scan. The term-bucket set is computed with one
-    * query-batch-sized job; corpus data never reaches the driver.
-    *
-    * EACH ROOT PRUNES AT ITS OWN P: the hit-bucket list is derived per
-    * root from the terms' raw xxhash64 values at that root's `_BUCKETS`
-    * marker (else meta) — a segment written before a re-bucket keeps
-    * exact recall through its own marker, the
-    * [[graft.operators.Dedup]] `storedBands` discipline. Partitioned
-    * roots are pruned by PATH CONSTRUCTION (only hit `pb=` directories
-    * are handed to the reader — the filter-on-partition-column form
-    * re-lists every bucket directory at plan time, the measured 6-12 s
-    * trap at large P); flat roots (small segments) get a pushed pb row
-    * filter. */
+    * query-batch-sized job; corpus data never reaches the driver. The
+    * base and segment roots are read by [[graft.core.SegmentLog.Buckets]]'s
+    * pruned read, each at its own P from the terms' raw xxhash64 values. */
   def bm25Indexed(
       spark: org.apache.spark.sql.SparkSession,
       path: String,
@@ -770,7 +694,7 @@ object Search {
       queryTextCol: String = "query_text"): DataFrame = {
     require(topK > 0, "topK must be positive")
     val meta = Parquet.read(spark, s"$path/meta").head()
-    val (n0, sd0, metaBuckets) = (meta.getLong(0), meta.getLong(1), meta.getInt(2))
+    val (n0, sd0, metaP) = (meta.getLong(0), meta.getLong(1), meta.getInt(2))
     // live streamed segments contribute their own stats rows — the base
     // meta never mutates on the streaming path, so a replayed batch
     // cannot double-count
@@ -813,14 +737,8 @@ object Search {
     // base + streamed segments, each root bucket-pruned independently at
     // its own marker P
     val roots = basePostingsRoot(fs, path).toString +: segs.map(_ + "/postings")
-    val views = roots.flatMap { r =>
-      val p = SegmentLog.readBuckets(fs, new Path(r))
-        .getOrElse(metaBuckets).toLong
-      val hit = termHashes.map(h => java.lang.Math.floorMod(h, p).toInt)
-        .distinct.sorted.toSeq
-      SegmentLog.readPruned(spark, fs, r, "pb", Some(hit))
-        .map(_.filter(col("tok").isin(termList: _*)).select("doc_id", "tok", "tf", "dl"))
-    }
+    val views = Postings.read(spark, fs, roots, termHashes.toSeq, metaP)
+      .map(_.filter(col("tok").isin(termList: _*)).select("doc_id", "tok", "tf", "dl"))
     val raw =
       if (views.nonEmpty) views.reduce(_ unionByName _)
       // no hit bucket anywhere (every query term absent from the corpus):

@@ -43,8 +43,9 @@ private[operators] sealed trait TrainSet {
   def firstPerBucket(tree: Seq[Array[Array[Float]]], k: Int): Map[(Int, Int), Array[Float]]
 
   /** `iters` Lloyd steps from `init` under `assign`: each centroid moves to
-    * the exact decimal mean of its rows, and an empty cluster keeps its
-    * previous centroid. */
+    * the exact decimal mean of its rows, and a (cluster, dimension) with no
+    * summed element (an empty cluster, or only NaN elements) keeps its
+    * previous value. */
   def lloyd(init: Array[Array[Float]], iters: Int, assign: TrainSet.Assign): Array[Array[Float]]
 
   /** [[lloyd]] of each subspace `j` of `books` (the vector slice
@@ -62,16 +63,19 @@ private[operators] object TrainSet {
     * is tested against. Inputs the driver cannot reproduce bit for bit
     * take [[Rows]] too, so today's behaviour, exceptions included, holds
     * there: null ids or vectors, null elements, vectors of mixed length,
-    * other than `long`/`int` ids and `array<float>` vectors (the gate
-    * sends these), an empty input, cast values out of the driver's exact
-    * range ([[Local.of]]), or a centroid mean the distributed fit reads as
-    * null ([[Unreproducible]]). */
+    * other than `long`/`int` ids (the gate sends these), an empty input, cast values out of the driver's exact
+    * range ([[Local.of]]), or a null bucket ([[Unreproducible]]). A
+    * vector column that is not `array<float>` is rejected by name before
+    * any Spark job. */
   def fit[A](
       corpus: DataFrame,
       idCol: String,
       vecCol: String,
       maxTrainRows: Long,
       driver: Boolean)(body: TrainSet => A): A = Stage.scope { s =>
+    val vecType = corpus.select(col(vecCol)).schema.head.dataType
+    require(vecType match { case ArrayType(FloatType, _) => true; case _ => false },
+      s"vector column $vecCol must be array<float>, not ${vecType.simpleString}")
     val proj = sampledProj(corpus, idCol, vecCol, maxTrainRows)
     val gate =
       if (driver && Local.eligible(proj)) s.localOr(proj, Local.rowBytes(proj))(Local.pack(proj))
@@ -192,6 +196,7 @@ private[operators] object TrainSet {
           .groupBy(col("b"), col("pos"))
           .agg(mean(col("col")))
           .collect()
+          .filterNot(_.isNullAt(2))
           .map(r => ((r.getInt(0), r.getInt(1)), r.getDouble(2)))
           .toMap
         val prev = cents
@@ -226,6 +231,7 @@ private[operators] object TrainSet {
           .groupBy(col("j"), col("b"), col("p"))
           .agg(mean(col("col")))
           .collect()
+          .filterNot(_.isNullAt(3))
           .map(r => ((r.getInt(0), r.getInt(1), r.getInt(2)), r.getDouble(3)))
           .toMap
         val prev = cur
@@ -245,8 +251,7 @@ private[operators] object TrainSet {
   }
 
   /** A [[Local]] fit stepped outside what the distributed fit returns: a
-    * null bucket, or a centroid element whose group mean is null (every
-    * element a NaN), which the distributed fit fails on reading. */
+    * null bucket. */
   case object Unreproducible extends Exception with scala.util.control.NoStackTrace
 
   /** One partition of the collected projection: ids widened to long,
@@ -320,11 +325,10 @@ private[operators] object TrainSet {
           }
           val prev = cents
           cents = Array.tabulate(c) { k =>
-            if (size(k) == 0L) prev(k)
-            else Array.tabulate(dim) { d =>
-              if (!summed.get(k * dim + d)) throw Unreproducible
-              val m = mean.eval(InternalRow(Decimal(sums(k * dim + d), 38, 10), size(k)))
-              m.asInstanceOf[Double].toFloat
+            Array.tabulate(dim) { d =>
+              if (!summed.get(k * dim + d)) prev(k)(d)
+              else mean.eval(InternalRow(Decimal(sums(k * dim + d), 38, 10), size(k)))
+                .asInstanceOf[Double].toFloat
             }
           }
         }
@@ -359,10 +363,9 @@ private[operators] object TrainSet {
   }
 
   object Local {
-    /** `long`/`int` ids and `array<float>` vectors. */
+    /** `long`/`int` ids ([[fit]] admits only `array<float>` vectors). */
     def eligible(proj: DataFrame): Boolean =
-      Set[DataType](LongType, IntegerType)(proj.schema("_gid").dataType) &&
-        (proj.schema("_gvec").dataType match { case ArrayType(FloatType, _) => true; case _ => false })
+      Set[DataType](LongType, IntegerType)(proj.schema("_gid").dataType)
 
     /** A row's bytes in driver memory — its id and hash, and each element
       * as a float and an unscaled long — or null for a null id, a null

@@ -2333,6 +2333,32 @@ class DedupIncrementalSpec extends AnyFunSuite {
     assert(treeBuckets(idx).contains(136))
   }
 
+  test("a direct append into a thin base band root keeps every base row probe-visible") {
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("graft_thin_").toString
+    val idx = s"$tmp/idx"
+    // 100 signatures at P = 8, 3 band rows each: compaction grows the base
+    // root to the auto P (64 >= 2 x 8) at 300 / 64 band rows per bucket,
+    // under the thin-root floor — one file sorted by bucket
+    val sigs = spark.range(0, 100)
+      .select(col("id").as("doc_id"), (col("id") * 2654435761L).as("sh"))
+    Dedup.writeSignatureIndex(sigs, idx, maxHamming = 2, comboSize = 1, sigBuckets = 8)
+    Dedup.compactDocIndex(spark, idx)
+    assert(treeBuckets(idx).contains(64))
+    def bucketDirs = new java.io.File(bandRootPath(idx)).listFiles()
+      .count(f => f.isDirectory && f.getName.startsWith("bucket="))
+    assert(bucketDirs == 0, "the grown base root is thin")
+    Dedup.appendToSignatureIndex(Seq((95000L, 777L)).toDF("doc_id", "sh"), idx)
+    assert(bucketDirs == 0, "the append keeps the root's layout")
+    // twins of a base doc and of the appended doc: 6 band rows hit at most
+    // 6 of the 64 buckets, so the probe reads the root pruned
+    val twins = Seq((90042L, 42L * 2654435761L), (95001L, 777L)).toDF("doc_id", "sh").localCheckpoint()
+    val pairs = Dedup.signatureMicroIncremental(twins, idx, maxHamming = 2, comboSize = 1)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(pairs.contains((42L, 90042L)) && pairs.contains((95000L, 95001L)), s"pairs: $pairs")
+    graft.core.Stage.free(twins)
+  }
+
   test("empty-corpus bucketed store: fold-cycle reconcile, compaction, and stats all no-op cleanly") {
     // the streaming-ingest STARTING STATE: an index built over limit(0) —
     // its bands/ tree has no part files (a partitionBy write of zero rows

@@ -434,16 +434,22 @@ class IvfSpec extends AnyFunSuite {
   test("training that fails on the distributed path fails alike on small inputs") {
     import spark.implicits._
     // the NaN vector is the init with the smallest id hash: cluster 0 then
-    // holds only NaN rows, whose decimal mean is null
+    // holds only NaN rows, whose decimal mean is null — both forms keep
+    // the previous value of such a (cluster, dimension)
     val ids = (1L to 6L).toDF("vec_id")
     val nanId = ids.select(col("vec_id"), xxhash64(col("vec_id")).as("h"))
       .orderBy("h", "vec_id").head().getLong(0)
     val corpus = (1L to 6L).map { i =>
       (i, if (i == nanId) Array.fill(4)(Float.NaN) else Array.fill(4)(i.toFloat))
     }.toDF("vec_id", "embedding")
-    val driver = intercept[Exception](Ivf.train(corpus, c = 6, iters = 1))
-    val dist = intercept[Exception](Ivf.trainDistributed(corpus, c = 6, iters = 1))
-    assert(driver.getClass == dist.getClass && driver.getMessage == dist.getMessage, s"$driver vs $dist")
+    val driver = Ivf.train(corpus, c = 6, iters = 1)
+    val dist = Ivf.trainDistributed(corpus, c = 6, iters = 1)
+    assert(bitsOf(driver) == bitsOf(dist), "Ivf.train, an all-NaN cluster")
+    assert(driver.centroids.exists(_.forall(_.isNaN)), "the all-NaN cluster keeps its NaN init")
+    val pqDriver = graft.operators.Pq.train(corpus, m = 2, k = 6, iters = 1)
+    val pqDist = graft.operators.Pq.trainDistributed(corpus, m = 2, k = 6, iters = 1)
+    assert(pqDriver.codebooks.toSeq.flatMap(bits) == pqDist.codebooks.toSeq.flatMap(bits),
+      "Pq.train, an all-NaN cluster")
     // mixed vector lengths and null vectors keep their distributed outcome
     val mixed = Seq((1L, Array(1f, 2f)), (2L, Array(1f, 2f, 3f)), (3L, Array(0f, 1f))).toDF("vec_id", "embedding")
     val mixedDriver = intercept[Exception](Ivf.train(mixed, c = 2, iters = 1))
@@ -451,6 +457,20 @@ class IvfSpec extends AnyFunSuite {
     assert(mixedDriver.getClass == mixedDist.getClass, s"$mixedDriver vs $mixedDist")
     val empty = Seq.empty[(Long, Array[Float])].toDF("vec_id", "embedding")
     assert(intercept[IllegalArgumentException](Ivf.train(empty, c = 2)).getMessage.contains("empty corpus"))
+  }
+
+  test("the trainers reject a vector column that is not array<float> by name, before any job") {
+    val doubles = emb.select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
+    Seq[(String, () => Any)](
+      "Ivf.train" -> (() => Ivf.train(doubles, c = 4)),
+      "Ivf.trainHier" -> (() => Ivf.trainHier(doubles, leaves = 4, branch = 2)),
+      "Pq.train" -> (() => graft.operators.Pq.train(doubles, m = 2, k = 4, maxTrainRows = 100L))
+    ).foreach { case (name, fit) =>
+      val (e, n) = jobs(intercept[IllegalArgumentException](fit()))
+      assert(e.getMessage.contains("embedding") && e.getMessage.contains("array<double>"),
+        s"$name: ${e.getMessage}")
+      assert(n == 0, s"$name ran $n jobs before rejecting")
+    }
   }
 
   test("balancedSample: exact hash-order keeps per bucket, cap respected, deterministic") {

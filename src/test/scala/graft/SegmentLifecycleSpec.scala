@@ -4,15 +4,16 @@ import graft.core.SegmentLog
 import graft.operators.{Dedup, Ivf, Search}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, xxhash64}
 import org.scalatest.funsuite.AnyFunSuite
 
 import scala.collection.mutable
 import scala.util.Random
 
-/** One seeded lifecycle property across the four persisted index families
-  * (the exact index, the MinHash doc index, IVF and the text index), each
-  * driven through its public API: seeded sequences of named-segment
+/** One seeded lifecycle property across the persisted index families (the
+  * exact index, the MinHash doc index, flat and band-bucketed, the
+  * signature store, IVF and the text index), each driven through its
+  * public API: seeded sequences of named-segment
   * appends, deletes, folds with `gc = false`, GCs and crashes, where a
   * crash removes the newest fold marker (right after a fold) or the commit
   * mark of the newest segment (which is then replayed). After every step
@@ -35,6 +36,8 @@ class SegmentLifecycleSpec extends AnyFunSuite {
     def commitMark(seg: String): String
     def view(path: String, everything: Seq[Doc]): Any
     def recompute(live: Seq[Doc]): Any
+    /** Checked once the sequence has run. */
+    def settled(path: String): Unit = ()
   }
 
   private def frame(docs: Seq[Doc]): DataFrame = {
@@ -59,21 +62,76 @@ class SegmentLifecycleSpec extends AnyFunSuite {
       live.groupBy(_.text).values.map(g => (g.map(_.id).min, g.size.toLong)).toSet
   }
 
-  private object MinHash extends Family {
-    def build(path: String, docs: Seq[Doc]): Unit = Dedup.writeMinHashIndex(frame(docs), path)
-    def append(path: String, seg: String, docs: Seq[Doc]): Unit = {
-      Dedup.writeMinHashSegment(Dedup.minHashBatchSigs(frame(docs), path), path, seg); ()
-    }
+  /** The doc-row stores' shared lifecycle: named segments committed by
+    * `_SUCCESS`, id tombstones and the fold cycle. The view is the stored
+    * docs that pair with an exact copy of themselves. */
+  private abstract class DocStore extends Family {
+    /** The band-bucketed stores below start at P = 8: the fold cycles have
+      * grown them to the auto P. */
+    protected def grown(path: String): Unit =
+      assert(Dedup.docIndexStats(spark, path)("graft.docindex.band-buckets") == "64", path)
     def delete(path: String, docs: Seq[Doc]): Unit = { Dedup.deleteFromDocIndex(ids(docs), path); () }
     def fold(path: String): Unit = Dedup.foldDocSegments(spark, path, gc = false)
     def gc(path: String): Unit = { Dedup.gcDocIndex(spark, path); () }
     def commitMark(seg: String): String = s"segs/$seg/_SUCCESS"
-    /** The stored docs that pair with an exact copy of themselves. */
-    def view(path: String, everything: Seq[Doc]): Any =
-      Dedup.minHashIncremental(frame(everything.map(d => d.copy(id = d.id + CopyOffset))), path)
-        .collect().map(r => (r.getLong(0), r.getLong(1)))
-        .collect { case (a, b) if b == a + CopyOffset => a }.toSet
     def recompute(live: Seq[Doc]): Any = live.map(_.id).toSet
+
+    protected def copies(everything: Seq[Doc]): Seq[Doc] =
+      everything.map(d => d.copy(id = d.id + CopyOffset))
+    /** The copies in batches of at most 21 band rows, so that a store grown
+      * to P = 64 reads them pruned (hit buckets at most a third of P). */
+    protected def chunks(everything: Seq[Doc], bandsPerDoc: Int): Seq[Seq[Doc]] =
+      copies(everything).grouped(21 / bandsPerDoc).toSeq
+    protected def copyPairs(pairs: DataFrame): Set[Long] =
+      pairs.collect().map(r => (r.getLong(0), r.getLong(1)))
+        .collect { case (a, b) if b == a + CopyOffset => a }.toSet
+  }
+
+  private object MinHash extends DocStore {
+    def build(path: String, docs: Seq[Doc]): Unit = Dedup.writeMinHashIndex(frame(docs), path)
+    def append(path: String, seg: String, docs: Seq[Doc]): Unit = {
+      Dedup.writeMinHashSegment(Dedup.minHashBatchSigs(frame(docs), path), path, seg); ()
+    }
+    def view(path: String, everything: Seq[Doc]): Any =
+      copyPairs(Dedup.minHashIncremental(frame(copies(everything)), path))
+  }
+
+  /** The MinHash doc index band-bucketed at an explicit P = 8. Its first
+    * fold cycle grows the base band tree to the auto P (64 >= 2 x 8), and
+    * every band root is thin (under 1,024 rows per bucket), so the folds
+    * run the shared grow rule and thin-root writer. The view runs the
+    * micro probe, which reads the grown store pruned. */
+  private object BucketedMinHash extends DocStore {
+    def build(path: String, docs: Seq[Doc]): Unit =
+      Dedup.writeMinHashIndex(frame(docs), path, numHashes = 8, bands = 2, bandBuckets = 8)
+    def append(path: String, seg: String, docs: Seq[Doc]): Unit = MinHash.append(path, seg, docs)
+    def view(path: String, everything: Seq[Doc]): Any = {
+      val sigs = chunks(everything, 2).map(c => Dedup.minHashBatchSigs(frame(c), path))
+      // checkpointed, as the near-dup ingest does: candidates feed both
+      // the id restriction and the verify joins
+      graft.core.Stage.scope { s =>
+        val candidates = s(sigs.map(Dedup.minHashMicroCandidates(_, path)).reduce(_ unionByName _))
+        copyPairs(Dedup.minHashMicroVerify(candidates, sigs.reduce(_ unionByName _), path, 0.7))
+      }
+    }
+    override def settled(path: String): Unit = grown(path)
+  }
+
+  /** The signature store over 64-bit text hashes, band-bucketed at an
+    * explicit P = 8 like [[BucketedMinHash]] (3 band rows per doc). */
+  private object Signature extends DocStore {
+    private def sigs(docs: Seq[Doc]): DataFrame =
+      frame(docs).select(col("doc_id"), xxhash64(col("text")).as("sh"))
+    def build(path: String, docs: Seq[Doc]): Unit =
+      Dedup.writeSignatureIndex(sigs(docs), path, maxHamming = 2, comboSize = 1, sigBuckets = 8)
+    def append(path: String, seg: String, docs: Seq[Doc]): Unit = {
+      Dedup.writeSignatureSegment(sigs(docs), path, seg); ()
+    }
+    def view(path: String, everything: Seq[Doc]): Any =
+      copyPairs(chunks(everything, 3)
+        .map(c => Dedup.signatureMicroIncremental(sigs(c), path, maxHamming = 2, comboSize = 1))
+        .reduce(_ unionByName _))
+    override def settled(path: String): Unit = grown(path)
   }
 
   private object Vectors extends Family {
@@ -201,6 +259,7 @@ class SegmentLifecycleSpec extends AnyFunSuite {
       check(op)
       previous = op
     }
+    family.settled(path)
   }
 
   test("exact index: merged view == recompute through append, delete, fold, gc and crash") {
@@ -209,6 +268,14 @@ class SegmentLifecycleSpec extends AnyFunSuite {
 
   test("MinHash doc index: merged view == recompute through append, delete, fold, gc and crash") {
     lifecycle(MinHash, 61002L)
+  }
+
+  test("band-bucketed MinHash doc index: merged view == recompute through append, delete, fold, gc and crash") {
+    lifecycle(BucketedMinHash, 61005L)
+  }
+
+  test("signature store: merged view == recompute through append, delete, fold, gc and crash") {
+    lifecycle(Signature, 61006L)
   }
 
   test("IVF index: merged view == recompute through append, delete, fold, gc and crash") {

@@ -9,8 +9,8 @@ import scala.util.matching.Regex
 /** Source rules for the engine under `src/main/scala`: every parquet read
   * goes through `graft.core.Parquet`, every eager checkpoint through
   * `graft.core.Stage` (and no operator persists or unpersists), only `graft.core.SegmentLog` names the segment
-  * protocol's files, and no temp view or streaming query takes a fixed
-  * name. Each pattern is first checked against snippets it must and must
+  * protocol's files and writes bucketed roots, and no temp view or
+  * streaming query takes a fixed name. Each pattern is first checked against snippets it must and must
   * not match. */
 class SourceGuardSpec extends AnyFunSuite {
   private val main = Paths.get("src/main/scala")
@@ -83,6 +83,24 @@ class SourceGuardSpec extends AnyFunSuite {
       Seq("val nBlocks = 3", "minHashBuildingBlocks", "skipSubBlocks(b, pos)", "Stage.free(df)"))
     val bad = offenders(BlocksRef, main, Set.empty)
     assert(bad.isEmpty, bad.mkString("free through Stage: ", ", ", ""))
+  }
+
+  /** A bucketed-root write outside the shared writer: a direct
+    * `_BUCKETS` marker write, or a write partitioned by a bucket column. */
+  private val BucketWrite =
+    """\bSegmentLog\s*\.\s*writeBuckets\s*\(|\.\s*partitionBy\s*\(\s*"(?:bucket|pb)"\s*\)""".r
+
+  test("operators write bucketed roots only through graft.core.SegmentLog") {
+    selfCheck(BucketWrite,
+      Seq("SegmentLog.writeBuckets(fs, dir, p)", "df.write.partitionBy(\"bucket\").parquet(d)",
+        "df.write.mode(\"append\").partitionBy(\"pb\").parquet(d)",
+        "rows.repartition(col(\"bucket\"))\n  .write.mode(\"overwrite\")\n  .partitionBy( \"bucket\" )"),
+      Seq("SegmentLog.readBuckets(fs, root)", "Bands.write(fs, dir, p, Some(rows))",
+        "SegmentLog.writePartitioned(df, \"bucket\", \"append\", d)", "Window.partitionBy(col(\"bucket\"))",
+        "df.write.partitionBy(\"shard\").parquet(d)", "// written `partitionBy(pb)`"))
+    val operators = graftRoot.resolve("operators").toString + "/"
+    val bad = offenders(BucketWrite, graftRoot, Set.empty).filter(_.startsWith(operators))
+    assert(bad.isEmpty, bad.mkString("write bucketed roots through SegmentLog: ", ", ", ""))
   }
 
   /** A segment-protocol file or directory name inside a string: the fold

@@ -2,8 +2,9 @@
 # Run a graft.tools main OUTSIDE sbt (keeps the sbt build lock free for
 # concurrent dev work — long runs hold it for hours otherwise).
 # Usage: tools/run_probe.sh <MainClass> [args...]
-# The mains: graft.tools.Scratch (smoke run), graft.tools.SweepBench
-# (per-query sweep timings), graft.tools.JobProfile (per-job profile of a query).
+# The mains: graft.Bench --full (every registered query, timed by the gate's
+# method; SPARK_GRAFT_ONLY=q1,q2 for a subset), graft.tools.Scratch (smoke
+# run), graft.tools.JobProfile (per-job profile of a query).
 # Mirrors build.sbt's fork JVM options (JDK17 --add-opens + Spark conf).
 set -euo pipefail
 cd "$(dirname "$0")/.."
