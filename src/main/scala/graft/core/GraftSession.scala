@@ -12,6 +12,7 @@ import org.apache.spark.sql.SparkSession
   *     table stores `ts` as parquet TIMESTAMP(NANOS) which Spark cannot read
   *     natively; we read raw nanos-since-epoch longs and convert with
   *     [[Tables.events]] (floor to micros, matching DuckDB's read behavior).
+  *   - file listing of many paths runs at most `shufflePartitions` tasks.
   *   - AQE on with skew-join handling — at 100 TB the runtime re-plan (shuffle
   *     coalescing, skew splitting, dynamic broadcast) is what keeps the
   *     declared plans efficient without hand-tuning per query.
@@ -28,6 +29,10 @@ object GraftSession {
       // permissive evaluation in the oracle.
       .config("spark.sql.ansi.enabled", "false")
       .config("spark.sql.shuffle.partitions", shufflePartitions)
+      // Spark lists more than 32 paths in a job of one task per path (up to
+      // 10,000): reading 3,000 committed ingest batches on local[2] ran
+      // 3,000 listing tasks in 18.8 s, against 0.83 s with this cap
+      .config("spark.sql.sources.parallelPartitionDiscovery.parallelism", shufflePartitions)
       .config("spark.sql.adaptive.enabled", "true")
       // default-on, pinned because the append-mode flush contract (q21:
       // closed windows emitted before AvailableNow terminates) depends on it

@@ -1,11 +1,17 @@
 package graft.operators
 
-import java.io.ByteArrayOutputStream
+import java.awt.color.ColorSpace
+import java.awt.image.{BufferedImage, Raster}
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 import java.nio.charset.StandardCharsets
 import java.util.zip.CRC32
+import javax.imageio.ImageIO
+import javax.imageio.stream.MemoryCacheImageInputStream
 
 import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.functions._
+
+import scala.reflect.runtime.universe.TypeTag
 
 /** Multimodal column plumbing: opaque `binary` payloads + typed metadata,
   * with decode/feature-extraction as partition-parallel typed transforms
@@ -1857,20 +1863,23 @@ object Multimodal {
     }
   }
 
-  /** Pure-JVM pixel decode to a grayscale matrix — the content-level step
-    * [[ContainerParser]] stops short of. PNG: chunk walk, zlib inflate
-    * (`java.util.zip.Inflater` — in the JDK, no codec library), full
-    * defilter (None/Sub/Up/Average/Paeth per RFC 2083), 8-bit gray /
-    * truecolor / with-alpha color types, luma = (299r + 587g + 114b)/1000.
-    * BMP: BITMAPINFOHEADER, uncompressed 24/32-bit, bottom-up or top-down.
-    * JPEG (ITU T.81): baseline sequential AND progressive, luma plane.
-    * GIF87a/89a: first-frame LZW decode, global/local palettes, interlace.
-    * WebP: lossless VP8L (prefix codes, color cache, meta prefix image,
-    * LZ77 with the 2D distance map, all four transforms). The decode
-    * matrix is explicit, and everything outside it — interlaced PNG,
-    * palette PNG, non-8-bit depths, compressed BMP, arithmetic-coded
-    * / 12-bit / hierarchical JPEG, lossy-VP8 WebP — returns
-    * `None` (never throws): a 100 TB corpus pass must skip what it cannot
+  /** Pixel decode to a grayscale matrix — the content-level step
+    * [[ContainerParser]] stops short of. PNG, GIF, BMP and JPEG go through
+    * the JDK's `javax.imageio` readers (module `java.desktop`, no codec
+    * library): PNG in every colour type and bit depth, palette and Adam7
+    * interlaced included; the first GIF87a/89a frame, interlaced or not,
+    * as its own rectangle (later frames of an animation are deltas —
+    * metadata counts them, content dedup keys on the first); uncompressed,
+    * RLE and bitfield BMP; baseline and progressive JPEG, whose luma plane
+    * is read raw, with no colour conversion. WebP: lossless VP8L (prefix
+    * codes, color cache, meta prefix image, LZ77 with the 2D distance map,
+    * all four transforms), decoded here because the JDK has no WebP
+    * reader. Grey images keep their samples (scaled to 8 bits); colour
+    * ones reduce to luma = (299r + 587g + 114b)/1000. The decode matrix is
+    * explicit, and everything outside it — arithmetic-coded, 12-bit or
+    * CMYK JPEG, lossy-VP8 WebP, any other container — returns `None`
+    * (never throws), as does anything malformed, truncated or over the
+    * 2^26-pixel cap: a 100 TB corpus pass must skip what it cannot
     * decode, not die on it, and [[Multimodal.decodeStats]] makes the
     * skipped share measurable instead of silent. */
   object ImageDecoder {
@@ -1879,983 +1888,89 @@ object Multimodal {
     private def u8(b: Array[Byte], i: Int): Int = b(i) & 0xff
     private def be32(b: Array[Byte], i: Int): Int =
       (u8(b, i) << 24) | (u8(b, i + 1) << 16) | (u8(b, i + 2) << 8) | u8(b, i + 3)
-    private def le16(b: Array[Byte], i: Int): Int = u8(b, i) | (u8(b, i + 1) << 8)
     private def le32(b: Array[Byte], i: Int): Int =
       u8(b, i) | (u8(b, i + 1) << 8) | (u8(b, i + 2) << 16) | (u8(b, i + 3) << 24)
 
     def decode(b: Array[Byte]): Option[Gray] =
       try {
-        if (b.length >= 8 && u8(b, 0) == 0x89 && b(1) == 'P' && b(2) == 'N' && b(3) == 'G')
-          decodePng(b)
-        else if (b.length >= 54 && b(0) == 'B' && b(1) == 'M') decodeBmp(b)
-        else if (b.length >= 4 && u8(b, 0) == 0xff && u8(b, 1) == 0xd8) decodeJpeg(b)
-        else if (b.length >= 13 && b(0) == 'G' && b(1) == 'I' && b(2) == 'F' && b(3) == '8' &&
-          (b(4) == '7' || b(4) == '9') && b(5) == 'a') decodeGif(b)
+        if ((b.length >= 8 && u8(b, 0) == 0x89 && b(1) == 'P' && b(2) == 'N' && b(3) == 'G') ||
+            (b.length >= 54 && b(0) == 'B' && b(1) == 'M') ||
+            (b.length >= 4 && u8(b, 0) == 0xff && u8(b, 1) == 0xd8) ||
+            (b.length >= 13 && b(0) == 'G' && b(1) == 'I' && b(2) == 'F' && b(3) == '8' &&
+              (b(4) == '7' || b(4) == '9') && b(5) == 'a'))
+          readImageIO(b)
         else if (b.length >= 12 && be32(b, 0) == 0x52494646 && be32(b, 8) == 0x57454250)
           decodeWebp(b) // RIFF....WEBP
         else None
       } catch { case _: Exception => None }
 
-    /** GIF87a/89a FIRST-FRAME pixel decode (W3C GIF89a spec): logical-
-      * screen + block walk to the first image descriptor, LZW decompress
-      * (LSB-first variable-width codes, dictionary reset on CLEAR, the
-      * codes-read width-growth convention real encoders emit), palette
-      * lookup, the same integer luma weights as the BMP path. Interlaced
-      * frames are written back through the 4-pass row order. Returns the
-      * frame's OWN rectangle (a real-world first frame covers the canvas;
-      * later frames of an animation are deltas — metadata counts them,
-      * content dedup keys on the first). Malformed, truncated, paletteless
-      * or oversized (> 2^26 px) input returns None, never throws; LZW work
-      * is bounded by the declared frame size, so a crafted stream cannot
-      * expand past the fw*fh output buffer. */
-    private def decodeGif(b: Array[Byte]): Option[Gray] = {
-      val packed = u8(b, 10)
-      var pos = 13
-      var palOff = -1; var palSize = 0
-      if ((packed & 0x80) != 0) {
-        palOff = pos; palSize = 1 << ((packed & 7) + 1)
-        pos += 3 * palSize
-      }
-      // block walk to the first image descriptor
-      while (pos < b.length && u8(b, pos) != 0x2c) {
-        u8(b, pos) match {
-          case 0x21 if pos + 2 <= b.length => // extension: label + sub-blocks
-            pos += 2
-            while (pos < b.length && u8(b, pos) != 0) pos += 1 + u8(b, pos)
-            pos += 1
-          case _ => return None // trailer / junk before any frame
-        }
-      }
-      if (pos + 10 > b.length) return None
-      val fw = le16(b, pos + 5); val fh = le16(b, pos + 7)
-      val ip = u8(b, pos + 9)
-      pos += 10
-      if ((ip & 0x80) != 0) { // local color table overrides the global one
-        palOff = pos; palSize = 1 << ((ip & 7) + 1)
-        pos += 3 * palSize
-      }
-      if (palOff < 0 || palOff + 3 * palSize > b.length) return None
-      if (fw <= 0 || fh <= 0 || fw.toLong * fh > (1L << 26)) return None
-      val interlaced = (ip & 0x40) != 0
-      if (pos >= b.length) return None
-      val mcs = u8(b, pos); pos += 1
-      if (mcs < 2 || mcs > 8) return None
-      // concatenate the length-prefixed sub-blocks into one code stream
-      val data = new ByteArrayOutputStream()
-      while (pos < b.length && u8(b, pos) != 0) {
-        val n = u8(b, pos)
-        if (pos + 1 + n > b.length) return None
-        data.write(b, pos + 1, n)
-        pos += 1 + n
-      }
-      val code = data.toByteArray
-      val clear = 1 << mcs; val eoi = clear + 1
-      val prefix = new Array[Int](4096); val suffix = new Array[Byte](4096)
-      val stack = new Array[Byte](4097)
-      val idx = new Array[Byte](fw * fh) // palette indices, file row order
-      var out = 0
-      var next = eoi + 1       // next entry STORED (lags the width counter)
-      var width = mcs + 1
-      var running = eoi + 1    // codes-READ counter: real encoders grow the
-      var maxCode1 = 1 << width // width off emitted-code count, which runs
-                                // one ahead of the decoder's stored entries
-      var acc = 0L; var accBits = 0; var bytePos = 0
-      def readCode(): Int = {
-        while (accBits < width) {
-          if (bytePos >= code.length) return -1
-          acc |= (code(bytePos) & 0xffL) << accBits
-          accBits += 8; bytePos += 1
-        }
-        val v = (acc & ((1L << width) - 1)).toInt
-        acc >>>= width; accBits -= width
-        if (running < 4098) {
-          running += 1
-          if (running > maxCode1 && width < 12) { maxCode1 <<= 1; width += 1 }
-        }
-        v
-      }
-      var prev = -1
-      var first = 0
-      var done = false
-      while (!done) {
-        val c = readCode()
-        if (c < 0) return None // truncated before the frame filled
-        if (c == clear) {
-          next = eoi + 1; prev = -1
-          width = mcs + 1; running = eoi + 1; maxCode1 = 1 << width
-        } else if (c == eoi) done = true
-        else if (prev < 0) {
-          if (c >= clear) return None // first code after clear must be a root
-          first = c
-          if (out < idx.length) { idx(out) = c.toByte; out += 1 }
-          prev = c
-        } else {
-          var sp = 0
-          var cur = c
-          if (c >= next) { // KwKwK: only the not-yet-stored next code is legal
-            if (c != next) return None
-            stack(sp) = first.toByte; sp += 1
-            cur = prev
-          }
-          while (cur >= clear) { // composite codes chain down to a root
-            if (cur <= eoi || sp >= 4096) return None
-            stack(sp) = suffix(cur); sp += 1
-            cur = prefix(cur)
-          }
-          first = cur
-          stack(sp) = cur.toByte; sp += 1
-          while (sp > 0) {
-            sp -= 1
-            if (out < idx.length) { idx(out) = stack(sp); out += 1 }
-          }
-          if (next < 4096) {
-            prefix(next) = prev; suffix(next) = first.toByte
-            next += 1
-          }
-          prev = c
-          if (out >= idx.length) done = true
-        }
-      }
-      if (out < idx.length) return None // stream ended short of the frame
-      // palette -> gray, de-interlacing the 4-pass row order if flagged
-      val gray = new Array[Int](fw * fh)
-      def lum(pi: Int): Int = {
-        val o = palOff + 3 * pi
-        (u8(b, o) * 299 + u8(b, o + 1) * 587 + u8(b, o + 2) * 114) / 1000
-      }
-      if (!interlaced) {
-        var i = 0
-        while (i < idx.length) {
-          val pi = idx(i) & 0xff
-          if (pi >= palSize) return None
-          gray(i) = lum(pi)
-          i += 1
-        }
-      } else {
-        val starts = Array(0, 4, 2, 1); val steps = Array(8, 8, 4, 2)
-        var src = 0
-        var p = 0
-        while (p < 4) {
-          var y = starts(p)
-          while (y < fh) {
-            var x = 0
-            while (x < fw) {
-              val pi = idx(src) & 0xff; src += 1
-              if (pi >= palSize) return None
-              gray(y * fw + x) = lum(pi)
-              x += 1
-            }
-            y += steps(p)
-          }
-          p += 1
-        }
-      }
-      Some(Gray(fw, fh, gray))
-    }
-
-    private def decodePng(b: Array[Byte]): Option[Gray] = {
-      var i = 8
-      var w = 0; var h = 0; var bitDepth = 0; var colorType = 0; var interlace = 0
-      val idat = new ByteArrayOutputStream()
-      var sawIhdr = false
-      while (i + 8 <= b.length) {
-        val len = be32(b, i)
-        val typ = new String(b, i + 4, 4, StandardCharsets.US_ASCII)
-        if (len < 0 || i + 8 + len > b.length) return None
-        typ match {
-          case "IHDR" =>
-            w = be32(b, i + 8); h = be32(b, i + 12)
-            bitDepth = u8(b, i + 16); colorType = u8(b, i + 17); interlace = u8(b, i + 20)
-            sawIhdr = true
-          case "IDAT" => idat.write(b, i + 8, len)
-          case _ => ()
-        }
-        i += 12 + len
-      }
-      if (!sawIhdr || w <= 0 || h <= 0 || bitDepth != 8 || interlace != 0) return None
-      val channels = colorType match {
-        case 0 => 1 // gray
-        case 2 => 3 // truecolor
-        case 4 => 2 // gray + alpha
-        case 6 => 4 // truecolor + alpha
-        case _ => return None // palette
-      }
-      val stride = w * channels
-      // ALLOCATION GUARDS — the decode buffers derive from the crafted-able
-      // IHDR dimensions, not from actual input bytes, so an adversarial
-      // 60-byte header declaring 20000x20000 would otherwise allocate
-      // gigabytes (and (stride+1)*h can overflow Int into a negative size).
-      // (1) deflate's max expansion is 1032:1, so the filtered image can
-      // never legitimately exceed 1032x the compressed stream — reject
-      // anything bigger (ties allocation to bytes actually present);
-      // (2) an absolute pixel cap (64M ~ 8Kx8K, recon <= 256 MB) bounds
-      // the worst case even under a large adversarial input. Both paths
-      // return None: oversized == undecodable, the corpus scan skips it.
-      val rawNeed = (stride.toLong + 1L) * h
-      if (w.toLong * h > (1L << 26) || rawNeed > idat.size().toLong * 1032L + 64L)
-        return None
-      val raw = new Array[Byte](rawNeed.toInt)
-      // end() in finally: the truncated-stream early return would otherwise
-      // strand native zlib state until finalization — and malformed input
-      // is a DESIGNED path here (a corpus scan skipping what it cannot
-      // decode must not build native-memory pressure on executors)
-      val inflater = new java.util.zip.Inflater()
-      var off = 0
+    /** One strict ImageIO read. The reader is looked up per call (readers
+      * are not thread-safe) over an in-memory stream, and no global ImageIO
+      * state is touched. Any read warning makes the image undecodable: the
+      * JPEG reader salvages a truncated stream into a grey-filled image and
+      * only warns. Metadata is read, not ignored, so the PNG reader
+      * rejects a stream cut inside its IDAT. The allocation guards run on
+      * the header, before any pixel buffer exists — the buffers derive
+      * from crafted-able header dimensions, not from the bytes present:
+      * (1) an absolute 2^26-pixel cap; (2) for PNG, deflate's maximum
+      * expansion of 1032:1, so the filtered image may not exceed 1032x the
+      * input; (3) an uncompressed BMP stores its rows as they are, so they
+      * must all be present. */
+    private def readImageIO(b: Array[Byte]): Option[Gray] = {
+      val in = new MemoryCacheImageInputStream(new ByteArrayInputStream(b))
       try {
-        inflater.setInput(idat.toByteArray)
-        while (off < raw.length && !inflater.finished()) {
-          val n = inflater.inflate(raw, off, raw.length - off)
-          // n == 0 without finishing means the stream cannot progress:
-          // truncated input (needsInput) OR a zlib header demanding a
-          // preset dictionary (FDICT — needsDictionary; PNG forbids it,
-          // but a crafted payload can set it and a plain needsInput check
-          // would spin this loop forever). Either way: undecodable.
-          if (n == 0 && (inflater.needsInput() || inflater.needsDictionary())) return None
-          off += n
-        }
-      } finally inflater.end()
-      if (off != raw.length) return None
-      // defilter in place into recon rows
-      val recon = new Array[Int](stride * h)
-      var y = 0
-      while (y < h) {
-        val f = u8(raw, y * (stride + 1))
-        var j = 0
-        while (j < stride) {
-          val x = u8(raw, y * (stride + 1) + 1 + j)
-          val left = if (j >= channels) recon(y * stride + j - channels) else 0
-          val up = if (y > 0) recon((y - 1) * stride + j) else 0
-          val ul = if (y > 0 && j >= channels) recon((y - 1) * stride + j - channels) else 0
-          val pred = f match {
-            case 0 => 0
-            case 1 => left
-            case 2 => up
-            case 3 => (left + up) / 2
-            case 4 =>
-              val p = left + up - ul
-              val pa = math.abs(p - left); val pb = math.abs(p - up); val pc = math.abs(p - ul)
-              if (pa <= pb && pa <= pc) left else if (pb <= pc) up else ul
-            case _ => return None
-          }
-          recon(y * stride + j) = (x + pred) & 0xff
-          j += 1
-        }
-        y += 1
-      }
-      val gray = new Array[Int](w * h)
-      var p = 0
-      while (p < w * h) {
-        val base = p * channels
-        gray(p) = channels match {
-          case 1 | 2 => recon(base)
-          case _ => (recon(base) * 299 + recon(base + 1) * 587 + recon(base + 2) * 114) / 1000
-        }
-        p += 1
-      }
-      Some(Gray(w, h, gray))
+        val readers = ImageIO.getImageReaders(in)
+        if (!readers.hasNext) return None
+        val reader = readers.next()
+        try {
+          var warned = false
+          reader.addIIOReadWarningListener((_, _) => warned = true)
+          reader.setInput(in, true, /* ignoreMetadata = */ false)
+          val (w, h) = (reader.getWidth(0).toLong, reader.getHeight(0).toLong)
+          val format = reader.getFormatName.toLowerCase
+          if (w <= 0 || h <= 0 || w * h > (1L << 26)) return None
+          lazy val bits = reader.getRawImageType(0).getColorModel.getPixelSize
+          if (format == "png" && ((w * bits + 7) / 8 + 1) * h > b.length * 1032L + 64L) return None
+          // a core header, BI_RGB or BI_BITFIELDS: rows stored as they are
+          val rawBmp = format == "bmp" && (le32(b, 14) < 40 || le32(b, 30) == 0 || le32(b, 30) == 3)
+          if (rawBmp && (le32(b, 10) & 0xffffffffL) + (w * bits + 31) / 32 * 4 * h > b.length) return None
+          val gray =
+            if (format == "jpeg") jpegLuma(reader.readRaster(0, null)) else Some(toGray(reader.read(0)))
+          if (warned) None else gray
+        } finally reader.dispose()
+      } finally in.close()
     }
 
-    // ---- JPEG decode: baseline sequential + progressive (ITU T.81) ----
-    //
-    // Full entropy decode (DQT/DHT/SOF/SOS walk, canonical Huffman, DC
-    // prediction, AC run-length, restart markers, byte unstuffing), then
-    // dequantize + IDCT of the LUMA component only: the engine's image
-    // operators consume grayscale, and luma IS the grayscale. Baseline
-    // (SOF0/SOF1) streams decode in one pass — chroma blocks are
-    // entropy-decoded (the interleaved bitstream demands it) but never
-    // transformed. PROGRESSIVE (SOF2) streams — the other coding real web
-    // crawls are full of — decode scan by scan (Annex G: spectral
-    // selection, successive approximation, EOB runs), accumulating raw
-    // luma coefficients until EOI; chroma-only scans are byte-skipped
-    // outright since every scan is a self-contained bitstream.
-    // Arithmetic coding, 12-bit precision and hierarchical modes → None,
-    // like every other undecodable payload.
+    /** A JPEG's raw luma: band 0 of the unconverted raster (Y of YCbCr, or
+      * the single grey component). Other component counts (CMYK, YCCK)
+      * are outside the matrix. */
+    private def jpegLuma(r: Raster): Option[Gray] =
+      if (r.getNumBands != 1 && r.getNumBands != 3) None
+      else Some(Gray(r.getWidth, r.getHeight,
+        r.getSamples(r.getMinX, r.getMinY, r.getWidth, r.getHeight, 0, null: Array[Int])))
 
-    /** Canonical Huffman decode table: mincode/maxcode/valptr per length
-      * (the T.81 Annex C construction). */
-    private final class HuffTable(bits: Array[Int], vals: Array[Byte]) {
-      val minCode = new Array[Int](17)
-      val maxCode = new Array[Int](17) // -1 = no codes of this length
-      val valPtr = new Array[Int](17)
-      locally {
-        var code = 0; var k = 0
-        var l = 1
-        while (l <= 16) {
-          if (bits(l) > 0) {
-            valPtr(l) = k; minCode(l) = code
-            code += bits(l); k += bits(l)
-            maxCode(l) = code - 1
-          } else maxCode(l) = -1
-          code <<= 1
-          l += 1
-        }
-      }
-      def value(len: Int, code: Int): Int = vals(valPtr(len) + code - minCode(len)) & 0xff
-    }
-
-    /** MSB-first bit reader over the entropy-coded segment with 0xFF00
-      * unstuffing; a non-RST marker (or end of input) ends the stream. */
-    private final class BitReader(b: Array[Byte], var pos: Int) {
-      private var acc = 0; private var nbits = 0
-      private var eos = false
-      def atMarker: Boolean = eos
-      def nextBit(): Int = {
-        if (nbits == 0) {
-          if (eos || pos >= b.length) { eos = true; return -1 }
-          var v = b(pos) & 0xff; pos += 1
-          if (v == 0xff) {
-            if (pos >= b.length) { eos = true; return -1 }
-            val m = b(pos) & 0xff
-            if (m == 0x00) pos += 1 // stuffed literal 0xff
-            else { eos = true; pos -= 1; return -1 } // a real marker
-          }
-          acc = v; nbits = 8
-        }
-        nbits -= 1
-        (acc >> nbits) & 1
-      }
-      def bits(n: Int): Int = {
-        var v = 0; var i = 0
-        while (i < n) { val x = nextBit(); if (x < 0) return -1; v = (v << 1) | x; i += 1 }
-        v
-      }
-      /** Byte-align and consume an expected RSTn marker; false if absent. */
-      def restart(): Boolean = {
-        nbits = 0; eos = false
-        if (pos + 1 >= b.length || (b(pos) & 0xff) != 0xff) return false
-        val m = b(pos + 1) & 0xff
-        if (m < 0xd0 || m > 0xd7) return false
-        pos += 2
-        true
-      }
-      def decodeHuff(t: HuffTable): Int = {
-        var code = 0; var len = 0
-        while (len < 16) {
-          val bit = nextBit(); if (bit < 0) return -1
-          code = (code << 1) | bit; len += 1
-          if (t.maxCode(len) >= 0 && code <= t.maxCode(len)) return t.value(len, code)
-        }
-        -1
-      }
-    }
-
-    /** Extend a `cat`-bit magnitude to its signed value (T.81 F.2.2.1). */
-    private def extend(v: Int, cat: Int): Int =
-      if (cat == 0) 0 else if (v < (1 << (cat - 1))) v - (1 << cat) + 1 else v
-
-    private def decodeJpeg(b: Array[Byte]): Option[Gray] = {
-      val quant = new Array[Array[Int]](4)
-      val dcTabs = new Array[HuffTable](4)
-      val acTabs = new Array[HuffTable](4)
-      var w = 0; var h = 0
-      var nComp = 0
-      // per component: id, hSamp, vSamp, quant id (luma = component 0 of SOF)
-      var compId: Array[Int] = null; var compH: Array[Int] = null
-      var compV: Array[Int] = null; var compQ: Array[Int] = null
-      var restartInterval = 0
-      // progressive (SOF2) state: raw luma coefficients accumulate across
-      // scans in `coefStore` (one 64-slot natural-order block per padded
-      // grid cell); the IDCT happens once, at EOI
-      var progressive = false
-      var sawScan = false  // a LUMA-carrying scan actually decoded
-      var scanWork = 0L    // accumulated per-scan block-slot budget
-      var coefStore: Array[Int] = null
-      var pBlocksW = 0; var pBlocksH = 0 // MCU-padded luma block grid
-      var lumaBW = 0; var lumaBH = 0     // unpadded grid (non-interleaved scans)
-      val zz = ImageGen.ZigZag
-      var i = 2
-      while (i + 2 <= b.length) {
-        if (u8(b, i) != 0xff) return None
-        // T.81 B.1.1.2: any marker may be preceded by any number of 0xFF
-        // fill bytes — slide to the LAST 0xFF so i+1 is the marker code
-        // itself. Without this a spec-conforming "FF FF C4 …" read 0xFF as
-        // the marker, fell to the skip-unknown default, parsed a garbage
-        // length, and silently excluded the image from dedup.
-        while (i + 2 <= b.length && u8(b, i + 1) == 0xff) i += 1
-        if (i + 2 > b.length) return None
-        val m = u8(b, i + 1)
-        if (m == 0xd9) {
-          // EOI (2 bytes, usually the file's last two). Baseline returns
-          // from inside its (single) SOS, so landing here means no image
-          // data; progressive decodes scans in place and THIS is where
-          // the accumulated coefficients become pixels.
-          return if (progressive && sawScan && compId != null &&
-              quant(compQ(0)) != null)
-            finalizeProgressive(coefStore, pBlocksW, lumaBW, lumaBH,
-              quant(compQ(0)), w, h)
-          else None
-        }
-        if (i + 4 > b.length) return None // every other marker has a length
-        val len = (u8(b, i + 2) << 8) | u8(b, i + 3)
-        if (len < 2 || i + 2 + len > b.length) return None
-        val seg = i + 4
-        val segEnd = i + 2 + len
-        var resumeAt = -1 // progressive SOS: continue the walk past the scan data
-        m match {
-          case 0xdb => // DQT: one or more (pq/tq, 64 or 128 bytes) entries
-            var p = seg
-            while (p < segEnd) {
-              val pq = u8(b, p) >> 4; val tq = u8(b, p) & 0x0f
-              if (tq > 3 || (pq != 0 && pq != 1)) return None
-              val t = new Array[Int](64)
-              var k = 0
-              while (k < 64) {
-                t(zz(k)) = if (pq == 0) u8(b, p + 1 + k)
-                  else (u8(b, p + 1 + 2 * k) << 8) | u8(b, p + 2 + 2 * k)
-                k += 1
-              }
-              quant(tq) = t
-              p += 1 + (if (pq == 0) 64 else 128)
-            }
-          case 0xc4 => // DHT: one or more (tc/th, 16 counts, symbols)
-            var p = seg
-            while (p < segEnd) {
-              val tc = u8(b, p) >> 4; val th = u8(b, p) & 0x0f
-              if (th > 3 || tc > 1) return None
-              val bits = new Array[Int](17)
-              var total = 0
-              var l = 1
-              while (l <= 16) { bits(l) = u8(b, p + l); total += bits(l); l += 1 }
-              if (p + 17 + total > segEnd) return None
-              val vals = java.util.Arrays.copyOfRange(b, p + 17, p + 17 + total)
-              val t = new HuffTable(bits, vals)
-              if (tc == 0) dcTabs(th) = t else acTabs(th) = t
-              p += 17 + total
-            }
-          case 0xc0 | 0xc1 | 0xc2 => // SOF0/1 sequential, SOF2 progressive
-            if (u8(b, seg) != 8) return None // 12-bit precision: skip
-            progressive = m == 0xc2
-            h = (u8(b, seg + 1) << 8) | u8(b, seg + 2)
-            w = (u8(b, seg + 3) << 8) | u8(b, seg + 4)
-            nComp = u8(b, seg + 5)
-            if (w <= 0 || h <= 0 || nComp < 1 || nComp > 4) return None
-            if (w.toLong * h > (1L << 26)) return None // same pixel cap as PNG
-            // progressive holds EVERY luma coefficient until EOI (4 B per
-            // pixel) — cap the frame buffer at 64 MiB
-            if (progressive && w.toLong * h > (1L << 24)) return None
-            compId = new Array[Int](nComp); compH = new Array[Int](nComp)
-            compV = new Array[Int](nComp); compQ = new Array[Int](nComp)
-            var c = 0
-            while (c < nComp) {
-              compId(c) = u8(b, seg + 6 + 3 * c)
-              val hv = u8(b, seg + 7 + 3 * c)
-              compH(c) = hv >> 4; compV(c) = hv & 0x0f
-              compQ(c) = u8(b, seg + 8 + 3 * c)
-              if (compH(c) < 1 || compH(c) > 4 || compV(c) < 1 || compV(c) > 4 ||
-                compQ(c) > 3) return None
-              c += 1
-            }
-          case 0xc3 | 0xc5 | 0xc6 | 0xc7 | 0xc9 | 0xca | 0xcb |
-               0xcd | 0xce | 0xcf => return None // lossless/arithmetic/hierarchical
-          case 0xdd => restartInterval = (u8(b, seg) << 8) | u8(b, seg + 1)
-          case 0xda => // SOS — entropy-coded data follows
-            if (compId == null) return None
-            val ns = u8(b, seg)
-            if (ns < 1 || seg + 1 + 2 * ns + 3 > segEnd) return None
-            if (!progressive) {
-              if (ns != nComp) return None
-              // scan-order component -> (dc table, ac table)
-              val scanDc = new Array[HuffTable](nComp)
-              val scanAc = new Array[HuffTable](nComp)
-              var s = 0
-              while (s < ns) {
-                val cid = u8(b, seg + 1 + 2 * s)
-                val c = compId.indexOf(cid)
-                if (c < 0) return None
-                val td = u8(b, seg + 2 + 2 * s) >> 4
-                val ta = u8(b, seg + 2 + 2 * s) & 0x0f
-                if (td > 3 || ta > 3) return None // T.81 B.2.3: Td/Ta <= 3
-                scanDc(c) = dcTabs(td)
-                scanAc(c) = acTabs(ta)
-                if (scanDc(c) == null || scanAc(c) == null) return None
-                s += 1
-              }
-              val lumaQ = quant(compQ(0))
-              if (lumaQ == null) return None
-              return decodeScan(b, segEnd, w, h, compH, compV, lumaQ,
-                scanDc, scanAc, restartInterval, zz)
-            } else {
-              // one progressive scan: a zigzag band [ss, se] at one
-              // successive-approximation level (ah -> al); DC scans may
-              // interleave components, AC scans are single-component
-              val ss = u8(b, segEnd - 3); val se = u8(b, segEnd - 2)
-              val ah = u8(b, segEnd - 1) >> 4; val al = u8(b, segEnd - 1) & 0x0f
-              if (se > 63 || ss > se || (ss == 0 && se != 0) || al > 13)
-                return None // a baseline-shaped 0..63 scan is illegal under SOF2
-              val hMax = compH.max; val vMax = compV.max
-              if (coefStore == null) {
-                val mcusX = (w + 8 * hMax - 1) / (8 * hMax)
-                val mcusY = (h + 8 * vMax - 1) / (8 * vMax)
-                pBlocksW = mcusX * compH(0); pBlocksH = mcusY * compV(0)
-                lumaBW = ((w * compH(0) + hMax - 1) / hMax + 7) / 8
-                lumaBH = ((h * compV(0) + vMax - 1) / vMax + 7) / 8
-                coefStore = new Array[Int](pBlocksW * pBlocksH * 64)
-              }
-              val scanComps = new Array[Int](ns)
-              var s = 0
-              while (s < ns) {
-                val c = compId.indexOf(u8(b, seg + 1 + 2 * s))
-                if (c < 0) return None
-                scanComps(s) = c
-                s += 1
-              }
-              val lumaScan = scanComps.contains(0)
-              if (lumaScan) {
-                // CPU budget against crafted scan floods: each decoded luma
-                // scan costs O(blocks * band width); thousands of tiny
-                // refinement scans over a capped-but-large frame would
-                // otherwise pin an executor core for minutes on one
-                // "image". A fully-refined LEGAL stream (<=14 DC scans +
-                // 63 single-coefficient AC bands x 14 levels) stays under
-                // ~0.7G units at the 2^24-pixel frame cap, so the 1G
-                // ceiling never rejects a conforming file.
-                scanWork += pBlocksW.toLong * pBlocksH * (se - ss + 2)
-                if (scanWork > (1L << 30)) return None
-              }
-              val next: Int =
-                if (!lumaScan) {
-                  // chroma-only scan: the engine consumes luma only, and a
-                  // scan is a self-contained bitstream — skip its entropy
-                  // data to the next marker without decoding a bit
-                  skipEntropy(b, segEnd)
-                } else if (ss == 0) {
-                  val tabs = new Array[HuffTable](ns)
-                  if (ah == 0) { // refinement reads raw bits, no tables
-                    var j = 0
-                    while (j < ns) {
-                      val td = u8(b, seg + 2 + 2 * j) >> 4
-                      if (td > 3) return None // T.81 B.2.3: Td <= 3
-                      tabs(j) = dcTabs(td)
-                      if (tabs(j) == null) return None
-                      j += 1
-                    }
-                  }
-                  progDcScan(b, segEnd, scanComps, tabs, coefStore, pBlocksW,
-                    compH, compV, hMax, vMax, w, h, ah, al, restartInterval)
-                } else {
-                  if (ns != 1) return None // T.81 B.2.3: AC scans never interleave
-                  val ta = u8(b, seg + 2) & 0x0f
-                  if (ta > 3) return None // T.81 B.2.3: Ta <= 3
-                  val ac = acTabs(ta)
-                  if (ac == null) return None
-                  progAcScan(b, segEnd, ac, coefStore, pBlocksW, lumaBW, lumaBH,
-                    ss, se, ah, al, restartInterval, zz)
-                }
-              if (next < 0 || next >= b.length) return None
-              // only a decoded LUMA scan makes the stream renderable: a
-              // file carrying nothing but (skipped) chroma scans must
-              // yield None, not a fabricated flat-gray image whose
-              // perceptual hashes would collide across all such files
-              if (lumaScan) sawScan = true
-              resumeAt = next
-            }
-          case _ => () // APPn / COM / unknown: skip
-        }
-        i = if (resumeAt >= 0) resumeAt else segEnd
-      }
-      None
-    }
-
-    // StrictMath, not Math: the pinned dHash fixture literals and the
-    // bit-identical progressive==baseline pixel assertions require the
-    // DCT/IDCT tables to be reproducible across JVMs and platforms
-    // (java.lang.Math.cos is only 1-ulp accurate and platform-dependent)
-    private lazy val idctCos: Array[Array[Double]] =
-      Array.tabulate(8, 8)((x, u) =>
-        (if (u == 0) 1.0 / StrictMath.sqrt(2) else 1.0) * StrictMath.cos((2 * x + 1) * u * math.Pi / 16))
-
-    /** Separable 8x8 IDCT of dequantized natural-order coefficients into
-      * the `luma` plane at (bx0, by0); `tmp` is caller scratch. Shared by
-      * the baseline streaming path and the progressive finalize so the
-      * two modes can never round differently. */
-    private def idct8x8(
-        coef: Array[Int], luma: Array[Int], lw: Int,
-        bx0: Int, by0: Int, tmp: Array[Double]): Unit = {
-      var y = 0
-      while (y < 8) {
-        var x = 0
-        while (x < 8) {
-          var s = 0.0
-          var uu = 0
-          while (uu < 8) { s += idctCos(x)(uu) * coef(y * 8 + uu); uu += 1 }
-          tmp(y * 8 + x) = s * 0.5
-          x += 1
-        }
-        y += 1
-      }
-      var x = 0
-      while (x < 8) {
-        var yy = 0
-        while (yy < 8) {
-          var s = 0.0
-          var vv = 0
-          while (vv < 8) { s += idctCos(yy)(vv) * tmp(vv * 8 + x); vv += 1 }
-          val px = math.max(0, math.min(255, math.round(s * 0.5 + 128.0).toInt))
-          luma((by0 + yy) * lw + bx0 + x) = px
-          yy += 1
-        }
-        x += 1
-      }
-    }
-
-    // ---- progressive (SOF2) scan machinery --------------------------
-    //
-    // T.81 Annex G, Huffman mode. Each scan covers one zigzag band
-    // [Ss, Se] of one-or-interleaved components at one successive-
-    // approximation level (Ah -> Al). Raw (unscaled) luma coefficients
-    // accumulate in a per-block 64-slot store; chroma scans advance the
-    // stream but never store. Dequantize + IDCT happen once, at EOI.
-
-    /** Advance past an entropy-coded segment WITHOUT decoding: the next
-      * non-stuffing, non-RST marker starts the next segment. Used for
-      * chroma-only scans (each scan is a self-contained bitstream) and to
-      * step from a decoded scan's last bit to the following marker. */
-    private def skipEntropy(b: Array[Byte], pos: Int): Int = {
-      var p = pos
-      while (p + 1 < b.length) {
-        if ((b(p) & 0xff) == 0xff) {
-          val m = b(p + 1) & 0xff
-          if (m != 0x00 && (m < 0xd0 || m > 0xd7)) return p
-          p += 2
-        } else p += 1
-      }
-      b.length
-    }
-
-    /** Progressive DC scan (G.1.2.1): first pass (`ah == 0`) decodes
-      * point-transformed differentials — stored DC = predsum << al;
-      * refinement (`ah > 0`) reads ONE raw bit per block, OR'd in at bit
-      * `al` of the two's-complement DC. Interleaved (ns > 1) walks the
-      * frame MCU grid with per-component prediction chains; ns == 1 walks
-      * the single component's unpadded block raster. Returns the next
-      * marker position, or -1 on error. */
-    private def progDcScan(
-        b: Array[Byte], pos: Int, scanComps: Array[Int], dcTabs: Array[HuffTable],
-        coefs: Array[Int], pBlocksW: Int,
-        compH: Array[Int], compV: Array[Int], hMax: Int, vMax: Int,
-        w: Int, h: Int, ah: Int, al: Int, restartInterval: Int): Int = {
-      val r = new BitReader(b, pos)
-      val nScan = scanComps.length
-      val pred = new Array[Int](nScan)
-      // one DC data unit of scan component s into block offset `off`
-      // (off < 0: not luma — consume the bits, store nothing)
-      def unit(s: Int, off: Int): Boolean = {
-        if (ah == 0) {
-          val t = r.decodeHuff(dcTabs(s)); if (t < 0) return false
-          val diffBits = if (t == 0) 0 else r.bits(t)
-          if (t > 0 && diffBits < 0) return false
-          pred(s) += extend(diffBits, t)
-          if (off >= 0) coefs(off) = pred(s) << al
+    /** Grey images keep band 0's samples, scaled to 8 bits (`getRGB` would
+      * gamma-convert the linear grey space); everything else is luma over
+      * `getRGB`'s sRGB. */
+    private def toGray(img: BufferedImage): Gray = {
+      val (w, h) = (img.getWidth, img.getHeight)
+      val px =
+        if (img.getColorModel.getColorSpace.getType == ColorSpace.TYPE_GRAY) {
+          val s = img.getRaster.getSamples(0, 0, w, h, 0, null: Array[Int])
+          val max = (1 << img.getRaster.getSampleModel.getSampleSize(0)) - 1
+          if (max != 255) { var i = 0; while (i < s.length) { s(i) = s(i) * 255 / max; i += 1 } }
+          s
         } else {
-          val bit = r.nextBit(); if (bit < 0) return false
-          if (bit == 1 && off >= 0) coefs(off) |= 1 << al
-        }
-        true
-      }
-      if (nScan > 1) {
-        val mcusX = (w + 8 * hMax - 1) / (8 * hMax)
-        val mcusY = (h + 8 * vMax - 1) / (8 * vMax)
-        val total = mcusX * mcusY
-        var mcu = 0
-        while (mcu < total) {
-          if (restartInterval > 0 && mcu > 0 && mcu % restartInterval == 0) {
-            if (!r.restart()) return -1
-            java.util.Arrays.fill(pred, 0)
+          val s = img.getRGB(0, 0, w, h, null, 0, w)
+          var i = 0
+          while (i < s.length) {
+            val p = s(i)
+            s(i) = (((p >> 16) & 0xff) * 299 + ((p >> 8) & 0xff) * 587 + (p & 0xff) * 114) / 1000
+            i += 1
           }
-          val mx = mcu % mcusX; val my = mcu / mcusX
-          var s = 0
-          while (s < nScan) {
-            val c = scanComps(s)
-            var v = 0
-            while (v < compV(c)) {
-              var u = 0
-              while (u < compH(c)) {
-                val off =
-                  if (c == 0)
-                    ((my * compV(0) + v) * pBlocksW + mx * compH(0) + u) * 64
-                  else -1
-                if (!unit(s, off)) return -1
-                u += 1
-              }
-              v += 1
-            }
-            s += 1
-          }
-          mcu += 1
+          s
         }
-      } else {
-        val c = scanComps(0)
-        val bwC = ((w * compH(c) + hMax - 1) / hMax + 7) / 8
-        val bhC = ((h * compV(c) + vMax - 1) / vMax + 7) / 8
-        val total = bwC * bhC
-        var blk = 0
-        while (blk < total) {
-          if (restartInterval > 0 && blk > 0 && blk % restartInterval == 0) {
-            if (!r.restart()) return -1
-            java.util.Arrays.fill(pred, 0)
-          }
-          val off =
-            if (c == 0) ((blk / bwC) * pBlocksW + blk % bwC) * 64 else -1
-          if (!unit(0, off)) return -1
-          blk += 1
-        }
-      }
-      skipEntropy(b, r.pos)
-    }
-
-    /** Progressive AC scan over the luma block raster (always
-      * non-interleaved, T.81 B.2.3). First pass (G.1.2.2): band
-      * coefficients at reduced precision with cross-block EOB runs.
-      * Refinement (G.1.2.3): `(r << 4) | 1` symbols place newly
-      * significant coefficients while correction bits — read inline,
-      * exactly where the coefficient walk passes an already-significant
-      * slot — sharpen the rest; an EOB run still carries correction bits
-      * for every remaining nonzero slot of each covered block. Returns
-      * next marker position or -1. */
-    private def progAcScan(
-        b: Array[Byte], pos: Int, ac: HuffTable, coefs: Array[Int],
-        pBlocksW: Int, blocksW: Int, blocksH: Int,
-        ss: Int, se: Int, ah: Int, al: Int, restartInterval: Int,
-        zz: Array[Int]): Int = {
-      val r = new BitReader(b, pos)
-      val p1 = 1 << al; val m1 = -1 << al
-      var eobrun = 0
-      val total = blocksW * blocksH
-      var blk = 0
-      while (blk < total) {
-        if (restartInterval > 0 && blk > 0 && blk % restartInterval == 0) {
-          if (!r.restart()) return -1
-          eobrun = 0
-        }
-        val off = ((blk / blocksW) * pBlocksW + blk % blocksW) * 64
-        if (ah == 0) {
-          if (eobrun > 0) eobrun -= 1 // whole block inside the EOB run
-          else {
-            var k = ss
-            var done = false
-            while (k <= se && !done) {
-              val rs = r.decodeHuff(ac); if (rs < 0) return -1
-              val run = rs >> 4; val size = rs & 0x0f
-              if (size == 0) {
-                if (run == 15) k += 16 // ZRL
-                else {
-                  eobrun = (1 << run) - 1 // current block counts itself
-                  if (run > 0) {
-                    val extra = r.bits(run); if (extra < 0) return -1
-                    eobrun += extra
-                  }
-                  done = true
-                }
-              } else {
-                k += run
-                if (k > se) return -1
-                val mag = r.bits(size); if (mag < 0) return -1
-                coefs(off + zz(k)) = extend(mag, size) << al
-                k += 1
-              }
-            }
-          }
-        } else {
-          var k = ss
-          if (eobrun == 0) {
-            var done = false
-            while (k <= se && !done) {
-              val rs = r.decodeHuff(ac); if (rs < 0) return -1
-              var run = rs >> 4; val size = rs & 0x0f
-              var newVal = 0
-              if (size == 0) {
-                if (run != 15) {
-                  eobrun = 1 << run // full count; current block refined below
-                  if (run > 0) {
-                    val extra = r.bits(run); if (extra < 0) return -1
-                    eobrun += extra
-                  }
-                  done = true
-                } // run == 15: ZRL — pass 16 zero-history slots below
-              } else {
-                if (size != 1) return -1 // refinement places only +-1<<al
-                val sbit = r.nextBit(); if (sbit < 0) return -1
-                newVal = if (sbit == 1) p1 else m1
-              }
-              if (!done) {
-                // advance: correction-bit every nonzero slot passed, count
-                // down `run` zero-history slots, then place (if any)
-                var placed = false
-                while (k <= se && !placed) {
-                  val cur = coefs(off + zz(k))
-                  if (cur != 0) {
-                    val bit = r.nextBit(); if (bit < 0) return -1
-                    if (bit == 1 && (cur & p1) == 0)
-                      coefs(off + zz(k)) = cur + (if (cur >= 0) p1 else m1)
-                  } else if (run == 0) {
-                    if (newVal != 0) coefs(off + zz(k)) = newVal
-                    placed = true
-                  } else run -= 1
-                  k += 1
-                }
-              }
-            }
-          }
-          if (eobrun > 0) {
-            // inside the run: remaining nonzero slots still get bits
-            while (k <= se) {
-              val cur = coefs(off + zz(k))
-              if (cur != 0) {
-                val bit = r.nextBit(); if (bit < 0) return -1
-                if (bit == 1 && (cur & p1) == 0)
-                  coefs(off + zz(k)) = cur + (if (cur >= 0) p1 else m1)
-              }
-              k += 1
-            }
-            eobrun -= 1
-          }
-        }
-        blk += 1
-      }
-      skipEntropy(b, r.pos)
-    }
-
-    /** Dequantize + IDCT the accumulated luma coefficients (EOI step of a
-      * progressive decode). Only the unpadded block grid renders — the
-      * MCU-padding blocks carry DC from interleaved scans but are cropped
-      * away regardless. */
-    private def finalizeProgressive(
-        coefStore: Array[Int], pBlocksW: Int, lumaBW: Int, lumaBH: Int,
-        lumaQ: Array[Int], w: Int, h: Int): Option[Gray] = {
-      if (coefStore == null || lumaBW * 8 < w || lumaBH * 8 < h) return None
-      val lw = lumaBW * 8
-      val luma = new Array[Int](lw * lumaBH * 8)
-      val coef = new Array[Int](64)
-      val tmp = new Array[Double](64)
-      var by = 0
-      while (by < lumaBH) {
-        var bx = 0
-        while (bx < lumaBW) {
-          val off = (by * pBlocksW + bx) * 64
-          var n = 0
-          while (n < 64) { coef(n) = coefStore(off + n) * lumaQ(n); n += 1 }
-          idct8x8(coef, luma, lw, bx * 8, by * 8, tmp)
-          bx += 1
-        }
-        by += 1
-      }
-      val gray = new Array[Int](w * h)
-      var y = 0
-      while (y < h) {
-        System.arraycopy(luma, y * lw, gray, y * w, w)
-        y += 1
-      }
-      Some(Gray(w, h, gray))
-    }
-
-    /** Entropy-decode all MCUs from `pos`, IDCT only component 0 (luma). */
-    private def decodeScan(
-        b: Array[Byte], pos: Int, w: Int, h: Int,
-        compH: Array[Int], compV: Array[Int], lumaQ: Array[Int],
-        scanDc: Array[HuffTable], scanAc: Array[HuffTable],
-        restartInterval: Int, zz: Array[Int]): Option[Gray] = {
-      val nComp = compH.length
-      val hMax = compH.max; val vMax = compV.max
-      val mcuW = 8 * hMax; val mcuH = 8 * vMax
-      val mcusX = (w + mcuW - 1) / mcuW
-      val mcusY = (h + mcuH - 1) / mcuH
-      // luma plane at full MCU-padded resolution (cropped at the end)
-      val lw = mcusX * (8 * compH(0)); val lh = mcusY * (8 * compV(0))
-      val luma = new Array[Int](lw * lh)
-      val r = new BitReader(b, pos)
-      val pred = new Array[Int](nComp)
-      val coef = new Array[Int](64)
-      val tmp = new Array[Double](64)
-      var mcu = 0
-      val totalMcus = mcusX * mcusY
-      while (mcu < totalMcus) {
-        if (restartInterval > 0 && mcu > 0 && mcu % restartInterval == 0) {
-          if (!r.restart()) return None
-          java.util.Arrays.fill(pred, 0)
-        }
-        val mx = mcu % mcusX; val my = mcu / mcusX
-        var c = 0
-        while (c < nComp) {
-          var v = 0
-          while (v < compV(c)) {
-            var u = 0
-            while (u < compH(c)) {
-              // one 8x8 block of component c
-              val t = r.decodeHuff(scanDc(c)); if (t < 0) return None
-              val diffBits = if (t == 0) 0 else r.bits(t)
-              if (t > 0 && diffBits < 0) return None
-              pred(c) += extend(diffBits, t)
-              if (c == 0) { java.util.Arrays.fill(coef, 0); coef(0) = pred(c) * lumaQ(0) }
-              var k = 1
-              var eob = false
-              while (k < 64 && !eob) {
-                val rs = r.decodeHuff(scanAc(c)); if (rs < 0) return None
-                val run = rs >> 4; val size = rs & 0x0f
-                if (size == 0) {
-                  if (run == 15) k += 16 // ZRL
-                  else eob = true
-                } else {
-                  k += run
-                  if (k > 63) return None
-                  val mag = r.bits(size); if (mag < 0) return None
-                  if (c == 0) coef(zz(k)) = extend(mag, size) * lumaQ(zz(k))
-                  k += 1
-                }
-              }
-              if (c == 0)
-                idct8x8(coef, luma, lw,
-                  (mx * compH(0) + u) * 8, (my * compV(0) + v) * 8, tmp)
-              u += 1
-            }
-            v += 1
-          }
-          c += 1
-        }
-        mcu += 1
-      }
-      // crop the padded luma plane to the declared dimensions; a conforming
-      // stream where luma is NOT the max-sampled component leaves the luma
-      // plane smaller than the frame (lw < w or lh < h) — the arraycopy
-      // below would then read across row boundaries and emit garbage
-      // pixels, so refuse (same guard as finalizeProgressive)
-      if (lw < w || lh < h) return None
-      val gray = new Array[Int](w * h)
-      var y = 0
-      while (y < h) {
-        System.arraycopy(luma, y * lw, gray, y * w, w)
-        y += 1
-      }
-      Some(Gray(w, h, gray))
-    }
-
-    private def decodeBmp(b: Array[Byte]): Option[Gray] = {
-      val dataOff = le32(b, 10)
-      val hdrSize = le32(b, 14)
-      if (hdrSize < 40) return None
-      val w = le32(b, 18)
-      val hRaw = le32(b, 22)
-      val bpp = le16(b, 28)
-      val compression = le32(b, 30)
-      if (w <= 0 || hRaw == 0 || compression != 0 || (bpp != 24 && bpp != 32)) return None
-      val h = math.abs(hRaw)
-      val topDown = hRaw < 0
-      val pxBytes = bpp / 8
-      val rowBytes = (w * pxBytes + 3) / 4 * 4
-      if (dataOff + rowBytes.toLong * h > b.length) return None
-      val gray = new Array[Int](w * h)
-      var y = 0
-      while (y < h) {
-        val srcRow = if (topDown) y else h - 1 - y
-        var x = 0
-        while (x < w) {
-          val o = dataOff + srcRow * rowBytes + x * pxBytes
-          // stored BGR
-          gray(y * w + x) = (u8(b, o + 2) * 299 + u8(b, o + 1) * 587 + u8(b, o) * 114) / 1000
-          x += 1
-        }
-        y += 1
-      }
-      Some(Gray(w, h, gray))
+      Gray(w, h, px)
     }
 
     /** WebP VP8L (lossless) pixel decode — the public WebP Lossless
@@ -3571,6 +2686,8 @@ object Multimodal {
 
   final case class ResizedImage(doc_id: Long, width: Int, height: Int, pixels: Array[Float])
 
+  final case class ImageEmbedding(vec_id: Long, embedding: Array[Float])
+
   /** Decode each payload and RESIZE it to a fixed `targetW x targetH`
     * grayscale tensor ([0, 1] row-major floats) — the decode → resize →
     * fixed-shape step a multimodal training pipeline feeds its image
@@ -3587,17 +2704,23 @@ object Multimodal {
       withPayload: DataFrame,
       targetW: Int = 32,
       targetH: Int = 32,
-      idCol: String = "doc_id"): DataFrame = {
-    require(targetW >= 1 && targetH >= 1, s"bad target ${targetW}x$targetH")
-    val input = payloadInput(withPayload, idCol)
-    input
+      idCol: String = "doc_id"): DataFrame =
+    resampled(withPayload, targetW, targetH, idCol)((id, g, px) =>
+      ResizedImage(id, g.width, g.height, px))
+
+  /** The decode → resample pass [[resizeImages]] and [[imageEmbeddings]]
+    * share: one `out` row per decodable payload, built from the id, the
+    * decoded image and its `tw x th` resampled tensor. */
+  private def resampled[T <: Product: TypeTag](
+      withPayload: DataFrame, tw: Int, th: Int, idCol: String)(
+      out: (Long, ImageDecoder.Gray, Array[Float]) => T): DataFrame = {
+    require(tw >= 1 && th >= 1, s"bad target ${tw}x$th")
+    payloadInput(withPayload, idCol)
       .mapPartitions { rows =>
         rows.flatMap { case (id, payload) =>
-          ImageDecoder.decode(payload).map(g =>
-            ResizedImage(id, g.width, g.height,
-              PerceptualHash.resample(g, targetW, targetH)))
+          ImageDecoder.decode(payload).map(g => out(id, g, PerceptualHash.resample(g, tw, th)))
         }
-      }(Encoders.product[ResizedImage])
+      }(Encoders.product[T])
       .toDF()
   }
 
@@ -3616,14 +2739,18 @@ object Multimodal {
     * the box-averaged tensor correlation barely moves (the 16x16 cells
     * average the noise away; MultimodalSpec pins planted hash-missed
     * twins). Output is (vec_id, embedding), the semantic machinery's
-    * default shape. */
+    * default shape. The mean is taken in the decode pass, once per
+    * tensor: written as column expressions, Catalyst inlines the mean's
+    * `aggregate` into the centering `transform` lambda, which then sums
+    * the tensor once per element. */
   def imageEmbeddings(
       withPayload: DataFrame, t: Int = 16, idCol: String = "doc_id"): DataFrame =
-    resizeImages(withPayload, t, t, idCol)
-      .withColumn("_mean",
-        aggregate(col("pixels"), lit(0.0d), (a, x) => a + x) / (t * t).toDouble)
-      .select(col(idCol).as("vec_id"),
-        transform(col("pixels"), p => (p - col("_mean")).cast("float")).as("embedding"))
+    resampled(withPayload, t, t, idCol) { (id, _, px) =>
+      var sum = 0.0
+      px.foreach(sum += _)
+      val mean = sum / (t * t).toDouble
+      ImageEmbedding(id, px.map(p => (p.toDouble - mean).toFloat))
+    }
 
   /** Decode each payload and emit its perceptual hashes — one row per
     * DECODABLE image (undecodable/non-image rows are skipped, never fatal).
@@ -3665,8 +2792,8 @@ object Multimodal {
     * strh fccHandler / MP4 stsd fourcc — "" elsewhere), and whether the
     * CONTENT decoders can actually open the payload — image formats
     * through [[ImageDecoder]], `wav` through [[WavDecoder]]. A format the
-    * engine recognizes but cannot pixel/sample-decode (interlaced PNG,
-    * arithmetic JPEG, compressed-audio RIFF, lossy-VP8 WebP, MP3, and
+    * engine recognizes but cannot pixel/sample-decode (arithmetic-coded,
+    * 12-bit or CMYK JPEG, compressed-audio RIFF, lossy-VP8 WebP, MP3, and
     * the declared-out video codecs avc1/vp09/av01/mp4a) reports
     * `decodable = false` — and the coding column turns that aggregated
     * share into PER-CODEC rows an operator can watch. Partition-parallel;

@@ -1675,4 +1675,113 @@ class MultimodalSpec extends AnyFunSuite {
       got.get.pixels.sameElements(want.pixels),
       "fill bytes change the byte stream, never the pixels")
   }
+
+  /** `img` encoded by the JDK's own `format` writer, `set` applied to its
+    * write parameters. */
+  private def jdkEncode(img: java.awt.image.BufferedImage, format: String)(
+      set: javax.imageio.ImageWriteParam => Unit): Array[Byte] = {
+    val writer = javax.imageio.ImageIO.getImageWritersByFormatName(format).next()
+    val out = new java.io.ByteArrayOutputStream()
+    val ios = new javax.imageio.stream.MemoryCacheImageOutputStream(out)
+    try {
+      writer.setOutput(ios)
+      val param = writer.getDefaultWriteParam
+      set(param)
+      writer.write(null, new javax.imageio.IIOImage(img, null, null), param)
+    } finally { ios.close(); writer.dispose() }
+    out.toByteArray
+  }
+
+  private def bmpCompression(name: String)(p: javax.imageio.ImageWriteParam): Unit = {
+    p.setCompressionMode(javax.imageio.ImageWriteParam.MODE_EXPLICIT)
+    p.setCompressionType(name)
+  }
+
+  test("the JDK's grey, 16-bit, palette and Adam7 PNGs and its RLE8 BMP decode to the exact field") {
+    import java.awt.image.{BufferedImage, IndexColorModel}
+    import javax.imageio.ImageWriteParam
+    import spark.implicits._
+    val (w, h) = (64, 48)
+    val field = ImageGen.gray(w, h, 42L, 0)
+    def grey(tpe: Int, scale: Int): BufferedImage = {
+      val img = new BufferedImage(w, h, tpe)
+      img.getRaster.setSamples(0, 0, w, h, 0, field.map(_ * scale))
+      img
+    }
+    // a reversed grey ramp: a palette the PNG writer cannot fold into a grey image
+    val ramp = Array.tabulate[Byte](256)(i => (255 - i).toByte)
+    val indexed = new BufferedImage(w, h, BufferedImage.TYPE_BYTE_INDEXED,
+      new IndexColorModel(8, 256, ramp, ramp, ramp))
+    indexed.getRaster.setSamples(0, 0, w, h, 0, field.map(255 - _))
+    val png8 = jdkEncode(grey(BufferedImage.TYPE_BYTE_GRAY, 1), "png")(_ => ())
+    val png16 = jdkEncode(grey(BufferedImage.TYPE_USHORT_GRAY, 257), "png")(_ => ())
+    val palette = jdkEncode(indexed, "png")(_ => ())
+    val adam7 = jdkEncode(grey(BufferedImage.TYPE_BYTE_GRAY, 1), "png")(
+      _.setProgressiveMode(ImageWriteParam.MODE_DEFAULT))
+    val rle8 = jdkEncode(indexed, "bmp")(bmpCompression("BI_RLE8"))
+    // the writers produced the layouts named: IHDR (bit depth, colour type,
+    // interlace) and the BMP compression field
+    def ihdr(b: Array[Byte]) = (b(24) & 0xff, b(25) & 0xff, b(28) & 0xff)
+    assert(ihdr(png8) == ((8, 0, 0)) && ihdr(png16) == ((16, 0, 0)))
+    assert(ihdr(palette) == ((8, 3, 0)) && ihdr(adam7) == ((8, 0, 1)))
+    assert(rle8(0) == 'B' && rle8(1) == 'M' && rle8(30) == 1, "BI_RLE8")
+    val cases = Seq("grey PNG" -> png8, "16-bit grey PNG" -> png16, "palette PNG" -> palette,
+      "Adam7 PNG" -> adam7, "RLE8 BMP" -> rle8)
+    for ((name, b) <- cases) {
+      val g = ImageDecoder.decode(b)
+      assert(g.isDefined, s"$name must decode")
+      assert(g.get.width == w && g.get.height == h, name)
+      assert(g.get.pixels.sameElements(field), s"$name must decode to the field exactly")
+    }
+    val stats = Multimodal.decodeStats(
+        cases.zipWithIndex.map { case ((_, b), i) => (i.toLong, b) }.toDF("doc_id", "payload"))
+      .collect().map(r => (r.getString(0), r.getLong(2), r.getLong(3))).toSet
+    assert(stats == Set(("png", 4L, 4L), ("bmp", 1L, 1L)), s"$stats")
+  }
+
+  test("imageEmbeddings equal the column-expression centering of resizeImages bit for bit") {
+    import spark.implicits._
+    val t = 16
+    val withP = Multimodal.withImagePayload((0L until 60L).toDF("doc_id"), noise = 8)
+    // the expression form: the mean through `aggregate`, the centering
+    // through `transform`
+    val expr = Multimodal.resizeImages(withP, t, t)
+      .withColumn("_mean", aggregate(col("pixels"), lit(0.0d), (a, x) => a + x) / (t * t).toDouble)
+      .select(col("doc_id").as("vec_id"),
+        transform(col("pixels"), p => (p - col("_mean")).cast("float")).as("embedding"))
+    def bits(df: org.apache.spark.sql.DataFrame): Map[Long, Seq[Int]] =
+      df.collect().map(r =>
+        r.getLong(0) -> r.getSeq[Float](1).map(java.lang.Float.floatToRawIntBits)).toMap
+    val want = bits(expr)
+    assert(want.size == 60 && want.values.forall(_.size == t * t))
+    assert(bits(Multimodal.imageEmbeddings(withP, t)) == want)
+  }
+
+  test("BMP: header-declared pixels beyond the bytes present are rejected before allocating") {
+    import java.awt.image.{BufferedImage, IndexColorModel}
+    val bean = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    val ramp = Array.tabulate[Byte](256)(_.toByte)
+    // uncompressed layouts the JDK reader does not size-check itself:
+    // 8-bit palette rows and 16-bit BI_BITFIELDS rows
+    val fixtures = Seq(
+      jdkEncode(new BufferedImage(64, 48, BufferedImage.TYPE_BYTE_INDEXED,
+        new IndexColorModel(8, 256, ramp, ramp, ramp)), "bmp")(bmpCompression("BI_RGB")),
+      jdkEncode(new BufferedImage(64, 48, BufferedImage.TYPE_USHORT_565_RGB), "bmp")(
+        bmpCompression("BI_BITFIELDS")))
+    val thread = Thread.currentThread.getId
+    for (good <- fixtures) {
+      assert(ImageDecoder.decode(good).isDefined)
+      // the file's headers and palette, now declaring 4096x4096 pixels
+      // (16-32 MB of rows) with none of them present
+      val le = java.nio.ByteBuffer.wrap(good).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      val bomb = good.take(le.getInt(10))
+      java.nio.ByteBuffer.wrap(bomb).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+        .putInt(18, 4096).putInt(22, 4096)
+      val before = bean.getThreadAllocatedBytes(thread)
+      assert(ImageDecoder.decode(bomb).isEmpty)
+      val allocated = bean.getThreadAllocatedBytes(thread) - before
+      assert(allocated < (8L << 20), s"$allocated bytes allocated to reject a ${bomb.length}-byte file")
+    }
+  }
 }

@@ -20,14 +20,20 @@ class ParquetReadSpec extends AnyFunSuite {
   private val spec = ChangelogSpec(Seq("k"), "seq", Some("is_delete"))
 
   /** `body`'s result and the number of Spark jobs it started. */
-  private def jobs[T](body: => T): (T, Int) = {
+  private def jobs[T](body: => T): (T, Int) = counted(_ => 1)(body)
+
+  /** `body`'s result and the tasks of the Spark jobs it started. */
+  private def tasks[T](body: => T): (T, Int) = counted(_.stageInfos.map(_.numTasks).sum)(body)
+
+  /** `body`'s result and the sum of `count` over the Spark jobs it started. */
+  private def counted[T](count: SparkListenerJobStart => Int)(body: => T): (T, Int) = {
     val sc = spark.sparkContext
     val group = s"parquet-read-spec-${java.util.UUID.randomUUID}"
     val started = new java.util.concurrent.atomic.AtomicInteger
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          started.incrementAndGet()
+          started.addAndGet(count(e))
     }
     sc.addSparkListener(listener)
     sc.setJobGroup(group, group)
@@ -81,6 +87,27 @@ class ParquetReadSpec extends AnyFunSuite {
     val (want, sparkGetJobs) = get(spark.read.option("basePath", sinkDir).parquet(batchDirs: _*))
     assert(got == want && got.size == 1)
     assert(getJobs == 2 && sparkGetJobs == 3, s"point get jobs: $getJobs, through spark.read: $sparkGetJobs")
+  }
+
+  test("readCommitted over 100 batches lists them in at most spark.sql.shuffle.partitions tasks") {
+    import spark.implicits._
+    // a sink and mark log in the layout Ingest commits: one `batch_id=N`
+    // directory and one `graft-marks/N` mark per batch
+    val tmp = tmpDir("graft_pread_many_")
+    val (sinkDir, ckpt, n) = (s"$tmp/sink", s"$tmp/ckpt", 100)
+    (0 until 10 * n).map(i => (i.toLong % 40, s"v$i", i.toLong, false, i % n))
+      .toDF("k", "v", "event_id", "is_delete", "batch_id")
+      .write.partitionBy("batch_id").parquet(sinkDir)
+    Files.createDirectories(Paths.get(ckpt, "graft-marks"))
+    (0 until n).foreach(b =>
+      Files.write(Paths.get(ckpt, "graft-marks", b.toString), s"$b ${10 * b} 10".getBytes("UTF-8")))
+
+    // above Spark's 32-path threshold the listing runs as a job
+    val (df, listing) = tasks(Ingest.readCommitted(spark, sinkDir, ckpt))
+    val cap = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    assert(listing > 0, "100 paths are listed in a Spark job")
+    assert(listing <= cap, s"the listing job ran $listing tasks for $n paths (cap $cap)")
+    assert(df.count() == 10 * n && df.select("batch_id").distinct().count() == n)
   }
 
   test("paths with different columns: the file Spark picks wins, whatever the argument order") {

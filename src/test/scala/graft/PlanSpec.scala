@@ -1,6 +1,8 @@
 package graft
 
 import graft.queries.Registry
+import org.apache.spark.sql.catalyst.expressions.{HigherOrderFunction, LambdaFunction, NamedLambdaVariable}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan regression guards for the 100 TB design promises: filters
@@ -15,6 +17,42 @@ class PlanSpec extends AnyFunSuite {
 
   private def plan(name: String): String =
     Registry.byName(name).fn(spark, dir).queryExecution.executedPlan.toString
+
+  /** Higher-order functions inside a lambda's body that read none of that
+    * lambda's variables: per-row work that Catalyst inlined into
+    * per-element code, so it runs once per element instead of once per row. */
+  private def inlinedInvariants(plan: LogicalPlan): Seq[String] =
+    plan.flatMap(_.expressions).flatMap(_.collect { case l: LambdaFunction => l }).flatMap { l =>
+      val vars = l.arguments.map(_.exprId).toSet
+      l.function.collect {
+        case f: HigherOrderFunction if f.find {
+          case v: NamedLambdaVariable => vars(v.exprId)
+          case _ => false
+        }.isEmpty => f.sql
+      }
+    }
+
+  test("imageEmbeddings: no per-row invariant is inlined into a lambda") {
+    import org.apache.spark.sql.functions._
+    // the walker: a nested aggregate over the lambda's own element is
+    // per-element work; a row's mean centered in the next projection is
+    // what CollapseProject inlines into the centering lambda
+    val planes = spark.range(4).select(
+      array(array(col("id").cast("double"), lit(1.0)), array(lit(2.0))).as("planes"))
+    val perPlane = planes.select(
+      transform(col("planes"), plane => aggregate(plane, lit(0.0d), (a, x) => a + x)))
+    assert(inlinedInvariants(perPlane.queryExecution.optimizedPlan).isEmpty)
+    val rows = spark.range(4).select(array(col("id").cast("float"), lit(2f)).as("pixels"))
+    val centered = rows
+      .withColumn("_mean", aggregate(col("pixels"), lit(0.0d), (a, x) => a + x) / 2.0)
+      .select(transform(col("pixels"), p => (p - col("_mean")).cast("float")))
+    assert(inlinedInvariants(centered.queryExecution.optimizedPlan).nonEmpty)
+
+    val emb = graft.operators.Multimodal.imageEmbeddings(
+      graft.operators.Multimodal.withImagePayload(spark.range(8).select(col("id").as("doc_id"))))
+    val found = inlinedInvariants(emb.queryExecution.optimizedPlan)
+    assert(found.isEmpty, found.mkString("per-row work inlined into a lambda: ", "; ", ""))
+  }
 
   test("checkpoint stats reset drops the size estimate and keeps the constraints") {
     import org.apache.spark.sql.functions.col

@@ -9,7 +9,8 @@ import scala.util.matching.Regex
 /** Source rules for the engine under `src/main/scala`: every parquet read
   * goes through `graft.core.Parquet`, every eager checkpoint through
   * `graft.core.Stage` (and no operator persists or unpersists), only `graft.core.SegmentLog` names the segment
-  * protocol's files and writes bucketed roots, and no temp view or
+  * protocol's files and writes bucketed roots, no image is read around the
+  * decoder's strict ImageIO read, and no temp view or
   * streaming query takes a fixed name. Each pattern is first checked against snippets it must and must
   * not match. */
 class SourceGuardSpec extends AnyFunSuite {
@@ -116,6 +117,23 @@ class SourceGuardSpec extends AnyFunSuite {
         "\"_BANDS\"", "s\"$path/segs/$name\"", "`segs/compact_*`", "\"_SUCCESS\""))
     val bad = offenders(ProtocolLiteral, graftRoot, Set(graftRoot.resolve("core/SegmentLog.scala")))
     assert(bad.isEmpty, bad.mkString("name protocol files through SegmentLog: ", ", ", ""))
+  }
+
+  /** An ImageIO shortcut around the image decoder's strict read:
+    * `ImageIO.read` returns what the reader salvages without its warnings,
+    * `ImageIO.createImageInputStream` may buffer through the JVM-wide disk
+    * cache, and `ImageIO.setUseCache` changes that cache for every caller. */
+  private val ImageIOShortcut =
+    """\bImageIO\s*\.\s*(?:read|createImageInputStream|setUseCache)\s*\(""".r
+
+  test("engine sources read images only through the decoder's strict ImageIO read") {
+    selfCheck(ImageIOShortcut,
+      Seq("ImageIO.read(new ByteArrayInputStream(b))", "javax.imageio.ImageIO.read(in)",
+        "ImageIO.createImageInputStream(in)", "ImageIO.setUseCache(false)", "ImageIO\n  .read (f)"),
+      Seq("ImageIO.getImageReaders(in)", "reader.read(0)", "reader.readRaster(0, null)",
+        "new MemoryCacheImageInputStream(in)", "ImageIO.getUseCache", "ImageIO.readerFor(x)"))
+    val bad = offenders(ImageIOShortcut, graftRoot, Set.empty)
+    assert(bad.isEmpty, bad.mkString("decode images through Multimodal.ImageDecoder.decode: ", ", ", ""))
   }
 
   /** A temp view or streaming query registered under a fixed name: a plain
