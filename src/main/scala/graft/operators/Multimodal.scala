@@ -1877,11 +1877,11 @@ object Multimodal {
     * reader. Grey images keep their samples (scaled to 8 bits); colour
     * ones reduce to luma = (299r + 587g + 114b)/1000. The decode matrix is
     * explicit, and everything outside it — arithmetic-coded, 12-bit or
-    * CMYK JPEG, lossy-VP8 WebP, any other container — returns `None`
-    * (never throws), as does anything malformed, truncated or over the
-    * 2^26-pixel cap: a 100 TB corpus pass must skip what it cannot
-    * decode, not die on it, and [[Multimodal.decodeStats]] makes the
-    * skipped share measurable instead of silent. */
+    * CMYK JPEG, a BMP embedding a JPEG or PNG, lossy-VP8 WebP, any other
+    * container — returns `None` (never throws), as does anything
+    * malformed, truncated or over the header bounds (`readImageIO`): a
+    * 100 TB corpus pass must skip what it cannot decode, not die on it,
+    * and [[Multimodal.decodeStats]] makes the skipped share measurable. */
   object ImageDecoder {
     final case class Gray(width: Int, height: Int, pixels: Array[Int])
 
@@ -1893,11 +1893,9 @@ object Multimodal {
 
     def decode(b: Array[Byte]): Option[Gray] =
       try {
-        if ((b.length >= 8 && u8(b, 0) == 0x89 && b(1) == 'P' && b(2) == 'N' && b(3) == 'G') ||
-            (b.length >= 54 && b(0) == 'B' && b(1) == 'M') ||
-            (b.length >= 4 && u8(b, 0) == 0xff && u8(b, 1) == 0xd8) ||
-            (b.length >= 13 && b(0) == 'G' && b(1) == 'I' && b(2) == 'F' && b(3) == '8' &&
-              (b(4) == '7' || b(4) == '9') && b(5) == 'a'))
+        val magic = new String(b.take(6), StandardCharsets.ISO_8859_1)
+        if (Seq("\u0089PNG", "\u00ff\u00d8", "GIF87a", "GIF89a").exists(magic.startsWith) ||
+            (b.length >= 54 && magic.startsWith("BM")))
           readImageIO(b)
         else if (b.length >= 12 && be32(b, 0) == 0x52494646 && be32(b, 8) == 0x57454250)
           decodeWebp(b) // RIFF....WEBP
@@ -1915,8 +1913,12 @@ object Multimodal {
       * (1) an absolute 2^26-pixel cap; (2) for PNG, deflate's maximum
       * expansion of 1032:1, so the filtered image may not exceed 1032x the
       * input; (3) an uncompressed BMP stores its rows as they are, so they
-      * must all be present. */
+      * must all be present; (4) a BMP is read only in compressions 0-3
+      * (BI_JPEG and BI_PNG embed a second image, which the BMP reader
+      * opens unguarded, sized by the header's image-size field); (5) a
+      * JPEG passes [[jpegBounded]] before libjpeg sees it. */
     private def readImageIO(b: Array[Byte]): Option[Gray] = {
+      if (u8(b, 0) == 0xff && !jpegBounded(b)) return None
       val in = new MemoryCacheImageInputStream(new ByteArrayInputStream(b))
       try {
         val readers = ImageIO.getImageReaders(in)
@@ -1931,14 +1933,78 @@ object Multimodal {
           if (w <= 0 || h <= 0 || w * h > (1L << 26)) return None
           lazy val bits = reader.getRawImageType(0).getColorModel.getPixelSize
           if (format == "png" && ((w * bits + 7) / 8 + 1) * h > b.length * 1032L + 64L) return None
-          // a core header, BI_RGB or BI_BITFIELDS: rows stored as they are
-          val rawBmp = format == "bmp" && (le32(b, 14) < 40 || le32(b, 30) == 0 || le32(b, 30) == 3)
-          if (rawBmp && (le32(b, 10) & 0xffffffffL) + (w * bits + 31) / 32 * 4 * h > b.length) return None
+          // a BMP's compression: 0 for a core header, which has no field
+          val compression = if (format == "bmp" && le32(b, 14) >= 40) le32(b, 30) else 0
+          if (compression < 0 || compression > 3) return None
+          if (format == "bmp" && compression % 3 == 0 && // BI_RGB, BI_BITFIELDS: rows stored as they are
+              (le32(b, 10) & 0xffffffffL) + (w * bits + 31) / 32 * 4 * h > b.length) return None
           val gray =
             if (format == "jpeg") jpegLuma(reader.readRaster(0, null)) else Some(toGray(reader.read(0)))
           if (warned) None else gray
         } finally reader.dispose()
       } finally in.close()
+    }
+
+    /** The two bounds a JPEG must meet before libjpeg reads it, checked
+      * on its marker segments. (1) libjpeg holds every coefficient of a
+      * multi-scan frame until EOI — a progressive frame, or a sequential
+      * one split over several scans — so such a frame may not exceed
+      * 2^24 pixels. (2) libjpeg decodes every scan it finds, each costing
+      * O(blocks x band width), so a few KB of tiny refinement scans over a
+      * large frame would otherwise pin an executor core for minutes on one
+      * image: the scans' work — per scanned component, its MCU-padded
+      * block count times (Se - Ss + 2) — may not exceed 2^30 units.
+      * libjpeg's default progressive script costs about 0.1G units on a
+      * 3-component 2^24-pixel frame. Bytes that are not a marker where
+      * one is due fail the check (libjpeg would only warn, skip them and
+      * read on), as do markers libjpeg refuses (lossless, hierarchical and
+      * arithmetic-coded frames among them); a stream that ends early
+      * passes, as its scans have all been counted. */
+    private def jpegBounded(b: Array[Byte]): Boolean = {
+      def be16(i: Int) = (u8(b, i) << 8) | u8(b, i + 1)
+      var frame: IndexedSeq[(Int, Long)] = null // component id, MCU-padded block count
+      var (pixels, work, progressive) = (0L, 0L, false)
+      var i = 2
+      while (i + 4 <= b.length) {
+        val m = u8(b, i + 1)
+        if (u8(b, i) != 0xff) return false
+        else if (m == 0xff) i += 1 // a fill byte
+        else if (m == 0xd9) return true // EOI
+        else if (m == 0x01 || (m >= 0xd0 && m <= 0xd7)) i += 2 // TEM, RSTn: no length
+        else {
+          val (seg, end) = (i + 4, i + 2 + be16(i + 2))
+          if (end < seg || end > b.length) return end > b.length // a stream cut short passes
+          i = end
+          m match {
+            case 0xc0 | 0xc1 | 0xc2 => // SOF: Lf P Y X Nf, then Nf x (C, Hi|Vi, Tq)
+              val comps = (0 until u8(b, seg + 5)).map(c => (u8(b, seg + 6 + 3 * c), u8(b, seg + 7 + 3 * c)))
+              if (frame != null || comps.isEmpty || seg + 6 + 3 * comps.size > end) return false
+              if (comps.exists { case (_, hv) => hv >> 4 == 0 || (hv & 15) == 0 }) return false
+              progressive = m == 0xc2
+              pixels = be16(seg + 1).toLong * be16(seg + 3)
+              if (progressive && pixels > (1L << 24)) return false
+              val (mcuW, mcuH) = (8 * comps.map(_._2 >> 4).max, 8 * comps.map(_._2 & 15).max)
+              val mcus = (be16(seg + 3) + mcuW - 1L) / mcuW * ((be16(seg + 1) + mcuH - 1L) / mcuH)
+              frame = comps.map { case (id, hv) => (id, mcus * (hv >> 4) * (hv & 15)) }
+            case 0xda => // SOS: Ls Ns, then Ns x (Cs, Td|Ta), then Ss Se Ah|Al
+              val scanned = (0 until u8(b, seg)).map(s => u8(b, seg + 1 + 2 * s))
+                .map(id => if (frame == null) -1 else frame.indexWhere(_._1 == id))
+              val (ss, se) = (u8(b, end - 3), u8(b, end - 2))
+              if (scanned.isEmpty || scanned.contains(-1) || (progressive && ss > se)) return false
+              if (scanned.size < frame.size && pixels > (1L << 24)) return false
+              work += scanned.map(frame(_)._2).sum * (if (progressive) se - ss + 2 else 65)
+              if (work > (1L << 30)) return false
+              // skip the entropy-coded data: stuffed 0xFF00, RSTn and fill
+              // bytes belong to it; any other 0xFF-led byte is the next marker
+              while (i + 1 < b.length && !(u8(b, i) == 0xff && u8(b, i + 1) != 0 &&
+                  u8(b, i + 1) != 0xff && (u8(b, i + 1) < 0xd0 || u8(b, i + 1) > 0xd7))) i += 1
+            case 0xc4 | 0xcc | 0xdb | 0xdc | 0xdd | 0xfe => // tables, DRI, DNL, COM
+            case _ if m >= 0xe0 && m <= 0xef => // APPn
+            case _ => return false // libjpeg refuses every other marker, a second SOI among them
+          }
+        }
+      }
+      true
     }
 
     /** A JPEG's raw luma: band 0 of the unconverted raster (Y of YCbCr, or
@@ -1960,17 +2026,19 @@ object Multimodal {
           val max = (1 << img.getRaster.getSampleModel.getSampleSize(0)) - 1
           if (max != 255) { var i = 0; while (i < s.length) { s(i) = s(i) * 255 / max; i += 1 } }
           s
-        } else {
-          val s = img.getRGB(0, 0, w, h, null, 0, w)
-          var i = 0
-          while (i < s.length) {
-            val p = s(i)
-            s(i) = (((p >> 16) & 0xff) * 299 + ((p >> 8) & 0xff) * 587 + (p & 0xff) * 114) / 1000
-            i += 1
-          }
-          s
-        }
+        } else luma(img.getRGB(0, 0, w, h, null, 0, w))
       Gray(w, h, px)
+    }
+
+    /** (299r + 587g + 114b) / 1000 of each ARGB pixel, in place. */
+    private def luma(argb: Array[Int]): Array[Int] = {
+      var i = 0
+      while (i < argb.length) {
+        val p = argb(i)
+        argb(i) = (((p >> 16) & 0xff) * 299 + ((p >> 8) & 0xff) * 587 + (p & 0xff) * 114) / 1000
+        i += 1
+      }
+      argb
     }
 
     /** WebP VP8L (lossless) pixel decode — the public WebP Lossless
@@ -2008,15 +2076,7 @@ object Multimodal {
       if (r.bits(3) != 0) return None // version must be 0
       if (w.toLong * h > (1L << 26)) return None // same pixel cap as PNG
       val argb = Vp8l.decodeMain(r, w, h)
-      if (argb == null || argb.length != w * h) return None
-      val gray = new Array[Int](w * h)
-      var i = 0
-      while (i < gray.length) {
-        val p = argb(i)
-        gray(i) = (((p >> 16) & 0xff) * 299 + ((p >> 8) & 0xff) * 587 + (p & 0xff) * 114) / 1000
-        i += 1
-      }
-      Some(Gray(w, h, gray))
+      if (argb == null || argb.length != w * h) None else Some(Gray(w, h, luma(argb)))
     }
 
     /** VP8L bitstream machinery (see [[decodeWebp]]). */
@@ -2793,11 +2853,11 @@ object Multimodal {
     * CONTENT decoders can actually open the payload — image formats
     * through [[ImageDecoder]], `wav` through [[WavDecoder]]. A format the
     * engine recognizes but cannot pixel/sample-decode (arithmetic-coded,
-    * 12-bit or CMYK JPEG, compressed-audio RIFF, lossy-VP8 WebP, MP3, and
-    * the declared-out video codecs avc1/vp09/av01/mp4a) reports
-    * `decodable = false` — and the coding column turns that aggregated
-    * share into PER-CODEC rows an operator can watch. Partition-parallel;
-    * payload bytes never leave the executors. */
+    * 12-bit or CMYK JPEG, BMP-wrapped JPEG or PNG, compressed-audio RIFF,
+    * lossy-VP8 WebP, MP3, the declared-out video codecs avc1/vp09/av01/
+    * mp4a) reports `decodable = false` — and the coding column turns that
+    * aggregated share into PER-CODEC rows an operator can watch.
+    * Partition-parallel; payload bytes never leave the executors. */
   def decodeStatus(withPayload: DataFrame, idCol: String = "doc_id"): DataFrame = {
     val input = payloadInput(withPayload, idCol)
     input

@@ -1757,10 +1757,18 @@ class MultimodalSpec extends AnyFunSuite {
     assert(bits(Multimodal.imageEmbeddings(withP, t)) == want)
   }
 
-  test("BMP: header-declared pixels beyond the bytes present are rejected before allocating") {
-    import java.awt.image.{BufferedImage, IndexColorModel}
+  /** `f`'s result and the heap bytes this thread allocated computing it. */
+  private def allocating[A](f: => A): (A, Long) = {
     val bean = java.lang.management.ManagementFactory.getThreadMXBean
       .asInstanceOf[com.sun.management.ThreadMXBean]
+    val thread = Thread.currentThread.getId
+    val before = bean.getThreadAllocatedBytes(thread)
+    val a = f
+    (a, bean.getThreadAllocatedBytes(thread) - before)
+  }
+
+  test("BMP: header-declared pixels beyond the bytes present are rejected before allocating") {
+    import java.awt.image.{BufferedImage, IndexColorModel}
     val ramp = Array.tabulate[Byte](256)(_.toByte)
     // uncompressed layouts the JDK reader does not size-check itself:
     // 8-bit palette rows and 16-bit BI_BITFIELDS rows
@@ -1769,7 +1777,6 @@ class MultimodalSpec extends AnyFunSuite {
         new IndexColorModel(8, 256, ramp, ramp, ramp)), "bmp")(bmpCompression("BI_RGB")),
       jdkEncode(new BufferedImage(64, 48, BufferedImage.TYPE_USHORT_565_RGB), "bmp")(
         bmpCompression("BI_BITFIELDS")))
-    val thread = Thread.currentThread.getId
     for (good <- fixtures) {
       assert(ImageDecoder.decode(good).isDefined)
       // the file's headers and palette, now declaring 4096x4096 pixels
@@ -1778,10 +1785,79 @@ class MultimodalSpec extends AnyFunSuite {
       val bomb = good.take(le.getInt(10))
       java.nio.ByteBuffer.wrap(bomb).order(java.nio.ByteOrder.LITTLE_ENDIAN)
         .putInt(18, 4096).putInt(22, 4096)
-      val before = bean.getThreadAllocatedBytes(thread)
-      assert(ImageDecoder.decode(bomb).isEmpty)
-      val allocated = bean.getThreadAllocatedBytes(thread) - before
+      val (out, allocated) = allocating(ImageDecoder.decode(bomb))
+      assert(out.isEmpty)
       assert(allocated < (8L << 20), s"$allocated bytes allocated to reject a ${bomb.length}-byte file")
     }
+  }
+
+  test("BMP: embedded-JPEG and embedded-PNG payloads are outside the matrix and never opened") {
+    import java.awt.image.BufferedImage
+    import spark.implicits._
+    val img = new BufferedImage(64, 48, BufferedImage.TYPE_3BYTE_BGR)
+    img.getRaster.setSamples(0, 0, 64, 48, 1, ImageGen.gray(64, 48, 42L, 0))
+    val embedded = Seq(4 -> "BI_JPEG", 5 -> "BI_PNG").map { case (code, name) =>
+      val b = jdkEncode(img, "bmp")(bmpCompression(name))
+      val le = java.nio.ByteBuffer.wrap(b).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      assert(le.getInt(30) == code, name)
+      assert(ImageDecoder.decode(b).isEmpty, s"$name must not decode")
+      // the BMP reader sizes the embedded image's buffer from biSizeImage:
+      // declare 64 MB behind the same few KB
+      val bomb = b.clone()
+      java.nio.ByteBuffer.wrap(bomb).order(java.nio.ByteOrder.LITTLE_ENDIAN).putInt(34, 64 << 20)
+      val (out, allocated) = allocating(ImageDecoder.decode(bomb))
+      assert(out.isEmpty)
+      assert(allocated < (8L << 20), s"$name: $allocated bytes allocated to reject ${bomb.length} bytes")
+      b
+    }
+    val stats = Multimodal.decodeStats(
+        embedded.zipWithIndex.map { case (b, i) => (i.toLong, b) }.toDF("doc_id", "payload"))
+      .collect().map(r => (r.getString(0), r.getLong(2), r.getLong(3))).toSet
+    assert(stats == Set(("bmp", 2L, 0L)), s"$stats")
+  }
+
+  test("JPEG: large progressive frames and scan floods are refused before libjpeg reads them") {
+    import java.awt.image.BufferedImage
+    val out = new java.io.ByteArrayOutputStream()
+    def seg(m: Int, p: Int*): Unit = {
+      out.write(0xff); out.write(m)
+      out.write((p.length + 2) >> 8); out.write((p.length + 2) & 0xff)
+      p.foreach(out.write)
+    }
+    // SOI, DQT, a one-component SOF2 frame, a one-code DC table, then one
+    // DC scan per successive-approximation byte (Ah << 4 | Al), each
+    // followed by `data` zero bytes of entropy data, and EOI
+    def crafted(w: Int, h: Int, approx: Seq[Int], data: Int): Array[Byte] = {
+      out.reset()
+      out.write(0xff); out.write(0xd8)
+      seg(0xdb, 0 +: Seq.fill(64)(1): _*)
+      seg(0xc2, 8, h >> 8, h & 0xff, w >> 8, w & 0xff, 1, 1, 0x11, 0)
+      seg(0xc4, 0 +: 1 +: Seq.fill(15)(0) :+ 0: _*)
+      for (a <- approx) { seg(0xda, 1, 1, 0, 0, 0, a); out.write(new Array[Byte](data)) }
+      out.write(0xff); out.write(0xd9)
+      out.toByteArray
+    }
+    // a 2^25-pixel progressive frame in 118 bytes: libjpeg would hold its
+    // coefficients, a raster and the luma copy (over 200 MB) to decode it.
+    // A 2^24-pixel frame with 4,096 scans in 41 KB: 2^31 units of scan
+    // work (the refinement scans repeat, which libjpeg only warns about)
+    for ((name, b) <- Seq("2^25-pixel frame" -> crafted(8192, 4096, Seq(0), 0),
+        "scan flood" -> crafted(4096, 4096, 0 +: Seq.fill(4095)(0x10), 0))) {
+      val t0 = System.nanoTime
+      val (g, allocated) = allocating(ImageDecoder.decode(b))
+      val ms = (System.nanoTime - t0) / 1000000
+      assert(g.isEmpty, name)
+      assert(allocated < (8L << 20), s"$name: $allocated bytes allocated to reject ${b.length} bytes")
+      assert(ms < 2000, s"$name: $ms ms to reject ${b.length} bytes")
+    }
+    // the same layout at a 64x48 frame, as a valid 14-scan progression
+    // (Al 13, then one refinement per bit) with one bit per block per
+    // scan, and libjpeg's own progressive script, stay inside both bounds
+    val progression = 13 +: (13 to 1 by -1).map(ah => ah << 4 | (ah - 1))
+    assert(ImageDecoder.decode(crafted(64, 48, progression, 64 * 48 / 64 / 8)).isDefined)
+    val img = new BufferedImage(64, 48, BufferedImage.TYPE_3BYTE_BGR)
+    img.getRaster.setSamples(0, 0, 64, 48, 1, ImageGen.gray(64, 48, 42L, 0))
+    assert(ImageDecoder.decode(jdkEncode(img, "jpeg")(
+      _.setProgressiveMode(javax.imageio.ImageWriteParam.MODE_DEFAULT))).isDefined)
   }
 }
